@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
   * prints ONE JSON line {"metric":"total","value":…,"queries":{…}}.
   *
   * Each query is fully materialized through the `noop` sink (count() would
-  * let Catalyst prune the projection and under-measure). AQE is on — it is
-  * the production configuration (skew joins, dynamic shuffle partition
+  * let Catalyst prune the projection and under-measure). The session is
+  * [[GraftSession]]'s, with AQE on (Spark's default) — the production
+  * configuration (skew joins, dynamic shuffle partition
   * coalescing) and what a real cluster would run.
   */
 object Bench {
@@ -27,27 +28,7 @@ object Bench {
       System.out.flush()
     }
     Runtime.getRuntime.addShutdownHook(new Thread(() => emit(), "bench-emit"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet is TIMESTAMP(NANOS); set at build time, readers don't
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Compiled-codegen class cache sized to the APPLICATION, not the
-      // 100-entry default: this app runs ~200 distinct queries, whose
-      // codegen units evict the default cache completely between a
-      // query's rep 1 and rep 2 — so min-of-reps was re-paying janino
-      // compilation (plus fresh C2 JIT of the regenerated classes) on
-      // EVERY rep, measuring compile overhead instead of steady-state
-      // computation (r16 A/B on a 25-query subset: 84.1 s → 68.1 s).
-      // Scale-independent: a production driver compiles codegen the
-      // same way at any data size / core count.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(s"local[$cpus]", "graft-bench", cpus.toInt)
     // Warm-up against the benched dataset: touch every table's footers
     // (metadata count) so no query pays first-touch IO for a table the
     // others didn't, plus one real query for JIT/codegen warm-up.

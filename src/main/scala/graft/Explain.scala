@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: `graft.Explain <queryName> [sfDir] [reps]` prints the
   * formatted physical plan and per-rep wall times for one query. */
 object Explain {
@@ -10,19 +8,7 @@ object Explain {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet is TIMESTAMP(NANOS); set at build time, readers don't
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same compiled-codegen cache sizing as Bench, so standalone rep
-      // timings measure the same steady state the bench reports
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(s"local[$cpus]", "graft-explain", cpus.toInt)
     // registry first, then the bench-only x_ fast-path aliases
     val fn = (SparkEntry.queries ++ SparkEntry.benchExtras)(name)
     fn(spark, sfDir).explain("formatted")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-shape audit: prints the INITIAL physical plan tree (no execution)
   * for every registered query + bench alias, one section per query, for
   * offline shape scans (e.g. "which trailing contract sorts sit directly
@@ -15,14 +13,8 @@ object PlanAudit {
     // plan — the codegen-coverage audit mode. AQE=true (default) matches
     // the production plan shape (what Bench/Verify run).
     val adaptive = sys.env.getOrElse("SPARK_GRAFT_PLAN_ADAPTIVE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", adaptive)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(s"local[$cpus]", "graft-plan-audit", cpus.toInt)
+    spark.conf.set("spark.sql.adaptive.enabled", adaptive)
     spark.sparkContext.setLogLevel("ERROR")
     (SparkEntry.queries ++ SparkEntry.benchExtras).toSeq.sortBy(_._1)
       .foreach { case (name, fn) =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Executors, TimeUnit}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -50,21 +49,14 @@ object Verify {
     // anyway — see above); >0 = stop LAUNCHING queries after N seconds so
     // the JVM exits cleanly inside a known budget
     val deadlineSec = sys.env.getOrElse("SPARK_GRAFT_VERIFY_DEADLINE_SEC", "0").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet is TIMESTAMP(NANOS); readers no longer set this
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // concurrent queries time-share executor slots instead of queueing
-      // whole jobs FIFO behind one long query's stages
-      .config("spark.scheduler.mode", "FAIR")
-      // ~190 distinct queries would evict the 100-entry default compiled-
-      // codegen cache several times over (see Bench.scala rationale)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(
+      GraftSession.builder(s"local[$cpus]", "graft-verify", cpus.toInt)
+        // concurrent queries time-share executor slots instead of queueing
+        // whole jobs FIFO behind one long query's stages: every job lands
+        // in the `default` pool (nothing sets spark.scheduler.pool), and
+        // under FAIR mode Spark 4.1 builds that pool FAIR as well
+        // (sc.getAllPools: default, FAIR, minShare 0, weight 1)
+        .config("spark.scheduler.mode", "FAIR"))
     new java.io.File(outDir).mkdirs()
     // startup sweep of STALE .tmp_* dirs from a previous run: a SIGKILL
     // (shutdown hook never runs) or a Spark write completing after the
@@ -129,14 +121,6 @@ object Verify {
             val tmp = s"$outDir/.tmp_$name"
             val df = fn(spark, sfDir)
             df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            // Parallel mode: retire THIS query's caches now that its
-            // output is fully written (a global clearCache would yank
-            // frames concurrent siblings are mid-scan on); sequential
-            // mode keeps the full clearCache sweep below. The env toggle
-            // exists only to A/B the accumulation (default on).
-            if (threads > 1 &&
-                !sys.env.get("SPARK_GRAFT_VERIFY_RETIRE").contains("false"))
-              org.apache.spark.sql.graftext.CacheRetire.retire(df)
             publishLock.synchronized {
               if (!closing) {
                 deleteRecursively(new java.io.File(s"$outDir/$name"))
@@ -144,6 +128,16 @@ object Verify {
                   java.nio.file.StandardCopyOption.ATOMIC_MOVE)
               }
             }
+            // Parallel mode: retire THIS query's caches now that its
+            // output is published (a global clearCache would yank frames
+            // concurrent siblings are mid-scan on); sequential mode keeps
+            // the full clearCache sweep below. Best-effort and after the
+            // publish: a retire failure must never drop a finished result.
+            if (threads > 1)
+              try org.apache.spark.sql.graftext.CacheRetire.retire(df)
+              catch { case e: Throwable =>
+                System.err.println(s"[verify] $name cache retire failed: ${e.getMessage}")
+              }
             // per-query wall time (under concurrency it includes slot
             // contention — a triage signal, not a benchmark; Bench owns
             // the real numbers)

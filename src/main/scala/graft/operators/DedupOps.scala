@@ -1674,9 +1674,7 @@ object DedupOps {
     * a~b~c collapse to one keeper even when a≁c directly.
     *
     * The rank-1 window runs on the component frame (pair-graph-sized,
-    * ≪ corpus) joined to doc lengths; RewriteRankOneWindow turns exactly
-    * this shape into a min_by aggregate when the extensions are
-    * installed. */
+    * ≪ corpus) joined to doc lengths. */
   def dupCanonical(spark: SparkSession, dir: String): DataFrame = {
     val comp = dupComponents(spark, dir)
     val docs = Tables.documents(spark, dir).select("doc_id", "n_chars")

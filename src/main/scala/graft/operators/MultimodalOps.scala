@@ -1131,8 +1131,12 @@ object MultimodalOps {
     * (asset_id, modality, features array<double>); `docs` needs
     * (doc_id, text). */
   private[graft] def alignJoin(feats: DataFrame, docs: DataFrame): DataFrame =
-    alignJoinWith(feats, docs,
-      tok => conv(substring(md5(tok), 1, 8), 16, 10).cast("long") % FeatureDim)
+    alignJoinWith(feats, docs, md5Bucket)
+
+  /** The token-bucket hash the DuckDB twins replay: the first 32 bits of
+    * md5(tok) mod [[FeatureDim]]. */
+  private def md5Bucket(tok: Column): Column =
+    conv(substring(md5(tok), 1, 8), 16, 10).cast("long") % FeatureDim
 
   /** The one alignment dataflow, parameterized by the token-bucket hash
     * (the assetDedupWith pattern: a semantics change can never
@@ -1188,8 +1192,7 @@ object MultimodalOps {
     * groupBy over the align frame: one extra map-side-partial exchange. */
   def alignStats(spark: SparkSession, dir: String): DataFrame =
     alignJoinRawWith(extractFeatures(spark, dir).toDF(),
-        Tables.documents(spark, dir),
-        tok => conv(substring(md5(tok), 1, 8), 16, 10).cast("long") % FeatureDim)
+        Tables.documents(spark, dir), md5Bucket)
       .groupBy("modality")
       .agg(count(lit(1)).as("n_pairs"),
         sum(when(col("keep"), 1L).otherwise(0L)).as("n_keep"),

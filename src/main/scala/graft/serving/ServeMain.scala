@@ -217,30 +217,32 @@ object ServeMain {
     * and keyword participate in the memo key (each page of a closed day
     * is its own immutable answer). */
   private[serving] def detailJson(spark: SparkSession, dir: String,
-      date: String, keyword: String, page: Int, size: Int): String =
+      date: String, keyword: String, page: Int, size: Int): String = {
+    // the total is PAGE-INDEPENDENT: memoize it per (date, keyword) so
+    // paging through N pages of a closed day costs N+1 day scans, not 2N
+    // (the memo stores the number as its JSON digits). Looked up BEFORE
+    // the page's own memo entry, never inside its mapping function: a
+    // computeIfAbsent re-entering the same map throws "Recursive update"
+    // whenever the two keys share a bin.
+    val total = cached((s"detail_total:$keyword", dir, date)) {
+      if (!inRange(spark, dir, date)) "0"
+      else ServingOps.detailTotal(spark, dir, date, keyword)
+        .head().getLong(0).toString
+    }.toLong
     cached((s"detail:$page:$size:$keyword", dir, date)) {
-      if (!inRange(spark, dir, date))
-        toJson(collection.immutable.ListMap(
-          "total" -> 0L, "detail" -> Seq.empty[Any]))
-      else {
-        // the total is PAGE-INDEPENDENT: memoize it per (date, keyword)
-        // so paging through N pages of a closed day costs N+1 day
-        // scans, not 2N (the memo stores the number as its JSON digits)
-        val total = cached((s"detail_total:$keyword", dir, date)) {
-          ServingOps.detailTotal(spark, dir, date, keyword)
-            .head().getLong(0).toString
-        }.toLong
-        val rows = ServingOps.detailPage(spark, dir, date, keyword, page, size)
+      val rows =
+        if (!inRange(spark, dir, date)) Seq.empty
+        else ServingOps.detailPage(spark, dir, date, keyword, page, size)
           .collect()
           .map(r => collection.immutable.ListMap(
             "user_id" -> r.getString(0),
             "n_events" -> r.getLong(1),
             "first_hour" -> r.getString(2)))
           .toSeq
-        toJson(collection.immutable.ListMap(
-          "total" -> total, "detail" -> rows))
-      }
+      toJson(collection.immutable.ListMap(
+        "total" -> total, "detail" -> rows))
     }
+  }
 
   private def respond(ex: HttpExchange, status: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -69,22 +69,14 @@ object StreamBench {
       }
       rm(new java.io.File(work))
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-bench")
-      // recentProgress is a ring buffer (default 100 events); rates are
-      // summed over it, so it must hold EVERY batch of a run or the
-      // reported rows/batches silently describe only the tail
-      .config("spark.sql.streaming.numRecentProgressUpdates",
-        math.max(1000, 4 * nBatches).toString)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", s"$work/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start(
+      graft.GraftSession.builder(s"local[$cpus]", "graft-stream-bench", cpus.toInt)
+        .config("spark.sql.warehouse.dir", s"$work/warehouse"))
+    // recentProgress is a ring buffer (default 100 events); rates are
+    // summed over it, so it must hold EVERY batch of a run or the
+    // reported rows/batches silently describe only the tail
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
+      math.max(1000, 4 * nBatches).toString)
 
     /** Write `df` as `n` files so maxFilesPerTrigger=1 yields n
       * micro-batches, and return a file-source stream over them. */

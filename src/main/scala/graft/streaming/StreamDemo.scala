@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -16,15 +15,8 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_stream_demo"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-stream-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]", "graft-stream-demo", 8)
 
     // file-stream source: schema from the batch footer; events.parquet only.
     // ts flavor varies by driver round (epoch-nanos LONG, NTZ micros, or a

@@ -19,7 +19,6 @@ import org.apache.spark.unsafe.types.UTF8String
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.all.foreach(e.injectFunction)
-    e.injectOptimizerRule(_ => RewriteRankOneWindow)
   }
 }
 

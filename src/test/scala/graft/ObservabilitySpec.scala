@@ -16,16 +16,21 @@ class ObservabilitySpec extends SparkTestBase {
       s"day filter should keep ~1/30 of $allEvents, kept ${r.filterOutputRows}")
   }
 
-  test("plan metrics: fact-fact join shuffles; range-sort sampling re-reads the fact scan") {
-    val r = PlanMetrics.run(CoreOps.orderWide(spark, sf0001))
+  test("plan metrics: fact-fact join shuffles; the pre-sort exchange spares the fact scan a re-read") {
+    val df = CoreOps.orderWide(spark, sf0001)
+    val r = PlanMetrics.run(df)
     val li = Tables.lineitem(spark, sf0001).count()
     val o = Tables.orders(spark, sf0001).count()
-    // the deterministic-output orderBy is RANGE partitioned: Spark samples
-    // the sort input first, re-executing the fact-side scan — so lineitem
-    // rows are counted twice (sampling + real pass), broadcast orders once.
-    // A real production sink would skip the global sort and this cost.
-    assert(r.scanOutputRows == 2 * li + o,
-      s"expected sampling+real passes (2*$li + $o), got ${r.scanOutputRows}")
+    // the deterministic-output orderBy is RANGE partitioned and Spark
+    // samples the sort input first; the hash repartition on the sort key
+    // under it lets the sampling job read that exchange's shuffle files
+    // instead of re-executing the fact-side scan — so lineitem rows are
+    // counted once, broadcast orders once
+    assert(r.scanOutputRows == li + o,
+      s"expected one pass (li $li + o $o), got ${r.scanOutputRows}")
+    val plan = df.queryExecution.executedPlan.toString
+    assert("Exchange hashpartitioning\\(order_id#\\d+L, \\d+\\), REPARTITION_BY_COL".r
+      .findFirstIn(plan).nonEmpty, s"pre-sort exchange missing:\n$plan")
     assert(r.scanFiles >= 2)
     assert(r.shuffleRecords > 0, "fact-fact join / output sort must shuffle")
   }

@@ -106,6 +106,33 @@ class ServeMainSpec extends SparkTestBase {
     } finally server.stop(0)
   }
 
+  test("closed-day /detail never nests the page memo and the total memo") {
+    // A page's memo key and its page-independent total's key live in one
+    // ConcurrentHashMap; computing the total INSIDE the page's
+    // computeIfAbsent throws "Recursive update" (→ HTTP 500) whenever the
+    // two keys share a bin. Craft keywords whose two keys agree in the
+    // low 16 bits of CHM's spread hash, so they share a bin at every
+    // table size the capped memo reaches; several of them, since a bin
+    // another spec's entry already occupies hides the nesting.
+    val date = "2024-01-15" // closed, in the sf0.001 range: both memos fire
+    def spread(k: (String, String, String)): Int = {
+      val h = k.##; (h ^ (h >>> 16)) & 0xffff
+    }
+    val tag = System.nanoTime().toString
+    val keywords = Iterator.from(0).map(i => s"zq${tag}x$i")
+      .filter(kw => spread((s"detail:1:10:$kw", sf0001, date)) ==
+        spread((s"detail_total:$kw", sf0001, date)))
+      .take(8).toSeq
+    val server = ServeMain.start(spark, sf0001, 0)
+    try {
+      val port = server.getAddress.getPort
+      keywords.foreach { kw =>
+        val (st, body) = get(port, s"/detail?date=$date&page=1&size=10&keyword=$kw")
+        assert(st == 200 && body == """{"total":0,"detail":[]}""", s"$kw: $st $body")
+      }
+    } finally server.stop(0)
+  }
+
   test("closed-day answer memo evicts oldest entries past the cap") {
     // distinct dir component isolates this test's keys from other specs
     // sharing the JVM-wide memo

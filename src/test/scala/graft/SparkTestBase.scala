@@ -3,17 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession + fixture helpers for all suites. */
+/** Shared local SparkSession (built by [[GraftSession]], like every
+  * main) + fixture helpers for all suites. */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // events.parquet is TIMESTAMP(NANOS); readers no longer set this
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    GraftSession.build("local[4]", "graft-test", shufflePartitions = 4)
 
   val sf0001 = "/root/testdata/sf0.001"
 

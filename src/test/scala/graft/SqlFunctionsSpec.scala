@@ -5,7 +5,6 @@ import org.apache.spark.sql.graftext.GraftExtensions
 class SqlFunctionsSpec extends SparkTestBase {
 
   test("vec_dot and topk_by are callable from SQL text") {
-    GraftExtensions.register(spark)
     val dot = spark.sql(
       "SELECT vec_dot(array(cast(1.0 AS FLOAT), cast(2.0 AS FLOAT)), " +
         "array(cast(3.0 AS FLOAT), cast(4.0 AS FLOAT))) AS d")
@@ -24,7 +23,6 @@ class SqlFunctionsSpec extends SparkTestBase {
   }
 
   test("vec_sub is callable from SQL text") {
-    GraftExtensions.register(spark)
     val got = spark.sql(
       "SELECT vec_sub(array(cast(3.5 AS FLOAT), cast(2.0 AS FLOAT)), " +
         "array(cast(1.0 AS FLOAT), cast(0.5 AS FLOAT))) AS r")
@@ -33,7 +31,6 @@ class SqlFunctionsSpec extends SparkTestBase {
   }
 
   test("pair_combos is callable from SQL text") {
-    GraftExtensions.register(spark)
     val got = spark.sql(
       "SELECT pair_combos(array(1L, 2L, 3L)) AS p")
       .head().getSeq[org.apache.spark.sql.Row](0)
@@ -42,7 +39,6 @@ class SqlFunctionsSpec extends SparkTestBase {
   }
 
   test("vec_quantize and gram_moments are callable from SQL text") {
-    GraftExtensions.register(spark)
     val q = spark.sql(
       "SELECT vec_quantize(array(cast(0.25 AS FLOAT), cast(-0.25 AS FLOAT)), 2.0) AS q")
       .head().getSeq[Long](0)
@@ -61,7 +57,6 @@ class SqlFunctionsSpec extends SparkTestBase {
   }
 
   test("wrong arity surfaces a named error, not a raw IndexOutOfBounds") {
-    GraftExtensions.register(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT word_ngrams(array('a','b'))").collect()
     }
@@ -74,7 +69,6 @@ class SqlFunctionsSpec extends SparkTestBase {
   }
 
   test("topk_by rejects wrong input types with a clear analysis error") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     Seq((1, 2L)).toDF("int_score", "id").createOrReplaceTempView("bad_scores")
     val e = intercept[Exception] {
@@ -88,19 +82,22 @@ class SqlFunctionsSpec extends SparkTestBase {
   }
 
   test("session built via GraftSession + withExtensions resolves the functions") {
-    // the extensions path is what a cluster's spark.sql.extensions conf uses
+    // the extensions path is what a cluster's spark.sql.extensions conf uses;
+    // register (the helper for a session built elsewhere) must be a no-op
+    // on top of it
     val reg = spark.sessionState.functionRegistry
+    val names = Seq("vec_dot", "vec_norm", "vec_sub", "topk_by", "pair_combos",
+      "alpha_token_count", "rolling_hash31", "word_ngrams", "chain_replace",
+      "nearest_centroid", "nearest_code", "bloom_agg", "bloom_might_contain",
+      "cms_estimate")
+    def missing = names.filterNot(n =>
+      reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    assert(missing.isEmpty, s"not registered: $missing")
     GraftExtensions.register(spark)
-    for (name <- Seq("vec_dot", "vec_norm", "vec_sub", "topk_by", "pair_combos",
-        "alpha_token_count", "rolling_hash31", "word_ngrams", "chain_replace",
-        "nearest_centroid", "nearest_code", "bloom_agg", "bloom_might_contain",
-        "cms_estimate"))
-      assert(reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)),
-        s"$name not registered")
+    assert(missing.isEmpty, s"not registered after register: $missing")
   }
 
   test("text natives are callable from SQL text") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT alpha_token_count('ab 12 c3') AS a, " +
         "vec_norm(array(cast(3.0 AS FLOAT), cast(4.0 AS FLOAT))) AS n, " +
@@ -122,7 +119,6 @@ class SqlFunctionsSpec extends SparkTestBase {
   }
 
   test("quantizer natives are callable from SQL text") {
-    GraftExtensions.register(spark)
     // two centroids: emb (1,0) is closest (max cosine) to cl=7's (2,0)
     val cl = spark.sql(
       "SELECT nearest_centroid(array(" +
@@ -141,7 +137,6 @@ class SqlFunctionsSpec extends SparkTestBase {
   }
 
   test("bloom build + probe round-trips in pure SQL — and stays codegen'd") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     Seq(1L, 2L, 3L).toDF("x").createOrReplaceTempView("bloom_vals")
     // CODEGEN_ONLY turns any interpreted-projection fallback into a hard
@@ -163,7 +158,6 @@ class SqlFunctionsSpec extends SparkTestBase {
   }
 
   test("mm_header_parse is callable from SQL text — and stays codegen'd") {
-    GraftExtensions.register(spark)
     // a hand-hexed 33-byte PNG header (w=2, h=3) + 1 body byte; unhex
     // keeps the whole chain inside SQL. CODEGEN_ONLY: an interpreted
     // fallback of the struct-building expression is a hard failure.
@@ -196,7 +190,6 @@ class SqlFunctionsSpec extends SparkTestBase {
   }
 
   test("bloom_might_contain rejects a non-constant, non-subquery filter argument") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     Seq(1L, 2L, 3L).toDF("x").createOrReplaceTempView("bloom_vals2")
     val e = intercept[Exception] {
@@ -210,7 +203,6 @@ class SqlFunctionsSpec extends SparkTestBase {
   }
 
   test("bloom_might_contain rejects a CORRELATED scalar subquery at analysis time") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     Seq((1L, 1L), (2L, 1L)).toDF("x", "k").createOrReplaceTempView("bloom_vals3")
     // a correlated subquery would be decorrelated into a join attribute,
