@@ -143,23 +143,27 @@ object Bench {
       if (deadlineSec > 0 && elapsed > deadlineSec) deadlineHit = true
       else runOnce(name, fn, rep)
     }
-    // OUTLIER RE-RUN: one extra rep for the single most expensive in-run
-    // min. This sandbox intermittently degrades (sys-CPU storms): whichever
-    // query a storm lands on reports a phantom 5-20x "regression" even
-    // under min-of-reps when the storm spans both its reps (round 9:
-    // q_order_wide_full 24.2 s in-run vs 5.9 s standalone). Re-measuring
-    // the worst min once at the very end — typically a calmer window, and
-    // after every other query's memory pressure has been cleared — lets
-    // min-of-3 discard the storm. Costs at most one query's time and only
-    // runs if the deadline still has room. Gated on full-registry runs:
-    // under SPARK_GRAFT_BENCH_ONLY single-query iteration the re-run
-    // would silently turn a reps=1 loop into min-of-2 for that query
-    // while every other invocation stays min-of-1 (ADVICE r10).
-    if (only.isEmpty && !deadlineHit && (deadlineSec <= 0 || elapsed < deadlineSec)) {
+    // OUTLIER RE-RUN: one extra rep for each of the 3 most expensive
+    // in-run mins. This sandbox intermittently degrades (sys-CPU storms):
+    // whichever query a storm lands on reports a phantom 5-20x
+    // "regression" even under min-of-reps when the storm spans both its
+    // reps (round 9: q_order_wide_full 24.2 s in-run vs 5.9 s
+    // standalone), and a storm long enough to span several queries
+    // inflates several mins at once, so re-running only the single worst
+    // leaves the others standing. Re-measuring the worst mins at the very
+    // end — typically a calmer window, and after every other query's
+    // memory pressure has been cleared — lets min-of-3 discard the storm.
+    // Each re-run costs at most one query's time and only starts while
+    // the deadline still has room. Gated on full-registry runs: under
+    // SPARK_GRAFT_BENCH_ONLY single-query iteration the re-run would
+    // silently turn a reps=1 loop into min-of-2 for those queries while
+    // every other invocation stays min-of-1 (ADVICE r10).
+    if (only.isEmpty && !deadlineHit) {
       times.toSeq.collect { case (n, ts) if ts.nonEmpty => n -> ts.min }
-        .sortBy(-_._2).headOption
+        .sortBy(-_._2).take(3)
         .foreach { case (worst, _) =>
-          selected.get(worst).foreach(fn => runOnce(worst, fn, reps + 1))
+          if (deadlineSec <= 0 || elapsed < deadlineSec)
+            selected.get(worst).foreach(fn => runOnce(worst, fn, reps + 1))
         }
     }
     emit()

@@ -20,7 +20,7 @@ object Catalog {
     TableNames.foreach { n =>
       val df = n match {
         case "events" => Tables.events(spark, dir)
-        case other    => spark.read.parquet(s"$dir/$other.parquet")
+        case other    => Tables.read(spark, s"$dir/$other.parquet")
       }
       df.createOrReplaceTempView(n)
     }

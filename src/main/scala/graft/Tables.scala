@@ -1,18 +1,79 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the driver-generated testdata tables (TESTDATA.md).
   *
   * One function per table; every operator takes `(SparkSession, sfDir)` and
   * loads through here so the scan is always a plain parquet read that
-  * Catalyst can push filters/pruning into. No caching at this layer — the
-  * driver runs each query standalone and Catalyst reuses exchanges within
-  * a plan where possible.
+  * Catalyst can push filters/pruning into. Every table read in the
+  * operators and the serving daemon goes through [[read]].
+  *
+  * The one thing cached here is each path's inferred SCHEMA. A plain
+  * `spark.read.parquet(path)` infers it by running a one-task Spark job
+  * that reads a footer — on every query construction and every dashboard
+  * request, though the files have not changed. [[read]] remembers, per
+  * session and path, the schema Spark inferred, keyed on what the
+  * inference reads: the path's recursive file listing (each file's path,
+  * length and mtime) and the session's SQL conf (nanosAsLong,
+  * inferTimestampNTZ and the other inference settings). A later read with
+  * the same key passes that schema to `spark.read.schema(...)`, which
+  * runs no job; any other read is the plain read, whose schema replaces
+  * the entry. A schema is thus served only for the exact files and
+  * settings it was inferred from, and never a stale one. The scan itself,
+  * its file index and its data are never cached.
   */
 object Tables {
+  /** A schema and the listing + conf it was inferred under. */
+  private final case class Inferred(key: (Map[String, String], Seq[(String, Long, Long)]),
+      schema: StructType)
+
+  /** Per session (weak keys, so a finished session's entries go with it),
+    * one entry per path. */
+  private val inferred = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Inferred]]())
+
+  /** The recursive leaf listing of `path` as (path, length, mtime), sorted;
+    * None when it cannot be listed (a missing path, or a glob, which Hadoop
+    * lists literally) — the plain read then raises what Spark raises. */
+  private def listing(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] =
+    try {
+      val p = new Path(path)
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      val b = Vector.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(b.result().sorted)
+    } catch { case NonFatal(_) => None }
+
+  /** The one parquet table read. A miss is the plain `spark.read.parquet`
+    * (same errors, same frame); only a successful inference is memoised.
+    * The key is taken BEFORE the inference, so files that change during it
+    * can only make the entry miss later, never serve their old schema. The
+    * inference runs outside any map's mapping function: Verify and
+    * ServeMain read concurrently. */
+  private[graft] def read(spark: SparkSession, path: String): DataFrame = {
+    val memo = inferred.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, Inferred]())
+    val key = listing(spark, path).map(files => (spark.conf.getAll, files))
+    Option(memo.get(path)).filter(e => key.contains(e.key)) match {
+      case Some(e) => spark.read.schema(e.schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        key.foreach(k => memo.put(path, Inferred(k, df.schema)))
+        df
+    }
+  }
+
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame     = t(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame     = t(spark, dir, "nation")

@@ -800,7 +800,7 @@ object SimilarityOps {
     * per-batch subdirectory committed atomically). */
   def appendToAnnIndex(spark: SparkSession, indexDir: String,
       batch: DataFrame): Unit = {
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
+    val centroids = Tables.read(spark, s"$indexDir/centroids")
     assign(batch.select(col("vec_id"), col("embedding")), centroids)
       .withColumn("nrm", VectorOps.norm(col("embedding")))
       .write.mode("append").partitionBy("cl")
@@ -816,8 +816,8 @@ object SimilarityOps {
     * each batch is a plain DataFrame and the rank window is legal. */
   def annIndexProbe(spark: SparkSession, indexDir: String,
       queries: DataFrame): DataFrame = {
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-    val lists = spark.read.parquet(s"$indexDir/lists")
+    val centroids = Tables.read(spark, s"$indexDir/centroids")
+    val lists = Tables.read(spark, s"$indexDir/lists")
     val q = queries.select(col("query_id"), col("qe"),
       VectorOps.norm(col("qe")).as("nq"))
     ivfProbeTopK(q, centroids, lists, excludeSelf = false,
