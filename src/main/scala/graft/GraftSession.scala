@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one SparkSession factory: every main (Bench, Verify, Explain, the
-  * audits, the streaming and serving daemons) and the test base build
-  * through it, so the verified and benchmarked configuration IS the
-  * production one.
+/** The one SparkSession factory: every main (Bench, Verify, Tools, the
+  * streaming and serving daemons) and the test base build through it,
+  * so the verified and benchmarked configuration IS the production one.
   *
   * Local (`local[N]`) and cluster masters share the same settings; only
   * shuffle parallelism differs. It owns:

@@ -84,10 +84,10 @@ object Tables {
   def lineitem(spark: SparkSession, dir: String): DataFrame   = t(spark, dir, "lineitem")
   /** events.ts has shipped in two parquet flavors across driver rounds —
     * TIMESTAMP(NANOS) (readable only as epoch-nanos long under
-    * `spark.sql.legacy.parquet.nanosAsLong=true`, which GraftSession.build,
-    * Verify, Bench and the test base all still set; harmless for the other
-    * flavors) and, since round 6, TIMESTAMP(MICROS) NTZ. This reader
-    * normalizes every flavor to the same surface:
+    * `spark.sql.legacy.parquet.nanosAsLong=true`, which GraftSession sets
+    * for every session; harmless for the other flavors) and, since round
+    * 6, TIMESTAMP(MICROS) NTZ. This reader normalizes every flavor to the
+    * same surface:
     *
     *   - `ts`     — tz-aware TimestampType (UTC session pinned)
     *   - `ts_ns`  — epoch nanoseconds long (ordering/arithmetic column)

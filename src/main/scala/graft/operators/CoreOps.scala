@@ -155,8 +155,7 @@ object CoreOps {
     ev.filter(keep)
       .select(col("event_id"), tbl.as("table_name"), op.as("op"),
         concat(lit("ODS_MM_"), upper(tbl)).as("topic"))
-      .repartition(col("event_id"))
-      .orderBy("event_id")
+      .transform(ContractSort.exchanged(_, "event_id"))
   }
 
   // ---------------------------------------------------------------- J2/J3
@@ -226,8 +225,7 @@ object CoreOps {
         date_format(o("o_orderdate"), "yyyy-MM-dd").as("create_date"),
         l("l_partkey").as("sku_id"), l("l_quantity").as("sku_num"),
         l("l_extendedprice").as("order_price"), l("l_discount").as("discount"))
-      .repartition(col("order_id"))
-      .orderBy("order_id", "detail_id")
+      .transform(ContractSort.exchanged(_, "order_id", "detail_id"))
   }
 
   // ---------------------------------------------------------------- J1+J2+J4 full
@@ -240,13 +238,10 @@ object CoreOps {
     *
     * r17 shape (same 27 columns, same values, same total order): the
     * date/hour string derivations sit ABOVE the contract sort, not below
-    * it. Below the sort the rows carry the raw 8-byte timestamps, so
-    * (a) the range exchange shuffles ~70 fewer bytes/row of formatted
-    * strings (guide §2.3) and (b) the three DateTimeFormatter passes run
-    * ONCE per row after the sort instead of twice (the trailing global
-    * orderBy's range-sampling job executes the sort's child a second
-    * time — everything kept below the sort is paid 2×). The final
-    * projection over a Sort adds no exchange and cannot reorder rows. */
+    * it, so the exchanges below the sort carry the raw 8-byte timestamps,
+    * ~70 fewer bytes/row than the formatted strings (guide §2.3). The
+    * final projection over a Sort adds no exchange and cannot reorder
+    * rows. */
   def orderWideFull(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(spark, dir)
     val l = Tables.lineitem(spark, dir)
@@ -276,14 +271,7 @@ object CoreOps {
         p("p_name").as("sku_name"), p("p_brand").as("tm_name"),
         p("p_type").as("category3_name"), p("p_size").as("sku_size"),
         p("p_retailprice").as("sku_price"))
-      // materialize the join output ONCE: under AQE this hash exchange is
-      // its own query stage, so the range exchange's sampling job and its
-      // shuffle-map job both read these shuffle files instead of each
-      // re-executing the whole join pipeline (measured 2.6 s vs 3.2 s at
-      // sf0.1 and 79 s vs 99 s at 100× — the recompute costs more than
-      // one extra narrow-row shuffle at both scales)
-      .repartition(col("order_id"))
-      .orderBy("order_id", "detail_id", "sku_id")
+      .transform(ContractSort.exchanged(_, "order_id", "detail_id", "sku_id"))
       .select(
         col("order_id"), col("detail_id"), col("user_id"),
         col("order_status"), col("final_total_amount"),

@@ -56,7 +56,7 @@ object DedupOps {
           .as("shingle"))
 
   /** Distinct shingle SET per doc (the Jaccard/MinHash input). */
-  private[operators] def shingles(docs: DataFrame): DataFrame =
+  private[graft] def shingles(docs: DataFrame): DataFrame =
     shingleExplode(docs).distinct()
 
   /** All pairs (a[i], a[j]) with i < j from an array column, generated
@@ -317,7 +317,7 @@ object DedupOps {
     hashed.groupBy("doc_id", "source").agg(mins.head, mins.tail: _*)
   }
 
-  private[operators] def minhashSignatures(sh: DataFrame): DataFrame =
+  private[graft] def minhashSignatures(sh: DataFrame): DataFrame =
     minhashSignaturesWith(sh, xxhash64(col("shingle")))
 
   /** MinHash+LSH near-dup pairs: signatures → band buckets → candidate
@@ -1155,7 +1155,7 @@ object DedupOps {
   /** 64-bit SimHash per doc: token hashes vote per bit position; the sign
     * of each bit-sum forms the signature. Expressed as 64 codegen'd
     * conditional sums — one shuffle, no UDAF, no driver loops. */
-  private[operators] def simhashSignatures(docs: DataFrame): DataFrame = {
+  private[graft] def simhashSignatures(docs: DataFrame): DataFrame = {
     // xxhash64 twin of [[simhashPortableSig]]'s fp-grain vote pipeline:
     // one tokenize/hash/vote pass per DISTINCT text, attached to docs by
     // fingerprint join (the signature is a function of the text alone)

@@ -694,8 +694,7 @@ object MultimodalOps {
           .as("u_mean"),
         when(col("n_units") > 0, col("u_sumsq").cast("double") / col("n_units"))
           .as("u_ms"))
-      .repartition(col("asset_id"))
-      .orderBy("asset_id")
+      .transform(ContractSort.exchanged(_, "asset_id"))
 
   /** The 8-dim feature vector assembled FROM the decoded statistics —
     * every component a fixed chain of double divisions of exact integers
@@ -789,8 +788,7 @@ object MultimodalOps {
     val ledger = all.where(pmod(col("asset_id"), lit(10)) < 8)
       .select(md5(hex(col("payload"))).as("fp")).distinct()
     snapshotDecodeFrom(all.where(pmod(col("asset_id"), lit(10)) >= 8), ledger)
-      .repartition(col("asset_id"))
-      .orderBy("asset_id")
+      .transform(ContractSort.exchanged(_, "asset_id"))
   }
 
   /** The incremental-decode core over explicit frames — shared by the
@@ -901,8 +899,7 @@ object MultimodalOps {
     assets(spark, dir).where(col("modality") === "image").as[Asset]
       .mapPartitions(phashBatch).toDF()
       .select(col("asset_id"), col("format"), col("phash"))
-      .repartition(col("asset_id"))
-      .orderBy("asset_id")
+      .transform(ContractSort.exchanged(_, "asset_id"))
   }
 
   /** PERCEPTUAL DEDUP CLASSES: group images by their aHash — the
@@ -970,8 +967,7 @@ object MultimodalOps {
       .select(col("asset_id"), col("n_windows"), col("win_idx"),
         col("n_samples"), col("energy"),
         (col("max_abs") < SilenceAbs).as("silence"))
-      .repartition(col("asset_id"))
-      .orderBy("asset_id", "win_idx")
+      .transform(ContractSort.exchanged(_, "asset_id", "win_idx"))
 
   /** The raw per-window energy frame (pre-contract-sort), shared by
     * [[audioEnergy]] and [[audioFingerprint]]. */
@@ -1122,36 +1118,26 @@ object MultimodalOps {
     * count and identical quantized asset vectors — only the text-side
     * bucket assignment differs) lives in TextMultimodalSpec. */
   def crossModalAlignFast(spark: SparkSession, dir: String): DataFrame =
-    alignJoinWith(extractFeatures(spark, dir).toDF(),
+    alignJoin(extractFeatures(spark, dir).toDF(),
       Tables.documents(spark, dir),
       tok => pmod(xxhash64(tok), lit(FeatureDim)))
 
-  /** The alignment dataflow over explicit frames — the spec drives this
-    * with planted matched/mismatched caption pairs. `feats` needs
-    * (asset_id, modality, features array<double>); `docs` needs
-    * (doc_id, text). */
-  private[graft] def alignJoin(feats: DataFrame, docs: DataFrame): DataFrame =
-    alignJoinWith(feats, docs, md5Bucket)
+  /** The alignment dataflow over explicit frames, in contract order — the
+    * spec drives this with planted matched/mismatched caption pairs.
+    * `feats` needs (asset_id, modality, features array<double>); `docs`
+    * needs (doc_id, text). */
+  private[graft] def alignJoin(feats: DataFrame, docs: DataFrame,
+      bucket: Column => Column = md5Bucket): DataFrame =
+    ContractSort.exchanged(alignJoinRawWith(feats, docs, bucket), "asset_id")
 
   /** The token-bucket hash the DuckDB twins replay: the first 32 bits of
     * md5(tok) mod [[FeatureDim]]. */
   private def md5Bucket(tok: Column): Column =
     conv(substring(md5(tok), 1, 8), 16, 10).cast("long") % FeatureDim
 
-  /** The one alignment dataflow, parameterized by the token-bucket hash
-    * (the assetDedupWith pattern: a semantics change can never
-    * half-apply to the md5/xxhash pair). [[alignJoinWith]] appends the
-    * contract tail (pre-sort materialization + orderBy);
-    * [[alignJoinRawWith]] is the unsorted frame [[alignStats]] and other
-    * aggregating consumers build on — an inner sort would be eliminated
-    * under their aggregation but the materialization exchange would NOT,
-    * and measured +0.33 s of pure overhead on q_mm_align_stats. */
-  private def alignJoinWith(feats: DataFrame, docs: DataFrame,
-      bucket: Column => Column): DataFrame =
-    alignJoinRawWith(feats, docs, bucket)
-      .repartition(col("asset_id"))
-      .orderBy("asset_id")
-
+  /** The one alignment dataflow, unsorted, parameterized by the
+    * token-bucket hash (the assetDedupWith pattern: a semantics change
+    * can never half-apply to the md5/xxhash pair). */
   private def alignJoinRawWith(feats: DataFrame, docs: DataFrame,
       bucket: Column => Column): DataFrame = {
     val dims = 1 to FeatureDim
@@ -1216,8 +1202,7 @@ object MultimodalOps {
         length(col("payload")).cast("long").as("byte_len"),
         col("width"), col("height"), col("sample_rate"),
         col("duration_ms"))
-      .repartition(col("asset_id"))
-      .orderBy("asset_id")
+      .transform(ContractSort.exchanged(_, "asset_id"))
 
   /** HEADER PARSE over the payload BYTES — the native
     * [[org.apache.spark.sql.graftext.MediaHeaderParse]] probe reading
@@ -1243,8 +1228,7 @@ object MultimodalOps {
         col("p.body_bytes").as("body_bytes"),
         col("p.n_samples").as("n_samples"),
         col("p.media_ms").as("media_ms"))
-      .repartition(col("asset_id"))
-      .orderBy("asset_id")
+      .transform(ContractSort.exchanged(_, "asset_id"))
   }
 
   /** Decoded-feature stats — the oracle-checkable projection of the
@@ -1256,8 +1240,7 @@ object MultimodalOps {
       .select(col("asset_id"), col("modality"), col("byte_len"),
         element_at(col("features"), 1).as("f0"),
         element_at(col("features"), 2).as("f1"))
-      .repartition(col("asset_id"))
-      .orderBy("asset_id")
+      .transform(ContractSort.exchanged(_, "asset_id"))
 
   /** End-to-end multimodal retrieval: decoded features → cosine top-3
     * within each modality block (the decode → embed → ANN pipeline a
@@ -1338,8 +1321,7 @@ object MultimodalOps {
           .otherwise(greatest(lit(1L),
             expr(s"(height * $ResizeMaxSide) DIV max_side"))))
       .withColumn("scaled", col("max_side") > ResizeMaxSide)
-      .repartition(col("asset_id"))
-      .orderBy("asset_id")
+      .transform(ContractSort.exchanged(_, "asset_id"))
   }
 
   /** Frame-sampling budget: at most this many frames per video. */
@@ -1398,8 +1380,7 @@ object MultimodalOps {
       .select(col("asset_id"), col("n_samples"), col("n_frames"),
         col("frame_idx"), col("sample_idx"), col("t_ms"),
         col("byte_offset"), col("sample_bytes"))
-      .repartition(col("asset_id"))
-      .orderBy("asset_id", "frame_idx")
+      .transform(ContractSort.exchanged(_, "asset_id", "frame_idx"))
 
   /** Manifest volume width: shards are scoped per (modality, volume =
     * asset_id DIV width), so the packing window never sorts more than one
@@ -1588,8 +1569,7 @@ object MultimodalOps {
       .select(col("asset_id"), col("n_frames"), col("frame_idx"),
         col("sample_idx"), col("key_idx"), col("key_offset"),
         col("back_samples"))
-      .repartition(col("asset_id"))
-      .orderBy("asset_id", "frame_idx")
+      .transform(ContractSort.exchanged(_, "asset_id", "frame_idx"))
   }
 
   /** One DECODED video frame off the keyframe-snapped seek plan:
@@ -1666,8 +1646,7 @@ object MultimodalOps {
       .select(col("asset_id"), col("n_frames"), col("frame_idx"),
         col("sample_idx"), col("key_idx"), col("width"), col("height"),
         col("n_px"), col("px_min"), col("px_max"), col("px_sum"))
-      .repartition(col("asset_id"))
-      .orderBy("asset_id", "frame_idx")
+      .transform(ContractSort.exchanged(_, "asset_id", "frame_idx"))
   }
 
   /** One decoded sample's content descriptor — the video-dedup signature

@@ -262,8 +262,8 @@ object PipelineOps {
     * multiply the corpus by the overlap factor). At 100 TB this is a
     * narrow explode whose output is ~n_tokens/stride rows per doc. */
   def chunkDocs(spark: SparkSession, dir: String): DataFrame =
-    docChunks(spark, dir).repartition(col("doc_id"))
-      .orderBy("doc_id", "chunk_idx")
+    docChunks(spark, dir)
+      .transform(ContractSort.exchanged(_, "doc_id", "chunk_idx"))
 
   /** Chunk geometry shared by [[docChunks]] and [[chunkScrub]]. */
   private val ChunkTokens = 50
@@ -606,8 +606,7 @@ object PipelineOps {
             regexp_replace(raw, email, "<EMAIL>"),
             phone, "<PHONE>"),
           idRun, "<ID>").as("redacted"))
-      .repartition(col("c_custkey"))
-      .orderBy("c_custkey")
+      .transform(ContractSort.exchanged(_, "c_custkey"))
   }
 
   /** Column-level data profile of the orders fact: row count, null count
@@ -1100,8 +1099,7 @@ object PipelineOps {
         "left")
       .select(col("doc_id"), col("source"),
         col("kept_id").isNotNull.as("kept"))
-      .repartition(col("doc_id"))
-      .orderBy("doc_id")
+      .transform(ContractSort.exchanged(_, "doc_id"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

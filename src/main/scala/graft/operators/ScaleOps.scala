@@ -138,8 +138,7 @@ object ScaleOps {
     Tables.events(spark, dir)
       .select(col("event_id"),
         zvalue(col("user_id"), expr("ts_ns DIV 1000000000")).as("zval"))
-      .repartition(col("event_id"))
-      .orderBy("event_id")
+      .transform(ContractSort.exchanged(_, "event_id"))
 
   /** Join-key skew profile: the heaviest keys of a fact-side join column
     * and their share of the table — the diagnostic that decides between a

@@ -369,9 +369,6 @@ object SimilarityOps {
     * init (code = vec_id mod K) refined by one Lloyd iteration — identical
     * training recipe to the IVF coarse quantizer, run in each of the M
     * subspaces at once (m is just another grouping key). */
-  private[operators] def pqCodebook(e: DataFrame): DataFrame =
-    pqCodebookK(e, PqK)
-
   private[operators] def pqCodebookK(e: DataFrame, k: Int): DataFrame =
     pqCodebookFor(subvectors(e), k)
 

@@ -91,8 +91,7 @@ object TextOps {
       .select(col("doc_id"),
         size(tokens(col("text"))).cast("long").as("n_ws_tokens"),
         regexp_count(col("text"), lit("[a-z]+|[0-9]+|[^a-z0-9 ]")).cast("long").as("n_bpe_tokens"))
-      .repartition(col("doc_id"))
-      .orderBy("doc_id")
+      .transform(ContractSort.exchanged(_, "doc_id"))
 
   // ---------------------------------------------------------------- language ID
   /** Language ID via marker-token counting with deterministic argmax
@@ -110,8 +109,7 @@ object TextOps {
     scored
       .select(col("doc_id"), a.as("s_compute"), b.as("s_storage"),
         c.as("s_stream"), predicted.as("predicted_lang"))
-      .repartition(col("doc_id"))
-      .orderBy("doc_id")
+      .transform(ContractSort.exchanged(_, "doc_id"))
   }
 
   // ---------------------------------------------------------------- quality scoring
@@ -132,8 +130,7 @@ object TextOps {
         col("n_stopwords").cast("double") / col("n_tokens"))
       .withColumn("quality_ok",
         qualityOk(col("n_tokens"), col("n_distinct"), col("n_stopwords")))
-      .repartition(col("doc_id"))
-      .orderBy("doc_id")
+      .transform(ContractSort.exchanged(_, "doc_id"))
   }
 
   // ------------------------------------------------------- Gopher rule audit
@@ -211,8 +208,7 @@ object TextOps {
       .withColumn("keep",
         col("ok_word_count") && col("ok_word_len") && col("ok_symbol") &&
           col("ok_alpha") && col("ok_stop"))
-      .repartition(col("doc_id"))
-      .orderBy("doc_id")
+      .transform(ContractSort.exchanged(_, "doc_id"))
   }
 
   /** DuckDB replay of [[gopherRules]] — generated from the same
@@ -379,8 +375,7 @@ object TextOps {
         col("n_grams"), col("n_distinct_grams"),
         ((col("n_grams") - col("n_distinct_grams")).cast("double") / col("n_grams"))
           .as("dup_gram_frac"))
-      .repartition(col("doc_id"))
-      .orderBy("doc_id")
+      .transform(ContractSort.exchanged(_, "doc_id"))
 
   // ---------------------------------------------------------------- BPE
   /** The first byte-pair-encoding iteration: global counts of adjacent
@@ -1148,8 +1143,7 @@ object TextOps {
         regexp_count(col("text"), lit(Ipv4Pat)).cast("long").as("n_ipv4"))
       .withColumn("n_pii", col("n_emails") + col("n_phones") + col("n_ipv4"))
       .withColumn("has_pii", col("n_pii") > 0)
-      .repartition(col("doc_id"))
-      .orderBy("doc_id")
+      .transform(ContractSort.exchanged(_, "doc_id"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_surprisal" -> (surprisal _),

@@ -54,9 +54,6 @@ object VectorOps {
       zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
 
-  private[graft] def norm2Hof(a: Column): Column =
-    aggregate(a, lit(0.0), (acc, x) => acc + x.cast("double") * x.cast("double"))
-
   /** Reference HOF form of [[quantize]] (interpreted transform over
     * Spark's own round/cast). Kept for the VectorExprSpec parity pin. */
   private[graft] def quantizeHof(a: Column, scale: Double): Column =

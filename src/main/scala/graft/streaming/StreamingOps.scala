@@ -10,29 +10,6 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
 case class KeyedEvent(dt: String, user_id: Long, event_id: Long,
     event_type: String)
 
-/** StatefulProcessor for the transformWithState form of exact first-seen
-  * dedup: one boolean ValueState per (dt, user_id). Top-level class (not
-  * an anonymous closure) so the checkpointed operator survives re-launch
-  * with a stable class name. */
-class FirstSeenProcessor
-    extends StatefulProcessor[(String, Long), KeyedEvent, KeyedEvent] {
-  @transient private var seen: ValueState[Boolean] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    // TTL would bound state for closed days in production (e.g. 48h);
-    // NONE matches the reference's Redis sets (externally expired)
-    seen = getHandle.getValueState[Boolean]("seen", Encoders.scalaBoolean,
-      TTLConfig.NONE)
-
-  override def handleInputRows(key: (String, Long), rows: Iterator[KeyedEvent],
-      timerValues: TimerValues): Iterator[KeyedEvent] =
-    if (seen.exists()) Iterator.empty
-    else {
-      seen.update(true)
-      rows.take(1)
-    }
-}
-
 /** Closed session emitted by [[TimerSessionProcessor]]. */
 case class ClosedSession(user_id: Long, session_start_sec: Long,
     session_end_sec: Long, n_events: Long)
@@ -129,11 +106,11 @@ object StreamingOps {
     * other hand, is NOT evicted on watermark advance (the event-time
     * column is not in the key subset): one entry per (dt, user_id) is
     * retained for the life of the query, like the reference's `dau:{dt}`
-    * sets until external expiry. For late-data acceptance AND state
-    * reclamation use `firstSeenExactStream` (exact first-seen, no
-    * watermark drop) with a state timeout; `dropDuplicatesWithinWatermark`
-    * is the bounded-state variant when only near-in-time duplicates
-    * matter. */
+    * sets until external expiry (StreamingSpec pins the growth). For
+    * late-data acceptance use [[firstSeenExactStream]] (exact first-seen,
+    * no watermark drop), whose state grows the same way; for bounded
+    * state, when only near-in-time duplicates matter, use
+    * [[firstSeenBoundedStream]]. */
   def firstSeenStream(events: DataFrame): DataFrame =
     events
       .withColumn("dt", date_format(col("ts"), "yyyy-MM-dd"))
@@ -187,26 +164,6 @@ object StreamingOps {
         })
   }
 
-  /** F3, Spark-4-native form: the same exact first-seen-per-(dt, user_id)
-    * semantics as firstSeenExactStream, on the `transformWithState` API —
-    * typed per-key ValueState with first-class TTL support (the modern
-    * replacement for flatMapGroupsWithState's single opaque state object:
-    * named state variables, timers, and per-variable TTL, so the
-    * "reclaim closed days" policy becomes one TTLConfig instead of a
-    * processing-time-timeout dance). Kept alongside the fMGWS variant —
-    * both are spec-pinned to emit identical results. */
-  def firstSeenTwsStream(events: DataFrame): Dataset[KeyedEvent] = {
-    import events.sparkSession.implicits._
-    val keyed = events
-      .withColumn("dt", date_format(col("ts"), "yyyy-MM-dd"))
-      .select(col("dt"), col("user_id"), col("event_id"), col("event_type"))
-      .as[KeyedEvent]
-    keyed
-      .groupByKey(e => (e.dt, e.user_id))
-      .transformWithState(new FirstSeenProcessor, TimeMode.None(),
-        OutputMode.Append(), implicitly[org.apache.spark.sql.Encoder[KeyedEvent]])
-  }
-
   /** A2 streaming: hourly DAU as a windowed count over the deduped stream.
     * Append-mode compatible: emits each (dt, hr) bucket once its watermark
     * passes. */
@@ -217,12 +174,6 @@ object StreamingOps {
       .select(date_format(col("w.start"), "yyyy-MM-dd").as("dt"),
         date_format(col("w.start"), "HH").as("hr"), col("dau"))
 
-  /** T2 extension: per-user SESSION windows on a stream — the same
-    * `session_window` expression as the batch AnalyticOps.sessionWindow
-    * (30 min gap), watermarked so sessions close and emit in append mode
-    * once the watermark passes session end + gap. State per (user,
-    * open-session) only — closed sessions are evicted, so state is
-    * bounded by concurrent activity, not history. */
   /** The [[TimerSessionProcessor]] form of [[sessionWindowStream]]:
     * event-time-timer-driven session close over `transformWithState`.
     * Same 30-min-gap semantics; emits once the watermark passes
@@ -240,6 +191,12 @@ object StreamingOps {
         implicitly[org.apache.spark.sql.Encoder[ClosedSession]])
   }
 
+  /** T2 extension: per-user SESSION windows on a stream — the same
+    * `session_window` expression as the batch AnalyticOps.sessionWindow
+    * (30 min gap), watermarked so sessions close and emit in append mode
+    * once the watermark passes session end + gap. State per (user,
+    * open-session) only — closed sessions are evicted, so state is
+    * bounded by concurrent activity, not history. */
   def sessionWindowStream(events: DataFrame, gap: String = "30 minutes"): DataFrame =
     events
       .withWatermark("ts", WatermarkDelay)
@@ -309,12 +266,6 @@ object StreamingOps {
         sum(col("l_extendedprice")).as("revenue"))
       .select(col("w.start").as("window_start"), col("n_items"), col("revenue"))
 
-  /** K3/P8: shape a DataFrame into Kafka producer records — key (the
-    * business key, for log-compaction/partitioning), value (the full row
-    * as compact JSON, the reference's fastjson toJSONString), topic. This
-    * is exactly the schema `.writeStream.format("kafka")` consumes; kept
-    * sink-agnostic so it is testable without a broker (this environment
-    * has none) and reusable for any keyed-JSON sink. */
   /** Streaming → idempotent-table bridge: run a stream into a
     * dt-partitioned parquet table through `foreachBatch` +
     * `ScaleOps.overwriteByPartition`. Each micro-batch dynamically
@@ -335,6 +286,12 @@ object StreamingOps {
       .outputMode("update")
       .start()
 
+  /** K3/P8: shape a DataFrame into Kafka producer records — key (the
+    * business key, for log-compaction/partitioning), value (the full row
+    * as compact JSON, the reference's fastjson toJSONString), topic. This
+    * is exactly the schema `.writeStream.format("kafka")` consumes; kept
+    * sink-agnostic so it is testable without a broker and reusable for
+    * any keyed-JSON sink. */
   def toKafkaRecords(df: DataFrame, keyCol: String, topic: String): DataFrame =
     df.select(
       col(keyCol).cast("string").as("key"),
@@ -349,32 +306,6 @@ object StreamingOps {
       dimKey: String): DataFrame =
     fact.join(broadcast(dim), fact(factKey) === dim(dimKey), "left")
 
-  /** LLM-PIPELINE STREAMING INTAKE: the ONLINE half of the curation gate —
-    * new crawl/ingest shards arrive as a documents stream, and each doc is
-    * accepted or dropped as it lands. The lambda split every production
-    * pipeline uses:
-    *
-    *  - INLINE (this operator, all map-side + one dedup state): the
-    *    quality and repetition bits via the SAME shared predicates the
-    *    batch gate uses (`TextOps.qualityOk` / `isRepetitive` — one
-    *    definition, so online and offline verdicts cannot drift), over
-    *    stats built with the native `word_ngrams`; the exact-dup bit as
-    *    cross-batch first-seen state on the native `rolling_hash31`
-    *    content fingerprint — the streaming twin of batch curation's
-    *    min-doc_id-per-md5 window (one survivor per content group either
-    *    way; which id survives follows arrival order here vs min-id
-    *    there, identical on an id-ordered replay — spec-asserted).
-    *  - DOWNSTREAM (batch over the accepted shards): the corpus-sized
-    *    signals — boilerplate share, contamination vs the eval set,
-    *    near-dup vs the persisted band index ([[graft.operators.DedupOps.snapshotNearDupProbe]])
-    *    — exactly the snapshot operators the engine already ships.
-    *
-    * State: `dropDuplicates("fp")` keeps one fingerprint per corpus
-    * FOREVER (intake dedup is against all history by definition). At
-    * 100 TB that state is one long per distinct doc in the state store —
-    * RocksDB-backed it is the smallest state in the pipeline; a
-    * TTL-bounded variant is `dropDuplicatesWithinWatermark` on an
-    * ingest-time column when history can be windowed. */
   /** ONLINE NEAR-DUP intake — the streaming half of the snapshot dedup:
     * documents arrive as a stream; each micro-batch derives ITS OWN
     * MinHash signatures (batch-proportional work) and probes the
@@ -585,6 +516,32 @@ object StreamingOps {
       .outputMode("append")
       .start()
 
+  /** LLM-PIPELINE STREAMING INTAKE: the ONLINE half of the curation gate —
+    * new crawl/ingest shards arrive as a documents stream, and each doc is
+    * accepted or dropped as it lands. The lambda split every production
+    * pipeline uses:
+    *
+    *  - INLINE (this operator, all map-side + one dedup state): the
+    *    quality and repetition bits via the SAME shared predicates the
+    *    batch gate uses (`TextOps.qualityOk` / `isRepetitive` — one
+    *    definition, so online and offline verdicts cannot drift), over
+    *    stats built with the native `word_ngrams`; the exact-dup bit as
+    *    cross-batch first-seen state on the native `rolling_hash31`
+    *    content fingerprint — the streaming twin of batch curation's
+    *    min-doc_id-per-md5 window (one survivor per content group either
+    *    way; which id survives follows arrival order here vs min-id
+    *    there, identical on an id-ordered replay — spec-asserted).
+    *  - DOWNSTREAM (batch over the accepted shards): the corpus-sized
+    *    signals — boilerplate share, contamination vs the eval set,
+    *    near-dup vs the persisted band index ([[graft.operators.DedupOps.snapshotNearDupProbe]])
+    *    — exactly the snapshot operators the engine already ships.
+    *
+    * State: `dropDuplicates("fp")` keeps one fingerprint per corpus
+    * FOREVER (intake dedup is against all history by definition). At
+    * 100 TB that state is one long per distinct doc in the state store —
+    * RocksDB-backed it is the smallest state in the pipeline; a
+    * TTL-bounded variant is `dropDuplicatesWithinWatermark` on an
+    * ingest-time column when history can be windowed. */
   def curationIntakeStream(docs: DataFrame): DataFrame = {
     import graft.functions.VectorFunctions.{rolling_hash31, word_ngrams}
     val t = split(col("text"), " ")

@@ -1,0 +1,98 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source lints: each row names a call that only one file may make, the
+  * directories where that holds, and a planted offender the lint must
+  * catch.
+  *
+  *  - [[GraftSession]] is the ONE SparkSession factory. A second builder
+  *    call under src/ is a session whose settings can drift apart from
+  *    the verified and benchmarked ones.
+  *  - [[Tables.read]] is the ONE table read of the operators and the
+  *    serving daemon. A direct parquet read there would run Spark's
+  *    schema-inference job on every call again, past the per-session memo.
+  *  - [[operators.ContractSort.exchanged]] is the ONE pre-sort exchange:
+  *    it records why and when a trailing `orderBy` gets a hash
+  *    repartition in front of it. */
+class SourceLintSpec extends AnyFunSuite {
+
+  /** `offends` is true for the text of a file that breaks the rule; only
+    * `owner` (a file name) may. `planted` is a file that commits the
+    * `offence`. */
+  private case class Rule(title: String, dirs: Seq[String], owner: Option[String],
+      offends: String => Boolean, hint: String, offence: String, planted: String)
+
+  // needles are split so this file does not match its own rows
+  private val builder = "SparkSession" + ".builder("
+  private val readParquet = "read" + ".parquet("
+  private val presortTail =
+    ("""\.repartition\((?:[^()]|\([^()]*\))*\)\s*""" + """\.orderBy\(""").r
+
+  private val rules = Seq(
+    Rule("only GraftSession.scala calls the SparkSession builder",
+      Seq("src/main", "src/test"), Some("GraftSession.scala"),
+      _.contains(builder), s"build sessions through GraftSession.build/builder, not $builder",
+      "SparkSession builder call",
+      s"object Planted { val s = org.apache.spark.sql.$builder) }\n"),
+    Rule("operators and serving read tables only through Tables.read",
+      Seq("src/main/scala/graft/operators", "src/main/scala/graft/serving"), None,
+      _.contains(readParquet), s"read tables through Tables.read, not $readParquet",
+      "direct read",
+      s"object Planted { def f(s: org.apache.spark.sql.SparkSession) = s.$readParquet\"x\") }\n"),
+    Rule("operators place the pre-sort exchange only through ContractSort",
+      Seq("src/main/scala/graft/operators"), Some("ContractSort.scala"),
+      presortTail.findFirstIn(_).isDefined,
+      "sort through ContractSort.exchanged, not repartition(k).orderBy(k, ...)",
+      "repartition(k).orderBy(k) tail",
+      "object Planted {\n  def f(df: org.apache.spark.sql.DataFrame) = df\n" +
+        "    .repartition(col(\"k\"))\n    .orderBy(\"k\", \"v\")\n}\n"))
+
+  /** The repository root: the nearest directory at or above the working
+    * directory that holds build.sbt. */
+  private def repoRoot: Path =
+    Iterator.iterate(Paths.get(sys.props("user.dir")).toAbsolutePath)(_.getParent)
+      .takeWhile(_ != null)
+      .find(d => Files.exists(d.resolve("build.sbt")))
+      .getOrElse(fail(s"no build.sbt at or above ${sys.props("user.dir")}"))
+
+  /** The .scala files under `rule`'s dirs of `root`. */
+  private def scalaFiles(root: Path, rule: Rule): Seq[Path] =
+    rule.dirs.map(root.resolve).filter(Files.isDirectory(_)).flatMap { dir =>
+      val files = Files.walk(dir)
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    }
+
+  /** The files under `rule`'s dirs of `root`, other than its owner, that
+    * break it. */
+  private def offenders(root: Path, rule: Rule): Seq[Path] =
+    scalaFiles(root, rule)
+      .filter(p => !rule.owner.contains(p.getFileName.toString))
+      .filter(p => rule.offends(Files.readString(p)))
+      .map(root.relativize)
+
+  rules.foreach { rule =>
+    test(rule.title) {
+      val root = repoRoot
+      assert(rule.dirs.forall(d => Files.isDirectory(root.resolve(d))))
+      rule.owner.foreach { o =>
+        assert(scalaFiles(root, rule).exists(_.getFileName.toString == o), s"no $o")
+      }
+      val found = offenders(root, rule)
+      assert(found.isEmpty, s"${rule.hint}: $found")
+    }
+
+    test(s"the lint flags a planted ${rule.offence}") {
+      val root = Files.createTempDirectory("graft_lint_")
+      val planted = root.resolve(rule.dirs.head).resolve("Planted.scala")
+      Files.createDirectories(planted.getParent)
+      Files.writeString(planted, rule.planted)
+      assert(offenders(root, rule) == Seq(root.relativize(planted)))
+    }
+  }
+}

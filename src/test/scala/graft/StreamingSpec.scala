@@ -294,36 +294,39 @@ class StreamingSpec extends SparkTestBase {
       s"exact first-seen regardless of lateness, got $got")
   }
 
-  test("transformWithState first-seen agrees with the fMGWS variant, late arrivals included") {
+  test("first-seen state rows: bounded variant levels off, unbounded variants grow with the batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    // transformWithState requires the RocksDB state store provider
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    val batches = 6
+    val perBatch = 2
+    // state rows after each micro-batch of `perBatch` new users, event
+    // time one minute further on each batch (far past the 10 s watermark)
+    def stateRows(variant: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Dataset[_],
+        name: String): Seq[Long] = {
       val in = MemoryStream[Ev]
-      in.addData(
-        Ev(0, ts("2024-01-01 10:00:00"), 1, "view", 1.0, "{}"),
-        Ev(1, ts("2024-01-01 23:00:00"), 9, "view", 1.0, "{}"))
-      val q = StreamingOps.firstSeenTwsStream(in.toDF())
-        .writeStream.outputMode("append").format("memory").queryName("ftws").start()
-      q.processAllAvailable()
-      in.addData(Ev(2, ts("2024-01-01 10:00:05"), 1, "view", 1.0, "{}")) // same-day dup
-      in.addData(Ev(3, ts("2024-01-01 00:00:01"), 2, "view", 1.0, "{}")) // late new user
-      q.processAllAvailable()
-      q.stop()
-      val got = spark.table("ftws").select("user_id", "event_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      // identical verdicts to the flatMapGroupsWithState spec above
-      assert(got == Set((1L, 0L), (9L, 1L), (2L, 3L)),
-        s"tws first-seen must match the fMGWS semantics, got $got")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+      val q = variant(in.toDF())
+        .writeStream.outputMode("append").format("memory").queryName(name).start()
+      try (0 until batches).map { b =>
+        in.addData((0 until perBatch).map { u =>
+          val id = (b * perBatch + u).toLong
+          Ev(id, new Timestamp(ts("2024-01-01 10:00:00").getTime + b * 60000L),
+            id, "view", 1.0, "{}")
+        })
+        q.processAllAvailable()
+        q.lastProgress.stateOperators(0).numRowsTotal
+      } finally q.stop()
     }
+    val growing = (1 to batches).map(b => (b * perBatch).toLong)
+    assert(stateRows(StreamingOps.firstSeenStream, "fs_state") == growing,
+      "watermarked dropDuplicates keeps every (dt, user_id) it has seen")
+    assert(stateRows(StreamingOps.firstSeenExactStream(_).toDF(), "fse_state") == growing,
+      "flatMapGroupsWithState without timeout keeps every key it has seen")
+    val bounded = stateRows(StreamingOps.firstSeenBoundedStream, "fsb_state")
+    // a key is evicted once the watermark (max event time - 10 s) passes
+    // its event time + 10 s: at most the last two batches stay in state
+    assert(bounded.drop(2).forall(_ <= 2L * perBatch),
+      s"dropDuplicatesWithinWatermark must evict expired keys, got $bounded")
+    assert(bounded.last < growing.last)
   }
 
   test("timer sessionization: event-time timer closes sessions at gap, like session_window") {

@@ -5,7 +5,7 @@ cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 ADD_OPENS=$(for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio java.util java.util.concurrent java.util.concurrent.atomic sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do echo -n "--add-opens=java.base/$p=ALL-UNNAMED "; done)
 {
-  echo "# Physical plans (sf0.1, local[32], AQE on)"
+  echo "# Physical plans (sf0.1, local[8], AQE on)"
   echo
   echo "Regenerate with \`tools/dump_plans.sh\`. What to look for:"
   echo "- \`PushedFilters\` / pruned \`ReadSchema\` on every parquet scan"
@@ -21,10 +21,10 @@ ADD_OPENS=$(for p in java.lang java.lang.invoke java.lang.reflect java.io java.n
     # anchor completeness on the "rep 1" TERMINATOR so a JVM dying
     # mid-plan (partial tree printed) is caught, not just total death
     raw=$(SPARK_GRAFT_CPUS=8 java $ADD_OPENS -Xmx8g -Dspark.sql.session.timeZone=UTC \
-      -cp "$CP" graft.Explain "$q" /root/testdata/sf0.1 1 2>/dev/null || true)
+      -cp "$CP" graft.Tools explain "$q" /root/testdata/sf0.1 1 2>/dev/null || true)
     case "$raw" in *"rep 1"*) ;; *)
       raw=$(SPARK_GRAFT_CPUS=8 java $ADD_OPENS -Xmx8g -Dspark.sql.session.timeZone=UTC \
-        -cp "$CP" graft.Explain "$q" /root/testdata/sf0.1 1 2>/dev/null || true)
+        -cp "$CP" graft.Tools explain "$q" /root/testdata/sf0.1 1 2>/dev/null || true)
     ;; esac
     case "$raw" in
       *"rep 1"*)

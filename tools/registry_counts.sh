@@ -4,4 +4,4 @@
 set -e
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
-java -cp "$CP" graft.RegistryReport
+java -cp "$CP" graft.Tools registry
