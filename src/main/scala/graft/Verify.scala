@@ -14,6 +14,9 @@ object Verify {
   /** Slow queries scheduled last — see [[SparkEntry.knownSlow]]. */
   private val knownSlow = SparkEntry.knownSlow
 
+  /** Queries in flight at once; each retires its own caches when done. */
+  private val Threads = 4
+
   private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete(): Unit
@@ -43,12 +46,6 @@ object Verify {
         })
       }))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // 1 preserves strictly sequential behavior (plus per-query clearCache)
-    val threads = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt
-    // 0 = no internal deadline (the driver's external kill is survivable
-    // anyway — see above); >0 = stop LAUNCHING queries after N seconds so
-    // the JVM exits cleanly inside a known budget
-    val deadlineSec = sys.env.getOrElse("SPARK_GRAFT_VERIFY_DEADLINE_SEC", "0").toLong
     val spark = GraftSession.start(
       GraftSession.builder(s"local[$cpus]", "graft-verify", cpus.toInt)
         // concurrent queries time-share executor slots instead of queueing
@@ -98,18 +95,14 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
-    val t0 = System.nanoTime()
-    def expired: Boolean =
-      deadlineSec > 0 && (System.nanoTime() - t0) / 1e9 > deadlineSec
     // fast queries first, known-slow ones last (kill-cost minimization)
     val ordered = selected.toSeq.sortBy { case (n, _) =>
       (knownSlow.indexOf(n), n) // -1 (not slow) sorts before 0..7
     }
-    val pool = Executors.newFixedThreadPool(threads)
+    val pool = Executors.newFixedThreadPool(Threads)
     ordered.foreach { case (name, fn) =>
       pool.submit(new Runnable {
         def run(): Unit = {
-          if (expired) { System.err.println(s"[verify] $name skipped (deadline)"); return }
           val q0 = System.nanoTime()
           try {
             // write to a dot-prefixed temp dir, rename on success: an
@@ -128,16 +121,14 @@ object Verify {
                   java.nio.file.StandardCopyOption.ATOMIC_MOVE)
               }
             }
-            // Parallel mode: retire THIS query's caches now that its
-            // output is published (a global clearCache would yank frames
-            // concurrent siblings are mid-scan on); sequential mode keeps
-            // the full clearCache sweep below. Best-effort and after the
-            // publish: a retire failure must never drop a finished result.
-            if (threads > 1)
-              try org.apache.spark.sql.graftext.CacheRetire.retire(df)
-              catch { case e: Throwable =>
-                System.err.println(s"[verify] $name cache retire failed: ${e.getMessage}")
-              }
+            // retire THIS query's caches now that its output is published
+            // (a global clearCache would yank frames concurrent siblings
+            // are mid-scan on). Best-effort and after the publish: a
+            // retire failure must never drop a finished result.
+            try org.apache.spark.sql.graftext.CacheRetire.retire(df)
+            catch { case e: Throwable =>
+              System.err.println(s"[verify] $name cache retire failed: ${e.getMessage}")
+            }
             // per-query wall time (under concurrency it includes slot
             // contention — a triage signal, not a benchmark; Bench owns
             // the real numbers)
@@ -146,13 +137,6 @@ object Verify {
           } catch { case e: Throwable =>
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
           }
-          // Sequential mode: drop any caches a query built (shingle sets
-          // etc.) so later queries don't run under accumulated storage/GC
-          // pressure. In parallel mode a global clear would unpersist
-          // frames an in-flight sibling is mid-scan on (correct but a
-          // recompute storm) — there we rely on MEMORY_AND_DISK eviction;
-          // sf0.01 caches are far below the storage fraction anyway.
-          if (threads == 1) spark.catalog.clearCache()
         }
       })
     }

@@ -22,8 +22,9 @@ import graft.Tables
 object CoreOps {
 
   /** dt ("yyyy-MM-dd") / hr ("HH") derivation — reference P3
-    * (gmallrealtime/.../app/DauApp.scala:47-55). */
-  private def withDtHr(df: DataFrame): DataFrame = df
+    * (gmallrealtime/.../app/DauApp.scala:47-55); the batch queries and the
+    * first-seen streams all derive the two columns here. */
+  private[graft] def withDtHr(df: DataFrame): DataFrame = df
     .withColumn("dt", date_format(col("ts"), "yyyy-MM-dd"))
     .withColumn("hr", date_format(col("ts"), "HH"))
 

@@ -680,26 +680,9 @@ object DedupOps {
     }
     val sig = hashed.groupBy("fp").agg(mins.head, mins.tail: _*)
       .cache() // band explode + both scoring joins + the intra gate
-    val bandCols = (0 until NumBands).map { bnd =>
-      val rows = (0 until RowsPerBand).zipWithIndex.map { case (r, j) =>
-        col(s"m${bnd * RowsPerBand + r}").as(s"r$j")
-      }
-      struct(lit(bnd).as("band") +: rows: _*)
-    }
-    val rNames = (0 until RowsPerBand).map(j => s"r$j")
-    val buckets = sig
-      .select(col("fp"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("fp") +: (col("bk.band").as("band") +:
-        rNames.map(n => col(s"bk.$n").as(n))): _*)
     // same map-side pair generation from bucket fp lists as minhashLsh,
     // keyed on the RAW 4-min tuple (the bucket key itself)
-    val candidates = buckets
-      .groupBy(col("band") +: rNames.map(col(_)): _*)
-      .agg(sort_array(collect_set(col("fp"))).as("ds"))
-      .where(size(col("ds")) >= 2)
-      .select(explode(pairCombos(col("ds"))).as("p"))
-      .select(col("p.a").as("fp_a"), col("p.b").as("fp_b"))
-      .distinct()
+    val candidates = bandedCandidates(sig, NumBands, RowsPerBand)
     val sigA = sig.select(col("fp").as("fp_a") +:
       (0 until NumPerm).map(i => col(s"m$i").as(s"a$i")): _*)
     val sigB = sig.select(col("fp").as("fp_b") +:
@@ -789,21 +772,27 @@ object DedupOps {
     (combined, truth)
   }
 
+  /** One struct per band of a signature row's mins m0..: the band
+    * number and that band's `rowsPerBand` mins as r0, r1, … — the raw
+    * tuple that is the bucket key. */
+  private def bandStructs(bands: Int, rowsPerBand: Int): Seq[Column] =
+    (0 until bands).map { bnd =>
+      val rows = (0 until rowsPerBand).map { j =>
+        col(s"m${bnd * rowsPerBand + j}").as(s"r$j")
+      }
+      struct(lit(bnd).as("band") +: rows: _*)
+    }
+
   /** Distinct banded candidate fp pairs of a (bands, rowsPerBand)
     * geometry over the shared 32-min signature aggregate — raw min
     * tuples as bucket keys (the oracle-portable bucket identity), pairs
     * map-side from each bucket's fp list. */
   private def bandedCandidates(combined: DataFrame, bands: Int,
       rowsPerBand: Int): DataFrame = {
-    val bandCols = (0 until bands).map { bnd =>
-      val rows = (0 until rowsPerBand).map { j =>
-        col(s"m${bnd * rowsPerBand + j}").as(s"r$j")
-      }
-      struct(lit(bnd).as("band") +: rows: _*)
-    }
     val rNames = (0 until rowsPerBand).map(j => s"r$j")
     combined
-      .select(col("fp"), explode(array(bandCols: _*)).as("bk"))
+      .select(col("fp"),
+        explode(array(bandStructs(bands, rowsPerBand): _*)).as("bk"))
       .select(col("fp") +: (col("bk.band").as("band") +:
         rNames.map(n => col(s"bk.$n").as(n))): _*)
       .groupBy(col("band") +: rNames.map(col(_)): _*)
@@ -936,21 +925,15 @@ object DedupOps {
     * est_jaccard ≥ 0.5 (max matches, min corpus id), i.e. the drop list
     * with provenance. */
   def snapshotNearDup(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val sh = shingles(Tables.documents(spark, dir))
     val base = md5ShingleBase
     val sig = minhashSignaturesWith(sh, base)
       .withColumn("is_batch", pmod(col("doc_id"), lit(10)) >= 8)
       .cache() // feeds buckets (both sides) + both scoring joins
-    val bandCols = (0 until NumBands).map { bnd =>
-      val rows = (0 until RowsPerBand).zipWithIndex.map { case (r, j) =>
-        col(s"m${bnd * RowsPerBand + r}").as(s"r$j")
-      }
-      struct(lit(bnd).as("band") +: rows: _*)
-    }
     val rNames = (0 until RowsPerBand).map(j => s"r$j")
     val buckets = sig
-      .select(col("doc_id"), col("is_batch"), explode(array(bandCols: _*)).as("bk"))
+      .select(col("doc_id"), col("is_batch"),
+        explode(array(bandStructs(NumBands, RowsPerBand): _*)).as("bk"))
       .select(col("doc_id") +: col("is_batch") +: (col("bk.band").as("band") +:
         rNames.map(n => col(s"bk.$n").as(n))): _*)
     val probe = buckets.where(col("is_batch"))
@@ -959,9 +942,20 @@ object DedupOps {
       .select(col("doc_id").as("corpus_id") +: col("band") +: rNames.map(col(_)): _*)
     val cand = probe.join(index, "band" +: rNames)
       .select("batch_id", "corpus_id").distinct()
-    val sigA = sig.select(col("doc_id").as("sa") +:
+    snapBestPartner(cand, sig, sig, "doc_id")
+  }
+
+  /** The incremental near-dup verdict over candidate (batch_id,
+    * corpus_id) pairs: matching mins against the batch signatures `bsig`
+    * (doc_id, m0..) and corpus signatures `csig` (`csigId`, m0..), pairs
+    * at est_jaccard ≥ 0.5 only, each batch doc's best partner (max
+    * matches, min corpus id). */
+  private def snapBestPartner(cand: DataFrame, bsig: DataFrame,
+      csig: DataFrame, csigId: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val sigA = bsig.select(col("doc_id").as("sa") +:
       (0 until NumPerm).map(i => col(s"m$i").as(s"a$i")): _*)
-    val sigB = sig.select(col("doc_id").as("sb") +:
+    val sigB = csig.select(col(csigId).as("sb") +:
       (0 until NumPerm).map(i => col(s"m$i").as(s"b$i")): _*)
     val nMatch = (0 until NumPerm)
       .map(i => when(col(s"a$i") === col(s"b$i"), 1L).otherwise(0L))
@@ -1065,7 +1059,6 @@ object DedupOps {
     * after its terminal write). */
   private def snapNearDupProbeFrames(spark: SparkSession, batch: DataFrame,
       indexTable: String, sigTable: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
     val base = md5ShingleBase
     val bsig = minhashSignaturesWith(shingles(batch), base)
       .drop("source").cache() // probe keys + the batch scoring side
@@ -1073,62 +1066,18 @@ object DedupOps {
       explode(bandKeyArray).as("bkey"))
     val cand = probe.join(spark.table(indexTable), "bkey")
       .select("batch_id", "corpus_id").distinct()
-    val sigA = bsig.select(col("doc_id").as("sa") +:
-      (0 until NumPerm).map(i => col(s"m$i").as(s"a$i")): _*)
-    val sigB = spark.table(sigTable).select(col("corpus_id").as("sb") +:
-      (0 until NumPerm).map(i => col(s"m$i").as(s"b$i")): _*)
-    val nMatch = (0 until NumPerm)
-      .map(i => when(col(s"a$i") === col(s"b$i"), 1L).otherwise(0L))
-      .reduce(_ + _)
-    val w = Window.partitionBy("batch_id")
-      .orderBy(col("n_matching").desc, col("corpus_id"))
-    val out = cand
-      .join(sigA, col("batch_id") === col("sa"))
-      .join(sigB, col("corpus_id") === col("sb"))
-      .select(col("batch_id"), col("corpus_id"), nMatch.as("n_matching"))
-      .where(col("n_matching") >= SnapMinMatch)
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1)
-      .select(col("batch_id"), col("corpus_id"), col("n_matching"),
-        (col("n_matching").cast("double") / NumPerm).as("est_jaccard"))
-      .orderBy("batch_id")
+    val out = snapBestPartner(cand, bsig, spark.table(sigTable), "corpus_id")
     (bsig, out)
   }
 
   /** DuckDB replay of [[snapshotNearDup]] — generated from the same
     * permParams / NumBands / SnapMinMatch constants. */
   private def snapNearDupSql: String = {
-    val p = MersennePrime31
-    val minExprs = permParams.zipWithIndex.map { case ((a, b), i) =>
-      s"min((h * $a + $b) % $p) AS m$i"
-    }.mkString(",\n                  ")
-    val bandJoins = (0 until NumBands).map { bnd =>
-      val eqs = (0 until RowsPerBand)
-        .map(r => s"a.m${bnd * RowsPerBand + r} = b.m${bnd * RowsPerBand + r}")
-        .mkString(" AND ")
+    val bandJoins = bandJoinsSql(NumBands, RowsPerBand)(eqs =>
       s"""SELECT a.doc_id AS batch_id, b.doc_id AS corpus_id
-             FROM bsig a JOIN csig b ON $eqs"""
-    }.mkString("\n             UNION ALL\n             ")
-    val matchSum = (0 until NumPerm)
-      .map(i => s"(CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END)")
-      .mkString(" + ")
-    s"""WITH toks AS (
-           SELECT doc_id, source, string_split(text, ' ') AS t FROM documents),
-         tok3 AS (SELECT * FROM toks WHERE len(t) >= 3),
-         sh AS (
-           SELECT DISTINCT doc_id, source, shingle FROM (
-             SELECT doc_id, source,
-                    unnest(list_transform(generate_series(1, len(t) - 2),
-                      i -> array_to_string(t[i:i+2], ' '))) AS shingle
-             FROM tok3)),
-         hsh AS (
-           SELECT doc_id, source,
-                  (('0x' || substr(md5(shingle), 1, 8))::BIGINT) % $p AS h
-           FROM sh),
-         sig AS (
-           SELECT doc_id, source,
-                  $minExprs
-           FROM hsh GROUP BY doc_id, source),
+             FROM bsig a JOIN csig b ON $eqs""")
+    s"""WITH ${docShinglesCtes("doc_id, source", "sh")},
+         ${minhashSigCtes("doc_id, source")},
          bsig AS (SELECT * FROM sig WHERE doc_id % 10 >= 8),
          csig AS (SELECT * FROM sig WHERE doc_id % 10 < 8),
          cand AS (
@@ -1136,11 +1085,11 @@ object DedupOps {
              $bandJoins)),
          scored AS (
            SELECT c.batch_id, c.corpus_id,
-                  CAST($matchSum AS BIGINT) AS n_matching
+                  CAST($MatchSumSql AS BIGINT) AS n_matching
            FROM cand c
            JOIN sig a ON a.doc_id = c.batch_id
            JOIN sig b ON b.doc_id = c.corpus_id
-           WHERE $matchSum >= $SnapMinMatch)
+           WHERE $MatchSumSql >= $SnapMinMatch)
          SELECT batch_id, corpus_id, n_matching,
                 CAST(n_matching AS DOUBLE) / $NumPerm AS est_jaccard
          FROM (SELECT *, row_number() OVER (
@@ -1209,23 +1158,6 @@ object DedupOps {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** The REGISTERED Hamming-pair pipeline since round 11 — the Manku et
-    * al. 2007 (Google simhash dedup) table construction: 6 blocks of
-    * 11/11/11/11/10/10 bits, candidate keys = every C(6,3)=20 THREE-BLOCK
-    * combination (~32-bit keys). Any ≤3 flipped bits touch ≤3 blocks, so
-    * ≥3 blocks stay intact and at least one 3-block combo matches —
-    * recall for Hamming ≤ 3 is COMPLETE, exactly like the 4×16-bit
-    * pigeonhole, so the verified pair set is IDENTICAL (spec-pinned),
-    * and both DuckDB oracles (hamming: all-pairs bit_count(xor) ≤ 3;
-    * simhash: vote/sign/pair replay) are blocking-agnostic — the swap
-    * cannot change either result set. What changes is the SCALE
-    * CEILING: 16-bit chunk keys are a 65k key space — a bounded
-    * blocking key, O(n²/65k) once the corpus outgrows it (the round-10
-    * 100× sweep measured exactly that regime) — while ~32-bit combined
-    * keys keep expected bucket size n/2³²: the candidate generation
-    * costs a constant 20× explode instead of 4× and stays linear to
-    * ~10⁹ documents. The classic blocking-key-must-scale-with-n trade,
-    * paid in tables. */
   /** Doc-grain Hamming ≤ 3 pair emission VIA SIGNATURE GRAIN — the
     * output-proportional form the registered pair queries run since
     * round 11. Same pair set as running the blocked join at doc grain
@@ -1276,7 +1208,25 @@ object DedupOps {
   /** The Manku-blocked candidate join itself, unsorted — the detection
     * core consumed at SIGNATURE grain by [[sigNeighbors]] and
     * [[hammingPairsGrouped]] (both aggregate or expand the pairs; a sort
-    * exchange on this frame would be pure waste). */
+    * exchange on this frame would be pure waste).
+    *
+    * The REGISTERED Hamming-pair pipeline since round 11 — the Manku et
+    * al. 2007 (Google simhash dedup) table construction: 6 blocks of
+    * 11/11/11/11/10/10 bits, candidate keys = every C(6,3)=20 THREE-BLOCK
+    * combination (~32-bit keys). Any ≤3 flipped bits touch ≤3 blocks, so
+    * ≥3 blocks stay intact and at least one 3-block combo matches —
+    * recall for Hamming ≤ 3 is COMPLETE, exactly like the 4×16-bit
+    * pigeonhole, so the verified pair set is IDENTICAL (spec-pinned),
+    * and both DuckDB oracles (hamming: all-pairs bit_count(xor) ≤ 3;
+    * simhash: vote/sign/pair replay) are blocking-agnostic — the swap
+    * cannot change either result set. What changes is the SCALE
+    * CEILING: 16-bit chunk keys are a 65k key space — a bounded
+    * blocking key, O(n²/65k) once the corpus outgrows it (the round-10
+    * 100× sweep measured exactly that regime) — while ~32-bit combined
+    * keys keep expected bucket size n/2³²: the candidate generation
+    * costs a constant 20× explode instead of 4× and stays linear to
+    * ~10⁹ documents. The classic blocking-key-must-scale-with-n trade,
+    * paid in tables. */
   private[graft] def hammingPairsScaledUnsorted(sig: DataFrame): DataFrame = {
     val blocks = Seq((0, 11), (11, 11), (22, 11), (33, 11), (44, 10), (54, 10))
     def block(i: Int): org.apache.spark.sql.Column = {
@@ -1305,12 +1255,6 @@ object DedupOps {
       .distinct()
   }
 
-  /** Bench alias (`x_hamming_pigeonhole`): [[hammingNearDup]]'s
-    * signatures through the small-corpus 4×16-bit pigeonhole blocking —
-    * row-identical output (both blockings are complete for Hamming ≤ 3,
-    * spec-pinned), 4× explode instead of 20×. Kept as the cheap
-    * one-off-corpus variant now that the registered form runs the Manku
-    * 20-table blocking. */
   /** The deterministic 63-bit ARITHMETIC signature (over `doc_id`) shared
     * by [[hammingNearDup]] / [[simDegree]] / [[dupComponents]] and their
     * DuckDB oracles: 8 bytes derived from doc_id DIV 4 (each byte < 128
@@ -1327,6 +1271,12 @@ object DedupOps {
     base.bitwiseXOR(noise)
   }
 
+  /** Bench alias (`x_hamming_pigeonhole`): [[hammingNearDup]]'s
+    * signatures through the small-corpus 4×16-bit pigeonhole blocking —
+    * row-identical output (both blockings are complete for Hamming ≤ 3,
+    * spec-pinned), 4× explode instead of 20×. Kept as the cheap
+    * one-off-corpus variant now that the registered form runs the Manku
+    * 20-table blocking. */
   def hammingNearDupPigeonhole(spark: SparkSession, dir: String): DataFrame = {
     val sig = Tables.documents(spark, dir)
       .select(col("doc_id"), arithmeticSimhash.as("simhash"))
@@ -2493,21 +2443,76 @@ object DedupOps {
     "q_dup_canon" -> (dupCanonical _),
   )
 
-  /** DuckDB twin of ngramJaccard (shared: the pair query itself and the
-    * nearDupKeep apply step's subquery). Mirrors the Spark pipeline stage
-    * by stage: shingle sets (`len(t) >= 3` replicating the sequence()
-    * guard), the df <= MaxShingleDf hot-shingle cap (interpolated), blocked intersection counts,
-    * exact Jaccard from integer cardinalities. */
-  private val NgramJaccardSql: String =
-    s"""WITH toks AS (
-           SELECT doc_id, source, string_split(text, ' ') AS t FROM documents),
-         tok3 AS (SELECT * FROM toks WHERE len(t) >= 3),
-         sh0 AS (
-           SELECT DISTINCT doc_id, source, shingle FROM (
-             SELECT doc_id, source,
+  // ------------------------------------------------ shared oracle fragments
+  // DuckDB text shared by the oracle twins below, one definition each.
+  // Only oracle text builds on these (never a Spark-side builder, and they
+  // build no Spark plan), so each twin stays an independent replay.
+
+  /** Distinct word-trigram shingles of the token lists `t` in `from`,
+    * keyed by `keys` — the DuckDB side of [[shingles]]; `from` carries
+    * the `len(t) >= 3` guard replicating sequence()'s. */
+  private def shingleSetSql(keys: String, from: String): String =
+    s"""SELECT DISTINCT $keys, shingle FROM (
+             SELECT $keys,
                     unnest(list_transform(generate_series(1, len(t) - 2),
                       i -> array_to_string(t[i:i+2], ' '))) AS shingle
-             FROM tok3)),
+             FROM $from)"""
+
+  /** CTEs `toks` (token lists of `documents`), `tok3` (three or more
+    * tokens) and `$sh` (their distinct shingles), all keyed by `keys`. */
+  private def docShinglesCtes(keys: String, sh: String): String =
+    s"""toks AS (
+           SELECT $keys, string_split(text, ' ') AS t FROM documents),
+         tok3 AS (SELECT * FROM toks WHERE len(t) >= 3),
+         $sh AS (
+           ${shingleSetSql(keys, "tok3")})"""
+
+  /** CTEs `hsh` (md5-derived base hash `h` per shingle of `sh`) and `sig`
+    * (the 32 permutation mins `m0..m31`, one per [[permParams]] pair),
+    * keyed by `keys` — the DuckDB side of [[minhashSignatures]]. */
+  private def minhashSigCtes(keys: String): String = {
+    val p = MersennePrime31
+    val mins = permParams.zipWithIndex.map { case ((a, b), i) =>
+      s"min((h * $a + $b) % $p) AS m$i"
+    }.mkString(",\n                  ")
+    s"""hsh AS (
+           SELECT $keys,
+                  (('0x' || substr(md5(shingle), 1, 8))::BIGINT) % $p AS h
+           FROM sh),
+         sig AS (
+           SELECT $keys,
+                  $mins
+           FROM hsh GROUP BY $keys)"""
+  }
+
+  /** The UNION-of-equi-joins replay of one banding geometry's candidate
+    * set: one `arm(eqs)` per band, `eqs` equating that band's mins on the
+    * join sides `a` and `b`. */
+  private def bandJoinsSql(bands: Int, rowsPerBand: Int)(
+      arm: String => String): String =
+    (0 until bands).map { bnd =>
+      arm((0 until rowsPerBand)
+        .map(r => s"a.m${bnd * rowsPerBand + r} = b.m${bnd * rowsPerBand + r}")
+        .mkString(" AND "))
+    }.mkString("\n             UNION ALL\n             ")
+
+  /** A band arm over the `sig` self-join, unordered pairs on `key`. */
+  private def selfBandArm(key: String, outA: String, outB: String)(
+      eqs: String): String =
+    s"""SELECT a.$key AS $outA, b.$key AS $outB
+             FROM sig a JOIN sig b ON $eqs AND a.$key < b.$key"""
+
+  /** Number of the 32 mins equal on the join sides `a` and `b`. */
+  private val MatchSumSql: String = (0 until NumPerm)
+    .map(i => s"(CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END)")
+    .mkString(" + ")
+
+  /** The df-capped shingle sets (`sh0` → `sh`), per-doc cardinalities
+    * `card(doc_id, c)` and blocked same-source intersection counts
+    * `inter(doc_a, doc_b, n_common)` that the Jaccard, contrastive and
+    * containment twins share. */
+  private val JaccardInterCtes: String =
+    s"""${docShinglesCtes("doc_id, source", "sh0")},
          sh AS (
            SELECT doc_id, source, shingle FROM (
              SELECT *, count(*) OVER (PARTITION BY source, shingle) AS df
@@ -2519,7 +2524,116 @@ object DedupOps {
            FROM sh a JOIN sh b
              ON a.shingle = b.shingle AND a.source = b.source
             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
+           GROUP BY 1, 2)"""
+
+  /** Per-position SubstrK-token window hashes `h` over the token lists
+    * `t` of `from`, position as `pos`, `cols` carried: the rolling fold
+    * q_fingerprint replays, over the window's joined string (arithmetic
+    * identical to the native prefix-hash pass). */
+  private def windowHashSql(cols: String, pos: String, from: String): String =
+    s"""SELECT $cols, CAST(u.p AS BIGINT) AS $pos,
+                  list_reduce(list_prepend(CAST(0 AS BIGINT),
+                    list_transform(
+                      string_split(array_to_string(
+                        t[u.p:u.p + ${SubstrK - 1}], ' '), ''),
+                      c -> CAST(ascii(c) AS BIGINT))),
+                    ${TextOps.RollingHashFold}) AS h
+           FROM $from, unnest(generate_series(1, len(t) - ${SubstrK - 1})) AS u(p)
+           WHERE len(t) >= $SubstrK"""
+
+  /** The island merge over the matched position pairs in `from`: pairs
+    * on one `diag` (per `part`) whose `ord` positions run consecutively
+    * share `grp`. */
+  private def islandsSql(from: String, part: String, diag: String,
+      ord: String): String =
+    s"""SELECT *, $diag AS diag,
+                  $ord - row_number() OVER (
+                    PARTITION BY $part, $diag ORDER BY $ord) AS grp
+           FROM $from"""
+
+  /** CTEs `m` (cross-text matches of the window hashes in `pos`, each
+    * unordered text pair once, `carry` columns kept) and `r` (their
+    * islands). */
+  private def crossIslandCtes(carry: Seq[String]): String = {
+    val cols = Seq("x.fp AS fpa", "y.fp AS fpb", "x.canon_id AS da",
+      "y.canon_id AS db") ++ carry ++ Seq("x.p AS pa", "y.p AS pb")
+    s"""m AS (
+           SELECT ${cols.mkString(", ")}
+           FROM pos x JOIN pos y ON x.h = y.h AND x.fp < y.fp),
+         r AS (
+           ${islandsSql("m", "fpa, fpb", "pa - pb", "pa")})"""
+  }
+
+  /** CTEs `$m` (repeats of a window hash inside ONE text of `pos`, at
+    * pa < pb, `carry` columns kept) and `$r` (their islands on the
+    * repeat-distance diagonal). */
+  private def intraIslandCtes(m: String, r: String, carry: Seq[String]): String = {
+    val cols = Seq("x.fp") ++ carry ++ Seq("x.p AS pa", "y.p AS pb")
+    s"""$m AS (
+           SELECT ${cols.mkString(", ")}
+           FROM pos x JOIN pos y
+             ON x.h = y.h AND x.fp = y.fp AND x.p < y.p),
+         $r AS (
+           ${islandsSql(m, "fp", "pb - pa", "pa")})"""
+  }
+
+  /** The FROM/GROUP BY/HAVING tail rolling the islands of `from` up to
+    * spans of at least MinSpanTokens tokens, per `keys` and island. */
+  private def spanGroupSql(from: String, keys: String): String =
+    s"""FROM $from GROUP BY $keys, diag, grp
+           HAVING count(*) + ${SubstrK - 1} >= $MinSpanTokens"""
+
+  /** The scrub apply step's tail over `losers(fp, s, e)` and the text
+    * groups `fpg`: interval union (running-max islands; adjacent regions
+    * merge), per-text span counts, and the token-grain rewrite replayed
+    * via string_agg ORDER BY position (string_agg skips the CASE NULLs
+    * exactly as collect_list skips Spark's). */
+  private val ScrubTailSql: String =
+    """lm AS (
+           SELECT fp, s, e,
+                  max(e) OVER (PARTITION BY fp ORDER BY s, e
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+                    AS prev_max
+           FROM losers),
+         lg AS (
+           SELECT fp, s, e,
+                  sum(CASE WHEN prev_max IS NULL OR s > prev_max + 1
+                      THEN 1 ELSE 0 END)
+                    OVER (PARTITION BY fp ORDER BY s, e
+                      ROWS UNBOUNDED PRECEDING) AS grp
+           FROM lm),
+         iv AS (SELECT fp, grp, min(s) AS s, max(e) AS e
+                FROM lg GROUP BY fp, grp),
+         ns AS (SELECT fp, CAST(count(*) AS BIGINT) AS n_spans
+                FROM iv GROUP BY fp),
+         toks AS (
+           SELECT f.fp, f.canon_id, f.n_docs, ns.n_spans,
+                  CAST(u.p AS BIGINT) AS p, f.t[u.p] AS tok
+           FROM fpg f JOIN ns ON f.fp = ns.fp,
+                unnest(generate_series(1, len(f.t))) AS u(p)),
+         cov AS (
+           SELECT tk.fp, tk.canon_id, tk.n_docs, tk.n_spans, tk.p, tk.tok,
+                  (i.s IS NOT NULL) AS covered
+           FROM toks tk LEFT JOIN iv i
+             ON tk.fp = i.fp AND tk.p BETWEEN i.s AND i.e)
+         SELECT canon_id, n_docs, n_spans,
+                CAST(count(*) AS BIGINT) AS n_tokens,
+                CAST(sum(CASE WHEN covered THEN 1 ELSE 0 END) AS BIGINT)
+                  AS tokens_removed,
+                CAST(count(*) - sum(CASE WHEN covered THEN 1 ELSE 0 END)
+                  AS BIGINT) AS tokens_kept,
+                coalesce(string_agg(CASE WHEN NOT covered THEN tok END,
+                  ' ' ORDER BY p), '') AS scrub_text
+         FROM cov GROUP BY fp, canon_id, n_docs, n_spans
+         ORDER BY canon_id"""
+
+  /** DuckDB twin of ngramJaccard (shared: the pair query itself and the
+    * nearDupKeep apply step's subquery). Mirrors the Spark pipeline stage
+    * by stage: shingle sets (`len(t) >= 3` replicating the sequence()
+    * guard), the df <= MaxShingleDf hot-shingle cap (interpolated), blocked intersection counts,
+    * exact Jaccard from integer cardinalities. */
+  private val NgramJaccardSql: String =
+    s"""WITH $JaccardInterCtes
          SELECT doc_a, doc_b, n_common,
                 CAST(n_common AS DOUBLE) / (ca.c + cb.c - n_common) AS jaccard
          FROM inter
@@ -2569,77 +2683,34 @@ object DedupOps {
 
   /** DuckDB replay of minhashOracle, GENERATED from the same permParams /
     * NumBands constants so the twin can never drift from the Spark math. */
-  private val MinhashOracleSql: String = {
-    val p = MersennePrime31
-    val minExprs = permParams.zipWithIndex.map { case ((a, b), i) =>
-      s"min((h * $a + $b) % $p) AS m$i"
-    }.mkString(",\n                  ")
-    val bandJoins = (0 until NumBands).map { bnd =>
-      val eqs = (0 until RowsPerBand)
-        .map(r => s"a.m${bnd * RowsPerBand + r} = b.m${bnd * RowsPerBand + r}")
-        .mkString(" AND ")
-      s"""SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-             FROM sig a JOIN sig b ON $eqs AND a.doc_id < b.doc_id"""
-    }.mkString("\n             UNION ALL\n             ")
-    val matchSum = (0 until NumPerm)
-      .map(i => s"(CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END)")
-      .mkString(" + ")
-    s"""WITH toks AS (
-           SELECT doc_id, source, string_split(text, ' ') AS t FROM documents),
-         tok3 AS (SELECT * FROM toks WHERE len(t) >= 3),
-         sh AS (
-           SELECT DISTINCT doc_id, source, shingle FROM (
-             SELECT doc_id, source,
-                    unnest(list_transform(generate_series(1, len(t) - 2),
-                      i -> array_to_string(t[i:i+2], ' '))) AS shingle
-             FROM tok3)),
-         hsh AS (
-           SELECT doc_id, source,
-                  (('0x' || substr(md5(shingle), 1, 8))::BIGINT) % $p AS h
-           FROM sh),
-         sig AS (
-           SELECT doc_id, source,
-                  $minExprs
-           FROM hsh GROUP BY doc_id, source),
+  private val MinhashOracleSql: String =
+    s"""WITH ${docShinglesCtes("doc_id, source", "sh")},
+         ${minhashSigCtes("doc_id, source")},
          cand AS (
            SELECT DISTINCT doc_a, doc_b FROM (
-             $bandJoins))
+             ${bandJoinsSql(NumBands, RowsPerBand)(
+               selfBandArm("doc_id", "doc_a", "doc_b"))}))
          SELECT c.doc_a, c.doc_b,
-                CAST($matchSum AS BIGINT) AS n_matching,
-                CAST($matchSum AS DOUBLE) / $NumPerm AS est_jaccard
+                CAST($MatchSumSql AS BIGINT) AS n_matching,
+                CAST($MatchSumSql AS DOUBLE) / $NumPerm AS est_jaccard
          FROM cand c
          JOIN sig a ON a.doc_id = c.doc_a
          JOIN sig b ON b.doc_id = c.doc_b
          ORDER BY doc_a, doc_b"""
-  }
 
   /** Shared CTE prefix for the LSH audit oracles — fp-grain shingles,
     * the 32-min signature, and exact-Jaccard ground truth; ends at
     * `truth(fp_a, fp_b, jaccard)`. GENERATED from the same permParams so
     * the signature math can't drift. */
-  private val LshAuditCte: String = {
-    val p = MersennePrime31
-    val minExprs = permParams.zipWithIndex.map { case ((a, b), i) =>
-      s"min((h * $a + $b) % $p) AS m$i"
-    }.mkString(",\n                  ")
+  private val LshAuditCte: String =
     s"""g AS (
            SELECT md5(text) AS fp, min(text) AS text
            FROM documents GROUP BY 1),
          t3 AS (SELECT fp, string_split(text, ' ') AS t FROM g),
          t3f AS (SELECT * FROM t3 WHERE len(t) >= 3),
          sh AS (
-           SELECT DISTINCT fp, shingle FROM (
-             SELECT fp,
-                    unnest(list_transform(generate_series(1, len(t) - 2),
-                      i -> array_to_string(t[i:i+2], ' '))) AS shingle
-             FROM t3f)),
-         hsh AS (
-           SELECT fp, (('0x' || substr(md5(shingle), 1, 8))::BIGINT) % $p AS h
-           FROM sh),
-         sig AS (
-           SELECT fp,
-                  $minExprs
-           FROM hsh GROUP BY fp),
+           ${shingleSetSql("fp", "t3f")}),
+         ${minhashSigCtes("fp")},
          card AS (SELECT fp, count(*) AS c FROM sh GROUP BY fp),
          inter AS (
            SELECT a.fp AS fp_a, b.fp AS fp_b, count(*) AS n_common
@@ -2651,18 +2722,6 @@ object DedupOps {
            FROM inter
            JOIN card ca ON fp_a = ca.fp
            JOIN card cb ON fp_b = cb.fp)"""
-  }
-
-  /** The UNION-of-equi-self-joins replay of one banding geometry's
-    * candidate set over `sig`. */
-  private def bandJoinsSql(bands: Int, rowsPerBand: Int): String =
-    (0 until bands).map { bnd =>
-      val eqs = (0 until rowsPerBand)
-        .map(r => s"a.m${bnd * rowsPerBand + r} = b.m${bnd * rowsPerBand + r}")
-        .mkString(" AND ")
-      s"""SELECT a.fp AS fp_a, b.fp AS fp_b
-             FROM sig a JOIN sig b ON $eqs AND a.fp < b.fp"""
-    }.mkString("\n             UNION ALL\n             ")
 
   /** DuckDB replay of [[lshRecall]] — GENERATED from the same permParams /
     * NumBands constants and the same pre-computed analytic doubles, so
@@ -2676,7 +2735,8 @@ object DedupOps {
       .mkString("\n                  ")
     s"""WITH $LshAuditCte,
          cand AS (SELECT DISTINCT fp_a, fp_b FROM (
-             ${bandJoinsSql(NumBands, RowsPerBand)})),
+             ${bandJoinsSql(NumBands, RowsPerBand)(
+               selfBandArm("fp", "fp_a", "fp_b"))})),
          bucketed AS (
            SELECT least(CAST(floor(t.jaccard * 10) AS BIGINT),
                         CAST(9 AS BIGINT)) AS bucket,
@@ -2698,7 +2758,7 @@ object DedupOps {
   private val LshTuningSql: String = {
     val geomCtes = TuneGeometries.zipWithIndex.map { case ((b, r), i) =>
       s"""cand$i AS (SELECT DISTINCT fp_a, fp_b FROM (
-             ${bandJoinsSql(b, r)})),
+             ${bandJoinsSql(b, r)(selfBandArm("fp", "fp_a", "fp_b"))})),
          geom$i AS (
            SELECT CAST($b AS BIGINT) AS n_bands,
                   CAST($r AS BIGINT) AS rows_per_band,
@@ -2795,38 +2855,13 @@ object DedupOps {
     * code so the twin can never drift. Pairs whose banded candidacy comes
     * only from hash collisions fall out identically on both sides (the
     * ≥ 0.5 exact-Jaccard filter removes them). */
-  private val MinhashLshCtes: String = {
-    val p = MersennePrime31
-    val minExprs = permParams.zipWithIndex.map { case ((a, b), i) =>
-      s"min((h * $a + $b) % $p) AS m$i"
-    }.mkString(",\n                  ")
-    val bandJoins = (0 until NumBands).map { bnd =>
-      val eqs = (0 until RowsPerBand)
-        .map(r => s"a.m${bnd * RowsPerBand + r} = b.m${bnd * RowsPerBand + r}")
-        .mkString(" AND ")
-      s"""SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-             FROM sig a JOIN sig b ON $eqs AND a.doc_id < b.doc_id"""
-    }.mkString("\n             UNION ALL\n             ")
-    s"""toks AS (
-           SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         tok3 AS (SELECT * FROM toks WHERE len(t) >= 3),
-         sh AS (
-           SELECT DISTINCT doc_id, shingle FROM (
-             SELECT doc_id,
-                    unnest(list_transform(generate_series(1, len(t) - 2),
-                      i -> array_to_string(t[i:i+2], ' '))) AS shingle
-             FROM tok3)),
-         hsh AS (
-           SELECT doc_id,
-                  (('0x' || substr(md5(shingle), 1, 8))::BIGINT) % $p AS h
-           FROM sh),
-         sig AS (
-           SELECT doc_id,
-                  $minExprs
-           FROM hsh GROUP BY doc_id),
+  private val MinhashLshCtes: String =
+    s"""${docShinglesCtes("doc_id", "sh")},
+         ${minhashSigCtes("doc_id")},
          cand AS (
            SELECT DISTINCT doc_a, doc_b FROM (
-             $bandJoins)),
+             ${bandJoinsSql(NumBands, RowsPerBand)(
+               selfBandArm("doc_id", "doc_a", "doc_b"))})),
          card AS (SELECT doc_id, count(*) AS c FROM sh GROUP BY doc_id),
          inter AS (
            SELECT c.doc_a, c.doc_b, count(*) AS n_common
@@ -2834,7 +2869,6 @@ object DedupOps {
            JOIN sh a ON a.doc_id = c.doc_a
            JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
            GROUP BY 1, 2)"""
-  }
 
   private val MinhashPairSelect: String =
     """SELECT i.doc_a, i.doc_b,
@@ -2849,6 +2883,22 @@ object DedupOps {
          $MinhashPairSelect
          ORDER BY doc_a, doc_b"""
 
+  /** The verified doc `pairs` rolled up by the unordered pair of their
+    * `attr` values in `ds(doc_id, fp, attr)`: distinct fp pairs, doc
+    * pairs and the max Jaccard per (attr_a, attr_b). */
+  private def pairRollupSql(attr: String): String =
+    s"""SELECT least(a.$attr, b.$attr) AS ${attr}_a,
+                greatest(a.$attr, b.$attr) AS ${attr}_b,
+                count(DISTINCT least(a.fp, b.fp) || ':' || greatest(a.fp, b.fp))
+                  AS n_fp_pairs,
+                count(*) AS dup_pairs,
+                max(p.jaccard) AS max_jaccard
+         FROM pairs p
+         JOIN ds a ON p.doc_a = a.doc_id
+         JOIN ds b ON p.doc_b = b.doc_id
+         GROUP BY 1, 2
+         ORDER BY ${attr}_a, ${attr}_b"""
+
   /** DuckDB replay of [[sourceOverlap]] — the identical verified-pair
     * chain as q_minhash_lsh, rolled up at DOC grain by unordered source
     * pair (the oracle is free to expand the doc-pair space the Spark
@@ -2859,17 +2909,7 @@ object DedupOps {
     s"""WITH $MinhashLshCtes,
          pairs AS ($MinhashPairSelect),
          ds AS (SELECT doc_id, source, md5(text) AS fp FROM documents)
-         SELECT least(a.source, b.source) AS source_a,
-                greatest(a.source, b.source) AS source_b,
-                count(DISTINCT least(a.fp, b.fp) || ':' || greatest(a.fp, b.fp))
-                  AS n_fp_pairs,
-                count(*) AS dup_pairs,
-                max(p.jaccard) AS max_jaccard
-         FROM pairs p
-         JOIN ds a ON p.doc_a = a.doc_id
-         JOIN ds b ON p.doc_b = b.doc_id
-         GROUP BY 1, 2
-         ORDER BY source_a, source_b"""
+         ${pairRollupSql("source")}"""
 
   /** DuckDB replay of [[splitLeakage]] — the verified-pair chain rolled
     * up by the q_split_assign bucket rule (the same
@@ -2884,17 +2924,7 @@ object DedupOps {
                        WHEN $b < 90 THEN 'val'
                        ELSE 'test' END AS split
                 FROM documents)
-         SELECT least(a.split, b.split) AS split_a,
-                greatest(a.split, b.split) AS split_b,
-                count(DISTINCT least(a.fp, b.fp) || ':' || greatest(a.fp, b.fp))
-                  AS n_fp_pairs,
-                count(*) AS dup_pairs,
-                max(p.jaccard) AS max_jaccard
-         FROM pairs p
-         JOIN ds a ON p.doc_a = a.doc_id
-         JOIN ds b ON p.doc_b = b.doc_id
-         GROUP BY 1, 2
-         ORDER BY split_a, split_b"""
+         ${pairRollupSql("split")}"""
   }
 
   /** DuckDB replay of [[dedupTauSweep]] — the verified-pair chain, then
@@ -2931,15 +2961,7 @@ object DedupOps {
     * result-identical by construction (the exact verify join removes every
     * bloom false positive; the bloom can't produce false negatives). */
   private val ContaminationSql: String =
-    """WITH toks AS (
-           SELECT doc_id, source, string_split(text, ' ') AS t FROM documents),
-         tok3 AS (SELECT * FROM toks WHERE len(t) >= 3),
-         sh AS (
-           SELECT DISTINCT doc_id, source, shingle FROM (
-             SELECT doc_id, source,
-                    unnest(list_transform(generate_series(1, len(t) - 2),
-                      i -> array_to_string(t[i:i+2], ' '))) AS shingle
-             FROM tok3)),
+    s"""WITH ${docShinglesCtes("doc_id, source", "sh")},
          ev AS (SELECT DISTINCT shingle FROM sh WHERE source = 'src0'),
          tr AS (SELECT doc_id, shingle FROM sh WHERE source <> 'src0'),
          card AS (SELECT doc_id, count(*) AS n_shingles FROM tr GROUP BY doc_id),
@@ -2953,35 +2975,16 @@ object DedupOps {
          ORDER BY c.doc_id"""
 
   val oracleSql: Map[String, String] = Map(
-    // exact substring dedup: per-position window hashes via the SAME
-    // list_reduce fold q_fingerprint replays (over the window's joined
-    // string — arithmetic identical to the native prefix-hash pass),
-    // then the identical inverted-index join + diagonal island merge
+    // exact substring dedup: per-position window hashes, then the
+    // identical inverted-index join + diagonal island merge
     "q_substr_dedup" ->
       s"""WITH fpg AS (
            SELECT md5(text) AS fp, min(doc_id) AS canon_id,
                   count(*) AS n_docs, string_split(text, ' ') AS t
            FROM documents GROUP BY text),
          pos AS (
-           SELECT fp, canon_id, n_docs, CAST(u.p AS BIGINT) AS p,
-                  list_reduce(list_prepend(CAST(0 AS BIGINT),
-                    list_transform(
-                      string_split(array_to_string(
-                        t[u.p:u.p + ${SubstrK - 1}], ' '), ''),
-                      c -> CAST(ascii(c) AS BIGINT))),
-                    (h, c) -> (h * 31 + c) % 1000000007) AS h
-           FROM fpg, unnest(generate_series(1, len(t) - ${SubstrK - 1})) AS u(p)
-           WHERE len(t) >= $SubstrK),
-         m AS (
-           SELECT x.fp AS fpa, y.fp AS fpb, x.canon_id AS da,
-                  y.canon_id AS db, x.n_docs AS na, y.n_docs AS nb,
-                  x.p AS pa, y.p AS pb
-           FROM pos x JOIN pos y ON x.h = y.h AND x.fp < y.fp),
-         r AS (
-           SELECT *, pa - pb AS diag,
-                  pa - row_number() OVER (
-                    PARTITION BY fpa, fpb, pa - pb ORDER BY pa) AS grp
-           FROM m),
+           ${windowHashSql("fp, canon_id, n_docs", "p", "fpg")}),
+         ${crossIslandCtes(Seq("x.n_docs AS na", "y.n_docs AS nb"))},
          s AS (
            SELECT min(da) AS doc_a, min(db) AS doc_b,
                   CAST(min(na) AS BIGINT) AS n_docs_a,
@@ -3001,15 +3004,7 @@ object DedupOps {
                   count(*) AS n_docs, string_split(text, ' ') AS t
            FROM documents GROUP BY text),
          pos AS (
-           SELECT fp, CAST(u.p AS BIGINT) AS p,
-                  list_reduce(list_prepend(CAST(0 AS BIGINT),
-                    list_transform(
-                      string_split(array_to_string(
-                        t[u.p:u.p + ${SubstrK - 1}], ' '), ''),
-                      c -> CAST(ascii(c) AS BIGINT))),
-                    (h, c) -> (h * 31 + c) % 1000000007) AS h
-           FROM fpg, unnest(generate_series(1, len(t) - ${SubstrK - 1})) AS u(p)
-           WHERE len(t) >= $SubstrK),
+           ${windowHashSql("fp", "p", "fpg")}),
          occ AS (SELECT h, CAST(count(*) AS BIGINT) AS t
                  FROM pos GROUP BY h),
          caps AS (SELECT unnest([${SubstrCapSweep.mkString(", ")}]) AS cap)
@@ -3030,82 +3025,36 @@ object DedupOps {
                   count(*) AS n_docs, string_split(text, ' ') AS t
            FROM documents GROUP BY text),
          pos AS (
-           SELECT fp, canon_id, n_docs, CAST(u.p AS BIGINT) AS p,
-                  list_reduce(list_prepend(CAST(0 AS BIGINT),
-                    list_transform(
-                      string_split(array_to_string(
-                        t[u.p:u.p + ${SubstrK - 1}], ' '), ''),
-                      c -> CAST(ascii(c) AS BIGINT))),
-                    (h, c) -> (h * 31 + c) % 1000000007) AS h
-           FROM fpg, unnest(generate_series(1, len(t) - ${SubstrK - 1})) AS u(p)
-           WHERE len(t) >= $SubstrK),
-         m AS (
-           SELECT x.fp, x.canon_id, x.n_docs, x.p AS pa, y.p AS pb
-           FROM pos x JOIN pos y
-             ON x.h = y.h AND x.fp = y.fp AND x.p < y.p),
-         r AS (
-           SELECT *, pb - pa AS diag,
-                  pa - row_number() OVER (
-                    PARTITION BY fp, pb - pa ORDER BY pa) AS grp
-           FROM m)
+           ${windowHashSql("fp, canon_id, n_docs", "p", "fpg")}),
+         ${intraIslandCtes("m", "r", Seq("x.canon_id", "x.n_docs"))}
          SELECT min(canon_id) AS doc_id,
                 CAST(min(n_docs) AS BIGINT) AS n_docs,
                 min(pa) AS a_start, min(pb) AS b_start,
                 CAST(count(*) + ${SubstrK - 1} AS BIGINT) AS span_tokens
-         FROM r GROUP BY fp, diag, grp
-         HAVING count(*) + ${SubstrK - 1} >= $MinSpanTokens
+         ${spanGroupSql("r", "fp")}
          ORDER BY doc_id, a_start, b_start""",
     // the scrub apply step: the detector CTEs (identical through the
     // island merge), then loser-side attribution (larger canonical id
     // drops the cross-text span; the pa < pb side drops the intra
-    // repeat), interval union (running-max islands; adjacent regions
-    // merge), and the token-grain rewrite replayed via string_agg
-    // ORDER BY position (string_agg skips the CASE NULLs exactly as
-    // collect_list skips Spark's)
+    // repeat) and the shared interval-union + token-rewrite tail
     "q_substr_scrub" ->
       s"""WITH fpg AS (
            SELECT md5(text) AS fp, min(doc_id) AS canon_id,
                   count(*) AS n_docs, string_split(text, ' ') AS t
            FROM documents GROUP BY text),
          pos AS (
-           SELECT fp, canon_id, n_docs, CAST(u.p AS BIGINT) AS p,
-                  list_reduce(list_prepend(CAST(0 AS BIGINT),
-                    list_transform(
-                      string_split(array_to_string(
-                        t[u.p:u.p + ${SubstrK - 1}], ' '), ''),
-                      c -> CAST(ascii(c) AS BIGINT))),
-                    (h, c) -> (h * 31 + c) % 1000000007) AS h
-           FROM fpg, unnest(generate_series(1, len(t) - ${SubstrK - 1})) AS u(p)
-           WHERE len(t) >= $SubstrK),
-         m AS (
-           SELECT x.fp AS fpa, y.fp AS fpb, x.canon_id AS da,
-                  y.canon_id AS db, x.p AS pa, y.p AS pb
-           FROM pos x JOIN pos y ON x.h = y.h AND x.fp < y.fp),
-         r AS (
-           SELECT *, pa - pb AS diag,
-                  pa - row_number() OVER (
-                    PARTITION BY fpa, fpb, pa - pb ORDER BY pa) AS grp
-           FROM m),
+           ${windowHashSql("fp, canon_id, n_docs", "p", "fpg")}),
+         ${crossIslandCtes(Nil)},
          sp AS (
            SELECT fpa, fpb, min(da) AS da, min(db) AS db,
                   min(pa) AS a_start, min(pb) AS b_start,
                   count(*) + ${SubstrK - 1} AS span_tokens
-           FROM r GROUP BY fpa, fpb, diag, grp
-           HAVING count(*) + ${SubstrK - 1} >= $MinSpanTokens),
-         mi AS (
-           SELECT x.fp, x.p AS pa, y.p AS pb
-           FROM pos x JOIN pos y
-             ON x.h = y.h AND x.fp = y.fp AND x.p < y.p),
-         ri AS (
-           SELECT *, pb - pa AS diag,
-                  pa - row_number() OVER (
-                    PARTITION BY fp, pb - pa ORDER BY pa) AS grp
-           FROM mi),
+           ${spanGroupSql("r", "fpa, fpb")}),
+         ${intraIslandCtes("mi", "ri", Nil)},
          spi AS (
            SELECT fp, min(pb) AS b_start,
                   count(*) + ${SubstrK - 1} AS span_tokens
-           FROM ri GROUP BY fp, diag, grp
-           HAVING count(*) + ${SubstrK - 1} >= $MinSpanTokens),
+           ${spanGroupSql("ri", "fp")}),
          losers AS (
            SELECT DISTINCT
                   CASE WHEN da < db THEN fpb ELSE fpa END AS fp,
@@ -3116,43 +3065,7 @@ object DedupOps {
            UNION
            SELECT fp, b_start AS s, b_start + span_tokens - 1 AS e
            FROM spi),
-         lm AS (
-           SELECT fp, s, e,
-                  max(e) OVER (PARTITION BY fp ORDER BY s, e
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                    AS prev_max
-           FROM losers),
-         lg AS (
-           SELECT fp, s, e,
-                  sum(CASE WHEN prev_max IS NULL OR s > prev_max + 1
-                      THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY fp ORDER BY s, e
-                      ROWS UNBOUNDED PRECEDING) AS grp
-           FROM lm),
-         iv AS (SELECT fp, grp, min(s) AS s, max(e) AS e
-                FROM lg GROUP BY fp, grp),
-         ns AS (SELECT fp, CAST(count(*) AS BIGINT) AS n_spans
-                FROM iv GROUP BY fp),
-         toks AS (
-           SELECT f.fp, f.canon_id, f.n_docs, ns.n_spans,
-                  CAST(u.p AS BIGINT) AS p, f.t[u.p] AS tok
-           FROM fpg f JOIN ns ON f.fp = ns.fp,
-                unnest(generate_series(1, len(f.t))) AS u(p)),
-         cov AS (
-           SELECT tk.fp, tk.canon_id, tk.n_docs, tk.n_spans, tk.p, tk.tok,
-                  (i.s IS NOT NULL) AS covered
-           FROM toks tk LEFT JOIN iv i
-             ON tk.fp = i.fp AND tk.p BETWEEN i.s AND i.e)
-         SELECT canon_id, n_docs, n_spans,
-                CAST(count(*) AS BIGINT) AS n_tokens,
-                CAST(sum(CASE WHEN covered THEN 1 ELSE 0 END) AS BIGINT)
-                  AS tokens_removed,
-                CAST(count(*) - sum(CASE WHEN covered THEN 1 ELSE 0 END)
-                  AS BIGINT) AS tokens_kept,
-                coalesce(string_agg(CASE WHEN NOT covered THEN tok END,
-                  ' ' ORDER BY p), '') AS scrub_text
-         FROM cov GROUP BY fp, canon_id, n_docs, n_spans
-         ORDER BY canon_id""",
+         $ScrubTailSql""",
     // snapshot probe: batch-side positions (distinct-batch-text grain)
     // against corpus-side positions, islands per (batch text, corpus
     // text, diagonal), doc-grain expansion back to batch ids
@@ -3165,43 +3078,22 @@ object DedupOps {
            SELECT md5(text) AS fp, string_split(text, ' ') AS t
            FROM documents WHERE doc_id % 10 >= 8 GROUP BY text),
          cpos AS (
-           SELECT fp AS corpus_fp, canon_id AS corpus_doc,
-                  n_docs AS n_corpus_docs, CAST(u.p AS BIGINT) AS cp,
-                  list_reduce(list_prepend(CAST(0 AS BIGINT),
-                    list_transform(
-                      string_split(array_to_string(
-                        t[u.p:u.p + ${SubstrK - 1}], ' '), ''),
-                      c -> CAST(ascii(c) AS BIGINT))),
-                    (h, c) -> (h * 31 + c) % 1000000007) AS h
-           FROM corp, unnest(generate_series(1, len(t) - ${SubstrK - 1})) AS u(p)
-           WHERE len(t) >= $SubstrK),
+           ${windowHashSql("fp AS corpus_fp, canon_id AS corpus_doc, " +
+             "n_docs AS n_corpus_docs", "cp", "corp")}),
          bpos AS (
-           SELECT fp AS batch_fp, CAST(u.p AS BIGINT) AS bp,
-                  list_reduce(list_prepend(CAST(0 AS BIGINT),
-                    list_transform(
-                      string_split(array_to_string(
-                        t[u.p:u.p + ${SubstrK - 1}], ' '), ''),
-                      c -> CAST(ascii(c) AS BIGINT))),
-                    (h, c) -> (h * 31 + c) % 1000000007) AS h
-           FROM bat, unnest(generate_series(1, len(t) - ${SubstrK - 1})) AS u(p)
-           WHERE len(t) >= $SubstrK),
+           ${windowHashSql("fp AS batch_fp", "bp", "bat")}),
          m AS (
            SELECT b.batch_fp, c.corpus_fp, c.corpus_doc, c.n_corpus_docs,
                   b.bp, c.cp
            FROM bpos b JOIN cpos c ON b.h = c.h),
          r AS (
-           SELECT *, bp - cp AS diag,
-                  bp - row_number() OVER (
-                    PARTITION BY batch_fp, corpus_fp, bp - cp
-                    ORDER BY bp) AS grp
-           FROM m),
+           ${islandsSql("m", "batch_fp, corpus_fp", "bp - cp", "bp")}),
          sp AS (
            SELECT batch_fp, min(corpus_doc) AS corpus_doc,
                   CAST(min(n_corpus_docs) AS BIGINT) AS n_corpus_docs,
                   min(bp) AS b_start, min(cp) AS c_start,
                   CAST(count(*) + ${SubstrK - 1} AS BIGINT) AS span_tokens
-           FROM r GROUP BY batch_fp, corpus_fp, diag, grp
-           HAVING count(*) + ${SubstrK - 1} >= $MinSpanTokens),
+           ${spanGroupSql("r", "batch_fp, corpus_fp")}),
          fpmap AS (
            SELECT doc_id AS batch_id, md5(text) AS batch_fp
            FROM documents WHERE doc_id % 10 >= 8)
@@ -3221,43 +3113,22 @@ object DedupOps {
            SELECT md5(text) AS fp, string_split(text, ' ') AS t
            FROM documents WHERE source <> 'src0' GROUP BY text),
          epos AS (
-           SELECT fp AS eval_fp, canon_id AS eval_doc,
-                  n_docs AS n_eval_docs, CAST(u.p AS BIGINT) AS ep,
-                  list_reduce(list_prepend(CAST(0 AS BIGINT),
-                    list_transform(
-                      string_split(array_to_string(
-                        t[u.p:u.p + ${SubstrK - 1}], ' '), ''),
-                      c -> CAST(ascii(c) AS BIGINT))),
-                    (h, c) -> (h * 31 + c) % 1000000007) AS h
-           FROM ev, unnest(generate_series(1, len(t) - ${SubstrK - 1})) AS u(p)
-           WHERE len(t) >= $SubstrK),
+           ${windowHashSql("fp AS eval_fp, canon_id AS eval_doc, " +
+             "n_docs AS n_eval_docs", "ep", "ev")}),
          tpos AS (
-           SELECT fp AS train_fp, CAST(u.p AS BIGINT) AS tp,
-                  list_reduce(list_prepend(CAST(0 AS BIGINT),
-                    list_transform(
-                      string_split(array_to_string(
-                        t[u.p:u.p + ${SubstrK - 1}], ' '), ''),
-                      c -> CAST(ascii(c) AS BIGINT))),
-                    (h, c) -> (h * 31 + c) % 1000000007) AS h
-           FROM tr, unnest(generate_series(1, len(t) - ${SubstrK - 1})) AS u(p)
-           WHERE len(t) >= $SubstrK),
+           ${windowHashSql("fp AS train_fp", "tp", "tr")}),
          m AS (
            SELECT t.train_fp, e.eval_fp, e.eval_doc, e.n_eval_docs,
                   t.tp, e.ep
            FROM tpos t JOIN epos e ON t.h = e.h),
          r AS (
-           SELECT *, tp - ep AS diag,
-                  tp - row_number() OVER (
-                    PARTITION BY train_fp, eval_fp, tp - ep
-                    ORDER BY tp) AS grp
-           FROM m),
+           ${islandsSql("m", "train_fp, eval_fp", "tp - ep", "tp")}),
          sp AS (
            SELECT train_fp, min(eval_doc) AS eval_doc,
                   CAST(min(n_eval_docs) AS BIGINT) AS n_eval_docs,
                   min(tp) AS doc_start, min(ep) AS eval_start,
                   CAST(count(*) + ${SubstrK - 1} AS BIGINT) AS span_tokens
-           FROM r GROUP BY train_fp, eval_fp, diag, grp
-           HAVING count(*) + ${SubstrK - 1} >= $MinSpanTokens),
+           ${spanGroupSql("r", "train_fp, eval_fp")}),
          fpmap AS (
            SELECT doc_id, md5(text) AS train_fp
            FROM documents WHERE source <> 'src0')
@@ -3277,80 +3148,23 @@ object DedupOps {
                   count(*) AS n_docs, string_split(text, ' ') AS t
            FROM documents WHERE source <> 'src0' GROUP BY text),
          epos AS (
-           SELECT fp AS eval_fp, CAST(u.p AS BIGINT) AS ep,
-                  list_reduce(list_prepend(CAST(0 AS BIGINT),
-                    list_transform(
-                      string_split(array_to_string(
-                        t[u.p:u.p + ${SubstrK - 1}], ' '), ''),
-                      c -> CAST(ascii(c) AS BIGINT))),
-                    (h, c) -> (h * 31 + c) % 1000000007) AS h
-           FROM ev, unnest(generate_series(1, len(t) - ${SubstrK - 1})) AS u(p)
-           WHERE len(t) >= $SubstrK),
+           ${windowHashSql("fp AS eval_fp", "ep", "ev")}),
          tpos AS (
-           SELECT fp AS train_fp, CAST(u.p AS BIGINT) AS tp,
-                  list_reduce(list_prepend(CAST(0 AS BIGINT),
-                    list_transform(
-                      string_split(array_to_string(
-                        t[u.p:u.p + ${SubstrK - 1}], ' '), ''),
-                      c -> CAST(ascii(c) AS BIGINT))),
-                    (h, c) -> (h * 31 + c) % 1000000007) AS h
-           FROM fpg, unnest(generate_series(1, len(t) - ${SubstrK - 1})) AS u(p)
-           WHERE len(t) >= $SubstrK),
+           ${windowHashSql("fp AS train_fp", "tp", "fpg")}),
          m AS (
            SELECT t.train_fp, e.eval_fp, t.tp, e.ep
            FROM tpos t JOIN epos e ON t.h = e.h),
          r AS (
-           SELECT *, tp - ep AS diag,
-                  tp - row_number() OVER (
-                    PARTITION BY train_fp, eval_fp, tp - ep
-                    ORDER BY tp) AS grp
-           FROM m),
+           ${islandsSql("m", "train_fp, eval_fp", "tp - ep", "tp")}),
          sp AS (
            SELECT train_fp, min(tp) AS b_start,
                   count(*) + ${SubstrK - 1} AS span_tokens
-           FROM r GROUP BY train_fp, eval_fp, diag, grp
-           HAVING count(*) + ${SubstrK - 1} >= $MinSpanTokens),
+           ${spanGroupSql("r", "train_fp, eval_fp")}),
          losers AS (
            SELECT DISTINCT train_fp AS fp, b_start AS s,
                   b_start + span_tokens - 1 AS e
            FROM sp),
-         lm AS (
-           SELECT fp, s, e,
-                  max(e) OVER (PARTITION BY fp ORDER BY s, e
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                    AS prev_max
-           FROM losers),
-         lg AS (
-           SELECT fp, s, e,
-                  sum(CASE WHEN prev_max IS NULL OR s > prev_max + 1
-                      THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY fp ORDER BY s, e
-                      ROWS UNBOUNDED PRECEDING) AS grp
-           FROM lm),
-         iv AS (SELECT fp, grp, min(s) AS s, max(e) AS e
-                FROM lg GROUP BY fp, grp),
-         ns AS (SELECT fp, CAST(count(*) AS BIGINT) AS n_spans
-                FROM iv GROUP BY fp),
-         toks AS (
-           SELECT f.fp, f.canon_id, f.n_docs, ns.n_spans,
-                  CAST(u.p AS BIGINT) AS p, f.t[u.p] AS tok
-           FROM fpg f JOIN ns ON f.fp = ns.fp,
-                unnest(generate_series(1, len(f.t))) AS u(p)),
-         cov AS (
-           SELECT tk.fp, tk.canon_id, tk.n_docs, tk.n_spans, tk.p, tk.tok,
-                  (i.s IS NOT NULL) AS covered
-           FROM toks tk LEFT JOIN iv i
-             ON tk.fp = i.fp AND tk.p BETWEEN i.s AND i.e)
-         SELECT canon_id, n_docs, n_spans,
-                CAST(count(*) AS BIGINT) AS n_tokens,
-                CAST(sum(CASE WHEN covered THEN 1 ELSE 0 END) AS BIGINT)
-                  AS tokens_removed,
-                CAST(count(*) - sum(CASE WHEN covered THEN 1 ELSE 0 END)
-                  AS BIGINT) AS tokens_kept,
-                coalesce(string_agg(CASE WHEN NOT covered THEN tok END,
-                  ' ' ORDER BY p), '') AS scrub_text
-         FROM cov GROUP BY fp, canon_id, n_docs, n_spans
-         ORDER BY canon_id""",
+         $ScrubTailSql""",
     // same chunking CTE as q_chunk_docs (PipelineOps), rolled up by fp
     "q_chunk_shared" ->
       """WITH s AS (
@@ -3394,27 +3208,7 @@ object DedupOps {
     // same shingle/df-cap/pair CTEs as the Jaccard oracle, then the
     // symmetric best-positive window and the md5-ring negative
     "q_contrastive_pairs" ->
-      s"""WITH toks AS (
-           SELECT doc_id, source, string_split(text, ' ') AS t FROM documents),
-         tok3 AS (SELECT * FROM toks WHERE len(t) >= 3),
-         sh0 AS (
-           SELECT DISTINCT doc_id, source, shingle FROM (
-             SELECT doc_id, source,
-                    unnest(list_transform(generate_series(1, len(t) - 2),
-                      i -> array_to_string(t[i:i+2], ' '))) AS shingle
-             FROM tok3)),
-         sh AS (
-           SELECT doc_id, source, shingle FROM (
-             SELECT *, count(*) OVER (PARTITION BY source, shingle) AS df
-             FROM sh0)
-           WHERE df <= $MaxShingleDf),
-         card AS (SELECT doc_id, count(*) AS c FROM sh GROUP BY doc_id),
-         inter AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-           FROM sh a JOIN sh b
-             ON a.shingle = b.shingle AND a.source = b.source
-            AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
+      s"""WITH $JaccardInterCtes,
          pairs AS (
            SELECT doc_a, doc_b,
                   CAST(n_common AS DOUBLE) / (ca.c + cb.c - n_common) AS jaccard
@@ -3453,27 +3247,7 @@ object DedupOps {
          ORDER BY anchor_id""",
     // same shingle/df-cap/pair CTEs as the Jaccard oracle, asymmetric ratio
     "q_containment" ->
-      s"""WITH toks AS (
-           SELECT doc_id, source, string_split(text, ' ') AS t FROM documents),
-         tok3 AS (SELECT * FROM toks WHERE len(t) >= 3),
-         sh0 AS (
-           SELECT DISTINCT doc_id, source, shingle FROM (
-             SELECT doc_id, source,
-                    unnest(list_transform(generate_series(1, len(t) - 2),
-                      i -> array_to_string(t[i:i+2], ' '))) AS shingle
-             FROM tok3)),
-         sh AS (
-           SELECT doc_id, source, shingle FROM (
-             SELECT *, count(*) OVER (PARTITION BY source, shingle) AS df
-             FROM sh0)
-           WHERE df <= $MaxShingleDf),
-         card AS (SELECT doc_id, count(*) AS c FROM sh GROUP BY doc_id),
-         inter AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-           FROM sh a JOIN sh b
-             ON a.shingle = b.shingle AND a.source = b.source
-            AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
+      s"""WITH $JaccardInterCtes
          SELECT doc_a, doc_b, n_common, ca.c AS c_a, cb.c AS c_b,
                 CAST(n_common AS DOUBLE) / least(ca.c, cb.c) AS containment
          FROM inter
@@ -3521,15 +3295,7 @@ object DedupOps {
     // exact verify join removes every false positive) — same oracle
     "q_contamination_bloom" -> ContaminationSql,
     "q_contamination_pairs" ->
-      """WITH toks AS (
-           SELECT doc_id, source, string_split(text, ' ') AS t FROM documents),
-         tok3 AS (SELECT * FROM toks WHERE len(t) >= 3),
-         sh AS (
-           SELECT DISTINCT doc_id, source, shingle FROM (
-             SELECT doc_id, source,
-                    unnest(list_transform(generate_series(1, len(t) - 2),
-                      i -> array_to_string(t[i:i+2], ' '))) AS shingle
-             FROM tok3)),
+      s"""WITH ${docShinglesCtes("doc_id, source", "sh")},
          ev AS (SELECT doc_id AS eval_id, shingle FROM sh WHERE source = 'src0'),
          tr AS (SELECT doc_id AS train_id, shingle FROM sh WHERE source <> 'src0')
          SELECT train_id, eval_id, count(*) AS n_shared
@@ -3540,7 +3306,7 @@ object DedupOps {
     // on each side (min(text) is exact — all texts in a group are
     // identical), shingled once, overlaps reported with multiplicities
     "q_contamination_groups" ->
-      """WITH tg AS (
+      s"""WITH tg AS (
            SELECT md5(text) AS train_fp, count(*) AS n_train_docs,
                   min(text) AS text
            FROM documents WHERE source <> 'src0' GROUP BY 1),
@@ -3550,18 +3316,10 @@ object DedupOps {
            FROM documents WHERE source = 'src0' GROUP BY 1),
          tt AS (SELECT train_fp, string_split(text, ' ') AS t FROM tg),
          tsh AS (
-           SELECT DISTINCT train_fp, shingle FROM (
-             SELECT train_fp,
-                    unnest(list_transform(generate_series(1, len(t) - 2),
-                      i -> array_to_string(t[i:i+2], ' '))) AS shingle
-             FROM tt WHERE len(t) >= 3)),
+           ${shingleSetSql("train_fp", "tt WHERE len(t) >= 3")}),
          et AS (SELECT eval_fp, string_split(text, ' ') AS t FROM eg),
          esh AS (
-           SELECT DISTINCT eval_fp, shingle FROM (
-             SELECT eval_fp,
-                    unnest(list_transform(generate_series(1, len(t) - 2),
-                      i -> array_to_string(t[i:i+2], ' '))) AS shingle
-             FROM et WHERE len(t) >= 3)),
+           ${shingleSetSql("eval_fp", "et WHERE len(t) >= 3")}),
          inter AS (
            SELECT t.train_fp, e.eval_fp, count(*) AS n_shared
            FROM tsh t JOIN esh e USING (shingle)
@@ -3597,14 +3355,8 @@ object DedupOps {
     // pair report
     "q_embed_neardup" ->
       s"""WITH ${SimilarityOps.scaledQuantizerCtes}
-         SELECT la.vec_id AS vec_a, lb.vec_id AS vec_b
-         FROM lists la
-         JOIN lists lb ON la.cl = lb.cl AND la.vec_id < lb.vec_id
-         JOIN e a ON a.vec_id = la.vec_id
-         JOIN e b ON b.vec_id = lb.vec_id
-         WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                      CAST(b.embedding AS DOUBLE[]))
-                 > $EmbedNearDupTau
+         ${SimilarityOps.clusterPairsSql("la.vec_id AS vec_a, lb.vec_id AS vec_b",
+           EmbedNearDupTau)}
          ORDER BY vec_a, vec_b""",
     // q_minhash_lsh / q_simhash intentionally omitted: xxhash64/murmur have
     // no DuckDB twin; they are verified in ScalaTest against the exact

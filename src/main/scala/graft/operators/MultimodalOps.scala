@@ -2133,6 +2133,28 @@ object MultimodalOps {
          FROM assets)"""
   }
 
+  /** CTE `p` over [[AssetSqlCte]]'s `a`: every column plus the
+    * magic-byte format flags is_png / is_wav / is_mp4 / is_jpeg, read
+    * from the hex image (shared by the validate and parse twins). */
+  private val FormatFlagsCte: String =
+    """p AS (
+           SELECT *,
+             substr(phx,1,16) = '89504E470D0A1A0A'
+               AND length(phx) >= 66
+               AND substr(phx,25,8) = '49484452' AS is_png,
+             substr(phx,1,8) = '52494646'
+               AND length(phx) >= 88
+               AND substr(phx,17,8) = '57415645'
+               AND substr(phx,25,8) = '666D7420' AS is_wav,
+             length(phx) >= 32
+               AND substr(phx,9,8) = '66747970'
+               AND ('0x' || substr(phx,1,8))::BIGINT
+                     BETWEEN 8 AND length(phx) // 2 AS is_mp4,
+             substr(phx,1,4) = 'FFD8'
+               AND length(phx) >= 196
+               AND substr(phx,179,4) = 'FFC0' AS is_jpeg
+           FROM a)"""
+
   /** Decode replay on top of [[AssetSqlCte]]: per-asset integer stats
     * computed ARITHMETICALLY from the generators — the PNG gradient's
     * run decomposition (at most one mod-256 wrap since h ≤ 192 < 256;
@@ -2605,23 +2627,7 @@ object MultimodalOps {
     // the catalog columns the synthesis wrote, aggregate the flags
     "q_mm_validate" ->
       s"""WITH $AssetSqlCte,
-         p AS (
-           SELECT *,
-             substr(phx,1,16) = '89504E470D0A1A0A'
-               AND length(phx) >= 66
-               AND substr(phx,25,8) = '49484452' AS is_png,
-             substr(phx,1,8) = '52494646'
-               AND length(phx) >= 88
-               AND substr(phx,17,8) = '57415645'
-               AND substr(phx,25,8) = '666D7420' AS is_wav,
-             length(phx) >= 32
-               AND substr(phx,9,8) = '66747970'
-               AND ('0x' || substr(phx,1,8))::BIGINT
-                     BETWEEN 8 AND length(phx) // 2 AS is_mp4,
-             substr(phx,1,4) = 'FFD8'
-               AND length(phx) >= 196
-               AND substr(phx,179,4) = 'FFC0' AS is_jpeg
-           FROM a),
+         $FormatFlagsCte,
          f AS (
            SELECT modality,
              CASE WHEN is_png THEN 'png' WHEN is_wav THEN 'wav'
@@ -2702,23 +2708,7 @@ object MultimodalOps {
     // 224+4n) — the box layout is ftyp(16) moov(208+4n) mdat(8+total)
     "q_mm_parse" ->
       s"""WITH $AssetSqlCte,
-         p AS (
-           SELECT *,
-             substr(phx,1,16) = '89504E470D0A1A0A'
-               AND length(phx) >= 66
-               AND substr(phx,25,8) = '49484452' AS is_png,
-             substr(phx,1,8) = '52494646'
-               AND length(phx) >= 88
-               AND substr(phx,17,8) = '57415645'
-               AND substr(phx,25,8) = '666D7420' AS is_wav,
-             length(phx) >= 32
-               AND substr(phx,9,8) = '66747970'
-               AND ('0x' || substr(phx,1,8))::BIGINT
-                     BETWEEN 8 AND length(phx) // 2 AS is_mp4,
-             substr(phx,1,4) = 'FFD8'
-               AND length(phx) >= 196
-               AND substr(phx,179,4) = 'FFC0' AS is_jpeg
-           FROM a)
+         $FormatFlagsCte
          SELECT asset_id, modality,
                 CASE WHEN is_png THEN 'png' WHEN is_wav THEN 'wav'
                      WHEN is_mp4 THEN 'mp4'

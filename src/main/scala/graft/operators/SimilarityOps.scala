@@ -26,18 +26,9 @@ object SimilarityOps {
 
   // ---------------------------------------------------------------- brute force
   def annBruteForce(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val q = e.where(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        VectorOps.norm(col("embedding")).as("nq"))
-    val corpus = e.select(col("vec_id"), col("embedding"),
-      VectorOps.norm(col("embedding")).as("ne"))
-    val cos = VectorOps.cosinePrenorm(col("qe"), col("embedding"), col("nq"), col("ne"))
-    val scored = corpus.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), cos.as("cos_sim"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    scored
+    bruteCosine(spark, dir)
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= TopK)
       .select(col("query_id"), col("rank").cast("long").as("rank"),
@@ -45,13 +36,9 @@ object SimilarityOps {
       .orderBy("query_id", "rank")
   }
 
-  // ---------------------------------------------------------------- topk aggregate
-  /** Brute-force ANN through the single-pass TopKByScore aggregate instead
-    * of a window: same rows as annBruteForce (same oracle), but the
-    * shuffle carries one k-element buffer per (partition, query) instead
-    * of every scored row — the 100 TB formulation of top-k. */
-  def annTopKAgg(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftext.TopKColumns.topk_by
+  /** Every (query, other vector) pair scored by cosine: (query_id,
+    * neighbor_id, cos_sim), norms computed once per side. */
+  private def bruteCosine(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val q = e.where(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
@@ -61,6 +48,16 @@ object SimilarityOps {
     val cos = VectorOps.cosinePrenorm(col("qe"), col("embedding"), col("nq"), col("ne"))
     corpus.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"), cos.as("cos_sim"))
+  }
+
+  // ---------------------------------------------------------------- topk aggregate
+  /** Brute-force ANN through the single-pass TopKByScore aggregate instead
+    * of a window: same rows as annBruteForce (same oracle), but the
+    * shuffle carries one k-element buffer per (partition, query) instead
+    * of every scored row — the 100 TB formulation of top-k. */
+  def annTopKAgg(spark: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.graftext.TopKColumns.topk_by
+    bruteCosine(spark, dir)
       .groupBy("query_id")
       .agg(topk_by(col("cos_sim"), col("neighbor_id"), TopK).as("top"))
       .select(col("query_id"), posexplode(col("top")))
@@ -433,17 +430,27 @@ object SimilarityOps {
       .select(col("query_id"), col("qm").as("m"), col("code"),
         (col("nq2") - lit(2.0) * VectorOps.dot(col("qsub"), col("cent"))
           + col("nc2")).as("d2"))
+    adcRerank(e, q, codes, dtable, Seq("m", "code"))
+  }
+
+  /** The ADC shortlist and exact-L2 re-rank shared by [[annPqWith]] and
+    * [[annIvfPqWith]]: `codes` (vec_id, `keys`…) join the broadcast ADC
+    * table `dtable` (query_id, `keys`…, d2) on `keys`; the PqShortlist
+    * smallest ADC sums per query then re-rank by exact |x−q|² against
+    * the full vectors of `e` and the query vectors `q` (query_id, qe).
+    * The ADC sum runs in FIXED subspace order: sum(d2) over the M rows of
+    * a group accumulates doubles in partition-dependent order — pivoting
+    * to one conditional sum per subspace (each sees exactly ONE row, so
+    * it is exact) and adding d0+..+d3 left-to-right makes the shortlist
+    * deterministic and engine-replayable. */
+  private def adcRerank(e: DataFrame, q: DataFrame, codes: DataFrame,
+      dtable: DataFrame, keys: Seq[String]): DataFrame = {
     val wa = Window.partitionBy(col("query_id"))
       .orderBy(col("approx_d2").asc, col("neighbor_id").asc)
-    // ADC sum in FIXED subspace order: sum(d2) over the M rows of a group
-    // accumulates doubles in partition-dependent order — pivoting to one
-    // conditional sum per subspace (each sees exactly ONE row, so it is
-    // exact) and adding d0+..+d3 left-to-right makes the shortlist
-    // deterministic and engine-replayable
     val perM = (0 until PqM).map(m =>
       sum(when(col("m") === m, col("d2"))).as(s"d$m"))
     val adcSum = (0 until PqM).map(m => col(s"d$m")).reduce(_ + _)
-    val shortlist = codes.join(broadcast(dtable), Seq("m", "code"))
+    val shortlist = codes.join(broadcast(dtable), keys)
       .where(col("vec_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
       .agg(perM.head, perM.tail: _*)
@@ -480,19 +487,20 @@ object SimilarityOps {
     * hash-checks not just each index but the measurement itself. The
     * corpus-grain cost is one exact pass + one LSH pass; the join/agg
     * run at the queries×k grain. */
-  def annRecall(spark: SparkSession, dir: String): DataFrame = {
-    val bf = annBruteForce(spark, dir)
-      .select(col("query_id"), col("neighbor_id"))
-    val approx = annLsh(spark, dir)
-      .select(col("query_id"), col("neighbor_id"))
-      .withColumn("hit", lit(1L))
-    bf.join(approx, Seq("query_id", "neighbor_id"), "left")
+  def annRecall(spark: SparkSession, dir: String): DataFrame =
+    recallPerQuery(annBruteForce(spark, dir)
+      .select(col("query_id"), col("neighbor_id")), annLsh(spark, dir))
+
+  /** Per-query recall@k of the approximate top-k `approx` against the
+    * exact top-k `bf` (query_id, neighbor_id): the left-join hit count. */
+  private def recallPerQuery(bf: DataFrame, approx: DataFrame): DataFrame =
+    bf.join(approx.select(col("query_id"), col("neighbor_id"))
+        .withColumn("hit", lit(1L)), Seq("query_id", "neighbor_id"), "left")
       .groupBy("query_id")
       .agg(count(lit(1)).as("n_true"),
         sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
       .withColumn("recall", col("n_hit").cast("double") / col("n_true"))
       .orderBy("query_id")
-  }
 
   /** RECALL@k AUDIT of the IVFADC index ([[annIvfPq]]) against the
     * exact-L2 baseline — same shape as [[annRecall]] but for the
@@ -516,15 +524,7 @@ object SimilarityOps {
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= TopK)
       .select(col("query_id"), col("neighbor_id"))
-    val approx = annIvfPq(spark, dir)
-      .select(col("query_id"), col("neighbor_id"))
-      .withColumn("hit", lit(1L))
-    bf.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_true"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-      .withColumn("recall", col("n_hit").cast("double") / col("n_true"))
-      .orderBy("query_id")
+    recallPerQuery(bf, annIvfPq(spark, dir))
   }
 
   // ------------------------------------------------------------- IVF health
@@ -1018,39 +1018,9 @@ object SimilarityOps {
       .select(col("query_id"), col("cl"), col("m"), col("code"),
         (col("nq2") - lit(2.0) * VectorOps.dot(col("qsub"), col("cent"))
           + col("nc2")).as("d2"))
-    val wa = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_d2").asc, col("neighbor_id").asc)
-    // fixed-order pivoted ADC sum (see annPqWith — keeps the shortlist
-    // deterministic and engine-replayable); keying the join on cl is the
-    // IVF pruning: unprobed lists contribute zero rows
-    val perM = (0 until PqM).map(m =>
-      sum(when(col("m") === m, col("d2"))).as(s"d$m"))
-    val adcSum = (0 until PqM).map(m => col(s"d$m")).reduce(_ + _)
-    val shortlist = codes.join(broadcast(dtable), Seq("cl", "m", "code"))
-      .where(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-      .agg(perM.head, perM.tail: _*)
-      .select(col("query_id"), col("neighbor_id"), adcSum.as("approx_d2"))
-      .withColumn("arank", row_number().over(wa))
-      .where(col("arank") <= PqShortlist)
-      .select(col("query_id"), col("neighbor_id"))
-    // exact refinement over the shortlist — identical tail to annPqWith
-    val nbr = e.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("ne"))
-    val exact = VectorOps.dot(col("ne"), col("ne")) -
-      lit(2.0) * VectorOps.dot(col("ne"), col("qe")) +
-      VectorOps.dot(col("qe"), col("qe"))
-    val wr = Window.partitionBy(col("query_id"))
-      .orderBy(col("l2_dist2").asc, col("neighbor_id").asc)
-    shortlist
-      .join(nbr, Seq("neighbor_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), exact.as("l2_dist2"))
-      .withColumn("rank", row_number().over(wr))
-      .where(col("rank") <= TopK)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("l2_dist2"))
-      .orderBy("query_id", "rank")
+    // keying the ADC join on cl is the IVF pruning: unprobed lists
+    // contribute zero rows
+    adcRerank(e, q, codes, dtable, Seq("cl", "m", "code"))
   }
 
   // ---------------------------------------------------------------- quantize
@@ -1788,23 +1758,34 @@ object SimilarityOps {
          SELECT * FROM ($union) ORDER BY nprobe"""
   }
 
-  /** DuckDB replay of [[semDeDup]] off the shared quantizer chain: the
-    * final assignment IS the clustering; within-cluster a<b pairs above
-    * τ mark the higher id dropped; survivors emit (vec_id, cl). */
-  private val SemDedupSql: String =
-    s"""WITH $IvfChainCtes,
-         drops AS (
-           SELECT DISTINCT lb.vec_id
+  /** Within-cluster pairs of a quantizer chain's `lists(vec_id, cl)` over
+    * `e` (la.vec_id < lb.vec_id) whose cosine exceeds `tau`, `cols`
+    * selected: the SemDeDup drop rule, also replayed by
+    * [[DedupOps.embedNearDup]]'s oracle. */
+  private[operators] def clusterPairsSql(cols: String, tau: Double): String =
+    s"""SELECT $cols
            FROM lists la
            JOIN lists lb ON la.cl = lb.cl AND la.vec_id < lb.vec_id
            JOIN e a ON a.vec_id = la.vec_id
            JOIN e b ON b.vec_id = lb.vec_id
            WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
                                         CAST(b.embedding AS DOUBLE[]))
-                   > $SemDedupTau)
+                   > $tau"""
+
+  /** The SemDeDup tail over a quantizer chain: within-cluster a<b pairs
+    * above τ mark the higher id dropped; survivors emit (vec_id, cl). */
+  private val SemDedupTailSql: String =
+    s"""drops AS (
+           ${clusterPairsSql("DISTINCT lb.vec_id", SemDedupTau)})
          SELECT l.vec_id, l.cl FROM lists l
          WHERE l.vec_id NOT IN (SELECT vec_id FROM drops)
          ORDER BY vec_id"""
+
+  /** DuckDB replay of [[semDeDup]] off the shared quantizer chain: the
+    * final assignment IS the clustering. */
+  private val SemDedupSql: String =
+    s"""WITH $IvfChainCtes,
+         $SemDedupTailSql"""
 
   /** DuckDB replay of [[semDeDupScaledChecked]] — the WHOLE two-level
     * corpus-scaled quantizer, with n/K/K1/K2 computed by the oracle
@@ -1819,18 +1800,7 @@ object SimilarityOps {
     * within-cluster >τ drop as [[SemDedupSql]]. */
   private def semDedupScaledSql: String =
     s"""WITH $scaledQuantizerCtes,
-         drops AS (
-           SELECT DISTINCT lb.vec_id
-           FROM lists la
-           JOIN lists lb ON la.cl = lb.cl AND la.vec_id < lb.vec_id
-           JOIN e a ON a.vec_id = la.vec_id
-           JOIN e b ON b.vec_id = lb.vec_id
-           WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                        CAST(b.embedding AS DOUBLE[]))
-                   > $SemDedupTau)
-         SELECT l.vec_id, l.cl FROM lists l
-         WHERE l.vec_id NOT IN (SELECT vec_id FROM drops)
-         ORDER BY vec_id"""
+         $SemDedupTailSql"""
 
   /** Shared CTE body for the dynamic-K two-level quantizer (ends with
     * `lists(vec_id, cl)` over `e`) — the chain behind
@@ -1925,6 +1895,47 @@ object SimilarityOps {
                PARTITION BY vec_id, m
                ORDER BY isnan(d2) ASC, d2 ASC, code ASC) AS rn
              FROM ${out}s) WHERE rn = 1)"""
+    /** The ADC shortlist and exact-L2 re-rank tail: per (query, stored
+      * vector) the ADC distance summed in FIXED subspace order over
+      * `$codes k JOIN dtable d` on the `keys` columns, the PqShortlist
+      * nearest per query, then exact |x−q|² against the full vectors of
+      * `e` and the query vectors `queries(query_id, qe)`, top-k. */
+    def adcRerank(codes: String, keys: Seq[String], queries: String): String = {
+      val adcPivot = (0 until PqM)
+        .map(m => s"sum(CASE WHEN d.m = $m THEN d.d2 END) AS d$m")
+        .mkString(",\n                  ")
+      val adcSum = (0 until PqM).map(m => s"d$m").mkString(" + ")
+      s"""adc AS (
+           SELECT d.query_id, k.vec_id AS neighbor_id,
+                  $adcPivot
+           FROM $codes k
+           JOIN dtable d ON ${keys.map(c => s"d.$c = k.$c").mkString(" AND ")}
+           WHERE k.vec_id != d.query_id
+           GROUP BY 1, 2),
+         short AS (
+           SELECT query_id, neighbor_id FROM (
+             SELECT query_id, neighbor_id, row_number() OVER (
+               PARTITION BY query_id
+               ORDER BY ($adcSum) ASC, neighbor_id ASC) AS arank
+             FROM adc) WHERE arank <= $PqShortlist),
+         ex AS (
+           SELECT s.query_id, s.neighbor_id,
+                  list_dot_product(CAST(ne.embedding AS DOUBLE[]),
+                                   CAST(ne.embedding AS DOUBLE[]))
+                  - 2.0 * list_dot_product(CAST(ne.embedding AS DOUBLE[]),
+                                           CAST(q.qe AS DOUBLE[]))
+                  + list_dot_product(CAST(q.qe AS DOUBLE[]),
+                                     CAST(q.qe AS DOUBLE[])) AS l2_dist2
+           FROM short s
+           JOIN e ne ON ne.vec_id = s.neighbor_id
+           JOIN $queries q USING (query_id))
+         SELECT query_id, rank, neighbor_id, l2_dist2 FROM (
+           SELECT *, row_number() OVER (
+             PARTITION BY query_id
+             ORDER BY l2_dist2 ASC, neighbor_id ASC) AS rank
+           FROM ex)
+         WHERE rank <= $TopK ORDER BY query_id, rank"""
+    }
   }
 
   /** DuckDB replay of [[pqTuning]] — the full 3-M sweep: per subspace
@@ -1988,10 +1999,6 @@ object SimilarityOps {
       PqSql.means("sq", assignJoin, out)
     def assignTo(cb: String, out: String): String =
       PqSql.assignTo("subs", cb, out)
-    val adcPivot = (0 until PqM)
-      .map(m => s"sum(CASE WHEN d.m = $m THEN d.d2 END) AS d$m")
-      .mkString(",\n                  ")
-    val adcSum = (0 until PqM).map(m => s"d$m").mkString(" + ")
     s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
          sub0 AS (
            SELECT vec_id, m,
@@ -2021,35 +2028,7 @@ object SimilarityOps {
                                                  CAST(c.cent AS DOUBLE[]))
                     + c.nc2 AS d2
            FROM qsubs q JOIN cb1 c ON c.m = q.m),
-         adc AS (
-           SELECT d.query_id, k.vec_id AS neighbor_id,
-                  $adcPivot
-           FROM codes k JOIN dtable d ON d.m = k.m AND d.code = k.code
-           WHERE k.vec_id != d.query_id
-           GROUP BY 1, 2),
-         short AS (
-           SELECT query_id, neighbor_id FROM (
-             SELECT query_id, neighbor_id, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY ($adcSum) ASC, neighbor_id ASC) AS arank
-             FROM adc) WHERE arank <= $PqShortlist),
-         ex AS (
-           SELECT s.query_id, s.neighbor_id,
-                  list_dot_product(CAST(ne.embedding AS DOUBLE[]),
-                                   CAST(ne.embedding AS DOUBLE[]))
-                  - 2.0 * list_dot_product(CAST(ne.embedding AS DOUBLE[]),
-                                           CAST(q.qe AS DOUBLE[]))
-                  + list_dot_product(CAST(q.qe AS DOUBLE[]),
-                                     CAST(q.qe AS DOUBLE[])) AS l2_dist2
-           FROM short s
-           JOIN e ne ON ne.vec_id = s.neighbor_id
-           JOIN qids q USING (query_id))
-         SELECT query_id, rank, neighbor_id, l2_dist2 FROM (
-           SELECT *, row_number() OVER (
-             PARTITION BY query_id
-             ORDER BY l2_dist2 ASC, neighbor_id ASC) AS rank
-           FROM ex)
-         WHERE rank <= $TopK ORDER BY query_id, rank"""
+         ${PqSql.adcRerank("codes", Seq("m", "code"), "qids")}"""
   }
 
   /** DuckDB replay of [[ivfStats]] off the shared quantizer chain:
@@ -2211,10 +2190,6 @@ object SimilarityOps {
       PqSql.means("rsq", assignJoin, out)
     def assignTo(cb: String, out: String): String =
       PqSql.assignTo("rsubs", cb, out)
-    val adcPivot = (0 until PqM)
-      .map(m => s"sum(CASE WHEN d.m = $m THEN d.d2 END) AS d$m")
-      .mkString(",\n                  ")
-    val adcSum = (0 until PqM).map(m => s"d$m").mkString(" + ")
     s"""WITH $IvfChainCtes,
          resid0 AS (
            SELECT l.vec_id, l.cl, u.i,
@@ -2284,36 +2259,7 @@ object SimilarityOps {
                                                  CAST(c.cent AS DOUBLE[]))
                     + c.nc2 AS d2
            FROM qsubs q JOIN rcb1 c ON c.m = q.m),
-         adc AS (
-           SELECT d.query_id, k.vec_id AS neighbor_id,
-                  $adcPivot
-           FROM codesl k
-           JOIN dtable d ON d.cl = k.cl AND d.m = k.m AND d.code = k.code
-           WHERE k.vec_id != d.query_id
-           GROUP BY 1, 2),
-         short AS (
-           SELECT query_id, neighbor_id FROM (
-             SELECT query_id, neighbor_id, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY ($adcSum) ASC, neighbor_id ASC) AS arank
-             FROM adc) WHERE arank <= $PqShortlist),
-         ex AS (
-           SELECT s.query_id, s.neighbor_id,
-                  list_dot_product(CAST(ne.embedding AS DOUBLE[]),
-                                   CAST(ne.embedding AS DOUBLE[]))
-                  - 2.0 * list_dot_product(CAST(ne.embedding AS DOUBLE[]),
-                                           CAST(q.qe AS DOUBLE[]))
-                  + list_dot_product(CAST(q.qe AS DOUBLE[]),
-                                     CAST(q.qe AS DOUBLE[])) AS l2_dist2
-           FROM short s
-           JOIN e ne ON ne.vec_id = s.neighbor_id
-           JOIN qv2 q USING (query_id))
-         SELECT query_id, rank, neighbor_id, l2_dist2 FROM (
-           SELECT *, row_number() OVER (
-             PARTITION BY query_id
-             ORDER BY l2_dist2 ASC, neighbor_id ASC) AS rank
-           FROM ex)
-         WHERE rank <= $TopK ORDER BY query_id, rank"""
+         ${PqSql.adcRerank("codesl", Seq("cl", "m", "code"), "qv2")}"""
   }
 
   /** DuckDB replay of [[annLsh]] — GENERATED from the same `planes`
@@ -2379,22 +2325,27 @@ object SimilarityOps {
            FROM s)
          WHERE rank <= $TopK ORDER BY query_id, rank"""
 
+  /** Per-query recall of the approximate top-k CTE `approx` (alias `a`)
+    * against the exact top-k CTE `bf`: the left-join hit count. */
+  private def recallSql(approx: String, a: String): String =
+    s"""SELECT b.query_id,
+                CAST(count(*) AS BIGINT) AS n_true,
+                CAST(sum(CASE WHEN $a.neighbor_id IS NOT NULL
+                              THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
+                CAST(sum(CASE WHEN $a.neighbor_id IS NOT NULL
+                              THEN 1 ELSE 0 END) AS DOUBLE) / count(*)
+                  AS recall
+         FROM bf b
+         LEFT JOIN $approx $a
+           ON $a.query_id = b.query_id AND $a.neighbor_id = b.neighbor_id
+         GROUP BY b.query_id ORDER BY b.query_id"""
+
   /** DuckDB replay of [[annRecall]]: both chains as CTEs (a CTE body may
     * carry its own WITH), then the same left-join hit count. */
   private val AnnRecallSql: String =
     s"""WITH bf AS ($AnnBruteForceSql),
          lsh AS ($AnnLshSql)
-         SELECT b.query_id,
-                CAST(count(*) AS BIGINT) AS n_true,
-                CAST(sum(CASE WHEN l.neighbor_id IS NOT NULL
-                              THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-                CAST(sum(CASE WHEN l.neighbor_id IS NOT NULL
-                              THEN 1 ELSE 0 END) AS DOUBLE) / count(*)
-                  AS recall
-         FROM bf b
-         LEFT JOIN lsh l
-           ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         GROUP BY b.query_id ORDER BY b.query_id"""
+         ${recallSql("lsh", "l")}"""
 
   /** DuckDB replay of [[annIvfPqRecall]]: the exact-L2 top-k baseline
     * and the ENTIRE trained IVFADC chain as CTEs, then the left-join hit
@@ -2418,17 +2369,7 @@ object SimilarityOps {
              FROM s)
            WHERE rank <= $TopK),
          ap AS ($AnnIvfPqSql)
-         SELECT b.query_id,
-                CAST(count(*) AS BIGINT) AS n_true,
-                CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL
-                              THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-                CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL
-                              THEN 1 ELSE 0 END) AS DOUBLE) / count(*)
-                  AS recall
-         FROM bf b
-         LEFT JOIN ap a
-           ON a.query_id = b.query_id AND a.neighbor_id = b.neighbor_id
-         GROUP BY b.query_id ORDER BY b.query_id"""
+         ${recallSql("ap", "a")}"""
 
   val oracleSql: Map[String, String] = Map(
     "q_ann_lsh" -> AnnLshSql,

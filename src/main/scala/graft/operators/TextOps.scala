@@ -1169,6 +1169,12 @@ object TextOps {
     "q_hash_embed" -> (hashEmbed _),
   )
 
+  /** The DuckDB fold of the polynomial rolling hash (base 31, mod
+    * 1000000007) over a list of char codes: q_fingerprint's twin and the
+    * substring-dedup window hashes in [[DedupOps]] fold through it. */
+  private[operators] final val RollingHashFold =
+    "(h, c) -> (h * 31 + c) % 1000000007"
+
   val oracleSql: Map[String, String] = Map(
     // the CMS query's exact twin: DuckDB computes the exact candidate
     // counts and asserts TRUE — a Spark estimate outside the folded
@@ -1339,11 +1345,11 @@ object TextOps {
                   AS dup_gram_frac
          FROM m ORDER BY doc_id""",
     "q_fingerprint" ->
-      """SELECT doc_id,
+      s"""SELECT doc_id,
                 list_reduce(
                   list_prepend(CAST(0 AS BIGINT),
                     list_transform(string_split(text, ''), c -> CAST(ascii(c) AS BIGINT))),
-                  (h, c) -> (h * 31 + c) % 1000000007) AS fp_rolling
+                  $RollingHashFold) AS fp_rolling
          FROM documents ORDER BY doc_id""",
     // The PII patterns interpolate from the SAME Scala constants the Spark
     // query uses (dialect-intersection regex: char classes, bounded reps,

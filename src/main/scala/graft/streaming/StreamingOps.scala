@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.CoreOps
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
@@ -112,9 +113,7 @@ object StreamingOps {
     * state, when only near-in-time duplicates matter, use
     * [[firstSeenBoundedStream]]. */
   def firstSeenStream(events: DataFrame): DataFrame =
-    events
-      .withColumn("dt", date_format(col("ts"), "yyyy-MM-dd"))
-      .withColumn("hr", date_format(col("ts"), "HH"))
+    CoreOps.withDtHr(events)
       .withWatermark("ts", WatermarkDelay)
       .dropDuplicates("dt", "user_id")
 
@@ -129,9 +128,7 @@ object StreamingOps {
     * that is the documented contract, not a bug, and why the unbounded
     * variants above exist for the reference's whole-day semantics. */
   def firstSeenBoundedStream(events: DataFrame): DataFrame =
-    events
-      .withColumn("dt", date_format(col("ts"), "yyyy-MM-dd"))
-      .withColumn("hr", date_format(col("ts"), "HH"))
+    CoreOps.withDtHr(events)
       .withWatermark("ts", WatermarkDelay)
       .dropDuplicatesWithinWatermark("dt", "user_id")
 

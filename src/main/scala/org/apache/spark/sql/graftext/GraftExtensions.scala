@@ -1,16 +1,16 @@
 package org.apache.spark.sql.graftext
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, Sqrt, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
-/** SQL registration for the engine's native functions, both as a
-  * `SparkSessionExtensions` (for `.withExtensions` / the
-  * spark.sql.extensions conf on a cluster) and as a runtime helper for an
-  * existing session. Makes the whole native family — `vec_dot(a, b)`,
+/** SQL registration for the engine's native functions as a
+  * `SparkSessionExtensions`: GraftSession installs it through
+  * `.withExtensions`, and a cluster session through the
+  * spark.sql.extensions conf. Makes the whole native family — `vec_dot(a, b)`,
   * `topk_by(score, id, k)`, `word_ngrams(tokens, 3)`, `chain_replace(s,
   * froms, tos)`, the quantizer/sketch primitives — first-class in
   * spark.sql text, so a SQL-only user reaches the same codegen'd
@@ -233,12 +233,4 @@ object GraftExtensions {
     topkBy, pairCombos, alphaTokenCount, rollingHash31, wordNGrams, kgramHashes,
     chainReplace, nearestCentroid, nearestCode, bloomAgg,
     bloomMightContain, cmsEstimate, mmHeaderParse)
-
-  /** Register on an already-running session (tests, notebooks). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    all.foreach { case (ident, _, builder) =>
-      registry.createOrReplaceTempFunction(ident.funcName, builder, "scala_udf")
-    }
-  }
 }

@@ -6,9 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source lints: each row names a call that only one file may make, the
-  * directories where that holds, and a planted offender the lint must
-  * catch.
+/** Source lints: each row names a call that only one file may make, and
+  * only once, the directories where that holds, and a planted offender the
+  * lint must catch.
   *
   *  - [[GraftSession]] is the ONE SparkSession factory. A second builder
   *    call under src/ is a session whose settings can drift apart from
@@ -18,39 +18,61 @@ import org.scalatest.funsuite.AnyFunSuite
   *    schema-inference job on every call again, past the per-session memo.
   *  - [[operators.ContractSort.exchanged]] is the ONE pre-sort exchange:
   *    it records why and when a trailing `orderBy` gets a hash
-  *    repartition in front of it. */
+  *    repartition in front of it.
+  *  - the DuckDB rolling-hash fold (TextOps) and the DuckDB permutation
+  *    mins (DedupOps) have ONE definition each: every oracle twin that
+  *    replays the rolling hash or a MinHash signature builds on it, so a
+  *    fix to the replay is made once. */
 class SourceLintSpec extends AnyFunSuite {
 
-  /** `offends` is true for the text of a file that breaks the rule; only
-    * `owner` (a file name) may. `planted` is a file that commits the
-    * `offence`. */
+  /** `hits` counts the calls the rule restricts in the text of a file;
+    * only `owner` (a file name) may make one, once. `planted` is a file
+    * that commits the `offence`. */
   private case class Rule(title: String, dirs: Seq[String], owner: Option[String],
-      offends: String => Boolean, hint: String, offence: String, planted: String)
+      hits: String => Int, hint: String, offence: String, planted: String)
+
+  private def occurrences(needle: String)(text: String): Int =
+    java.util.regex.Pattern.quote(needle).r.findAllIn(text).size
 
   // needles are split so this file does not match its own rows
   private val builder = "SparkSession" + ".builder("
   private val readParquet = "read" + ".parquet("
   private val presortTail =
     ("""\.repartition\((?:[^()]|\([^()]*\))*\)\s*""" + """\.orderBy\(""").r
+  private val rollingFold = "(h * 31 + c)" + " % 1000000007"
+  private val permMin = "min((h * " + "$"
 
   private val rules = Seq(
     Rule("only GraftSession.scala calls the SparkSession builder",
       Seq("src/main", "src/test"), Some("GraftSession.scala"),
-      _.contains(builder), s"build sessions through GraftSession.build/builder, not $builder",
+      occurrences(builder), s"build sessions through GraftSession.build/builder, not $builder",
       "SparkSession builder call",
       s"object Planted { val s = org.apache.spark.sql.$builder) }\n"),
     Rule("operators and serving read tables only through Tables.read",
       Seq("src/main/scala/graft/operators", "src/main/scala/graft/serving"), None,
-      _.contains(readParquet), s"read tables through Tables.read, not $readParquet",
+      occurrences(readParquet), s"read tables through Tables.read, not $readParquet",
       "direct read",
       s"object Planted { def f(s: org.apache.spark.sql.SparkSession) = s.$readParquet\"x\") }\n"),
     Rule("operators place the pre-sort exchange only through ContractSort",
       Seq("src/main/scala/graft/operators"), Some("ContractSort.scala"),
-      presortTail.findFirstIn(_).isDefined,
+      presortTail.findAllIn(_).size,
       "sort through ContractSort.exchanged, not repartition(k).orderBy(k, ...)",
       "repartition(k).orderBy(k) tail",
       "object Planted {\n  def f(df: org.apache.spark.sql.DataFrame) = df\n" +
-        "    .repartition(col(\"k\"))\n    .orderBy(\"k\", \"v\")\n}\n"))
+        "    .repartition(col(\"k\"))\n    .orderBy(\"k\", \"v\")\n}\n"),
+    Rule("operators define the DuckDB rolling-hash fold once, in TextOps",
+      Seq("src/main/scala/graft/operators"), Some("TextOps.scala"),
+      occurrences(rollingFold),
+      s"fold through TextOps.RollingHashFold, not a copy of $rollingFold",
+      "second rolling-hash fold",
+      "object Planted {\n  val fp = \"list_reduce(cs, (h, c) -> " + rollingFold + ")\"\n}\n"),
+    Rule("operators build the DuckDB permutation mins once, in DedupOps",
+      Seq("src/main/scala/graft/operators"), Some("DedupOps.scala"),
+      occurrences(permMin),
+      s"build signatures through DedupOps.minhashSigCtes, not a copy of $permMin",
+      "second permutation-min builder",
+      "object Planted {\n  def m(a: Long, b: Long, p: Long) = s\"" + permMin +
+        "a + $b) % $p)\"\n}\n"))
 
   /** The repository root: the nearest directory at or above the working
     * directory that holds build.sbt. */
@@ -68,12 +90,14 @@ class SourceLintSpec extends AnyFunSuite {
       finally files.close()
     }
 
-  /** The files under `rule`'s dirs of `root`, other than its owner, that
-    * break it. */
+  /** The files under `rule`'s dirs of `root` that break it: any file but
+    * the owner with a hit, the owner with more than one. */
   private def offenders(root: Path, rule: Rule): Seq[Path] =
     scalaFiles(root, rule)
-      .filter(p => !rule.owner.contains(p.getFileName.toString))
-      .filter(p => rule.offends(Files.readString(p)))
+      .filter { p =>
+        val allowed = if (rule.owner.contains(p.getFileName.toString)) 1 else 0
+        rule.hits(Files.readString(p)) > allowed
+      }
       .map(root.relativize)
 
   rules.foreach { rule =>

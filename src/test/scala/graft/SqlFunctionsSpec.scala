@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.graftext.GraftExtensions
-
 class SqlFunctionsSpec extends SparkTestBase {
 
   test("vec_dot and topk_by are callable from SQL text") {
@@ -82,9 +80,7 @@ class SqlFunctionsSpec extends SparkTestBase {
   }
 
   test("session built via GraftSession + withExtensions resolves the functions") {
-    // the extensions path is what a cluster's spark.sql.extensions conf uses;
-    // register (the helper for a session built elsewhere) must be a no-op
-    // on top of it
+    // the extensions path is what a cluster's spark.sql.extensions conf uses
     val reg = spark.sessionState.functionRegistry
     val names = Seq("vec_dot", "vec_norm", "vec_sub", "topk_by", "pair_combos",
       "alpha_token_count", "rolling_hash31", "word_ngrams", "chain_replace",
@@ -93,8 +89,6 @@ class SqlFunctionsSpec extends SparkTestBase {
     def missing = names.filterNot(n =>
       reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
     assert(missing.isEmpty, s"not registered: $missing")
-    GraftExtensions.register(spark)
-    assert(missing.isEmpty, s"not registered after register: $missing")
   }
 
   test("text natives are callable from SQL text") {
