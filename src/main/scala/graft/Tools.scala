@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftFunctions
 
 import graft.operators.DedupOps
 
@@ -140,7 +141,7 @@ object Tools {
     //    k-gram rolling hash at distinct-text grain
     histo("substr positions (per hash)",
       distinctDocs
-        .select(posexplode(graft.functions.VectorFunctions.kgram_hashes(
+        .select(posexplode(GraftFunctions.kgram_hashes(
           split(col("text"), " "), DedupOps.SubstrK)))
         .select(col("col").as("k")))
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftFunctions
 
 import graft.Tables
 
@@ -52,7 +53,7 @@ object DedupOps {
         // lambda call and an O(n) slice copy PER GRAM, a real tax on the
         // operator family that feeds every near-dup pipeline. Identical
         // strings (spec-pinned vs the HOF form in VectorExprSpec).
-        explode(graft.functions.VectorFunctions.word_ngrams(col("t"), 3))
+        explode(GraftFunctions.word_ngrams(col("t"), 3))
           .as("shingle"))
 
   /** Distinct shingle SET per doc (the Jaccard/MinHash input). */
@@ -69,7 +70,7 @@ object DedupOps {
     * C(n,2) per array either way — the caller bounds n (df cap / bucket
     * size), exactly as it had to bound the join's per-key fan-out. */
   private[operators] def pairCombos(arr: Column): Column =
-    graft.functions.VectorFunctions.pair_combos(arr)
+    GraftFunctions.pair_combos(arr)
 
   /** Max document frequency a shingle may have (within its join block,
     * i.e. per source) and still participate in exact-Jaccard candidate
@@ -154,7 +155,7 @@ object DedupOps {
       .where(size(col("t")) >= 3)
       .select(col("source"), col("fp"), col("m"),
         explode(array_distinct(
-          graft.functions.VectorFunctions.word_ngrams(col("t"), 3))).as("shingle"))
+          GraftFunctions.word_ngrams(col("t"), 3))).as("shingle"))
     // df = Σ m keeps the cap's DOC-count semantics under replication
     val lists = fpShingle.groupBy("source", "shingle")
       .agg(sort_array(collect_list(struct(col("fp"), col("m")))).as("fps"),
@@ -1703,7 +1704,7 @@ object DedupOps {
     * The per-doc shingle cardinalities still come from the FULL training
     * stream (before the bloom), so `n_shingles`/`contam_frac` are exact. */
   def contaminationBloom(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.SketchFunctions._
+    import GraftFunctions._
     // no corpus-wide cache: eval/train slices are separate pushed-filter
     // scans (each branch reads only its own row groups); the eval side is
     // benchmark-sized, so its double consumption (bloom build + exact
@@ -1821,7 +1822,7 @@ object DedupOps {
     grp.select(col(fpCol), split(col("text"), " ").as("t"))
       .where(size(col("t")) >= 3)
       .select(col(fpCol), explode(array_distinct(
-        graft.functions.VectorFunctions.word_ngrams(col("t"), 3))).as("shingle"))
+        GraftFunctions.word_ngrams(col("t"), 3))).as("shingle"))
 
   /** [[fpShingles]] WITH multiplicity — boilerplate-style scoring needs
     * repeated-shingle counts within one text. */
@@ -1829,7 +1830,7 @@ object DedupOps {
     grp.select(col(fpCol), split(col("text"), " ").as("t"))
       .where(size(col("t")) >= 3)
       .select(col(fpCol), explode(
-        graft.functions.VectorFunctions.word_ngrams(col("t"), 3)).as("shingle"))
+        GraftFunctions.word_ngrams(col("t"), 3)).as("shingle"))
 
   /** BOUNDED-REPORT twin of [[contaminationPairs]] — the cap-proof form
     * for replica corpora (round-10 100× sweep: every doc replicated
@@ -1989,7 +1990,7 @@ object DedupOps {
       .select(md5(col("text")).as("fp"), col("canon_id"), col("n_docs"),
         col("text"))
       .select(col("fp"), col("canon_id"), col("n_docs"),
-        posexplode(graft.functions.VectorFunctions.kgram_hashes(
+        posexplode(GraftFunctions.kgram_hashes(
           split(col("text"), " "), SubstrK)))
       .select(col("fp"), col("canon_id"), col("n_docs"),
         (col("pos") + 1).cast("long").as("p"), col("col").as("h"))
@@ -2541,6 +2542,23 @@ object DedupOps {
            FROM $from, unnest(generate_series(1, len(t) - ${SubstrK - 1})) AS u(p)
            WHERE len(t) >= $SubstrK"""
 
+  /** The distinct-text grain [[windowHashSql]] reads: one row per text
+    * of the `documents` rows matching `where` (all rows when empty), with
+    * its md5 fingerprint `fp`, canonical (min) doc id `canon_id`, copy
+    * count `n_docs` and token list `t`. */
+  private def textGroupSql(where: String = ""): String = {
+    val filter = if (where.isEmpty) "" else s" WHERE $where"
+    s"""SELECT md5(text) AS fp, min(doc_id) AS canon_id,
+                  count(*) AS n_docs, string_split(text, ' ') AS t
+           FROM documents$filter GROUP BY text"""
+  }
+
+  /** [[textGroupSql]] without the canonical id and copy count: the side
+    * whose doc-grain answers come back through an fp join instead. */
+  private def textTokensSql(where: String): String =
+    s"""SELECT md5(text) AS fp, string_split(text, ' ') AS t
+           FROM documents WHERE $where GROUP BY text"""
+
   /** The island merge over the matched position pairs in `from`: pairs
     * on one `diag` (per `part`) whose `ord` positions run consecutively
     * share `grp`. */
@@ -2979,9 +2997,7 @@ object DedupOps {
     // identical inverted-index join + diagonal island merge
     "q_substr_dedup" ->
       s"""WITH fpg AS (
-           SELECT md5(text) AS fp, min(doc_id) AS canon_id,
-                  count(*) AS n_docs, string_split(text, ' ') AS t
-           FROM documents GROUP BY text),
+           ${textGroupSql()}),
          pos AS (
            ${windowHashSql("fp, canon_id, n_docs", "p", "fpg")}),
          ${crossIslandCtes(Seq("x.n_docs AS na", "y.n_docs AS nb"))},
@@ -3000,9 +3016,7 @@ object DedupOps {
     // position CTE, cross-joined with the cap sweep literals
     "q_substr_stats" ->
       s"""WITH fpg AS (
-           SELECT md5(text) AS fp, min(doc_id) AS canon_id,
-                  count(*) AS n_docs, string_split(text, ' ') AS t
-           FROM documents GROUP BY text),
+           ${textGroupSql()}),
          pos AS (
            ${windowHashSql("fp", "p", "fpg")}),
          occ AS (SELECT h, CAST(count(*) AS BIGINT) AS t
@@ -3021,9 +3035,7 @@ object DedupOps {
     // text at pa < pb, islands on the repeat-distance diagonal
     "q_substr_intra" ->
       s"""WITH fpg AS (
-           SELECT md5(text) AS fp, min(doc_id) AS canon_id,
-                  count(*) AS n_docs, string_split(text, ' ') AS t
-           FROM documents GROUP BY text),
+           ${textGroupSql()}),
          pos AS (
            ${windowHashSql("fp, canon_id, n_docs", "p", "fpg")}),
          ${intraIslandCtes("m", "r", Seq("x.canon_id", "x.n_docs"))}
@@ -3039,9 +3051,7 @@ object DedupOps {
     // repeat) and the shared interval-union + token-rewrite tail
     "q_substr_scrub" ->
       s"""WITH fpg AS (
-           SELECT md5(text) AS fp, min(doc_id) AS canon_id,
-                  count(*) AS n_docs, string_split(text, ' ') AS t
-           FROM documents GROUP BY text),
+           ${textGroupSql()}),
          pos AS (
            ${windowHashSql("fp, canon_id, n_docs", "p", "fpg")}),
          ${crossIslandCtes(Nil)},
@@ -3071,12 +3081,9 @@ object DedupOps {
     // text, diagonal), doc-grain expansion back to batch ids
     "q_snap_substr" ->
       s"""WITH corp AS (
-           SELECT md5(text) AS fp, min(doc_id) AS canon_id,
-                  count(*) AS n_docs, string_split(text, ' ') AS t
-           FROM documents WHERE doc_id % 10 < 8 GROUP BY text),
+           ${textGroupSql("doc_id % 10 < 8")}),
          bat AS (
-           SELECT md5(text) AS fp, string_split(text, ' ') AS t
-           FROM documents WHERE doc_id % 10 >= 8 GROUP BY text),
+           ${textTokensSql("doc_id % 10 >= 8")}),
          cpos AS (
            ${windowHashSql("fp AS corpus_fp, canon_id AS corpus_doc, " +
              "n_docs AS n_corpus_docs", "cp", "corp")}),
@@ -3106,12 +3113,9 @@ object DedupOps {
     // arriving side, renamed to the train/eval vocabulary
     "q_contamination_spans" ->
       s"""WITH ev AS (
-           SELECT md5(text) AS fp, min(doc_id) AS canon_id,
-                  count(*) AS n_docs, string_split(text, ' ') AS t
-           FROM documents WHERE source = 'src0' GROUP BY text),
+           ${textGroupSql("source = 'src0'")}),
          tr AS (
-           SELECT md5(text) AS fp, string_split(text, ' ') AS t
-           FROM documents WHERE source <> 'src0' GROUP BY text),
+           ${textTokensSql("source <> 'src0'")}),
          epos AS (
            ${windowHashSql("fp AS eval_fp, canon_id AS eval_doc, " +
              "n_docs AS n_eval_docs", "ep", "ev")}),
@@ -3141,12 +3145,9 @@ object DedupOps {
     // over TRAIN texts only
     "q_contamination_scrub" ->
       s"""WITH ev AS (
-           SELECT md5(text) AS fp, string_split(text, ' ') AS t
-           FROM documents WHERE source = 'src0' GROUP BY text),
+           ${textTokensSql("source = 'src0'")}),
          fpg AS (
-           SELECT md5(text) AS fp, min(doc_id) AS canon_id,
-                  count(*) AS n_docs, string_split(text, ' ') AS t
-           FROM documents WHERE source <> 'src0' GROUP BY text),
+           ${textGroupSql("source <> 'src0'")}),
          epos AS (
            ${windowHashSql("fp AS eval_fp", "ep", "ev")}),
          tpos AS (

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.VectorFunctions.pair_combos
+import org.apache.spark.sql.graftext.GraftFunctions.pair_combos
 
 /** Graph / market-basket analytics over the order→part bipartite data —
   * the co-occurrence mining a recommendation or data-curation pipeline

@@ -1216,7 +1216,7 @@ object MultimodalOps {
     * ingest read — payload bytes are consumed where they already are,
     * never moved. */
   def headerParse(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftext.MediaColumns.mm_header_parse
+    import org.apache.spark.sql.graftext.GraftFunctions.mm_header_parse
     assets(spark, dir)
       .select(col("asset_id"), col("modality"),
         mm_header_parse(col("payload")).as("p"))
@@ -1303,7 +1303,7 @@ object MultimodalOps {
     * scan — the 100 TB shape is a narrow projection that never touches
     * payload bytes. */
   def resizePlan(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftext.MediaColumns.mm_header_parse
+    import org.apache.spark.sql.graftext.GraftFunctions.mm_header_parse
     // dims come from the PAYLOAD BYTES via the native header probe, not
     // from the fixture meta columns — the plan is computed the way a real
     // pipeline computes it (probe the container, then plan the decode)
@@ -1880,7 +1880,7 @@ object MultimodalOps {
     * whose PARSED sample table exceeds the frame cap). Map-side flags +
     * one small groupBy: nothing but booleans shuffle. */
   def assetValidate(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftext.MediaColumns.mm_header_parse
+    import org.apache.spark.sql.graftext.GraftFunctions.mm_header_parse
     // header size by PARSED format (image splits across png/jpeg); MP4
     // has no constant header — its size story is table-vs-mdat below
     val hdrLen = typedlit(Map(

@@ -1081,7 +1081,7 @@ object PipelineOps {
     * same keys; still no sort anywhere).
     * Oracle replays the window form: identical answers. */
   def sourceCap(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftext.TopKColumns.topk_by
+    import org.apache.spark.sql.graftext.GraftFunctions.topk_by
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"))
     // score = -doc_id keeps the LOWEST ids (doc_id < 2^53: exact as double)

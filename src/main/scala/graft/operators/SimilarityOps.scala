@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftFunctions
 
 import graft.Tables
 
@@ -56,7 +57,7 @@ object SimilarityOps {
     * shuffle carries one k-element buffer per (partition, query) instead
     * of every scored row — the 100 TB formulation of top-k. */
   def annTopKAgg(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftext.TopKColumns.topk_by
+    import GraftFunctions.topk_by
     bruteCosine(spark, dir)
       .groupBy("query_id")
       .agg(topk_by(col("cos_sim"), col("neighbor_id"), TopK).as("top"))
@@ -202,8 +203,7 @@ object SimilarityOps {
       .agg(collect_list(struct(col("cl"), col("centroid"))).as("cents"))
     e.join(broadcast(packed))
       .select(col("vec_id"), col("embedding"),
-        graft.functions.VectorFunctions
-          .nearest_centroid(col("cents"), col("embedding")).as("cl"))
+        GraftFunctions.nearest_centroid(col("cents"), col("embedding")).as("cl"))
   }
 
   /** The probe-selection stage alone: each query's `nprobe` nearest
@@ -358,8 +358,7 @@ object SimilarityOps {
       .agg(collect_list(struct(col("code"), col("cent"), col("nc2"))).as("cb"))
     subs.join(broadcast(packed), Seq("m"))
       .select(subs.columns.map(col).toSeq :+
-        graft.functions.VectorFunctions
-          .nearest_code(col("cb"), col("sub"), col("na2")).as("code"): _*)
+        GraftFunctions.nearest_code(col("cb"), col("sub"), col("na2")).as("code"): _*)
   }
 
   /** Per-subspace codebooks trained fully in DataFrames: deterministic
@@ -932,8 +931,8 @@ object SimilarityOps {
     * (cosine argmax, order-free integer-moment means — the q_ann_ivf
     * chain), the fine side IS [[pqCodebookK]]/[[pqAssign]] run on the
     * residual frame (L2, native NearestCode ADC — the q_ann_pq chain),
-    * and the residual step itself is the native [[graft.functions
-    * .VectorFunctions.vec_sub]] (one IEEE double subtraction + float
+    * and the residual step itself is the native
+    * [[GraftFunctions.vec_sub]] (one IEEE double subtraction + float
     * cast per element — corpus-grain, so the interpreted zip_with form
     * is banned; DuckDB replays it exactly, which is what lets the WHOLE
     * trained index carry a driver oracle).
@@ -978,8 +977,7 @@ object SimilarityOps {
     val resid = assign(e, centroids)
       .join(broadcast(centroids), Seq("cl"))
       .select(col("vec_id"), col("cl"),
-        graft.functions.VectorFunctions
-          .vec_sub(col("embedding"), col("centroid")).as("embedding"))
+        GraftFunctions.vec_sub(col("embedding"), col("centroid")).as("embedding"))
       .cache()
     // codebooks train on the (possibly sampled) subset; the ENCODE below
     // always covers the full corpus with the one shared codebook. The
@@ -1009,8 +1007,7 @@ object SimilarityOps {
       .select(col("query_id"), col("qe"), col("cl"), col("centroid"))
     val qsubs = subvectors(probes
         .select(col("query_id"), col("cl"),
-          graft.functions.VectorFunctions
-            .vec_sub(col("qe"), col("centroid")).as("embedding")))
+          GraftFunctions.vec_sub(col("qe"), col("centroid")).as("embedding")))
       .select(col("query_id"), col("cl"), col("m"),
         col("sub").as("qsub"), col("na2").as("nq2"))
     // ADC table per probed list: queries × nprobe × M × K rows, broadcast
@@ -1043,7 +1040,7 @@ object SimilarityOps {
     * that measured 13 s at the 100× corpus for a map-side scan),
     * bit-parity-pinned against the HOF form in VectorExprSpec. */
   def embedQuantize(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.VectorFunctions.vec_quantize_stats
+    import GraftFunctions.vec_quantize_stats
     val e = Tables.embeddings(spark, dir)
     e.select(col("vec_id"), col("embedding"),
         vec_quantize_stats(col("embedding")).as("st"))
@@ -1115,7 +1112,7 @@ object SimilarityOps {
     // n/s1/s2 are BIT-IDENTICAL to the explode+sum formulation at any
     // partitioning — the DuckDB oracle (HUGEINT sums over the same grid)
     // is untouched.
-    import org.apache.spark.sql.graftext.GramAggColumns.gram_moments
+    import GraftFunctions.gram_moments
     // cached (r16 opt): this ONE-ROW aggregate is the corpus pass, and
     // every downstream frame (mu, cov, the power loop's v chain, the
     // Rayleigh quotient) carries it in its lineage — uncached, the
@@ -1465,8 +1462,7 @@ object SimilarityOps {
         .agg(collect_list(struct(col("cl"), col("centroid"))).as("cents"))
       rows.join(broadcast(packed), Seq("cl1"))
         .select(col("vec_id"), col("embedding"), col("cl1"),
-          graft.functions.VectorFunctions
-            .nearest_centroid(col("cents"), col("embedding")).as("cl"))
+          GraftFunctions.nearest_centroid(col("cents"), col("embedding")).as("cl"))
     }
     val init = meansOf(coarse.select(
       (col("cl1") * k2 + pmod(col("vec_id"), lit(k2))).cast("int").as("cl"),

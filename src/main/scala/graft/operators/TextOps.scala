@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftFunctions
 
 import graft.Tables
 
@@ -69,7 +70,7 @@ object TextOps {
         // the when() keeps the short-doc NULL (word_ngrams alone would
         // give an empty array; the oracle's CASE WHEN mirrors the null)
         when(size(col("t")) >= 3,
-          graft.functions.VectorFunctions.word_ngrams(col("t"), 3)).as("grams"))
+          GraftFunctions.word_ngrams(col("t"), 3)).as("grams"))
       .select(col("doc_id"), col("n_tokens"), col("n_distinct_tokens"),
         col("n_stopwords"),
         size(col("grams")).cast("long").as("n_grams"),
@@ -184,8 +185,7 @@ object TextOps {
           .cast("long").as("sum_len"),
         repl("#").cast("long").as("hash_n"),
         (repl("...").cast("long") / lit(3L)).cast("long").as("ell_n"),
-        org.apache.spark.sql.graftext.AlphaTokenCount
-          .alpha_token_count(col("text")).as("n_alpha"),
+        GraftFunctions.alpha_token_count(col("text")).as("n_alpha"),
         GopherStops.map(w => array_contains(t, w).cast("long"))
           .reduce(_ + _).as("n_stop_hits"))
     stats
@@ -265,7 +265,7 @@ object TextOps {
   def fingerprint(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-        graft.functions.VectorFunctions.rolling_hash31(col("text"))
+        GraftFunctions.rolling_hash31(col("text"))
           .as("fp_rolling"))
       .orderBy("doc_id")
 
@@ -388,8 +388,7 @@ object TextOps {
     // native char-bigram build (word_ngrams with "" separator over the
     // char split) — the interpreted transform+slice form paid ~19M lambda
     // calls at the 25× corpus for what is a per-word char walk
-    val pairs = graft.functions.VectorFunctions
-      .word_ngrams(split(col("w"), ""), 2, "")
+    val pairs = GraftFunctions.word_ngrams(split(col("w"), ""), 2, "")
     Tables.documents(spark, dir)
       .select(explode(tokens(col("text"))).as("w"))
       .where(length(col("w")) >= 2)
@@ -564,7 +563,7 @@ object TextOps {
     // vocabulary is thousands of merges). Per-step semantics are
     // UTF8String.replace — exactly what the nested form evaluated, so
     // the q_bpe_encode driver oracle pins the node every round.
-    val encFinal = graft.functions.VectorFunctions.chain_replace(enc0,
+    val encFinal = GraftFunctions.chain_replace(enc0,
       merges.sortBy(_._1).map { case (_, a, b, _) => (s"/$a//$b/", s"/$a$b/") })
     // WORD-GRAIN DICTIONARY since round 11 (the trainer's own move,
     // applied to the encode): a word's token/merged counts are functions
@@ -720,7 +719,7 @@ object TextOps {
     * Driver fetch of ONE aggregated row (the sketch). */
   private def cmsTokensAndSketch(spark: SparkSession,
       dir: String): (DataFrame, Array[Byte]) = {
-    import graft.functions.SketchFunctions._
+    import GraftFunctions._
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .cache()
@@ -732,7 +731,7 @@ object TextOps {
   }
 
   def heavyHittersCms(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.SketchFunctions._
+    import GraftFunctions._
     val (toks, skBytes) = cmsTokensAndSketch(spark, dir)
     toks.groupBy("tok")
       .agg(count(lit(1)).as("n_exact"),
@@ -754,7 +753,7 @@ object TextOps {
     * (what a 100 TB run emits); one-sided error bounded in SketchSpec;
     * bench-timed as `x_heavy_hitters_cms_est`. */
   def heavyHittersCmsEstimate(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.SketchFunctions._
+    import GraftFunctions._
     val (toks, skBytes) = cmsTokensAndSketch(spark, dir)
     toks.groupBy("tok").agg(count_distinct(col("doc_id")).as("df"))
       .where(col("df") >= 2)
@@ -1030,7 +1029,7 @@ object TextOps {
     * shared bigram frame carries). */
   private def bigramLmWith(spark: SparkSession, dir: String,
       isRef: Column): DataFrame = {
-    import graft.functions.VectorFunctions.word_ngrams
+    import GraftFunctions.word_ngrams
     // Content grain since round 11: the model counts are MULTIPLICITY-
     // WEIGHTED sums over distinct texts — each text contributes its
     // bigram counts once per REFERENCE doc carrying it (m_ref, computed

@@ -3,12 +3,12 @@ package graft.operators
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions
+import org.apache.spark.sql.graftext.GraftFunctions
 
 /** Vector math over `array<float>` embedding columns.
   *
   * `dot`/`norm` delegate to the native codegen'd FloatVectorDot expression
-  * (graft.functions) — a tight primitive loop inside whole-stage codegen.
+  * (graftext.GraftFunctions) — a tight primitive loop inside whole-stage codegen.
   * The higher-order-function formulation is kept as `dotHof` for
   * equivalence testing: both accumulate in double precision in array
   * order, so they are bit-identical to each other and to DuckDB's
@@ -16,9 +16,9 @@ import graft.functions.VectorFunctions
   */
 object VectorOps {
 
-  def dot(a: Column, b: Column): Column = VectorFunctions.vec_dot(a, b)
+  def dot(a: Column, b: Column): Column = GraftFunctions.vec_dot(a, b)
 
-  def norm(a: Column): Column = VectorFunctions.vec_norm(a)
+  def norm(a: Column): Column = GraftFunctions.vec_norm(a)
 
   /** dot/(|a|·|b|) can exceed 1.0 by an ulp for IDENTICAL vectors
     * (sqrt(n)² rounds below n, the division rounds past 1) — exactly the
@@ -45,7 +45,7 @@ object VectorOps {
     * door — see graftext.FloatVectorQuantize for why neither a transform
     * lambda nor post-explode scalar round() is acceptable here). */
   def quantize(a: Column, scale: Double): Column =
-    VectorFunctions.vec_quantize(a, scale)
+    GraftFunctions.vec_quantize(a, scale)
 
   /** Reference higher-order-function implementation (interpreted lambdas;
     * ~6× slower in pair joins). Kept for cross-checking the native expr. */

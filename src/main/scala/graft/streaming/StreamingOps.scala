@@ -1,72 +1,13 @@
 package graft.streaming
 
 import graft.operators.CoreOps
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues,
-  TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Typed row for the exact-state dedup path. */
 case class KeyedEvent(dt: String, user_id: Long, event_id: Long,
     event_type: String)
-
-/** Closed session emitted by [[TimerSessionProcessor]]. */
-case class ClosedSession(user_id: Long, session_start_sec: Long,
-    session_end_sec: Long, n_events: Long)
-
-/** Per-user open-session aggregate held in the state store. */
-case class OpenSession(start_ms: Long, end_ms: Long, n: Long)
-
-/** StatefulProcessor sessionization with EVENT-TIME TIMERS: each user's
-  * open session lives in a ValueState, and a timer at (session end + gap)
-  * fires once the watermark passes it — `handleExpiredTimer` then emits
-  * the closed session and clears state. This is the imperative twin of
-  * `session_window` (same gap semantics, same closed-session outputs —
-  * spec-pinned) for when per-session logic outgrows the declarative
-  * aggregate: custom merge rules, side outputs, per-key TTL policy.
-  * State per key is ONE open session; timers replace the "perpetual empty
-  * batches" cost of processing-time timeouts. */
-class TimerSessionProcessor(gapMs: Long)
-    extends StatefulProcessor[Long, (Long, Long), ClosedSession] {
-  @transient private var sess: ValueState[OpenSession] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    sess = getHandle.getValueState[OpenSession]("sess",
-      Encoders.product[OpenSession], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[(Long, Long)],
-      timerValues: TimerValues): Iterator[ClosedSession] = {
-    var cur = if (sess.exists()) sess.get() else null
-    rows.foreach { case (_, ts) =>
-      cur =
-        if (cur == null) OpenSession(ts, ts, 1)
-        // a row within gap of the open session extends it (rows can
-        // arrive out of order within the watermark, so min/max both ways)
-        else if (ts >= cur.start_ms - gapMs && ts <= cur.end_ms + gapMs)
-          OpenSession(math.min(cur.start_ms, ts), math.max(cur.end_ms, ts), cur.n + 1)
-        else cur // beyond gap: the timer will close it; a genuinely newer
-                 // session would need a list state — one open session per
-                 // key is this processor's documented contract
-    }
-    if (cur != null) {
-      // re-arm: one timer at end+gap (delete any stale one first)
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(cur.end_ms + gapMs)
-      sess.update(cur)
-    }
-    Iterator.empty
-  }
-
-  override def handleExpiredTimer(key: Long, timerValues: TimerValues,
-      expiredTimerInfo: ExpiredTimerInfo): Iterator[ClosedSession] = {
-    if (!sess.exists()) return Iterator.empty
-    val s = sess.get()
-    sess.clear()
-    Iterator.single(ClosedSession(key, s.start_ms / 1000,
-      s.end_ms / 1000, s.n))
-  }
-}
 
 /** Structured Streaming layer — the streaming semantics of the reference
   * (SURVEY.md §2.8) rebuilt on event-time + watermarks + the state store.
@@ -170,23 +111,6 @@ object StreamingOps {
       .agg(count(lit(1)).as("dau"))
       .select(date_format(col("w.start"), "yyyy-MM-dd").as("dt"),
         date_format(col("w.start"), "HH").as("hr"), col("dau"))
-
-  /** The [[TimerSessionProcessor]] form of [[sessionWindowStream]]:
-    * event-time-timer-driven session close over `transformWithState`.
-    * Same 30-min-gap semantics; emits once the watermark passes
-    * session end + gap. */
-  def timerSessionStream(events: DataFrame,
-      gapMs: Long = 30L * 60 * 1000): Dataset[ClosedSession] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", WatermarkDelay)
-      .select(col("user_id"), expr("unix_micros(ts) DIV 1000").as("ts_ms"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new TimerSessionProcessor(gapMs),
-        TimeMode.EventTime(), OutputMode.Append(),
-        implicitly[org.apache.spark.sql.Encoder[ClosedSession]])
-  }
 
   /** T2 extension: per-user SESSION windows on a stream — the same
     * `session_window` expression as the batch AnalyticOps.sessionWindow
@@ -540,7 +464,7 @@ object StreamingOps {
     * TTL-bounded variant is `dropDuplicatesWithinWatermark` on an
     * ingest-time column when history can be windowed. */
   def curationIntakeStream(docs: DataFrame): DataFrame = {
-    import graft.functions.VectorFunctions.{rolling_hash31, word_ngrams}
+    import org.apache.spark.sql.graftext.GraftFunctions.{rolling_hash31, word_ngrams}
     val t = split(col("text"), " ")
     val grams = word_ngrams(t, 3)
     val stats = docs.select(

@@ -1,9 +1,7 @@
 package org.apache.spark.sql.graftext
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -65,8 +63,4 @@ object AlphaTokenCount {
     }
     if (hasAlpha) c + 1 else c
   }
-
-  /** Column API. */
-  def alpha_token_count(text: Column): Column =
-    ExpressionUtils.column(AlphaTokenCount(ExpressionUtils.expression(text)))
 }

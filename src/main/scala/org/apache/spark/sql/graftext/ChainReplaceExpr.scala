@@ -1,9 +1,7 @@
 package org.apache.spark.sql.graftext
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -78,11 +76,4 @@ case class ChainReplace(child: Expression, froms: Seq[String], tos: Seq[String])
 
   override protected def withNewChildInternal(newChild: Expression): ChainReplace =
     copy(child = newChild)
-}
-
-object ChainReplaceColumns {
-  /** Column API: apply the (from, to) literal pairs in order. */
-  def chain_replace(s: Column, pairs: Seq[(String, String)]): Column =
-    ExpressionUtils.column(ChainReplace(ExpressionUtils.expression(s),
-      pairs.map(_._1), pairs.map(_._2)))
 }

@@ -3,12 +3,10 @@ package org.apache.spark.sql.graftext
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.math.BigInteger
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 
 /** Single-pass integer Gram moments over a quantized `array<long>` column:
@@ -293,12 +291,4 @@ object GramMoments {
       }
     }
   }
-}
-
-object GramAggColumns {
-  /** Column API: struct<n:array<long>, s1:array<long>,
-    * s2:array<struct<p,q,s2:decimal(38,0)>>> over a quantized vector. */
-  def gram_moments(qa: Column): Column =
-    ExpressionUtils.column(
-      GramMoments(ExpressionUtils.expression(qa)).toAggregateExpression())
 }

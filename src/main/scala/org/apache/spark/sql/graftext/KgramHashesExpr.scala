@@ -1,11 +1,9 @@
 package org.apache.spark.sql.graftext
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Per-position k-gram rolling fingerprints as ONE native expression:
@@ -114,8 +112,4 @@ object KgramHashes {
     }
     new GenericArrayData(out)
   }
-
-  /** Column API for the per-position window fingerprints. */
-  def kgram_hashes(tokens: Column, k: Int): Column =
-    ExpressionUtils.column(KgramHashes(ExpressionUtils.expression(tokens), k))
 }

@@ -1,10 +1,8 @@
 package org.apache.spark.sql.graftext
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, BinaryType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -209,10 +207,4 @@ object MediaHeaderParse {
     }
     UnknownRow
   }
-}
-
-object MediaColumns {
-  /** Column API for the native header probe. */
-  def mm_header_parse(payload: Column): Column =
-    ExpressionUtils.column(MediaHeaderParse(ExpressionUtils.expression(payload)))
 }

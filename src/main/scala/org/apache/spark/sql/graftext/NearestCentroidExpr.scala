@@ -1,12 +1,10 @@
 package org.apache.spark.sql.graftext
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, StructType}
 
 /** Nearest-centroid assignment as ONE native expression:
@@ -226,13 +224,4 @@ case class NearestCentroid(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): NearestCentroid =
     copy(left = newLeft, right = newRight)
-}
-
-object CentroidColumns {
-  /** Column API: nearest-centroid cluster id. `cents` is the packed
-    * array<struct<cl,centroid>> single-row broadcast; `emb` the row's
-    * embedding. */
-  def nearest_centroid(cents: Column, emb: Column): Column =
-    ExpressionUtils.column(NearestCentroid(
-      ExpressionUtils.expression(cents), ExpressionUtils.expression(emb)))
 }

@@ -1,12 +1,10 @@
 package org.apache.spark.sql.graftext
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, StructType}
 
 /** Nearest-code ADC argmin as ONE native expression:
@@ -174,12 +172,4 @@ case class NearestCode(first: Expression, second: Expression, third: Expression)
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): NearestCode =
     copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object CodeColumns {
-  /** Column API: ADC nearest-code id over one subspace's packed codewords. */
-  def nearest_code(cands: Column, sub: Column, na2: Column): Column =
-    ExpressionUtils.column(NearestCode(
-      ExpressionUtils.expression(cands), ExpressionUtils.expression(sub),
-      ExpressionUtils.expression(na2)))
 }

@@ -1,11 +1,9 @@
 package org.apache.spark.sql.graftext
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, StructField, StructType}
 
 /** All index pairs (x[i], x[j]) with i < j from one array, as
@@ -75,10 +73,4 @@ case class PairCombos(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): PairCombos =
     copy(child = newChild)
-}
-
-object PairColumns {
-  /** Column API for the native pair expansion. */
-  def pair_combos(x: Column): Column =
-    ExpressionUtils.column(PairCombos(ExpressionUtils.expression(x)))
 }

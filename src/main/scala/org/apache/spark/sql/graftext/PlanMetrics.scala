@@ -34,20 +34,6 @@ object PlanMetrics {
     walked.groupBy(_.id).map(_._2.head).toSeq
   }
 
-  /** Debug helper: node class → populated metrics after execution. */
-  def debugNodes(df: DataFrame): Seq[String] = {
-    val qe = df.queryExecution
-    qe.executedPlan.execute().count()
-    val finalPlan = qe.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    allNodes(finalPlan).map { p =>
-      p.getClass.getSimpleName + " :: " +
-        p.metrics.map { case (k, m) => s"$k=${m.value}" }.mkString(", ")
-    }
-  }
-
   /** Execute `df` fully and collect metrics from its final plan. */
   def run(df: DataFrame): Report = {
     val qe = df.queryExecution

@@ -1,9 +1,7 @@
 package org.apache.spark.sql.graftext
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -70,10 +68,4 @@ case class RollingHash31(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): RollingHash31 =
     copy(child = newChild)
-}
-
-object HashColumns {
-  /** Column API for the native rolling fingerprint. */
-  def rolling_hash31(text: Column): Column =
-    ExpressionUtils.column(RollingHash31(ExpressionUtils.expression(text)))
 }

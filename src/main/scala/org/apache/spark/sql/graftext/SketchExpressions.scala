@@ -2,68 +2,14 @@ package org.apache.spark.sql.graftext
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, GetStructField, Literal, PlanExpression, Predicate, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, GetStructField, PlanExpression, Predicate}
 import org.apache.spark.sql.catalyst.trees.TreePattern.OUTER_REFERENCE
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, FalseLiteral, JavaCode, TrueLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, BinaryType, DataType, LongType, NullType}
 import org.apache.spark.util.sketch.{BloomFilter, CountMinSketch}
-
-/** Column API over Spark's own sketch expressions (the machinery behind
-  * runtime bloom-filter joins) plus a point-query expression for
-  * CountMinSketch — the pieces `org.apache.spark.sql.functions` doesn't
-  * expose publicly.
-  *
-  * Lives in the spark namespace for the same reason as the other graftext
-  * files: `BloomFilterAggregate`/`BloomFilterMightContain` are
-  * catalyst-internal, and `ExpressionUtils.column` is `private[sql]`.
-  *
-  * Hashing contract: both the bloom build side and the probe side wrap the
-  * value in the SAME `XxHash64` (seed 42) long hash — `BloomFilterAggregate`
-  * stores longs via `putLong` and `BloomFilterMightContain` probes via
-  * `mightContainLong`, so a hash mismatch between the two sides would
-  * silently probe garbage. Keeping both wraps inside this object makes the
-  * contract un-breakable from call sites.
-  */
-object SketchColumns {
-
-  /** Distributed bloom-filter build as an aggregate: one partial bloom per
-    * partition, OR-merged — never a driver-side item loop. `expectedItems`
-    * sizes the bit array for the target false-positive rate (Spark derives
-    * numBits as items × 8 by default ≈ 3% FP). */
-  def bloom_agg(value: Column, expectedItems: Long): Column =
-    ExpressionUtils.column(
-      new BloomFilterAggregate(
-        new XxHash64(Seq(ExpressionUtils.expression(value))),
-        expectedItems).toAggregateExpression())
-
-  /** Map-side bloom probe: true if `value` MIGHT be in the filter (no false
-    * negatives — every true member passes; a tunable fraction of
-    * non-members also passes and must be removed by an exact verify).
-    * `bloomBytes` is the serialized filter from [[bloom_agg]], shipped as a
-    * literal (task-broadcast with the plan — KBs to low MBs). */
-  def bloom_might_contain(bloomBytes: Array[Byte], value: Column): Column =
-    ExpressionUtils.column(
-      BloomProbe(
-        Literal(bloomBytes, BinaryType),
-        new XxHash64(Seq(ExpressionUtils.expression(value)))))
-
-  /** Point estimate from a serialized CountMinSketch built by
-    * `functions.count_min_sketch` over LONG values (hash string keys with
-    * `xxhash64` on BOTH the build and estimate sides — same contract as the
-    * bloom pair above). Returns the estimated occurrence count:
-    * `true_count <= estimate <= true_count + eps·N` with the sketch's
-    * confidence. */
-  def cms_estimate(sketchBytes: Array[Byte], hashedValue: Column): Column =
-    ExpressionUtils.column(
-      CmsEstimate(Literal(sketchBytes, BinaryType),
-        ExpressionUtils.expression(hashedValue)))
-}
 
 /** Map-side probe of a serialized bloom filter — same semantics as Spark's
   * internal `BloomFilterMightContain` (reference semantics: the Redis SET

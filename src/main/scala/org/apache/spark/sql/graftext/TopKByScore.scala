@@ -4,12 +4,10 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 
 /** Single-pass top-k-by-score aggregate (SURVEY §4's deferred candidate):
@@ -122,12 +120,4 @@ case class TopKByScore(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): TopKByScore =
     copy(scoreExpr = newChildren(0), idExpr = newChildren(1))
-}
-
-object TopKColumns {
-  /** Column API: array of the k best (score, id) structs, best first. */
-  def topk_by(score: Column, id: Column, k: Int): Column =
-    ExpressionUtils.column(
-      TopKByScore(ExpressionUtils.expression(score),
-        ExpressionUtils.expression(id), k).toAggregateExpression())
 }

@@ -1,10 +1,8 @@
 package org.apache.spark.sql.graftext
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** Native codegen'd vector expressions.
@@ -12,8 +10,8 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Double
   * Lives under `org.apache.spark.sql.*` because the Column↔Expression
   * bridge (`classic.ExpressionUtils`) and `AbstractDataType` are
   * `private[sql]` in Spark 4 — the standard packaging for third-party
-  * Catalyst extensions. Public entry points are re-exported via
-  * `graft.functions.VectorFunctions`.
+  * Catalyst extensions. The Column API and SQL names of the family are
+  * in GraftExtensions.scala.
   */
 
 /** Dot product over two `array<float>` columns as a tight primitive loop
@@ -363,29 +361,4 @@ object FloatQuantizeStats {
       if (sawQ) qMin else null,
       if (sawQ) qMax else null)
   }
-}
-
-object VectorColumns {
-  /** Column API for the native dot product. */
-  def vec_dot(a: Column, b: Column): Column =
-    ExpressionUtils.column(FloatVectorDot(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-
-  /** L2 norm via the same native loop (dot(a,a) in array order). */
-  def vec_norm(a: Column): Column =
-    org.apache.spark.sql.functions.sqrt(vec_dot(a, a))
-
-  /** Elementwise a − b over array<float> (the PQ residual step). */
-  def vec_sub(a: Column, b: Column): Column =
-    ExpressionUtils.column(FloatVectorSub(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-
-  /** Fixed-point array quantization (the integer-moment front door). */
-  def vec_quantize(a: Column, scale: Double): Column =
-    ExpressionUtils.column(FloatVectorQuantize(
-      ExpressionUtils.expression(a), scale))
-
-  /** Per-row int8 quantization stats (the compression-audit front door). */
-  def vec_quantize_stats(a: Column): Column =
-    ExpressionUtils.column(FloatQuantizeStats(ExpressionUtils.expression(a)))
 }

@@ -1,11 +1,9 @@
 package org.apache.spark.sql.graftext
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -82,12 +80,4 @@ object WordNGrams {
     }
     new GenericArrayData(out)
   }
-}
-
-object GramColumns {
-  /** Column API: word n-gram array (default trigram shingles; `sep`
-    * between the joined tokens — "" gives char-pair grams from a
-    * char-split array). */
-  def word_ngrams(tokens: Column, n: Int = 3, sep: String = " "): Column =
-    ExpressionUtils.column(WordNGrams(ExpressionUtils.expression(tokens), n, sep))
 }

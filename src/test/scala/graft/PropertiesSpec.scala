@@ -80,7 +80,7 @@ class PropertiesSpec extends SparkTestBase {
   test("property: TopKByScore equals the window top-k on tie-heavy random data") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.graftext.TopKColumns.topk_by
+    import org.apache.spark.sql.graftext.GraftFunctions.topk_by
     val gen = for {
       n <- Gen.choose(5, 80)
       rows <- Gen.listOfN(n, for {
@@ -164,7 +164,7 @@ class PropertiesSpec extends SparkTestBase {
 
   test("property: vec_quantize matches an in-JVM BigDecimal reference on arbitrary finite floats") {
     import spark.implicits._
-    import graft.functions.VectorFunctions.vec_quantize
+    import org.apache.spark.sql.graftext.GraftFunctions.vec_quantize
     // the reference: exactly RoundBase's DoubleType branch + (long) cast
     def ref(x: Float, scale: Double): Long =
       java.math.BigDecimal.valueOf(x.toDouble * scale)
@@ -189,7 +189,7 @@ class PropertiesSpec extends SparkTestBase {
 
   test("property: gram_moments equals a brute-force reference and is partitioning-invariant") {
     import spark.implicits._
-    import org.apache.spark.sql.graftext.GramAggColumns.gram_moments
+    import org.apache.spark.sql.graftext.GraftFunctions.gram_moments
     val genRow: Gen[Seq[Option[Long]]] = for {
       n <- Gen.choose(0, 6)
       xs <- Gen.listOfN(n, Gen.oneOf(

@@ -20,7 +20,7 @@ class SketchSpec extends SparkTestBase {
   }
 
   test("bloom probe passes every true member (no false negatives)") {
-    import graft.functions.SketchFunctions._
+    import org.apache.spark.sql.graftext.GraftFunctions._
     import spark.implicits._
     val items = (0L until 5000L).map(i => s"item_$i").toDF("s")
     val bytes = items.agg(bloom_agg(col("s"), 5000L)).head().getAs[Array[Byte]](0)

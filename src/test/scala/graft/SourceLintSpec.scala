@@ -22,7 +22,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the DuckDB rolling-hash fold (TextOps) and the DuckDB permutation
   *    mins (DedupOps) have ONE definition each: every oracle twin that
   *    replays the rolling hash or a MinHash signature builds on it, so a
-  *    fix to the replay is made once. */
+  *    fix to the replay is made once.
+  *  - GraftExtensions.scala is the ONE Expression-to-Column bridge of the
+  *    native family: each native function is built from its arguments by
+  *    its one GraftExtensions value, for SQL text and the Column API
+  *    alike, so the two cannot drift apart. */
 class SourceLintSpec extends AnyFunSuite {
 
   /** `hits` counts the calls the rule restricts in the text of a file;
@@ -41,6 +45,7 @@ class SourceLintSpec extends AnyFunSuite {
     ("""\.repartition\((?:[^()]|\([^()]*\))*\)\s*""" + """\.orderBy\(""").r
   private val rollingFold = "(h * 31 + c)" + " % 1000000007"
   private val permMin = "min((h * " + "$"
+  private val toColumn = "ExpressionUtils" + ".column("
 
   private val rules = Seq(
     Rule("only GraftSession.scala calls the SparkSession builder",
@@ -72,7 +77,14 @@ class SourceLintSpec extends AnyFunSuite {
       s"build signatures through DedupOps.minhashSigCtes, not a copy of $permMin",
       "second permutation-min builder",
       "object Planted {\n  def m(a: Long, b: Long, p: Long) = s\"" + permMin +
-        "a + $b) % $p)\"\n}\n"))
+        "a + $b) % $p)\"\n}\n"),
+    Rule("only GraftExtensions.scala turns a native expression into a Column",
+      Seq("src/main", "src/test"), Some("GraftExtensions.scala"),
+      occurrences(toColumn),
+      s"add a GraftExtensions value and a GraftFunctions def, not a $toColumn call",
+      "second Expression-to-Column bridge",
+      "object Planted {\n  def c(e: org.apache.spark.sql.catalyst.expressions.Expression) =\n" +
+        s"    org.apache.spark.sql.classic.$toColumn" + "e)\n}\n"))
 
   /** The repository root: the nearest directory at or above the working
     * directory that holds build.sbt. */

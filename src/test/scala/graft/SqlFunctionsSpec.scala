@@ -1,6 +1,17 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, lit, xxhash64}
+import org.apache.spark.sql.graftext.GraftFunctions._
+
 class SqlFunctionsSpec extends SparkTestBase {
+
+  /** Every native function GraftExtensions registers. */
+  private val nativeNames = Seq("vec_dot", "vec_norm", "vec_sub", "vec_quantize",
+    "vec_quantize_stats", "gram_moments", "topk_by", "pair_combos",
+    "alpha_token_count", "rolling_hash31", "word_ngrams", "kgram_hashes",
+    "chain_replace", "nearest_centroid", "nearest_code", "bloom_agg",
+    "bloom_might_contain", "cms_estimate", "mm_header_parse")
 
   test("vec_dot and topk_by are callable from SQL text") {
     val dot = spark.sql(
@@ -82,11 +93,7 @@ class SqlFunctionsSpec extends SparkTestBase {
   test("session built via GraftSession + withExtensions resolves the functions") {
     // the extensions path is what a cluster's spark.sql.extensions conf uses
     val reg = spark.sessionState.functionRegistry
-    val names = Seq("vec_dot", "vec_norm", "vec_sub", "topk_by", "pair_combos",
-      "alpha_token_count", "rolling_hash31", "word_ngrams", "chain_replace",
-      "nearest_centroid", "nearest_code", "bloom_agg", "bloom_might_contain",
-      "cms_estimate")
-    def missing = names.filterNot(n =>
+    def missing = nativeNames.filterNot(n =>
       reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
     assert(missing.isEmpty, s"not registered: $missing")
   }
@@ -102,14 +109,80 @@ class SqlFunctionsSpec extends SparkTestBase {
     assert(r.getDouble(1) == 5.0)
     assert(r.getSeq[String](2) == Seq("a b", "b c"))
     assert(r.getString(3) == "ZZ") // abcabc -ab>c-> cccc -cc>Z-> ZZ
+  }
 
-    // parity with the Scala Column API on the rolling fingerprint
-    import org.apache.spark.sql.functions.lit
-    val viaScala = spark.range(1)
-      .select(graft.functions.VectorFunctions.rolling_hash31(lit("the quick fox")))
-      .head().getLong(0)
-    val viaSql = spark.sql("SELECT rolling_hash31('the quick fox')").head().getLong(0)
-    assert(viaSql == viaScala)
+  /** Two rows carrying an argument of every type the family takes, as
+    * the temp view `natives_fx`. */
+  private lazy val fixture: DataFrame = {
+    val f = "CAST(%s AS FLOAT)"
+    def floats(xs: String*) = xs.map(f.format(_)).mkString("array(", ", ", ")")
+    val df = spark.sql(
+      s"SELECT ${floats("3.0", "4.0")} AS a, ${floats("1.0", "0.5")} AS b, " +
+        "array(2L, 3L, 5L) AS qa, score, id, " +
+        "'ab 12 c3 ab the cc fox' AS s, split('the quick brown fox', ' ') AS toks, " +
+        s"array(named_struct('cl', 7, 'centroid', ${floats("2.0", "0.0")}), " +
+        s"named_struct('cl', 9, 'centroid', ${floats("0.0", "1.0")})) AS cents, " +
+        s"array(named_struct('code', 3, 'cent', ${floats("1.0", "0.0")}, 'nc2', 1.0D), " +
+        s"named_struct('code', 5, 'cent', ${floats("0.0", "1.0")}, 'nc2', 1.0D)) AS cands, " +
+        "unhex('89504E470D0A1A0A0000000D494844520000000200000003080200000000000000AB') " +
+        "AS payload " +
+        "FROM VALUES (0.9D, 10L), (0.95D, 12L) AS v(score, id)")
+    df.createOrReplaceTempView("natives_fx")
+    df
+  }
+
+  private lazy val bloomBytes: Array[Byte] =
+    fixture.select(bloom_agg(col("id"), 100)).head().getAs[Array[Byte]](0)
+
+  private lazy val cmsBytes: Array[Byte] = {
+    val cms = org.apache.spark.util.sketch.CountMinSketch.create(0.01, 0.99, 1)
+    fixture.select(xxhash64(col("s"))).collect().foreach(r => cms.addLong(r.getLong(0)))
+    cms.toByteArray
+  }
+
+  private def hex(b: Array[Byte]): String = b.map("%02X".format(_)).mkString
+
+  /** One function called through the Column API and through SQL text
+    * over `natives_fx`. */
+  private def parityCase(name: String): (Column, String) = name match {
+    case "vec_dot" => (vec_dot(col("a"), col("b")), "vec_dot(a, b)")
+    case "vec_norm" => (vec_norm(col("a")), "vec_norm(a)")
+    case "vec_sub" => (vec_sub(col("a"), col("b")), "vec_sub(a, b)")
+    case "vec_quantize" => (vec_quantize(col("a"), 2.5), "vec_quantize(a, 2.5D)")
+    case "vec_quantize_stats" => (vec_quantize_stats(col("b")), "vec_quantize_stats(b)")
+    case "gram_moments" => (gram_moments(col("qa")), "gram_moments(qa)")
+    case "topk_by" => (topk_by(col("score"), col("id"), 1), "topk_by(score, id, 1)")
+    case "pair_combos" => (pair_combos(col("qa")), "pair_combos(qa)")
+    case "alpha_token_count" => (alpha_token_count(col("s")), "alpha_token_count(s)")
+    case "rolling_hash31" => (rolling_hash31(col("s")), "rolling_hash31(s)")
+    case "word_ngrams" =>
+      (word_ngrams(col("toks"), 2, "_"), "word_ngrams(toks, 2, '_')")
+    case "kgram_hashes" => (kgram_hashes(col("toks"), 2), "kgram_hashes(toks, 2)")
+    case "chain_replace" =>
+      (chain_replace(col("s"), Seq("ab" -> "c", "cc" -> "Z")),
+        "chain_replace(s, array('ab', 'cc'), array('c', 'Z'))")
+    case "nearest_centroid" =>
+      (nearest_centroid(col("cents"), col("a")), "nearest_centroid(cents, a)")
+    case "nearest_code" =>
+      (nearest_code(col("cands"), col("b"), lit(1.25)), "nearest_code(cands, b, 1.25D)")
+    case "bloom_agg" => (bloom_agg(col("id"), 100), "bloom_agg(id, 100)")
+    case "bloom_might_contain" =>
+      (bloom_might_contain(bloomBytes, col("id")),
+        s"bloom_might_contain(X'${hex(bloomBytes)}', id)")
+    case "cms_estimate" =>
+      (cms_estimate(cmsBytes, xxhash64(col("s"))),
+        s"cms_estimate(X'${hex(cmsBytes)}', xxhash64(s))")
+    case "mm_header_parse" => (mm_header_parse(col("payload")), "mm_header_parse(payload)")
+  }
+
+  nativeNames.foreach { name =>
+    test(s"$name: the Column API and SQL text return the same value") {
+      val (viaColumn, sqlText) = parityCase(name)
+      val viaScala = fixture.select(viaColumn).collect().toSeq
+      val viaSql = spark.sql(s"SELECT $sqlText FROM natives_fx").collect().toSeq
+      assert(viaScala.nonEmpty && viaScala.forall(!_.isNullAt(0)), s"$name: $viaScala")
+      assert(viaScala == viaSql)
+    }
   }
 
   test("quantizer natives are callable from SQL text") {

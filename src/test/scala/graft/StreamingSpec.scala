@@ -329,46 +329,6 @@ class StreamingSpec extends SparkTestBase {
     assert(bounded.last < growing.last)
   }
 
-  test("timer sessionization: event-time timer closes sessions at gap, like session_window") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[Ev]
-      // user 1: two events 5 min apart → one session
-      in.addData(
-        Ev(0, ts("2024-01-01 10:00:00"), 1, "view", 1.0, "{}"),
-        Ev(1, ts("2024-01-01 10:05:00"), 1, "view", 1.0, "{}"))
-      val q = StreamingOps.timerSessionStream(in.toDF())
-        .writeStream.outputMode("append").format("memory").queryName("tsess").start()
-      q.processAllAvailable()
-      // user 2 two hours later advances the watermark past 10:05 + 30min
-      // → user 1's timer fires, session emits
-      in.addData(Ev(2, ts("2024-01-01 12:00:00"), 2, "view", 1.0, "{}"))
-      q.processAllAvailable()
-      // far-future event closes user 2's session too
-      in.addData(Ev(3, ts("2024-01-01 14:00:00"), 3, "view", 1.0, "{}"))
-      q.processAllAvailable()
-      q.stop()
-      val got = spark.table("tsess")
-        .select("user_id", "session_start_sec", "session_end_sec", "n_events")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSet
-      def sec(s: String) = ts(s).getTime / 1000
-      assert(got.contains((1L, sec("2024-01-01 10:00:00"), sec("2024-01-01 10:05:00"), 2L)),
-        s"user 1's 2-event session must close via the timer, got $got")
-      assert(got.contains((2L, sec("2024-01-01 12:00:00"), sec("2024-01-01 12:00:00"), 1L)),
-        s"user 2's singleton session must close, got $got")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("foreachBatch upsert sink: a replayed partition is replaced, others untouched") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

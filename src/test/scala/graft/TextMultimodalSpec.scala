@@ -549,7 +549,7 @@ class TextMultimodalSpec extends SparkTestBase {
   }
 
   test("jpeg probe genuinely WALKS markers: extra COM segment, SOS-first, truncation") {
-    import org.apache.spark.sql.graftext.MediaColumns.mm_header_parse
+    import org.apache.spark.sql.graftext.GraftFunctions.mm_header_parse
     import spark.implicits._
     def unhex(s: String): Array[Byte] =
       s.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
@@ -732,7 +732,7 @@ class TextMultimodalSpec extends SparkTestBase {
   }
 
   test("header probe: malformed/truncated/foreign bytes quarantine as all-null, never throw") {
-    import org.apache.spark.sql.graftext.MediaColumns.mm_header_parse
+    import org.apache.spark.sql.graftext.GraftFunctions.mm_header_parse
     import spark.implicits._
     val junk = Seq(
       Array.empty[Byte],                          // empty

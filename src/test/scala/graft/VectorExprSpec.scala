@@ -18,7 +18,7 @@ class VectorExprSpec extends SparkTestBase {
   }
 
   test("native vec_sub is bit-identical to the zip_with formulation") {
-    import graft.functions.VectorFunctions.vec_sub
+    import org.apache.spark.sql.graftext.GraftFunctions.vec_sub
     val e = Tables.embeddings(spark, sf0001).limit(200)
     val a = e.select(col("vec_id").as("ia"), col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("ib"), col("embedding").as("eb"))
@@ -33,7 +33,7 @@ class VectorExprSpec extends SparkTestBase {
 
   test("native vec_sub null semantics: dimension mismatch and null element → null") {
     import spark.implicits._
-    import graft.functions.VectorFunctions.vec_sub
+    import org.apache.spark.sql.graftext.GraftFunctions.vec_sub
     val df = Seq(
       (Some(Seq(1.5f, 2.0f)), Some(Seq(0.5f, 1.0f))),
       (Some(Seq(1.0f)), Some(Seq(1.0f, 2.0f))), // length mismatch
@@ -61,7 +61,7 @@ class VectorExprSpec extends SparkTestBase {
   }
 
   test("pair_combos matches the HOF formulation on longs, structs, and edges") {
-    import graft.functions.VectorFunctions.pair_combos
+    import org.apache.spark.sql.graftext.GraftFunctions.pair_combos
     import spark.implicits._
     val df = Seq(Seq(1L, 2L, 3L, 4L), Seq(7L, 9L), Seq(5L), Seq.empty[Long])
       .toDF("xs")
@@ -134,7 +134,7 @@ class VectorExprSpec extends SparkTestBase {
   }
 
   test("native nearest_centroid matches the array_min(transform(...)) formulation") {
-    import graft.functions.VectorFunctions.nearest_centroid
+    import org.apache.spark.sql.graftext.GraftFunctions.nearest_centroid
     import spark.implicits._
     // pseudo-random 8-dim vectors + adversarial rows: an exact duplicate
     // of a centroid (cosine clamps to 1.0), a zero vector (all cosines
@@ -189,7 +189,7 @@ class VectorExprSpec extends SparkTestBase {
   }
 
   test("native nearest_code matches the array_min(transform(...)) ADC formulation") {
-    import graft.functions.VectorFunctions.nearest_code
+    import org.apache.spark.sql.graftext.GraftFunctions.nearest_code
     import spark.implicits._
     def vec(seed: Int): Seq[Float] = {
       var s = seed.toLong * 2654435761L + 17
@@ -227,7 +227,7 @@ class VectorExprSpec extends SparkTestBase {
   }
 
   test("native rolling_hash31 matches the split+aggregate HOF formulation") {
-    import graft.functions.VectorFunctions.rolling_hash31
+    import org.apache.spark.sql.graftext.GraftFunctions.rolling_hash31
     import spark.implicits._
     // ASCII, BMP accents, CJK, a surrogate-pair emoji (Spark's UTF8String
     // split("") yields CODE POINTS — the astral emoji stays ONE element,
@@ -256,7 +256,7 @@ class VectorExprSpec extends SparkTestBase {
   }
 
   test("native kgram_hashes matches rolling_hash31 over every HOF-joined window") {
-    import graft.functions.VectorFunctions.{kgram_hashes, rolling_hash31}
+    import org.apache.spark.sql.graftext.GraftFunctions.{kgram_hashes, rolling_hash31}
     import spark.implicits._
     // windows spanning ASCII, accents, CJK, an astral emoji token, and a
     // doubled space (split yields an EMPTY token — the join must still
@@ -286,7 +286,7 @@ class VectorExprSpec extends SparkTestBase {
   }
 
   test("native word_ngrams matches the transform+slice+concat_ws formulation") {
-    import graft.functions.VectorFunctions.word_ngrams
+    import org.apache.spark.sql.graftext.GraftFunctions.word_ngrams
     import spark.implicits._
     val df = Seq(
       "key agg row scan slow fast table value",
@@ -328,7 +328,7 @@ class VectorExprSpec extends SparkTestBase {
 
   test("native vec_quantize edges: ties, negatives, null element, empty, null, NaN/Inf") {
     import spark.implicits._
-    import graft.functions.VectorFunctions.vec_quantize
+    import org.apache.spark.sql.graftext.GraftFunctions.vec_quantize
     // scale 2.0 makes exact .5 products reachable: x=0.25 → 0.5 (HALF_UP
     // → away from zero: 1), x=-0.25 → -0.5 → -1 (Math.round would give 0
     // — the difference this pin exists to catch). Spark's round() on
@@ -372,7 +372,7 @@ class VectorExprSpec extends SparkTestBase {
 
   test("vec_quantize saturation boundary matches Spark's ANSI cast exactly at ±2^63") {
     import spark.implicits._
-    import graft.functions.VectorFunctions.vec_quantize
+    import org.apache.spark.sql.graftext.GraftFunctions.vec_quantize
     // Spark's ANSI Cast(double → long) compares floor(d) <= Long.MaxValue
     // with MaxValue promoted to double (= 2^63): d == 2^63 passes and
     // d.toLong SATURATES to Long.MaxValue. The native guard must accept
@@ -393,7 +393,7 @@ class VectorExprSpec extends SparkTestBase {
   }
 
   test("vec_quantize and vec_quantize_stats agree between codegen and interpreted eval") {
-    import graft.functions.VectorFunctions.{vec_quantize, vec_quantize_stats}
+    import org.apache.spark.sql.graftext.GraftFunctions.{vec_quantize, vec_quantize_stats}
     val e = Tables.embeddings(spark, sf0001).limit(64)
     def run(): Seq[(Seq[Long], org.apache.spark.sql.Row)] =
       e.select(vec_quantize(col("embedding"), 1048576.0),
@@ -414,7 +414,7 @@ class VectorExprSpec extends SparkTestBase {
   }
 
   test("native vec_quantize_stats matches the 4-pass HOF chain") {
-    import graft.functions.VectorFunctions.vec_quantize_stats
+    import org.apache.spark.sql.graftext.GraftFunctions.vec_quantize_stats
     // the HOF chain this expression replaced, verbatim
     def hofCols(emb: org.apache.spark.sql.Column) = {
       val maxAbs = array_max(transform(emb, x => abs(x)))
@@ -475,7 +475,7 @@ class VectorExprSpec extends SparkTestBase {
   }
 
   test("gram_moments matches the double-posexplode formulation on the corpus") {
-    import org.apache.spark.sql.graftext.GramAggColumns.gram_moments
+    import org.apache.spark.sql.graftext.GraftFunctions.gram_moments
     val qa = Tables.embeddings(spark, sf0001)
       .select(VectorOps.quantize(col("embedding"), 1048576.0).as("qa"))
     val g = qa.agg(gram_moments(col("qa")).as("g"))
@@ -507,7 +507,7 @@ class VectorExprSpec extends SparkTestBase {
 
   test("gram_moments: 128-bit second moments, ragged arrays, null elements") {
     import spark.implicits._
-    import org.apache.spark.sql.graftext.GramAggColumns.gram_moments
+    import org.apache.spark.sql.graftext.GraftFunctions.gram_moments
     // elements ~2^30: products ~2^60 (fit long), 100-row sums ~2^66
     // (OVERFLOW long) — the i128 accumulator must stay exact where a
     // naive long sum wraps
@@ -554,7 +554,7 @@ class VectorExprSpec extends SparkTestBase {
 
   test("gram_moments raises loudly on out-of-contract element magnitude") {
     import spark.implicits._
-    import org.apache.spark.sql.graftext.GramAggColumns.gram_moments
+    import org.apache.spark.sql.graftext.GraftFunctions.gram_moments
     // elements near 2^63 could wrap the 128-bit accumulator into a
     // legitimate-looking in-range sum with no error — the guard makes
     // out-of-contract input fail like the quantize expressions do
@@ -580,7 +580,7 @@ class VectorExprSpec extends SparkTestBase {
     // silently falls back to eval() — the two paths must return the same
     // cluster, including on the adversarial rows (duplicate centroid,
     // zero vector, antipode).
-    import graft.functions.VectorFunctions.nearest_centroid
+    import org.apache.spark.sql.graftext.GraftFunctions.nearest_centroid
     import spark.implicits._
     def vec(seed: Int): Seq[Float] = {
       var s = seed.toLong * 40503L + 7
@@ -611,7 +611,7 @@ class VectorExprSpec extends SparkTestBase {
   }
 
   test("native alpha_token_count matches both the filter-HOF and regexp_count forms") {
-    import org.apache.spark.sql.graftext.AlphaTokenCount.alpha_token_count
+    import org.apache.spark.sql.graftext.GraftFunctions.alpha_token_count
     import spark.implicits._
     val rows = Seq(Some("ab cd"), Some("123 456"), Some("a1b 2#3 x"),
       Some(""), Some("   "), Some("日本語 abc 語a語"), Some("# ... #a"),
@@ -630,7 +630,7 @@ class VectorExprSpec extends SparkTestBase {
   }
 
   test("native chain_replace is bit-identical to the nested replace formulation") {
-    import graft.functions.VectorFunctions.chain_replace
+    import org.apache.spark.sql.graftext.GraftFunctions.chain_replace
     import spark.implicits._
     // the BPE encode chain's exact patterns plus adversarial cases:
     // left-to-right non-overlap ("aaa" under a->b), a replacement that
