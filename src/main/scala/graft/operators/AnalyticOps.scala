@@ -154,14 +154,22 @@ object AnalyticOps {
     * gap, per session_window semantics; epoch-second floors keep the
     * output precision-neutral between the nanos oracle and micros Spark. */
   def sessionWindow(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
+    sessions(Tables.events(spark, dir))
+      .orderBy("user_id", "session_start_sec")
+
+  val SessionGap = "30 minutes"
+
+  /** The session aggregation of [[sessionWindow]] and, over a watermarked
+    * stream, of StreamingOps.sessionWindowStream: (user_id,
+    * session_start_sec, session_end_sec, n_events) per session. */
+  def sessions(events: DataFrame, gap: String = SessionGap): DataFrame =
+    events
+      .groupBy(col("user_id"), session_window(col("ts"), gap).as("sw"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"),
         unix_timestamp(col("sw.start")).as("session_start_sec"),
         unix_timestamp(col("sw.end")).as("session_end_sec"),
         col("n_events"))
-      .orderBy("user_id", "session_start_sec")
 
   // ---------------------------------------------------------------- SCD2
   /** Slowly-changing-dimension (type 2) build: each customer's order

@@ -1892,7 +1892,7 @@ object DedupOps {
     val e = Tables.embeddings(spark, dir)
     val assigned = SimilarityOps
       .assignTwoLevel(e, SimilarityOps.scaledSemDedupK(e))
-      .withColumn("nrm", VectorOps.norm(col("embedding")))
+      .withColumn("nrm", GraftFunctions.vec_norm(col("embedding")))
       .cache()
     // norms computed ONCE per vector before the join: each pair then costs
     // a single native dot instead of three array traversals
@@ -3168,16 +3168,11 @@ object DedupOps {
          $ScrubTailSql""",
     // same chunking CTE as q_chunk_docs (PipelineOps), rolled up by fp
     "q_chunk_shared" ->
-      """WITH s AS (
-           SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         st AS (
-           SELECT doc_id, t, start_tok FROM (
-             SELECT doc_id, t, unnest(generate_series(1, len(t), 40)) AS start_tok
-             FROM s)
-           WHERE start_tok = 1 OR start_tok + 10 <= len(t)),
+      s"""WITH ${PipelineOps.chunkStartsSql},
          c AS (
            SELECT doc_id,
-                  md5(array_to_string(t[start_tok : start_tok + 49], ' ')) AS chunk_fp
+                  md5(array_to_string(t[start_tok : start_tok + ${PipelineOps.ChunkTokens - 1}],
+                    ' ')) AS chunk_fp
            FROM st)
          SELECT chunk_fp, count(DISTINCT doc_id) AS n_docs, count(*) AS n_occ,
                 min(doc_id) AS min_doc, max(doc_id) AS max_doc

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftFunctions
 
 import graft.Tables
 
@@ -1262,7 +1263,7 @@ object MultimodalOps {
         // stays inside whole-stage codegen; the lambda form is the one
         // interpreted HOF the engine's invariant bans on per-asset paths
         col("features").cast("array<float>").as("fv"))
-      .withColumn("nrm", VectorOps.norm(col("fv")))
+      .withColumn("nrm", GraftFunctions.vec_norm(col("fv")))
       .where(col("nrm") > 0.0)
       // cached (r16 opt): both the query side and the corpus side read
       // this frame, and the typed mapPartitions decode above is opaque

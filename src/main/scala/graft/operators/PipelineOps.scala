@@ -265,9 +265,22 @@ object PipelineOps {
     docChunks(spark, dir)
       .transform(ContractSort.exchanged(_, "doc_id", "chunk_idx"))
 
-  /** Chunk geometry shared by [[docChunks]] and [[chunkScrub]]. */
-  private val ChunkTokens = 50
-  private val ChunkStride = 40 // = ChunkTokens - 10 overlap
+  /** Chunk geometry shared by [[docChunks]], [[chunkScrub]] and the
+    * chunk oracles. */
+  private[operators] val ChunkTokens = 50
+  private[operators] val ChunkStride = 40 // = ChunkTokens - 10 overlap
+
+  /** [[chunkStarts]] as the DuckDB CTEs `s` (doc_id, t) and `st` (doc_id,
+    * t, start_tok) every chunk oracle starts from. */
+  private[operators] val chunkStartsSql: String =
+    s"""s AS (
+           SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+         st AS (
+           SELECT doc_id, t, start_tok FROM (
+             SELECT doc_id, t,
+                    unnest(generate_series(1, len(t), $ChunkStride)) AS start_tok
+             FROM s)
+           WHERE start_tok = 1 OR start_tok + ${ChunkTokens - ChunkStride} <= len(t))"""
 
   /** The filtered (doc_id, t, start_tok) start frame every chunk view
     * derives from — one definition, so the fingerprint chain and the
@@ -1288,18 +1301,12 @@ object PipelineOps {
          WHERE running * 5 <= total * 4
          ORDER BY doc_id""",
     "q_chunk_docs" ->
-      """WITH s AS (
-           SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         st AS (
-           SELECT doc_id, t, start_tok FROM (
-             SELECT doc_id, t, unnest(generate_series(1, len(t), 40)) AS start_tok
-             FROM s)
-           WHERE start_tok = 1 OR start_tok + 10 <= len(t)),
+      s"""WITH $chunkStartsSql,
          c AS (
            SELECT doc_id,
-                  CAST((start_tok - 1) // 40 AS BIGINT) AS chunk_idx,
+                  CAST((start_tok - 1) // $ChunkStride AS BIGINT) AS chunk_idx,
                   CAST(start_tok AS BIGINT) AS start_tok,
-                  t[start_tok : start_tok + 49] AS chunk
+                  t[start_tok : start_tok + ${ChunkTokens - 1}] AS chunk
            FROM st)
          SELECT doc_id, chunk_idx, start_tok,
                 len(chunk) AS n_chunk_tokens,
@@ -1307,18 +1314,12 @@ object PipelineOps {
          FROM c ORDER BY doc_id, chunk_idx""",
     // same chunk CTE, then keep-first rank per (doc, fp)
     "q_chunk_dedup" ->
-      """WITH s AS (
-           SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         st AS (
-           SELECT doc_id, t, start_tok FROM (
-             SELECT doc_id, t, unnest(generate_series(1, len(t), 40)) AS start_tok
-             FROM s)
-           WHERE start_tok = 1 OR start_tok + 10 <= len(t)),
+      s"""WITH $chunkStartsSql,
          c AS (
            SELECT doc_id,
-                  CAST((start_tok - 1) // 40 AS BIGINT) AS chunk_idx,
-                  len(t[start_tok : start_tok + 49]) AS n_chunk_tokens,
-                  md5(array_to_string(t[start_tok : start_tok + 49], ' '))
+                  CAST((start_tok - 1) // $ChunkStride AS BIGINT) AS chunk_idx,
+                  len(t[start_tok : start_tok + ${ChunkTokens - 1}]) AS n_chunk_tokens,
+                  md5(array_to_string(t[start_tok : start_tok + ${ChunkTokens - 1}], ' '))
                     AS chunk_fp
            FROM st),
          d AS (
@@ -1337,21 +1338,15 @@ object PipelineOps {
     // (identical to Spark's min-struct canonical — the order is total);
     // owned spans tile each doc, scrubbed text = ordered kept-span concat
     "q_chunk_scrub" ->
-      """WITH s AS (
-           SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         st AS (
-           SELECT doc_id, t, start_tok FROM (
-             SELECT doc_id, t, unnest(generate_series(1, len(t), 40)) AS start_tok
-             FROM s)
-           WHERE start_tok = 1 OR start_tok + 10 <= len(t)),
+      s"""WITH $chunkStartsSql,
          c AS (
            SELECT doc_id,
-                  CAST((start_tok - 1) // 40 AS BIGINT) AS chunk_idx,
-                  md5(array_to_string(t[start_tok : start_tok + 49], ' '))
+                  CAST((start_tok - 1) // $ChunkStride AS BIGINT) AS chunk_idx,
+                  md5(array_to_string(t[start_tok : start_tok + ${ChunkTokens - 1}], ' '))
                     AS chunk_fp,
-                  CASE WHEN start_tok + 50 > len(t)
+                  CASE WHEN start_tok + $ChunkTokens > len(t)
                        THEN t[start_tok : len(t)]
-                       ELSE t[start_tok : start_tok + 39] END AS owned
+                       ELSE t[start_tok : start_tok + ${ChunkStride - 1}] END AS owned
            FROM st),
          d AS (
            SELECT doc_id, chunk_idx, owned,

@@ -43,9 +43,9 @@ object SimilarityOps {
     val e = Tables.embeddings(spark, dir)
     val q = e.where(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        VectorOps.norm(col("embedding")).as("nq"))
+        GraftFunctions.vec_norm(col("embedding")).as("nq"))
     val corpus = e.select(col("vec_id"), col("embedding"),
-      VectorOps.norm(col("embedding")).as("ne"))
+      GraftFunctions.vec_norm(col("embedding")).as("ne"))
     val cos = VectorOps.cosinePrenorm(col("qe"), col("embedding"), col("nq"), col("ne"))
     corpus.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"), cos.as("cos_sim"))
@@ -88,7 +88,7 @@ object SimilarityOps {
     import org.apache.spark.sql.Column
     val bits: Seq[Column] = (0 until BitsPerTable).map { bI =>
       val plane = typedlit(planes(t)(bI))
-      when(VectorOps.dot(emb, plane) > 0.0, lit(1 << bI)).otherwise(lit(0))
+      when(GraftFunctions.vec_dot(emb, plane) > 0.0, lit(1 << bI)).otherwise(lit(0))
     }
     bits.reduce(_ + _)
   }
@@ -106,7 +106,7 @@ object SimilarityOps {
       struct(lit(t).as("tbl"), tableSig(col("embedding"), t).as("sig")))
     val bucketed = e
       .select(col("vec_id"), col("embedding"),
-        VectorOps.norm(col("embedding")).as("nrm"),
+        GraftFunctions.vec_norm(col("embedding")).as("nrm"),
         explode(array(sigCols: _*)).as("bk"))
       .select(col("vec_id"), col("embedding"), col("nrm"),
         col("bk.tbl").as("tbl"), col("bk.sig").as("sig"))
@@ -159,7 +159,7 @@ object SimilarityOps {
       // interpreted transform() lambda nor a post-explode scalar round —
       // see graftext.FloatVectorQuantize), then explode longs
       .select(col("cl"),
-        posexplode(VectorOps.quantize(col("embedding"), CentroidScale))
+        posexplode(GraftFunctions.vec_quantize(col("embedding"), CentroidScale))
           .as(Seq("pos", "qv")))
       .groupBy("cl", "pos")
       .agg(sum(col("qv")).as("s1"), count(lit(1)).as("n"))
@@ -270,10 +270,10 @@ object SimilarityOps {
     val e = Tables.embeddings(spark, dir)
     val centroids = ivfCentroids(e).cache()
     val lists = assign(e, centroids)
-      .withColumn("nrm", VectorOps.norm(col("embedding")))
+      .withColumn("nrm", GraftFunctions.vec_norm(col("embedding")))
     val q = e.where(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        VectorOps.norm(col("embedding")).as("nq"))
+        GraftFunctions.vec_norm(col("embedding")).as("nq"))
     ivfProbeTopK(q, centroids, lists, excludeSelf = true)
       .select(col("query_id"), col("rank").cast("long").as("rank"),
         col("neighbor_id"), col("cos_sim"))
@@ -315,7 +315,7 @@ object SimilarityOps {
     val keep = e.columns.filterNot(_ == "embedding").map(col).toSeq
     e.select(keep :+ explode(array(subs: _*)).as("s"): _*)
       .select(keep ++ Seq(col("s.m").as("m"), col("s.sub").as("sub")): _*)
-      .withColumn("na2", VectorOps.dot(col("sub"), col("sub")))
+      .withColumn("na2", GraftFunctions.vec_dot(col("sub"), col("sub")))
   }
 
   /** Elementwise mean subvector per (m, code) — the codebook update step.
@@ -327,7 +327,7 @@ object SimilarityOps {
     assigned
       // one native quantize pass per subvector, same reasoning as [[meansOf]]
       .select(col("m"), col("code"),
-        posexplode(VectorOps.quantize(col("sub"), CentroidScale))
+        posexplode(GraftFunctions.vec_quantize(col("sub"), CentroidScale))
           .as(Seq("pos", "qv")))
       .groupBy("m", "code", "pos")
       .agg(sum(col("qv")).as("s1"), count(lit(1)).as("n"))
@@ -337,7 +337,7 @@ object SimilarityOps {
         .as("pm"))
       .select(col("m"), col("code"),
         expr("transform(pm, x -> cast(x.mv as float))").as("cent"))
-      .withColumn("nc2", VectorOps.dot(col("cent"), col("cent")))
+      .withColumn("nc2", GraftFunctions.vec_dot(col("cent"), col("cent")))
 
   /** Encode every subvector with its nearest code — SHUFFLE-FREE: the
     * codebook packs to one row PER SUBSPACE (M rows), broadcast-equi-joins
@@ -427,7 +427,7 @@ object SimilarityOps {
     // ADC table: exact distance from each query subvector to each centroid
     val dtable = qsubs.join(codebook, col("qm") === codebook("m"))
       .select(col("query_id"), col("qm").as("m"), col("code"),
-        (col("nq2") - lit(2.0) * VectorOps.dot(col("qsub"), col("cent"))
+        (col("nq2") - lit(2.0) * GraftFunctions.vec_dot(col("qsub"), col("cent"))
           + col("nc2")).as("d2"))
     adcRerank(e, q, codes, dtable, Seq("m", "code"))
   }
@@ -460,9 +460,9 @@ object SimilarityOps {
     // exact refinement over the shortlist: |x−q|² with full vectors
     val nbr = e.select(col("vec_id").as("neighbor_id"),
       col("embedding").as("ne"))
-    val exact = VectorOps.dot(col("ne"), col("ne")) -
-      lit(2.0) * VectorOps.dot(col("ne"), col("qe")) +
-      VectorOps.dot(col("qe"), col("qe"))
+    val exact = GraftFunctions.vec_dot(col("ne"), col("ne")) -
+      lit(2.0) * GraftFunctions.vec_dot(col("ne"), col("qe")) +
+      GraftFunctions.vec_dot(col("qe"), col("qe"))
     val wr = Window.partitionBy(col("query_id"))
       .orderBy(col("l2_dist2").asc, col("neighbor_id").asc)
     shortlist
@@ -513,9 +513,9 @@ object SimilarityOps {
     val e = Tables.embeddings(spark, dir)
     val q = e.where(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val d2 = VectorOps.dot(col("embedding"), col("embedding")) -
-      lit(2.0) * VectorOps.dot(col("embedding"), col("qe")) +
-      VectorOps.dot(col("qe"), col("qe"))
+    val d2 = GraftFunctions.vec_dot(col("embedding"), col("embedding")) -
+      lit(2.0) * GraftFunctions.vec_dot(col("embedding"), col("qe")) +
+      GraftFunctions.vec_dot(col("qe"), col("qe"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("d2").asc, col("neighbor_id").asc)
     val bf = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
@@ -587,9 +587,9 @@ object SimilarityOps {
     * join shape.) */
   private def memberCosMoments(e: DataFrame, centroids: DataFrame): DataFrame =
     assign(e, centroids)
-      .withColumn("nrm", VectorOps.norm(col("embedding")))
+      .withColumn("nrm", GraftFunctions.vec_norm(col("embedding")))
       .join(broadcast(centroids
-        .withColumn("cnrm", VectorOps.norm(col("centroid")))), Seq("cl"))
+        .withColumn("cnrm", GraftFunctions.vec_norm(col("centroid")))), Seq("cl"))
       .select(col("cl"), quantizedMemberCos(col("nrm"), col("cnrm")).as("qc"))
       .groupBy("cl")
       .agg(count(lit(1)).as("n_vecs"),
@@ -669,11 +669,11 @@ object SimilarityOps {
     val e = Tables.embeddings(spark, dir)
     val centroids = ivfCentroids(e).cache()
     val lists = assign(e, centroids)
-      .withColumn("nrm", VectorOps.norm(col("embedding")))
+      .withColumn("nrm", GraftFunctions.vec_norm(col("embedding")))
       .cache() // 3 probe arms + the size rollup
     val q = e.where(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        VectorOps.norm(col("embedding")).as("nq"))
+        GraftFunctions.vec_norm(col("embedding")).as("nq"))
     val bf = annBruteForce(spark, dir)
       .select(col("query_id"), col("neighbor_id")).cache()
     val listSizes = lists.groupBy("cl").agg(count(lit(1)).as("lsz"))
@@ -742,7 +742,7 @@ object SimilarityOps {
         .join(broadcast(cb), Seq("m", "code"))
         .select(col("m"), col("code"),
           round((col("na2") -
-            lit(2.0) * VectorOps.dot(col("sub"), col("cent")) +
+            lit(2.0) * GraftFunctions.vec_dot(col("sub"), col("cent")) +
             col("nc2")) * lit(CosScale)).cast("long").as("qe"))
       err.agg(
         count(lit(1)).as("n_subvectors"),
@@ -773,7 +773,7 @@ object SimilarityOps {
       centroids.coalesce(1).write.mode("overwrite")
         .parquet(s"$indexDir/centroids")
       assign(e, centroids)
-        .withColumn("nrm", VectorOps.norm(col("embedding")))
+        .withColumn("nrm", GraftFunctions.vec_norm(col("embedding")))
         .write.mode("overwrite").partitionBy("cl")
         .parquet(s"$indexDir/lists")
     } finally centroids.unpersist()
@@ -798,7 +798,7 @@ object SimilarityOps {
       batch: DataFrame): Unit = {
     val centroids = Tables.read(spark, s"$indexDir/centroids")
     assign(batch.select(col("vec_id"), col("embedding")), centroids)
-      .withColumn("nrm", VectorOps.norm(col("embedding")))
+      .withColumn("nrm", GraftFunctions.vec_norm(col("embedding")))
       .write.mode("append").partitionBy("cl")
       .parquet(s"$indexDir/lists")
   }
@@ -815,7 +815,7 @@ object SimilarityOps {
     val centroids = Tables.read(spark, s"$indexDir/centroids")
     val lists = Tables.read(spark, s"$indexDir/lists")
     val q = queries.select(col("query_id"), col("qe"),
-      VectorOps.norm(col("qe")).as("nq"))
+      GraftFunctions.vec_norm(col("qe")).as("nq"))
     ivfProbeTopK(q, centroids, lists, excludeSelf = false,
         broadcastProbes = true)
       .select(col("query_id"), col("rank").cast("long").as("rank"),
@@ -860,15 +860,15 @@ object SimilarityOps {
     // corpus-wide argmax recomputes per consumer (the clusterScopedDedup
     // convention; harness clearCache sweeps them)
     val before = assign(base, centroids)
-      .withColumn("nrm", VectorOps.norm(col("embedding")))
+      .withColumn("nrm", GraftFunctions.vec_norm(col("embedding")))
       .cache()
     val after = before.unionByName(
       assign(batch, centroids)
-        .withColumn("nrm", VectorOps.norm(col("embedding"))))
+        .withColumn("nrm", GraftFunctions.vec_norm(col("embedding"))))
       .cache()
     val qc = quantizedMemberCos(col("nrm"), col("cnrm"))
     val centroidsN = centroids
-      .withColumn("cnrm", VectorOps.norm(col("centroid")))
+      .withColumn("cnrm", GraftFunctions.vec_norm(col("centroid")))
     def listStats(lists: DataFrame, suffix: String): DataFrame =
       lists.join(broadcast(centroidsN), Seq("cl"))
         .select(col("cl"), qc.as("qc"))
@@ -879,7 +879,7 @@ object SimilarityOps {
             .as(s"mean_cos_$suffix"))
     val q = e.where(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        VectorOps.norm(col("embedding")).as("nq"))
+        GraftFunctions.vec_norm(col("embedding")).as("nq"))
     def bruteTopK(corpus: DataFrame): DataFrame = {
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
@@ -1013,7 +1013,7 @@ object SimilarityOps {
     // ADC table per probed list: queries × nprobe × M × K rows, broadcast
     val dtable = qsubs.join(codebook, Seq("m"))
       .select(col("query_id"), col("cl"), col("m"), col("code"),
-        (col("nq2") - lit(2.0) * VectorOps.dot(col("qsub"), col("cent"))
+        (col("nq2") - lit(2.0) * GraftFunctions.vec_dot(col("qsub"), col("cent"))
           + col("nc2")).as("d2"))
     // keying the ADC join on cl is the IVF pruning: unprobed lists
     // contribute zero rows
@@ -1119,7 +1119,7 @@ object SimilarityOps {
     // whole-corpus GramMoments scan re-ran once per reference (~7× per
     // query). The cached state is one row of d(d+1)/2 cells (~100 KB).
     val g = e
-      .select(VectorOps.quantize(col("embedding"), CentroidScale).as("qa"))
+      .select(GraftFunctions.vec_quantize(col("embedding"), CentroidScale).as("qa"))
       .agg(gram_moments(col("qa")).as("g"))
       .cache()
     val mu = g
@@ -1203,11 +1203,11 @@ object SimilarityOps {
           .as("pm"))
         .select(expr(s"transform(pm, x -> cast(x.$valCol as float))")
           .as(out))
-    val proj = VectorOps.dot(col("embedding"), col("pc_arr")) -
-      VectorOps.dot(col("mu_arr"), col("pc_arr"))
-    val cen2 = VectorOps.dot(col("embedding"), col("embedding")) -
-      lit(2.0) * VectorOps.dot(col("embedding"), col("mu_arr")) +
-      VectorOps.dot(col("mu_arr"), col("mu_arr"))
+    val proj = GraftFunctions.vec_dot(col("embedding"), col("pc_arr")) -
+      GraftFunctions.vec_dot(col("mu_arr"), col("pc_arr"))
+    val cen2 = GraftFunctions.vec_dot(col("embedding"), col("embedding")) -
+      lit(2.0) * GraftFunctions.vec_dot(col("embedding"), col("mu_arr")) +
+      GraftFunctions.vec_dot(col("mu_arr"), col("mu_arr"))
     e.crossJoin(broadcast(packed(mu.select(col("p"), col("mu")), "mu", "mu_arr")))
       .crossJoin(broadcast(packed(pc, "pc1", "pc_arr")))
       .select(col("vec_id"), proj.as("proj"),
@@ -1325,7 +1325,7 @@ object SimilarityOps {
     // [[meansOf]] / graftext.FloatVectorQuantize)
     val q = Tables.embeddings(spark, dir)
       .select(col("label"),
-        posexplode(VectorOps.quantize(col("embedding"), CentroidScale))
+        posexplode(GraftFunctions.vec_quantize(col("embedding"), CentroidScale))
           .as(Seq("pos", "qx")))
       .select(col("label"), col("pos").as("dim"), col("qx"))
     // s1 stays a LONG sum (|s1| ≤ n·2^21: safe past 10^12 vectors per
@@ -1376,7 +1376,7 @@ object SimilarityOps {
     * diverges at the last bit across engines — div/abs are
     * IEEE-exact, so the oracle hash-matches. */
   def embedScore(spark: SparkSession, dir: String): DataFrame = {
-    val z = VectorOps.dot(col("embedding"), typedlit(ScoreWeights)) + lit(0.25)
+    val z = GraftFunctions.vec_dot(col("embedding"), typedlit(ScoreWeights)) + lit(0.25)
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label").cast("long").as("label"), z.as("logit"))
       .withColumn("score", col("logit") / (lit(1.0) + abs(col("logit"))))
@@ -1418,7 +1418,7 @@ object SimilarityOps {
     * must carry (vec_id, embedding, cl). */
   private def clusterScopedDedup(assigned: DataFrame): DataFrame = {
     val clustered = assigned
-      .withColumn("nrm", VectorOps.norm(col("embedding")))
+      .withColumn("nrm", GraftFunctions.vec_norm(col("embedding")))
       .cache() // both join sides + the final anti-join read it
     val a = clustered.select(col("cl"), col("vec_id").as("vec_a"),
       col("embedding").as("ea"), col("nrm").as("na"))

@@ -3,22 +3,17 @@ package graft.operators
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import org.apache.spark.sql.graftext.GraftFunctions
+import org.apache.spark.sql.graftext.GraftFunctions.{vec_dot, vec_norm}
 
-/** Vector math over `array<float>` embedding columns.
-  *
-  * `dot`/`norm` delegate to the native codegen'd FloatVectorDot expression
-  * (graftext.GraftFunctions) — a tight primitive loop inside whole-stage codegen.
-  * The higher-order-function formulation is kept as `dotHof` for
-  * equivalence testing: both accumulate in double precision in array
-  * order, so they are bit-identical to each other and to DuckDB's
-  * list_cosine_similarity on the same floats.
+/** Cosine over `array<float>` embedding columns, built on the native
+  * `vec_dot`/`vec_norm` (graftext.GraftFunctions) — a tight primitive
+  * loop inside whole-stage codegen. The higher-order-function forms are
+  * kept as `dotHof`/`quantizeHof` for equivalence testing: both dots
+  * accumulate in double precision in array order, so they are
+  * bit-identical to each other and to DuckDB's list_cosine_similarity on
+  * the same floats.
   */
 object VectorOps {
-
-  def dot(a: Column, b: Column): Column = GraftFunctions.vec_dot(a, b)
-
-  def norm(a: Column): Column = GraftFunctions.vec_norm(a)
 
   /** dot/(|a|·|b|) can exceed 1.0 by an ulp for IDENTICAL vectors
     * (sqrt(n)² rounds below n, the division rounds past 1) — exactly the
@@ -33,19 +28,13 @@ object VectorOps {
   private def clamp(c: Column): Column =
     when(isnan(c), c).otherwise(least(greatest(c, lit(-1.0)), lit(1.0)))
 
-  def cosine(a: Column, b: Column): Column = clamp(dot(a, b) / (norm(a) * norm(b)))
+  def cosine(a: Column, b: Column): Column =
+    clamp(vec_dot(a, b) / (vec_norm(a) * vec_norm(b)))
 
   /** Cosine from precomputed per-side norms — use in joins so each pair
     * costs one dot instead of three. */
   def cosinePrenorm(a: Column, b: Column, normA: Column, normB: Column): Column =
-    clamp(dot(a, b) / (normA * normB))
-
-  /** Fixed-point quantization array<float> → array<long>: one native
-    * pass per row, Spark round()/cast-exact (the integer-moment front
-    * door — see graftext.FloatVectorQuantize for why neither a transform
-    * lambda nor post-explode scalar round() is acceptable here). */
-  def quantize(a: Column, scale: Double): Column =
-    GraftFunctions.vec_quantize(a, scale)
+    clamp(vec_dot(a, b) / (normA * normB))
 
   /** Reference higher-order-function implementation (interpreted lambdas;
     * ~6× slower in pair joins). Kept for cross-checking the native expr. */
@@ -54,7 +43,7 @@ object VectorOps {
       zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
 
-  /** Reference HOF form of [[quantize]] (interpreted transform over
+  /** Reference HOF form of `vec_quantize` (interpreted transform over
     * Spark's own round/cast). Kept for the VectorExprSpec parity pin. */
   private[graft] def quantizeHof(a: Column, scale: Double): Column =
     transform(a, x => round(x.cast("double") * lit(scale)).cast("long"))

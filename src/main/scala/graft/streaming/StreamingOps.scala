@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.CoreOps
+import graft.operators.{AnalyticOps, CoreOps}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -118,15 +118,9 @@ object StreamingOps {
     * once the watermark passes session end + gap. State per (user,
     * open-session) only — closed sessions are evicted, so state is
     * bounded by concurrent activity, not history. */
-  def sessionWindowStream(events: DataFrame, gap: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", WatermarkDelay)
-      .groupBy(col("user_id"), session_window(col("ts"), gap).as("sw"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"),
-        unix_timestamp(col("sw.start")).as("session_start_sec"),
-        unix_timestamp(col("sw.end")).as("session_end_sec"),
-        col("n_events"))
+  def sessionWindowStream(events: DataFrame,
+      gap: String = AnalyticOps.SessionGap): DataFrame =
+    AnalyticOps.sessions(events.withWatermark("ts", WatermarkDelay), gap)
 
   /** J1: stream-stream inner equi-join, order_info ⋈ order_detail.
     * Both sides watermarked; the ±10s event-time range bounds join state

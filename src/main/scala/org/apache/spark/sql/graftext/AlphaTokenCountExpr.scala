@@ -35,10 +35,8 @@ case class AlphaTokenCount(child: Expression)
       AlphaTokenCount.count(input.asInstanceOf[UTF8String]))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, input => {
-      val cls = AlphaTokenCount.getClass.getName.stripSuffix("$")
-      s"${ev.value} = $cls.count($input);"
-    })
+    nullSafeCodeGen(ctx, ev, input =>
+      s"${ev.value} = ${KernelCall(classOf[AlphaTokenCount], "count", input)};")
 
   override protected def withNewChildInternal(newChild: Expression): AlphaTokenCount =
     copy(child = newChild)

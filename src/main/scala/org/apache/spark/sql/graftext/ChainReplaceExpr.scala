@@ -48,32 +48,31 @@ case class ChainReplace(child: Expression, froms: Seq[String], tos: Seq[String])
   @transient private lazy val toU: Array[UTF8String] =
     tos.map(UTF8String.fromString).toArray
 
-  override def nullSafeEval(input: Any): Any = {
-    var s = input.asInstanceOf[UTF8String]
-    var i = 0
-    while (i < fromU.length) {
-      s = s.replace(fromU(i), toU(i))
-      i += 1
-    }
-    s
-  }
+  override def nullSafeEval(input: Any): Any =
+    ChainReplace.replaceChain(input.asInstanceOf[UTF8String], fromU, toU)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, input => {
       val u = "org.apache.spark.unsafe.types.UTF8String[]"
       val fr = ctx.addReferenceObj("chainFroms", fromU, u)
       val to = ctx.addReferenceObj("chainTos", toU, u)
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      s"""
-         |org.apache.spark.unsafe.types.UTF8String $s = $input;
-         |for (int $i = 0; $i < ${fromU.length}; $i++) {
-         |  $s = $s.replace($fr[$i], $to[$i]);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
+      s"${ev.value} = ${KernelCall(classOf[ChainReplace], "replaceChain", input, fr, to)};"
     })
 
   override protected def withNewChildInternal(newChild: Expression): ChainReplace =
     copy(child = newChild)
+}
+
+object ChainReplace {
+  /** The kernel: replace each froms(i) by tos(i) in s, in order. */
+  def replaceChain(s: UTF8String, froms: Array[UTF8String], tos: Array[UTF8String])
+      : UTF8String = {
+    var out = s
+    var i = 0
+    while (i < froms.length) {
+      out = out.replace(froms(i), tos(i))
+      i += 1
+    }
+    out
+  }
 }

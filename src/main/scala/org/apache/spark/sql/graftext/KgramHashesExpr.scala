@@ -48,7 +48,7 @@ case class KgramHashes(child: Expression, k: Int) extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, input =>
-      s"${ev.value} = org.apache.spark.sql.graftext.KgramHashes.build($input, $k);")
+      s"${ev.value} = ${KernelCall(classOf[KgramHashes], "build", input, k)};")
 
   override protected def withNewChildInternal(newChild: Expression): KgramHashes =
     copy(child = newChild)

@@ -62,9 +62,8 @@ case class MediaHeaderParse(child: Expression)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val c = child.genCode(ctx)
     ev.copy(code = c.code + code"""
-      InternalRow ${ev.value} =
-        org.apache.spark.sql.graftext.MediaHeaderParse.parseTotal(
-          ${c.isNull} ? null : ${c.value});
+      InternalRow ${ev.value} = ${KernelCall(classOf[MediaHeaderParse], "parseTotal",
+        s"${c.isNull} ? null : ${c.value}")};
       """, isNull = FalseLiteral)
   }
 

@@ -1,6 +1,5 @@
 package org.apache.spark.sql.graftext
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -17,25 +16,22 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, 
   * struct allocation. At K=16 that tax hides in the noise; the scale-path
   * quantizers grow K with the corpus (K ≈ n/128), and at K≈400 the
   * interpreted transform dominated the whole SemDeDup run (~6× the total
-  * query time). This expression runs the same arithmetic as two nested
-  * primitive loops inside codegen.
+  * query time). The companion's kernel runs the same arithmetic as two
+  * nested primitive loops, and eval and the generated code both call it.
   *
   * BIT-PARITY CONTRACT (the IVF/SemDeDup results are driver-oracle-checked,
   * so the replacement must be exact, not just "close"):
   *  - cosine = clamp(dot(e,c) / (sqrt(dot(e,e)) * sqrt(dot(c,c)))) with
   *    double accumulation in array order — identical op sequence to
-  *    VectorOps.cosine (FloatVectorDot + sqrt + clamp). Hoisting the
+  *    vec_dot + sqrt + clamp (VectorOps.cosine). Hoisting the
   *    norm(e) factor out of the K-loop changes no bits (same sqrt of the
   *    same dot, just computed once).
   *  - clamp: NaN passes through (a poisoned embedding must not become a
   *    perfect match); otherwise least(greatest(x,-1),1).
-  *  - selection mirrors Spark's struct ordering in array_min over
-  *    struct(negsim, cl): negsim compared with SQL double semantics
-  *    (primitive <, so -0.0 == 0.0 ties; NaN orders above every real,
-  *    NaN == NaN), ties broken by the LOWEST cl. A null negsim (only
-  *    possible from a dimension-mismatched or null-element centroid,
-  *    impossible from the quantizer's own `packed` construction) orders
-  *    FIRST, exactly like Spark's asc-nulls-first struct field ordering.
+  *  - selection is [[Argmin]] over struct(negsim, cl): Spark's struct
+  *    ordering, ties to the LOWEST cl. A null negsim (only possible from
+  *    a dimension-mismatched or null-element centroid, impossible from
+  *    the quantizer's own `packed` construction) orders FIRST.
   *  - empty cents → null; null cents/embedding → null (transform/array_min
   *    null propagation); an embedding with a null ELEMENT nulls every
   *    cosine, so every candidate ties at null-negsim and the lowest cl
@@ -76,152 +72,112 @@ case class NearestCentroid(left: Expression, right: Expression)
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
 
-  /** dot(a,b) in array order, double accumulation; null (encoded as NaN
-    * with a flag via Double.box? no —) returns Double.NaN sentinel is
-    * wrong for parity, so this returns null via boxed Double. */
-  private def dotOrNull(a: ArrayData, b: ArrayData): java.lang.Double = {
-    val n = a.numElements()
-    if (n != b.numElements()) return null
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      s += a.getFloat(i).toDouble * b.getFloat(i).toDouble
-      i += 1
-    }
-    java.lang.Double.valueOf(s)
-  }
-
-  override def nullSafeEval(centsAny: Any, embAny: Any): Any = {
-    val cents = centsAny.asInstanceOf[ArrayData]
-    val emb = embAny.asInstanceOf[ArrayData]
-    val k = cents.numElements()
-    if (k == 0) return null
-    val e2 = dotOrNull(emb, emb)
-    val normE = if (e2 == null) null
-      else java.lang.Double.valueOf(math.sqrt(e2.doubleValue()))
-    // best: tier 0 = null negsim (orders first), 1 = real, 2 = NaN
-    var bestTier = 3
-    var bestNeg = 0.0
-    var bestCl = 0
-    var found = false
-    var i = 0
-    while (i < k) {
-      if (!cents.isNullAt(i)) {
-        val row = cents.getStruct(i, 2)
-        if (!row.isNullAt(0)) {
-          val cl = row.getInt(0)
-          var tier = 0
-          var neg = 0.0
-          if (row.isNullAt(1) || normE == null) tier = 0
-          else {
-            val c = row.getArray(1)
-            val d = dotOrNull(emb, c)
-            val c2 = dotOrNull(c, c)
-            if (d == null || c2 == null) tier = 0
-            else {
-              val cos0 = d.doubleValue() /
-                (normE.doubleValue() * math.sqrt(c2.doubleValue()))
-              if (java.lang.Double.isNaN(cos0)) { tier = 2; neg = Double.NaN }
-              else {
-                val cos = math.min(math.max(cos0, -1.0), 1.0)
-                tier = 1; neg = -cos
-              }
-            }
-          }
-          val better =
-            if (!found) true
-            else if (tier != bestTier) tier < bestTier
-            else if (tier == 1 && neg != bestNeg) neg < bestNeg
-            else cl < bestCl // null/NaN tiers and exact ties: lowest cl
-          if (better) { bestTier = tier; bestNeg = neg; bestCl = cl; found = true }
-        }
-        // null cl field: array_min would order it by the negsim field then
-        // null cl... a null cl is unconstructible from the quantizer
-        // (collect_list of a non-null int column) — skip it.
-      }
-      i += 1
-    }
-    if (found) java.lang.Integer.valueOf(bestCl) else null
-  }
+  override def nullSafeEval(cents: Any, emb: Any): Any = Argmin.result(
+    NearestCentroid.nearest(cents.asInstanceOf[ArrayData], emb.asInstanceOf[ArrayData]))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (cents, emb) => {
-      val k = ctx.freshName("k")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val e2 = ctx.freshName("e2")
-      val e2null = ctx.freshName("e2null")
-      val normE = ctx.freshName("normE")
-      val bestTier = ctx.freshName("bestTier")
-      val bestNeg = ctx.freshName("bestNeg")
-      val bestCl = ctx.freshName("bestCl")
-      val found = ctx.freshName("found")
-      val row = ctx.freshName("row")
-      val cl = ctx.freshName("cl")
-      val cArr = ctx.freshName("cArr")
-      val d = ctx.freshName("d")
-      val c2 = ctx.freshName("c2")
-      val dNull = ctx.freshName("dNull")
-      val tier = ctx.freshName("tier")
-      val neg = ctx.freshName("neg")
-      val cos = ctx.freshName("cos")
-      val better = ctx.freshName("better")
-      val ev_ = ctx.freshName("ev")
-      val cv = ctx.freshName("cv")
-      s"""
-         |final int $k = $cents.numElements();
-         |if ($k == 0) { ${ev.isNull} = true; } else {
-         |  // norm(embedding), hoisted out of the K loop (same sqrt(dot))
-         |  boolean $e2null = false; double $e2 = 0.0;
-         |  { final int $n = $emb.numElements();
-         |    for (int $j = 0; $j < $n; $j++) {
-         |      if ($emb.isNullAt($j)) { $e2null = true; break; }
-         |      final double $ev_ = (double) $emb.getFloat($j);
-         |      $e2 += $ev_ * $ev_;
-         |    } }
-         |  final double $normE = $e2null ? Double.NaN : Math.sqrt($e2);
-         |  int $bestTier = 3; double $bestNeg = 0.0; int $bestCl = 0;
-         |  boolean $found = false;
-         |  for (int $i = 0; $i < $k; $i++) {
-         |    if ($cents.isNullAt($i)) continue;
-         |    final InternalRow $row = $cents.getStruct($i, 2);
-         |    if ($row.isNullAt(0)) continue;  // unconstructible; see eval
-         |    final int $cl = $row.getInt(0);
-         |    int $tier = 0; double $neg = 0.0;
-         |    if (!$row.isNullAt(1) && !$e2null) {
-         |      final ArrayData $cArr = $row.getArray(1);
-         |      final int $n = $cArr.numElements();
-         |      if ($n == $emb.numElements()) {
-         |        boolean $dNull = false;
-         |        double $d = 0.0; double $c2 = 0.0;
-         |        for (int $j = 0; $j < $n; $j++) {
-         |          if ($cArr.isNullAt($j) || $emb.isNullAt($j)) { $dNull = true; break; }
-         |          final double $cv = (double) $cArr.getFloat($j);
-         |          $d += (double) $emb.getFloat($j) * $cv;
-         |          $c2 += $cv * $cv;
-         |        }
-         |        if (!$dNull) {
-         |          final double $cos = $d / ($normE * Math.sqrt($c2));
-         |          if (Double.isNaN($cos)) { $tier = 2; $neg = Double.NaN; }
-         |          else { $tier = 1; $neg = -Math.min(Math.max($cos, -1.0), 1.0); }
-         |        }
-         |      }
-         |    }
-         |    final boolean $better = !$found
-         |      ? true
-         |      : ($tier != $bestTier
-         |          ? $tier < $bestTier
-         |          : ($tier == 1 && $neg != $bestNeg ? $neg < $bestNeg : $cl < $bestCl));
-         |    if ($better) { $bestTier = $tier; $bestNeg = $neg; $bestCl = $cl; $found = true; }
-         |  }
-         |  if ($found) { ${ev.value} = $bestCl; } else { ${ev.isNull} = true; }
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (cents, emb) => Argmin.assign(ctx, ev,
+      KernelCall(classOf[NearestCentroid], "nearest", cents, emb)))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): NearestCentroid =
     copy(left = newLeft, right = newRight)
+}
+
+object NearestCentroid {
+  /** The kernel: the cl of the max-cosine centroid, or [[Argmin.NoId]]
+    * for null. norm(e) is hoisted out of the K loop (the same sqrt of the
+    * same dot), and each centroid's dot(e, c) and dot(c, c) share one
+    * pass, each accumulator summing in array order. */
+  def nearest(cents: ArrayData, emb: ArrayData): Long = {
+    val k = cents.numElements()
+    val e2 = FloatVectorDot.dot(emb, emb, checkNulls = true)
+    // a null norm nulls every cosine; past it, emb has no null element
+    val embNull = java.lang.Double.isNaN(e2) &&
+      FloatVectorDot.isNullDot(emb, emb, checkNulls = true)
+    val normE = math.sqrt(e2)
+    val n = emb.numElements()
+    var bestTier = Argmin.Unset
+    var bestNeg = 0.0
+    var bestCl = 0
+    var i = 0
+    while (i < k) {
+      // a null entry or cl is unconstructible from the quantizer
+      // (collect_list of a non-null int column): skip it
+      if (!cents.isNullAt(i)) {
+        val row = cents.getStruct(i, 2)
+        if (!row.isNullAt(0)) {
+          val cl = row.getInt(0)
+          var tier = Argmin.NullKey
+          var neg = 0.0
+          if (!embNull && !row.isNullAt(1)) {
+            val c = row.getArray(1)
+            if (c.numElements() == n) {
+              var d = 0.0
+              var c2 = 0.0
+              var j = 0
+              while (j < n && !c.isNullAt(j)) {
+                val cv = c.getFloat(j).toDouble
+                d += emb.getFloat(j).toDouble * cv
+                c2 += cv * cv
+                j += 1
+              }
+              if (j == n) {
+                val cos = d / (normE * math.sqrt(c2))
+                tier = Argmin.tier(cos)
+                neg = -math.min(math.max(cos, -1.0), 1.0)
+              }
+            }
+          }
+          if (Argmin.better(tier, neg, cl, bestTier, bestNeg, bestCl)) {
+            bestTier = tier; bestNeg = neg; bestCl = cl
+          }
+        }
+      }
+      i += 1
+    }
+    Argmin.id(bestTier, bestCl)
+  }
+}
+
+/** The selection rule of the argmin kernels ([[NearestCentroid]],
+  * [[NearestCode]]): Spark's ordering of `array_min` over
+  * `struct(key, id)`. A null key orders first, then real keys ascending
+  * with SQL double semantics (primitive <, so -0.0 == 0.0), then NaN
+  * (NaN == NaN); ties go to the lowest id. */
+private[graftext] object Argmin {
+  /** A kernel's result for SQL null: outside the Int range of the ids. */
+  final val NoId = Long.MinValue
+
+  // a candidate key's tier in the ordering
+  final val NullKey = 0
+  final val RealKey = 1
+  final val NaNKey = 2
+  /** The best tier before any candidate: above every key. */
+  final val Unset = 3
+
+  def tier(key: Double): Int = if (java.lang.Double.isNaN(key)) NaNKey else RealKey
+
+  /** Whether candidate (tier, key, id) orders before the best so far. */
+  def better(tier: Int, key: Double, id: Int,
+      bestTier: Int, bestKey: Double, bestId: Int): Boolean =
+    if (tier != bestTier) tier < bestTier
+    else if (tier == RealKey && key != bestKey) key < bestKey
+    else id < bestId
+
+  /** The kernel result: the best id, or NoId when no candidate was seen. */
+  def id(bestTier: Int, bestId: Int): Long =
+    if (bestTier == Unset) NoId else bestId.toLong
+
+  /** The expression value of a kernel result, for eval. */
+  def result(r: Long): Any = if (r == NoId) null else Integer.valueOf(r.toInt)
+
+  /** The expression value of a kernel call, for generated code. */
+  def assign(ctx: CodegenContext, ev: ExprCode, call: String): String = {
+    val r = ctx.freshName("r")
+    s"""
+       |final long $r = $call;
+       |if ($r == ${NoId}L) { ${ev.isNull} = true; } else { ${ev.value} = (int) $r; }
+     """.stripMargin
+  }
 }

@@ -1,6 +1,5 @@
 package org.apache.spark.sql.graftext
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -23,11 +22,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   *  - d2 = (na2 - (2.0 * dot(sub, cent))) + nc2, double accumulation of
   *    the dot in array order — the exact Catalyst tree shape of the HOF
   *    form it replaces (Add(Subtract(na2, Multiply(2, dot)), nc2)).
-  *  - selection mirrors array_min over struct(d2, code): SQL double
-  *    semantics (primitive <, -0.0 == 0.0, NaN above every real,
-  *    NaN == NaN), ties to the LOWEST code; an uncomputable d2
-  *    (dimension mismatch / null element — unconstructible from the
-  *    codebook builder) orders FIRST like a null struct field.
+  *  - selection is [[Argmin]] over struct(d2, code), ties to the LOWEST
+  *    code; an uncomputable d2 (dimension mismatch / null element —
+  *    unconstructible from the packed codebook) orders FIRST like a
+  *    null struct field.
   *  - empty/null cands, null sub or na2 → null (TernaryExpression null
   *    propagation; matches transform/array_min on null input).
   *
@@ -58,118 +56,52 @@ case class NearestCode(first: Expression, second: Expression, third: Expression)
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
 
-  private def dotOrNull(a: ArrayData, b: ArrayData): java.lang.Double = {
-    val n = a.numElements()
-    if (n != b.numElements()) return null
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      s += a.getFloat(i).toDouble * b.getFloat(i).toDouble
-      i += 1
-    }
-    java.lang.Double.valueOf(s)
-  }
-
-  override def nullSafeEval(candsAny: Any, subAny: Any, na2Any: Any): Any = {
-    val cands = candsAny.asInstanceOf[ArrayData]
-    val sub = subAny.asInstanceOf[ArrayData]
-    val na2 = na2Any.asInstanceOf[Double]
-    val k = cands.numElements()
-    if (k == 0) return null
-    var bestTier = 3 // 0 = null-d2 (orders first), 1 = real, 2 = NaN
-    var bestD2 = 0.0
-    var bestCode = 0
-    var found = false
-    var i = 0
-    while (i < k) {
-      if (!cands.isNullAt(i)) {
-        val row = cands.getStruct(i, 3)
-        if (!row.isNullAt(0)) {
-          val code = row.getInt(0)
-          var tier = 0
-          var d2 = 0.0
-          if (!row.isNullAt(1) && !row.isNullAt(2)) {
-            val d = dotOrNull(sub, row.getArray(1))
-            if (d != null) {
-              val v = (na2 - 2.0 * d.doubleValue()) + row.getDouble(2)
-              if (java.lang.Double.isNaN(v)) { tier = 2; d2 = Double.NaN }
-              else { tier = 1; d2 = v }
-            }
-          }
-          val better =
-            if (!found) true
-            else if (tier != bestTier) tier < bestTier
-            else if (tier == 1 && d2 != bestD2) d2 < bestD2
-            else code < bestCode
-          if (better) { bestTier = tier; bestD2 = d2; bestCode = code; found = true }
-        }
-      }
-      i += 1
-    }
-    if (found) java.lang.Integer.valueOf(bestCode) else null
-  }
+  override def nullSafeEval(cands: Any, sub: Any, na2: Any): Any = Argmin.result(
+    NearestCode.nearest(cands.asInstanceOf[ArrayData], sub.asInstanceOf[ArrayData],
+      na2.asInstanceOf[Double]))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (cands, sub, na2) => {
-      val k = ctx.freshName("k")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val bestTier = ctx.freshName("bestTier")
-      val bestD2 = ctx.freshName("bestD2")
-      val bestCode = ctx.freshName("bestCode")
-      val found = ctx.freshName("found")
-      val row = ctx.freshName("row")
-      val code = ctx.freshName("code")
-      val cArr = ctx.freshName("cArr")
-      val d = ctx.freshName("d")
-      val dNull = ctx.freshName("dNull")
-      val tier = ctx.freshName("tier")
-      val d2 = ctx.freshName("d2")
-      val v = ctx.freshName("v")
-      val better = ctx.freshName("better")
-      s"""
-         |final int $k = $cands.numElements();
-         |if ($k == 0) { ${ev.isNull} = true; } else {
-         |  int $bestTier = 3; double $bestD2 = 0.0; int $bestCode = 0;
-         |  boolean $found = false;
-         |  for (int $i = 0; $i < $k; $i++) {
-         |    if ($cands.isNullAt($i)) continue;
-         |    final InternalRow $row = $cands.getStruct($i, 3);
-         |    if ($row.isNullAt(0)) continue;  // unconstructible; see eval
-         |    final int $code = $row.getInt(0);
-         |    int $tier = 0; double $d2 = 0.0;
-         |    if (!$row.isNullAt(1) && !$row.isNullAt(2)) {
-         |      final ArrayData $cArr = $row.getArray(1);
-         |      final int $n = $cArr.numElements();
-         |      if ($n == $sub.numElements()) {
-         |        boolean $dNull = false;
-         |        double $d = 0.0;
-         |        for (int $j = 0; $j < $n; $j++) {
-         |          if ($cArr.isNullAt($j) || $sub.isNullAt($j)) { $dNull = true; break; }
-         |          $d += (double) $sub.getFloat($j) * (double) $cArr.getFloat($j);
-         |        }
-         |        if (!$dNull) {
-         |          final double $v = ($na2 - 2.0 * $d) + $row.getDouble(2);
-         |          if (Double.isNaN($v)) { $tier = 2; $d2 = Double.NaN; }
-         |          else { $tier = 1; $d2 = $v; }
-         |        }
-         |      }
-         |    }
-         |    final boolean $better = !$found
-         |      ? true
-         |      : ($tier != $bestTier
-         |          ? $tier < $bestTier
-         |          : ($tier == 1 && $d2 != $bestD2 ? $d2 < $bestD2 : $code < $bestCode));
-         |    if ($better) { $bestTier = $tier; $bestD2 = $d2; $bestCode = $code; $found = true; }
-         |  }
-         |  if ($found) { ${ev.value} = $bestCode; } else { ${ev.isNull} = true; }
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (cands, sub, na2) => Argmin.assign(ctx, ev,
+      KernelCall(classOf[NearestCode], "nearest", cands, sub, na2)))
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): NearestCode =
     copy(first = newFirst, second = newSecond, third = newThird)
+}
+
+object NearestCode {
+  /** The kernel: the code of the min-d2 codeword, or [[Argmin.NoId]] for
+    * null. A NaN d2 is the null tier exactly when its dot is null. */
+  def nearest(cands: ArrayData, sub: ArrayData, na2: Double): Long = {
+    val k = cands.numElements()
+    var bestTier = Argmin.Unset
+    var bestD2 = 0.0
+    var bestCode = 0
+    var i = 0
+    while (i < k) {
+      // a null entry or code is unconstructible from the packed codebook
+      if (!cands.isNullAt(i)) {
+        val row = cands.getStruct(i, 3)
+        if (!row.isNullAt(0)) {
+          val code = row.getInt(0)
+          var tier = Argmin.NullKey
+          var d2 = 0.0
+          if (!row.isNullAt(1) && !row.isNullAt(2)) {
+            val cent = row.getArray(1)
+            d2 = (na2 - 2.0 * FloatVectorDot.dot(sub, cent, checkNulls = true)) +
+              row.getDouble(2)
+            tier = Argmin.tier(d2)
+            if (tier == Argmin.NaNKey &&
+                FloatVectorDot.isNullDot(sub, cent, checkNulls = true))
+              tier = Argmin.NullKey
+          }
+          if (Argmin.better(tier, d2, code, bestTier, bestD2, bestCode)) {
+            bestTier = tier; bestD2 = d2; bestCode = code
+          }
+        }
+      }
+      i += 1
+    }
+    Argmin.id(bestTier, bestCode)
+  }
 }

@@ -15,7 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * one-string-per-character ARRAY (~n allocations) and then runs n
   * interpreted lambda steps — measured ~2× the cost of a pure map-side
   * scan at the 25× corpus, pure overhead on what is a byte-stream fold.
-  * This runs the identical arithmetic as one primitive loop in codegen.
+  * The companion's kernel runs the identical arithmetic as one primitive
+  * loop, called by eval and the generated code alike.
   *
   * PARITY CONTRACT (q_fingerprint is driver-oracle-checked): Spark's
   * `split(text, "")` operates on UTF8String and splits into CODE POINTS
@@ -33,8 +34,21 @@ case class RollingHash31(child: Expression)
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
+  override def nullSafeEval(input: Any): Any =
+    java.lang.Long.valueOf(RollingHash31.fingerprint(input.asInstanceOf[UTF8String]))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, input =>
+      s"${ev.value} = ${KernelCall(classOf[RollingHash31], "fingerprint", input)};")
+
+  override protected def withNewChildInternal(newChild: Expression): RollingHash31 =
+    copy(child = newChild)
+}
+
+object RollingHash31 {
+  /** The kernel: the fold over the text's code points. */
+  def fingerprint(text: UTF8String): Long = {
+    val s = text.toString
     var h = 0L
     var i = 0
     val n = s.length
@@ -43,29 +57,6 @@ case class RollingHash31(child: Expression)
       h = (h * 31L + cp.toLong) % 1000000007L
       i += Character.charCount(cp)
     }
-    java.lang.Long.valueOf(h)
+    h
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, input => {
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val h = ctx.freshName("h")
-      val cp = ctx.freshName("cp")
-      s"""
-         |final String $s = $input.toString();
-         |final int $n = $s.length();
-         |long $h = 0L;
-         |for (int $i = 0; $i < $n; ) {
-         |  final int $cp = $s.codePointAt($i);
-         |  $h = ($h * 31L + (long) $cp) % 1000000007L;
-         |  $i += Character.charCount($cp);
-         |}
-         |${ev.value} = $h;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): RollingHash31 =
-    copy(child = newChild)
 }

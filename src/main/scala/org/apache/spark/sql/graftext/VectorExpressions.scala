@@ -50,48 +50,58 @@ case class FloatVectorDot(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    val checkNulls = mayHaveNullElements
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (checkNulls && (x.isNullAt(i) || y.isNullAt(i))) return null
-      s += x.getFloat(i).toDouble * y.getFloat(i).toDouble
-      i += 1
-    }
-    s
+    val d = FloatVectorDot.dot(x, y, mayHaveNullElements)
+    if (java.lang.Double.isNaN(d) && FloatVectorDot.isNullDot(x, y, mayHaveNullElements)) null
+    else d
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val elemNullCheck =
-        if (mayHaveNullElements)
-          s"if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"
-        else ""
+      def call(kernel: String) =
+        KernelCall(classOf[FloatVectorDot], kernel, a, b, mayHaveNullElements)
       s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $elemNullCheck
-         |    $s += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-         |  }
-         |  if (!${ev.isNull}) {
-         |    ${ev.value} = $s;
-         |  }
-         |}
+         |${ev.value} = ${call("dot")};
+         |if (Double.isNaN(${ev.value}) && ${call("isNullDot")}) { ${ev.isNull} = true; }
        """.stripMargin
     })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): FloatVectorDot =
     copy(left = newLeft, right = newRight)
+}
+
+object FloatVectorDot {
+  /** The dot kernel of the family (vec_dot, vec_norm, and the distances
+    * of [[NearestCentroid]] and [[NearestCode]]): double accumulation in
+    * array order. A null dot (length mismatch, or a null element when
+    * `checkNulls`) reads NaN here; [[isNullDot]] tells it from the NaN of
+    * a NaN element, so callers ask it only of a NaN result and a real
+    * dot never scans twice. */
+  def dot(x: ArrayData, y: ArrayData, checkNulls: Boolean): Double = {
+    val n = x.numElements()
+    if (n != y.numElements()) return Double.NaN
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      if (checkNulls && (x.isNullAt(i) || y.isNullAt(i))) return Double.NaN
+      s += x.getFloat(i).toDouble * y.getFloat(i).toDouble
+      i += 1
+    }
+    s
+  }
+
+  /** Whether dot(x, y) is null: the lengths differ, or `checkNulls` and
+    * either side has a null element. */
+  def isNullDot(x: ArrayData, y: ArrayData, checkNulls: Boolean): Boolean = {
+    val n = x.numElements()
+    if (n != y.numElements()) return true
+    var i = 0
+    while (checkNulls && i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return true
+      i += 1
+    }
+    false
+  }
 }
 
 /** Elementwise difference of two `array<float>` columns as one native
@@ -118,12 +128,10 @@ case class FloatVectorSub(left: Expression, right: Expression)
     FloatVectorSub.build(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""
-         |${ev.value} = org.apache.spark.sql.graftext.FloatVectorSub.build($a, $b);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      |${ev.value} = ${KernelCall(classOf[FloatVectorSub], "build", a, b)};
+      |if (${ev.value} == null) { ${ev.isNull} = true; }
+      """.stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): FloatVectorSub =
@@ -186,11 +194,8 @@ case class FloatVectorQuantize(child: Expression, scale: Double)
     FloatVectorQuantize.build(a.asInstanceOf[ArrayData], scale)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |${ev.value} = org.apache.spark.sql.graftext.FloatVectorQuantize.build($a, $scale);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = ${KernelCall(classOf[FloatVectorQuantize], "build", a, scale)};")
 
   override protected def withNewChildInternal(newChild: Expression): FloatVectorQuantize =
     copy(child = newChild)
@@ -283,9 +288,8 @@ case class FloatQuantizeStats(child: Expression)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val c = child.genCode(ctx)
     ev.copy(code = c.code + code"""
-      InternalRow ${ev.value} =
-        org.apache.spark.sql.graftext.FloatQuantizeStats.buildTotal(
-          ${c.isNull} ? null : ${c.value});
+      InternalRow ${ev.value} = ${KernelCall(classOf[FloatQuantizeStats], "buildTotal",
+        s"${c.isNull} ? null : ${c.value}")};
       """, isNull = FalseLiteral)
   }
 

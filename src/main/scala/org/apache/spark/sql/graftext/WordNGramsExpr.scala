@@ -50,7 +50,7 @@ case class WordNGrams(child: Expression, n: Int, sep: String = " ")
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, input => {
       val sepRef = ctx.addReferenceObj("ngramSep", sepUtf8, classOf[UTF8String].getName)
-      s"${ev.value} = org.apache.spark.sql.graftext.WordNGrams.build($input, $n, $sepRef);"
+      s"${ev.value} = ${KernelCall(classOf[WordNGrams], "build", input, n, sepRef)};"
     })
 
   override protected def withNewChildInternal(newChild: Expression): WordNGrams =

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftFunctions.vec_dot
 import graft.operators.{SimilarityOps, VectorOps}
 
 class SimilaritySpec extends SparkTestBase {
@@ -343,9 +344,9 @@ class SimilaritySpec extends SparkTestBase {
     val e = Tables.embeddings(spark, sf0001)
     val q = e.where(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val d2 = VectorOps.dot(col("embedding"), col("embedding")) -
-      lit(2.0) * VectorOps.dot(col("embedding"), col("qe")) +
-      VectorOps.dot(col("qe"), col("qe"))
+    val d2 = vec_dot(col("embedding"), col("embedding")) -
+      lit(2.0) * vec_dot(col("embedding"), col("qe")) +
+      vec_dot(col("qe"), col("qe"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("d2").asc, col("neighbor_id").asc)
     val bf = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
@@ -399,9 +400,9 @@ class SimilaritySpec extends SparkTestBase {
     val e = Tables.embeddings(spark, sf0001)
     val q = e.where(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val d2 = VectorOps.dot(col("embedding"), col("embedding")) -
-      lit(2.0) * VectorOps.dot(col("embedding"), col("qe")) +
-      VectorOps.dot(col("qe"), col("qe"))
+    val d2 = vec_dot(col("embedding"), col("embedding")) -
+      lit(2.0) * vec_dot(col("embedding"), col("qe")) +
+      vec_dot(col("qe"), col("qe"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("d2").asc, col("neighbor_id").asc)
     val bf = e.join(broadcast(q), col("vec_id") =!= col("query_id"))

@@ -26,7 +26,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - GraftExtensions.scala is the ONE Expression-to-Column bridge of the
   *    native family: each native function is built from its arguments by
   *    its one GraftExtensions value, for SQL text and the Column API
-  *    alike, so the two cannot drift apart. */
+  *    alike, so the two cannot drift apart.
+  *  - no native function writes a loop as generated Java text: its kernel
+  *    is one Scala method that eval and the generated code both call, so
+  *    the interpreted fallback cannot drift from codegen. */
 class SourceLintSpec extends AnyFunSuite {
 
   /** `hits` counts the calls the rule restricts in the text of a file;
@@ -46,6 +49,7 @@ class SourceLintSpec extends AnyFunSuite {
   private val rollingFold = "(h * 31 + c)" + " % 1000000007"
   private val permMin = "min((h * " + "$"
   private val toColumn = "ExpressionUtils" + ".column("
+  private val javaLoop = "for (" + "int"
 
   private val rules = Seq(
     Rule("only GraftSession.scala calls the SparkSession builder",
@@ -84,7 +88,14 @@ class SourceLintSpec extends AnyFunSuite {
       s"add a GraftExtensions value and a GraftFunctions def, not a $toColumn call",
       "second Expression-to-Column bridge",
       "object Planted {\n  def c(e: org.apache.spark.sql.catalyst.expressions.Expression) =\n" +
-        s"    org.apache.spark.sql.classic.$toColumn" + "e)\n}\n"))
+        s"    org.apache.spark.sql.classic.$toColumn" + "e)\n}\n"),
+    Rule("native functions write no loop as generated Java text",
+      Seq("src/main/scala/org/apache/spark/sql/graftext"), None,
+      occurrences(javaLoop),
+      s"loop in the companion-object kernel and call it through KernelCall, not $javaLoop",
+      "Java loop in generated code",
+      "object Planted {\n  def gen(n: String) =\n" +
+        "    s\"" + javaLoop + " i = 0; i < $n; i++) { }\"\n}\n"))
 
   /** The repository root: the nearest directory at or above the working
     * directory that holds build.sbt. */

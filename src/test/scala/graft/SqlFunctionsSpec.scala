@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.{col, lit, xxhash64}
 import org.apache.spark.sql.graftext.GraftFunctions._
 
@@ -111,22 +111,64 @@ class SqlFunctionsSpec extends SparkTestBase {
     assert(r.getString(3) == "ZZ") // abcabc -ab>c-> cccc -cc>Z-> ZZ
   }
 
-  /** Two rows carrying an argument of every type the family takes, as
-    * the temp view `natives_fx`. */
+  private def floats(xs: String*): String =
+    xs.map(x => s"CAST($x AS FLOAT)").mkString("array(", ", ", ")")
+  private def cent(cl: Int, xs: String*): String =
+    s"named_struct('cl', $cl, 'centroid', ${floats(xs: _*)})"
+  private def cand(code: Int, xs: String*): String =
+    s"named_struct('code', $code, 'cent', ${floats(xs: _*)}, 'nc2', 1.0D)"
+
+  /** The fixture's per-row arguments: a plain row's values, which each
+    * edge row overrides in the columns it is about. */
+  private val plain = Map(
+    "a" -> floats("3.0", "4.0"),
+    "b" -> floats("1.0", "0.5"),
+    "cents" -> s"array(${cent(7, "2.0", "0.0")}, ${cent(9, "0.0", "1.0")})",
+    "cands" -> s"array(${cand(3, "1.0", "0.0")}, ${cand(5, "0.0", "1.0")})",
+    "s" -> "'ab 12 c3 ab the cc fox'")
+
+  /** Rows that make a kernel return null or take an edge branch, each
+    * with the columns it overrides. `a` stays free of null elements, so
+    * vec_norm runs the kernel without the element-null check. */
+  private val edges: Seq[Map[String, String]] = Seq(
+    Map("b" -> floats("1.0", "0.5", "2.0")),  // vec_dot/vec_sub: length mismatch
+    Map("b" -> floats("1.0", "NULL")),        // null element
+    Map("b" -> floats("'NaN'", "0.5")),       // NaN element: NaN, not null
+    Map("cents" -> "CAST(array() AS array<struct<cl:int,centroid:array<float>>>)",
+      "cands" -> "CAST(array() AS array<struct<code:int,cent:array<float>,nc2:double>>)"),
+    Map("cents" -> s"array(${cent(7, "2.0", "NULL")}, ${cent(9, "0.0", "1.0")})",
+      "cands" -> s"array(${cand(3, "1.0", "NULL")}, ${cand(5, "0.0", "1.0")})"),
+    // the embedding is a centroid, duplicated at a lower cl: cosine
+    // clamps to 1.0 and the tie goes to cl 4
+    Map("a" -> floats("2.0", "0.0"),
+      "cents" -> (s"array(${cent(7, "2.0", "0.0")}, ${cent(9, "0.0", "1.0")}, " +
+        s"${cent(4, "2.0", "0.0")})")),
+    Map("a" -> floats("0.0", "0.0")),         // zero vector: NaN cosines
+    Map("a" -> floats("-2.0", "-0.0")),       // antipode of cl 7
+    Map("s" -> "''"),                         // empty text
+    Map("s" -> "'\uD83D\uDE00 ab \uD834\uDD1E'"))  // astral code points
+
+  /** The two plain rows and the edge rows, with an argument of every type
+    * the family takes, as the temp view `natives_fx`. Written to parquet
+    * and read back: over an in-memory relation the optimizer would fold
+    * the projections by interpreted eval, and generated code would never
+    * run. */
   private lazy val fixture: DataFrame = {
-    val f = "CAST(%s AS FLOAT)"
-    def floats(xs: String*) = xs.map(f.format(_)).mkString("array(", ", ", ")")
-    val df = spark.sql(
-      s"SELECT ${floats("3.0", "4.0")} AS a, ${floats("1.0", "0.5")} AS b, " +
-        "array(2L, 3L, 5L) AS qa, score, id, " +
-        "'ab 12 c3 ab the cc fox' AS s, split('the quick brown fox', ' ') AS toks, " +
-        s"array(named_struct('cl', 7, 'centroid', ${floats("2.0", "0.0")}), " +
-        s"named_struct('cl', 9, 'centroid', ${floats("0.0", "1.0")})) AS cents, " +
-        s"array(named_struct('code', 3, 'cent', ${floats("1.0", "0.0")}, 'nc2', 1.0D), " +
-        s"named_struct('code', 5, 'cent', ${floats("0.0", "1.0")}, 'nc2', 1.0D)) AS cands, " +
+    val cols = Seq("a", "b", "cents", "cands", "s")
+    val rows = (Seq(plain, plain) ++ edges.map(plain ++ _)).zipWithIndex.map {
+      case (r, i) =>
+        val (edge, score) = if (i < 2) (false, Seq("0.9D", "0.95D")(i)) else (true, "0.5D")
+        (cols.map(r) ++ Seq(edge.toString, score, s"${10L + 2 * i}L")).mkString("(", ", ", ")")
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_natives_").resolve("fx").toString
+    spark.sql(
+      "SELECT edge, a, b, array(2L, 3L, 5L) AS qa, score, id, s, " +
+        "split('the quick brown fox', ' ') AS toks, cents, cands, " +
         "unhex('89504E470D0A1A0A0000000D494844520000000200000003080200000000000000AB') " +
-        "AS payload " +
-        "FROM VALUES (0.9D, 10L), (0.95D, 12L) AS v(score, id)")
+        s"AS payload FROM VALUES ${rows.mkString(", ")} " +
+        s"AS v(${cols.mkString(", ")}, edge, score, id)")
+      .coalesce(1).write.parquet(dir)
+    val df = spark.read.parquet(dir)
     df.createOrReplaceTempView("natives_fx")
     df
   }
@@ -149,7 +191,7 @@ class SqlFunctionsSpec extends SparkTestBase {
     case "vec_norm" => (vec_norm(col("a")), "vec_norm(a)")
     case "vec_sub" => (vec_sub(col("a"), col("b")), "vec_sub(a, b)")
     case "vec_quantize" => (vec_quantize(col("a"), 2.5), "vec_quantize(a, 2.5D)")
-    case "vec_quantize_stats" => (vec_quantize_stats(col("b")), "vec_quantize_stats(b)")
+    case "vec_quantize_stats" => (vec_quantize_stats(col("a")), "vec_quantize_stats(a)")
     case "gram_moments" => (gram_moments(col("qa")), "gram_moments(qa)")
     case "topk_by" => (topk_by(col("score"), col("id"), 1), "topk_by(score, id, 1)")
     case "pair_combos" => (pair_combos(col("qa")), "pair_combos(qa)")
@@ -175,13 +217,50 @@ class SqlFunctionsSpec extends SparkTestBase {
     case "mm_header_parse" => (mm_header_parse(col("payload")), "mm_header_parse(payload)")
   }
 
+  /** A result as text: null, NaN and -0.0 read apart, binary as hex and
+    * nested values field by field, so equal text is an equal result
+    * (Row equality reads NaN inside an array as unequal to itself). */
+  private def render(v: Any): String = v match {
+    case null => "null"
+    case b: Array[Byte] => hex(b)
+    case r: Row => r.toSeq.map(render).mkString("[", ", ", "]")
+    case xs: scala.collection.Seq[_] => xs.map(render).mkString("(", ", ", ")")
+    case x => x.toString
+  }
+
+  /** `name` over the whole fixture through the Column API and through SQL
+    * text, rendered. */
+  private def results(name: String): (Seq[String], Seq[String]) = {
+    val (viaColumn, sqlText) = parityCase(name)
+    def rendered(df: DataFrame) = df.collect().toSeq.map(render)
+    (rendered(fixture.select(viaColumn)),
+      rendered(spark.sql(s"SELECT $sqlText FROM natives_fx")))
+  }
+
+  /** `body` with the session's `confs` set, then restored. */
+  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.get(k) }
+    try { confs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
+    finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
   nativeNames.foreach { name =>
     test(s"$name: the Column API and SQL text return the same value") {
-      val (viaColumn, sqlText) = parityCase(name)
-      val viaScala = fixture.select(viaColumn).collect().toSeq
-      val viaSql = spark.sql(s"SELECT $sqlText FROM natives_fx").collect().toSeq
-      assert(viaScala.nonEmpty && viaScala.forall(!_.isNullAt(0)), s"$name: $viaScala")
+      val onPlainRows = fixture.where(!col("edge")).select(parityCase(name)._1).collect()
+      assert(onPlainRows.nonEmpty && onPlainRows.forall(!_.isNullAt(0)),
+        s"$name: ${onPlainRows.toSeq}")
+      val (viaScala, viaSql) = results(name)
       assert(viaScala == viaSql)
+    }
+
+    // Janino can decline a generated method and Spark then falls back to
+    // eval() without a word, so both paths must give the same answer:
+    // CODEGEN_ONLY fails rather than fall back, NO_CODEGEN never compiles
+    test(s"$name: generated code and interpreted eval return the same value") {
+      val codegen = withConfs("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(results(name))
+      val interpreted = withConfs("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false")(results(name))
+      assert(interpreted == codegen)
     }
   }
 

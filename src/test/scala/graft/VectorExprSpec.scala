@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.GraftFunctions.{vec_dot, vec_quantize}
 import graft.operators.VectorOps
 
 class VectorExprSpec extends SparkTestBase {
@@ -11,7 +12,7 @@ class VectorExprSpec extends SparkTestBase {
     val b = e.select(col("vec_id").as("ib"), col("embedding").as("eb"))
     val pairs = a.join(b, col("ia") < col("ib") && col("ib") < col("ia") + 3)
     val diff = pairs.select(
-        VectorOps.dot(col("ea"), col("eb")).as("native"),
+        vec_dot(col("ea"), col("eb")).as("native"),
         VectorOps.dotHof(col("ea"), col("eb")).as("hof"))
       .where(col("native") =!= col("hof")) // exact comparison, not tolerance
     assert(diff.count() == 0, "native and HOF dot must agree bitwise")
@@ -54,7 +55,7 @@ class VectorExprSpec extends SparkTestBase {
       (None, Some(Seq(1.0f))),
       (Some(Seq.empty[Float]), Some(Seq.empty[Float])),
     ).toDF("a", "b")
-    val got = df.select(VectorOps.dot(col("a"), col("b"))).collect()
+    val got = df.select(vec_dot(col("a"), col("b"))).collect()
     assert(got(0).getDouble(0) == 11.0)
     assert(got(1).isNullAt(0))
     assert(got(2).getDouble(0) == 0.0)
@@ -101,7 +102,7 @@ class VectorExprSpec extends SparkTestBase {
          (array(cast(1.0 as float), cast(null as float)), array(cast(3.0 as float), cast(4.0 as float)))
          AS t(a, b)""")
     val got = df.select(
-      VectorOps.dot(col("a"), col("b")).as("native"),
+      vec_dot(col("a"), col("b")).as("native"),
       VectorOps.dotHof(col("a"), col("b")).as("hof")).collect()
     assert(got(0).isNullAt(0), "mismatched dims: native must be null")
     assert(got(0).isNullAt(1), "mismatched dims: HOF is null (zip_with pads)")
@@ -200,16 +201,16 @@ class VectorExprSpec extends SparkTestBase {
     // pair (codes 7 and 12 identical → d2 ties exactly → lowest code wins)
     val cw = (0 until 16).map(c => (c, vec(if (c == 12) 7 else c)))
     val codebook = cw.toDF("code", "cent")
-      .withColumn("nc2", VectorOps.dot(col("cent"), col("cent")))
+      .withColumn("nc2", vec_dot(col("cent"), col("cent")))
     val packed = codebook
       .agg(collect_list(struct(col("code"), col("cent"), col("nc2"))).as("cb"))
     val subs = ((0L until 30L).map(i => (i, vec(i.toInt + 500))) :+
       (30L, cw(7)._2)) // exact codeword copy: d2 = 0 against both 7 and 12
       .toDF("vec_id", "sub")
-      .withColumn("na2", VectorOps.dot(col("sub"), col("sub")))
+      .withColumn("na2", vec_dot(col("sub"), col("sub")))
     val hofBest = array_min(transform(col("cb"), c =>
       struct(
-        (col("na2") - lit(2.0) * VectorOps.dot(col("sub"), c.getField("cent"))
+        (col("na2") - lit(2.0) * vec_dot(col("sub"), c.getField("cent"))
           + c.getField("nc2")).as("d2"),
         c.getField("code").as("code"))))
     val both = subs.join(broadcast(packed))
@@ -320,7 +321,7 @@ class VectorExprSpec extends SparkTestBase {
     // moment path's input
     val e = Tables.embeddings(spark, sf0001)
     val diff = e.select(
-        VectorOps.quantize(col("embedding"), 1048576.0).as("native"),
+        vec_quantize(col("embedding"), 1048576.0).as("native"),
         VectorOps.quantizeHof(col("embedding"), 1048576.0).as("hof"))
       .where(col("native") =!= col("hof")) // exact array comparison
     assert(diff.count() == 0, "native and HOF quantize must agree bitwise")
@@ -392,27 +393,6 @@ class VectorExprSpec extends SparkTestBase {
     assertThrows[Exception] { past.select(VectorOps.quantizeHof(col("a"), two63)).collect() }
   }
 
-  test("vec_quantize and vec_quantize_stats agree between codegen and interpreted eval") {
-    import org.apache.spark.sql.graftext.GraftFunctions.{vec_quantize, vec_quantize_stats}
-    val e = Tables.embeddings(spark, sf0001).limit(64)
-    def run(): Seq[(Seq[Long], org.apache.spark.sql.Row)] =
-      e.select(vec_quantize(col("embedding"), 1048576.0),
-          vec_quantize_stats(col("embedding")))
-        .collect().map(r => (r.getSeq[Long](0), r.getStruct(1))).toSeq
-    val codegen = run()
-    val factoryMode = "spark.sql.codegen.factoryMode"
-    val wholeStage = "spark.sql.codegen.wholeStage"
-    val (fm0, ws0) = (spark.conf.get(factoryMode), spark.conf.get(wholeStage))
-    try {
-      spark.conf.set(factoryMode, "NO_CODEGEN")
-      spark.conf.set(wholeStage, "false")
-      assert(run() == codegen, "interpreted eval diverged from codegen")
-    } finally {
-      spark.conf.set(factoryMode, fm0)
-      spark.conf.set(wholeStage, ws0)
-    }
-  }
-
   test("native vec_quantize_stats matches the 4-pass HOF chain") {
     import org.apache.spark.sql.graftext.GraftFunctions.vec_quantize_stats
     // the HOF chain this expression replaced, verbatim
@@ -477,7 +457,7 @@ class VectorExprSpec extends SparkTestBase {
   test("gram_moments matches the double-posexplode formulation on the corpus") {
     import org.apache.spark.sql.graftext.GraftFunctions.gram_moments
     val qa = Tables.embeddings(spark, sf0001)
-      .select(VectorOps.quantize(col("embedding"), 1048576.0).as("qa"))
+      .select(vec_quantize(col("embedding"), 1048576.0).as("qa"))
     val g = qa.agg(gram_moments(col("qa")).as("g"))
       .select(col("g.n"), col("g.s1"), col("g.s2")).head()
     val aggN = g.getSeq[Long](0)
@@ -573,41 +553,6 @@ class VectorExprSpec extends SparkTestBase {
       .map(r => ((r.getInt(0), r.getInt(1)), r.getDecimal(2).toBigInteger)).toMap
     assert(s2((0, 1)) == java.math.BigInteger.valueOf(1L << 31)
       .multiply(java.math.BigInteger.valueOf(-(1L << 31))))
-  }
-
-  test("nearest_centroid agrees between codegen and interpreted eval") {
-    // Janino can decline any generated method (size limits) and Spark
-    // silently falls back to eval() — the two paths must return the same
-    // cluster, including on the adversarial rows (duplicate centroid,
-    // zero vector, antipode).
-    import org.apache.spark.sql.graftext.GraftFunctions.nearest_centroid
-    import spark.implicits._
-    def vec(seed: Int): Seq[Float] = {
-      var s = seed.toLong * 40503L + 7
-      Seq.fill(8) { s = s * 6364136223846793005L + 1442695040888963407L
-        ((s >>> 40).toInt % 1000) / 500.0f }
-    }
-    val cents = (0 until 5).map(c => (c, vec(c)))
-    val rows = (0L until 20L).map(i => (i, vec(i.toInt + 1000))) ++ Seq(
-      (20L, cents(2)._2), (21L, Seq.fill(8)(0.0f)), (22L, cents(4)._2.map(-_)))
-    val e = rows.toDF("vec_id", "embedding")
-    val packed = cents.toDF("cl", "centroid")
-      .agg(collect_list(struct(col("cl"), col("centroid"))).as("cents"))
-    def run(): Map[Long, Int] = e.join(broadcast(packed))
-      .select(col("vec_id"), nearest_centroid(col("cents"), col("embedding")).as("cl"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val codegen = run()
-    val factoryMode = "spark.sql.codegen.factoryMode"
-    val wholeStage = "spark.sql.codegen.wholeStage"
-    val (fm0, ws0) = (spark.conf.get(factoryMode), spark.conf.get(wholeStage))
-    try {
-      spark.conf.set(factoryMode, "NO_CODEGEN")
-      spark.conf.set(wholeStage, "false")
-      assert(run() == codegen, "interpreted eval diverged from codegen")
-    } finally {
-      spark.conf.set(factoryMode, fm0)
-      spark.conf.set(wholeStage, ws0)
-    }
   }
 
   test("native alpha_token_count matches both the filter-HOF and regexp_count forms") {
