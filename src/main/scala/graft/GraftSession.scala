@@ -16,8 +16,8 @@ import org.apache.spark.sql.SparkSession
   *  - no web UI.
   * AQE is left at Spark's default (on).
   *
-  * Callers that need another STATIC setting (a warehouse dir, the
-  * scheduler mode) add it to [[builder]]; runtime SQL confs go through
+  * Callers that need another STATIC setting (StreamBench's warehouse
+  * dir) add it to [[builder]]; runtime SQL confs go through
   * `spark.conf.set` after [[build]].
   */
 object GraftSession {

@@ -69,7 +69,7 @@ object SparkEntry {
     "x_minhash_lsh_fast", "x_simhash_fast", "x_source_overlap_fast",
     "x_ann_pq256", "x_ann_ivfpq256", "x_bigram_lm_fixedref",
     "x_bpe_encode_big", "x_chunk_scrub_fast",
-    "x_contamination_pairs_fixedeval", "x_hamming_pigeonhole")
+    "x_contamination_pairs_fixedeval")
 
   /** BENCH-ONLY aliases: the xxhash64 production fast paths of the
     * near-dup operators. The registered `q_minhash_lsh` / `q_simhash`
@@ -115,13 +115,6 @@ object SparkEntry {
     // replicate-everything scaled corpora can't show on the q_ name
     "x_contamination_pairs_fixedeval" ->
       ((s, d) => DedupOps.contaminationPairsFixedEval(s, d)),
-    // 4x16-bit pigeonhole blocking for hamming near-dup: same pair set
-    // as the registered Manku 20-table form (both complete for
-    // hamming<=3, spec-pinned), but a 4x explode instead of 20x - the
-    // cheap one-off-small-corpus variant, kept for the cost comparison
-    // now that the registered q_hamming_neardup/q_simhash graduated to
-    // the unbounded-key Manku blocking in round 11
-    "x_hamming_pigeonhole" -> ((s, d) => DedupOps.hammingNearDupPigeonhole(s, d)),
     // xxhash64 binary-asset dedup (registered q_mm_dedup keeps md5 for
     // the DuckDB replay); group structure spec-pinned identical
     "x_mm_dedup_fast" -> ((s, d) => MultimodalOps.assetDedupFast(s, d)),

@@ -46,14 +46,7 @@ object Verify {
         })
       }))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.start(
-      GraftSession.builder(s"local[$cpus]", "graft-verify", cpus.toInt)
-        // concurrent queries time-share executor slots instead of queueing
-        // whole jobs FIFO behind one long query's stages: every job lands
-        // in the `default` pool (nothing sets spark.scheduler.pool), and
-        // under FAIR mode Spark 4.1 builds that pool FAIR as well
-        // (sc.getAllPools: default, FAIR, minShare 0, weight 1)
-        .config("spark.scheduler.mode", "FAIR"))
+    val spark = GraftSession.build(s"local[$cpus]", "graft-verify", cpus.toInt)
     new java.io.File(outDir).mkdirs()
     // startup sweep of STALE .tmp_* dirs from a previous run: a SIGKILL
     // (shutdown hook never runs) or a Spark write completing after the

@@ -1126,43 +1126,10 @@ object DedupOps {
       .select(col("doc_id"), col("source"), col("simhash"))
   }
 
-  /** Pigeonhole-blocked Hamming-pair pipeline — the SMALL-CORPUS form
-    * (bench alias `x_hamming_pigeonhole`; the registered queries run
-    * [[hammingPairsGrouped]] since round 11). Input: (doc_id, simhash:
-    * long). Any pair within Hamming distance 3 agrees on at least one of
-    * the four 16-bit chunks (4 chunks can't all absorb ≤3 differing
-    * bits), so candidates come only from chunk-equality buckets — never
-    * an all-pairs join — and the blocking is LOSSLESS for distance ≤ 3.
-    * Cheaper than the 20-table Manku blocking below (4× explode vs 20×)
-    * but its 65k-value chunk keys are a BOUNDED key space: buckets grow
-    * ∝ n, so candidate generation is O(n²/65k) past ~10⁷ docs — fine for
-    * a one-off small corpus, wrong as the production default. */
-  private[operators] def hammingPairs(sig: DataFrame): DataFrame = {
-    val chunks = (0 until 4).map { c =>
-      struct(lit(c).as("chunk"),
-        shiftright(col("simhash"), c * 16).bitwiseAND(0xFFFFL).as("v"))
-    }
-    val blocked = sig.select(col("doc_id"), col("simhash"),
-      explode(array(chunks: _*)).as("ck"))
-      .select(col("doc_id"), col("simhash"), col("ck.chunk").as("chunk"),
-        col("ck.v").as("v"))
-    val l = blocked.select(col("chunk"), col("v"), col("doc_id").as("doc_a"),
-      col("simhash").as("sig_a"))
-    val r = blocked.select(col("chunk").as("chunk_r"), col("v").as("v_r"),
-      col("doc_id").as("doc_b"), col("simhash").as("sig_b"))
-    l.join(r, l("chunk") === r("chunk_r") && l("v") === r("v_r") &&
-        l("doc_a") < r("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
-      .where(col("hamming") <= 3)
-      .distinct()
-      .orderBy("doc_a", "doc_b")
-  }
-
   /** Doc-grain Hamming ≤ 3 pair emission VIA SIGNATURE GRAIN — the
     * output-proportional form the registered pair queries run since
     * round 11. Same pair set as running the blocked join at doc grain
-    * (spec-pinned vs the pigeonhole on fixture + corpus), but the
+    * (spec-pinned vs all-pairs on fixture + corpus), but the
     * Manku-blocked candidate join runs over DISTINCT signatures only and
     * doc pairs are produced by expansion joins afterwards:
     *
@@ -1216,12 +1183,13 @@ object DedupOps {
     * 11/11/11/11/10/10 bits, candidate keys = every C(6,3)=20 THREE-BLOCK
     * combination (~32-bit keys). Any ≤3 flipped bits touch ≤3 blocks, so
     * ≥3 blocks stay intact and at least one 3-block combo matches —
-    * recall for Hamming ≤ 3 is COMPLETE, exactly like the 4×16-bit
-    * pigeonhole, so the verified pair set is IDENTICAL (spec-pinned),
+    * recall for Hamming ≤ 3 is COMPLETE, exactly like an all-pairs
+    * scan, so the verified pair set is IDENTICAL (spec-pinned),
     * and both DuckDB oracles (hamming: all-pairs bit_count(xor) ≤ 3;
-    * simhash: vote/sign/pair replay) are blocking-agnostic — the swap
-    * cannot change either result set. What changes is the SCALE
-    * CEILING: 16-bit chunk keys are a 65k key space — a bounded
+    * simhash: vote/sign/pair replay) are blocking-agnostic — the
+    * round-11 swap from a 4×16-bit pigeonhole could not change either
+    * result set. What changed is the SCALE CEILING: the pigeonhole's
+    * 16-bit chunk keys are a 65k key space — a bounded
     * blocking key, O(n²/65k) once the corpus outgrows it (the round-10
     * 100× sweep measured exactly that regime) — while ~32-bit combined
     * keys keep expected bucket size n/2³²: the candidate generation
@@ -1270,20 +1238,6 @@ object DedupOps {
       }.reduce(_ + _)
     val noise = expr("shiftleft(CAST(1 AS BIGINT), CAST((doc_id * 7) % 56 AS INT))")
     base.bitwiseXOR(noise)
-  }
-
-  /** Bench alias (`x_hamming_pigeonhole`): [[hammingNearDup]]'s
-    * signatures through the small-corpus 4×16-bit pigeonhole blocking —
-    * row-identical output (both blockings are complete for Hamming ≤ 3,
-    * spec-pinned), 4× explode instead of 20×. Kept as the cheap
-    * one-off-corpus variant now that the registered form runs the Manku
-    * 20-table blocking. */
-  def hammingNearDupPigeonhole(spark: SparkSession, dir: String): DataFrame = {
-    val sig = Tables.documents(spark, dir)
-      .select(col("doc_id"), arithmeticSimhash.as("simhash"))
-      .cache()
-    hammingPairs(sig)
-      .select(col("doc_a"), col("doc_b"), col("hamming").cast("long").as("hamming"))
   }
 
   /** Production fast path of [[simhashPairs]]: xxhash64 token hashes (no
@@ -3258,8 +3212,8 @@ object DedupOps {
          WHERE d.doc_id NOT IN (SELECT doc_b FROM ($NgramJaccardSql) j)
          ORDER BY d.doc_id""",
     // the blocking pipeline's oracle: all-pairs bit_count(xor) <= 3 over
-    // the same arithmetic signatures — equality proves the 4-chunk
-    // pigeonhole candidate generation is lossless at distance <= 3
+    // the same arithmetic signatures — equality proves the Manku
+    // 20-table candidate generation is lossless at distance <= 3
     "q_hamming_neardup" -> s"$HammingPairSql\n         ORDER BY doc_a, doc_b",
     // exact transitive closure of the same pair graph via recursive CTE:
     // walk(id, r) enumerates every node reachable from id (components are

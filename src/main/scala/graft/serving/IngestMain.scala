@@ -1,7 +1,6 @@
 package graft.serving
 
 import java.io.{BufferedWriter, File, FileWriter}
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.AtomicLong
 
@@ -104,9 +103,7 @@ object IngestMain {
 
   /** Build and start the server; caller stops it and closes the landing. */
   def start(landing: Landing, port: Int): HttpServer = {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4,
-      r => { val t = new Thread(r, "graft-ingest"); t.setDaemon(true); t }))
+    val server = HttpDaemon.create(port, "graft-ingest")
     server.createContext("/applog", (ex: HttpExchange) => {
       if (ex.getRequestMethod != "POST") respond(ex, 405, "POST only")
       else {

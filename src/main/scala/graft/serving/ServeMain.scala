@@ -1,6 +1,5 @@
 package graft.serving
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentHashMap
 
@@ -284,14 +283,10 @@ object ServeMain {
   /** Build and start the server; returns it (caller stops it). Port 0
     * binds an ephemeral port — read it back from `getAddress.getPort`. */
   def start(spark: SparkSession, dir: String, port: Int): HttpServer = {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-    // without an executor the JDK server runs EVERY handler on its one
-    // dispatcher thread — a first-touch Spark computation would block
-    // even cache-hit requests for other dates. A small pool lets cached
-    // answers flow while one uncached date computes (computeIfAbsent
-    // already prevents duplicate computation per key).
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4,
-      r => { val t = new Thread(r, "graft-serve"); t.setDaemon(true); t }))
+    // the daemon pool lets cached answers flow while one uncached date
+    // computes (computeIfAbsent already prevents duplicate computation
+    // per key)
+    val server = HttpDaemon.create(port, "graft-serve")
     server.createContext("/realtime-total",
       (ex: HttpExchange) => handle(ex)(totalJson(spark, dir, _)))
     server.createContext("/realtime-hour",

@@ -1,23 +1,22 @@
 package graft.streaming
 
 import graft.operators.{AnalyticOps, CoreOps}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-/** Typed row for the exact-state dedup path. */
-case class KeyedEvent(dt: String, user_id: Long, event_id: Long,
-    event_type: String)
 
 /** Structured Streaming layer — the streaming semantics of the reference
   * (SURVEY.md §2.8) rebuilt on event-time + watermarks + the state store.
   *
   * What replaces what (reference site → here):
-  *  - Redis SADD first-seen dedup (DauApp.scala:59-75)
-  *      → watermarked dropDuplicates on (dt, user_id) (see firstSeenStream
-  *        for the exact state/late-data semantics vs the Redis set);
-  *        checkpointing replaces the manual offset protocol
-  *        (OffsetManager.scala).
+  *  - Redis SADD first-seen dedup into `dau:{dt}` sets (DauApp.scala:59-75)
+  *      → per-(dt, user_id) state in the state store that expires when the
+  *        watermark closes its day, where the reference's sets lived until
+  *        expired from outside (see firstSeenStream for the state and
+  *        late-data rules); checkpointing replaces the manual offset
+  *        protocol (OffsetManager.scala). Hourly DAU is computed where the
+  *        reference's publisher computes it, on the landed rows
+  *        (ServingOps.realtimeHourly), not as a second stream.
   *  - DStream window(10s,5s) + keyBy + join + zset dedup
   *    (DwsOrderWideApp.scala:88-122)
   *      → watermarked stream-stream inner join with a ±10s event-time range.
@@ -38,79 +37,52 @@ object StreamingOps {
   /** Event-time watermark matching the reference's 10s join window. */
   val WatermarkDelay = "10 seconds"
 
-  /** F3: first-seen-per-day dedup. On a stream: state-store-backed
-    * dropDuplicates keyed (dt, user_id).
+  /** F3: first-seen-per-day dedup, the reference's Redis `dau:{dt}` SADD
+    * (DauApp.scala:59-75). Emits the first row of each (dt, user_id), with
+    * the input's columns plus `dt` and `hr` (as [[CoreOps.withDtHr]]), in
+    * append mode; of several rows of one key in one micro-batch, the first
+    * to arrive wins.
     *
-    * Semantics vs the reference (SURVEY §7.5c): INPUT rows later than the
-    * 10s watermark are dropped before the dedup operator — the reference's
-    * Redis SADD would have accepted them; that is the documented
-    * deterministic-late-data delta of choosing a watermark. STATE, on the
-    * other hand, is NOT evicted on watermark advance (the event-time
-    * column is not in the key subset): one entry per (dt, user_id) is
-    * retained for the life of the query, like the reference's `dau:{dt}`
-    * sets until external expiry (StreamingSpec pins the growth). For
-    * late-data acceptance use [[firstSeenExactStream]] (exact first-seen,
-    * no watermark drop), whose state grows the same way; for bounded
-    * state, when only near-in-time duplicates matter, use
-    * [[firstSeenBoundedStream]]. */
-  def firstSeenStream(events: DataFrame): DataFrame =
-    CoreOps.withDtHr(events)
-      .withWatermark("ts", WatermarkDelay)
-      .dropDuplicates("dt", "user_id")
-
-  /** F3 bounded-state variant: `dropDuplicatesWithinWatermark` (Spark
-    * 3.5+) evicts a key's dedup state once the watermark passes its event
-    * time + delay — the right trade when duplicates only arrive
-    * near-in-time (at-least-once replays, retried producers), because
-    * state stays O(keys-per-watermark-window) forever instead of growing
-    * with every (dt, user_id) ever seen. Within one watermark window the
-    * emissions match [[firstSeenStream]] exactly (spec-pinned); a
-    * duplicate arriving after its key's state expired is re-emitted —
-    * that is the documented contract, not a bug, and why the unbounded
-    * variants above exist for the reference's whole-day semantics. */
-  def firstSeenBoundedStream(events: DataFrame): DataFrame =
-    CoreOps.withDtHr(events)
-      .withWatermark("ts", WatermarkDelay)
-      .dropDuplicatesWithinWatermark("dt", "user_id")
-
-  /** F3 with EXACT reference semantics: the Redis-SADD dedup accepted a
-    * mid's first occurrence no matter how late it arrived (state unbounded
-    * within a day, T4). Watermarked dropDuplicates trades that for bounded
-    * state; this variant keeps the exact first-seen-ever-per-(dt,mid) rule
-    * via flatMapGroupsWithState — per-key boolean state in the state store.
-    * State expiry: NoTimeout here (matching the reference, whose Redis
-    * `dau:{dt}` sets also lived until externally expired); production at
-    * scale would set GroupStateTimeout.ProcessingTimeTimeout +
-    * state.setTimeoutDuration("48 hours") to reclaim closed days — note
-    * that processing-time timeouts make the query fire perpetual
-    * empty batches, so tests would need trigger-based draining. */
-  def firstSeenExactStream(events: DataFrame): Dataset[KeyedEvent] = {
-    import events.sparkSession.implicits._
-    val keyed = events
-      .withColumn("dt", date_format(col("ts"), "yyyy-MM-dd"))
-      .select(col("dt"), col("user_id"), col("event_id"), col("event_type"))
-      .as[KeyedEvent]
-    keyed
-      .groupByKey(e => (e.dt, e.user_id))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: (String, Long), batch: Iterator[KeyedEvent], state: GroupState[Boolean]) => {
-          if (state.exists) Iterator.empty
+    * State is one `true` per (dt, user_id) of an OPEN day: each key sets an
+    * event-time timeout at the end of its day (the session time zone the
+    * query runs under, UTC under GraftSession), and once the watermark
+    * passes it the key is removed and nothing is emitted. Input rows later
+    * than the 10 s watermark are dropped before the dedup (SURVEY §7.5c:
+    * the reference's SADD would have accepted them — the documented price
+    * of a watermark, counted in `numRowsDroppedByWatermark`). So no row of
+    * day d reaches the dedup once its keys expire, and freeing them changes
+    * no emission: state holds the keys of the days the watermark has not
+    * closed, not every day the query has seen (StreamingSpec pins both).
+    *
+    * One batch straddles each midnight: Spark drops late rows by the
+    * previous batch's watermark but runs the dedup under the current one,
+    * so a row of day d can still arrive after the watermark passed d's
+    * end. Its day is already closed, so its key is removed rather than
+    * given a timeout in the past; a first sighting is still emitted, as
+    * the watermarked `dropDuplicates` this replaced emitted it, and the
+    * next batch's late filter drops every later row of d. */
+  def firstSeenStream(events: DataFrame): DataFrame = {
+    val days = CoreOps.withDtHr(events).withWatermark("ts", WatermarkDelay)
+    // dt and its day's end are computed in the same plan, under the
+    // session zone it runs with: one owner for the day boundary
+    val dayEnd = unix_millis(date_add(col("dt"), 1).cast("timestamp"))
+    days.groupBy(col("dt"), col("user_id"), dayEnd)
+      .as(Encoders.row(days.select(col("dt"), col("user_id"), dayEnd).schema),
+        Encoders.row(days.schema))
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        (key: Row, rows: Iterator[Row], seen: GroupState[Boolean]) =>
+          if (seen.hasTimedOut) { seen.remove(); Iterator.empty }
           else {
-            state.update(true)
-            batch.take(1)
-          }
-        })
+            val first = !seen.exists
+            if (key.isNullAt(2)) { if (first) seen.update(true) } // a null ts has no day to close
+            else if (key.getLong(2) <= seen.getCurrentWatermarkMs) seen.remove()
+            else {
+              if (first) seen.update(true)
+              seen.setTimeoutTimestamp(key.getLong(2)) // every call clears it
+            }
+            if (first) rows.take(1) else Iterator.empty
+          })(Encoders.scalaBoolean, Encoders.row(days.schema))
   }
-
-  /** A2 streaming: hourly DAU as a windowed count over the deduped stream.
-    * Append-mode compatible: emits each (dt, hr) bucket once its watermark
-    * passes. */
-  def hourlyDauStream(events: DataFrame): DataFrame =
-    firstSeenStream(events)
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(count(lit(1)).as("dau"))
-      .select(date_format(col("w.start"), "yyyy-MM-dd").as("dt"),
-        date_format(col("w.start"), "HH").as("hr"), col("dau"))
 
   /** T2 extension: per-user SESSION windows on a stream — the same
     * `session_window` expression as the batch AnalyticOps.sessionWindow

@@ -354,15 +354,23 @@ class DedupSpec extends SparkTestBase {
       s"got $got")
   }
 
-  test("registered Manku-blocked hamming near-dup emits the exact pair set of the pigeonhole alias") {
-    // both blockings are COMPLETE for hamming<=3 and share the exact
-    // verify, so the outputs must be row-identical — on the planted
-    // fixture AND the real corpus. (Round 11 graduated the Manku form
-    // into the registered query; the pigeonhole lives on as the
-    // x_hamming_pigeonhole small-corpus alias.)
+  test("registered Manku-blocked hamming near-dup emits the all-pairs bit_count(xor) <= 3 pair set") {
+    // the Manku blocking is COMPLETE for hamming<=3 and verifies every
+    // candidate exactly, so its output must equal an unblocked scan of
+    // every doc pair over the same signatures — on the planted fixture
+    // AND the real corpus (500 docs: 124 750 pairs)
     for (d <- Seq(fixtureDir, sf0001)) {
       val a = DedupOps.hammingNearDup(spark, d).collect().map(_.toSeq).toSeq
-      val b = DedupOps.hammingNearDupPigeonhole(spark, d).collect().map(_.toSeq).toSeq
+      val sig = Tables.documents(spark, d)
+        .select(col("doc_id"), DedupOps.arithmeticSimhash.as("simhash"))
+      val b = sig.as("x").crossJoin(sig.as("y"))
+        .where(col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+          bit_count(col("x.simhash").bitwiseXOR(col("y.simhash")))
+            .cast("long").as("hamming"))
+        .where(col("hamming") <= 3)
+        .orderBy("doc_a", "doc_b")
+        .collect().map(_.toSeq).toSeq
       assert(a == b && a.nonEmpty, s"mismatch at $d")
     }
   }

@@ -29,7 +29,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    alike, so the two cannot drift apart.
   *  - no native function writes a loop as generated Java text: its kernel
   *    is one Scala method that eval and the generated code both call, so
-  *    the interpreted fallback cannot drift from codegen. */
+  *    the interpreted fallback cannot drift from codegen.
+  *  - [[serving.HttpDaemon]] is the ONE JDK HTTP server set-up: it sets
+  *    `TCP_NODELAY` before the first server exists and gives each daemon
+  *    its thread pool, so a second server cannot come up without them. */
 class SourceLintSpec extends AnyFunSuite {
 
   /** `hits` counts the calls the rule restricts in the text of a file;
@@ -50,6 +53,7 @@ class SourceLintSpec extends AnyFunSuite {
   private val permMin = "min((h * " + "$"
   private val toColumn = "ExpressionUtils" + ".column("
   private val javaLoop = "for (" + "int"
+  private val httpCreate = "HttpServer" + ".create("
 
   private val rules = Seq(
     Rule("only GraftSession.scala calls the SparkSession builder",
@@ -95,7 +99,14 @@ class SourceLintSpec extends AnyFunSuite {
       s"loop in the companion-object kernel and call it through KernelCall, not $javaLoop",
       "Java loop in generated code",
       "object Planted {\n  def gen(n: String) =\n" +
-        "    s\"" + javaLoop + " i = 0; i < $n; i++) { }\"\n}\n"))
+        "    s\"" + javaLoop + " i = 0; i < $n; i++) { }\"\n}\n"),
+    Rule("only HttpDaemon.scala creates a JDK HttpServer",
+      Seq("src/main", "src/test"), Some("HttpDaemon.scala"),
+      occurrences(httpCreate),
+      s"create servers through HttpDaemon.create, not $httpCreate",
+      "second HttpServer set-up",
+      "object Planted {\n  val s = com.sun.net.httpserver." + httpCreate +
+        "new java.net.InetSocketAddress(0), 0)\n}\n"))
 
   /** The repository root: the nearest directory at or above the working
     * directory that holds build.sbt. */

@@ -45,31 +45,6 @@ class StreamingSpec extends SparkTestBase {
     assert(got.toSeq == Seq(1L, 2L), "one row per user per day across batches")
   }
 
-  test("bounded-state dedup: within-watermark dups collapse, expired keys re-emit") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Ev]
-    val q = StreamingOps.firstSeenBoundedStream(in.toDF())
-      .writeStream.outputMode("append").format("memory").queryName("fsb").start()
-    // near-in-time duplicate collapses exactly like firstSeenStream
-    in.addData(
-      Ev(0, ts("2024-01-01 10:00:00"), 1, "view", 1.0, "{}"),
-      Ev(1, ts("2024-01-01 10:00:01"), 1, "view", 1.0, "{}"))
-    q.processAllAvailable()
-    // an hour later: watermark passes user 1's state (10:00:00 + 10s) → evicted
-    in.addData(Ev(2, ts("2024-01-01 11:00:00"), 99, "view", 1.0, "{}"))
-    q.processAllAvailable()
-    // same (dt, user) again after eviction → re-emitted: the documented
-    // bounded-state contract (the unbounded variants keep whole-day state)
-    in.addData(Ev(3, ts("2024-01-01 11:00:05"), 1, "view", 1.0, "{}"))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("fsb").select("event_id", "user_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    assert(got.toSeq == Seq((0L, 1L), (2L, 99L), (3L, 1L)),
-      s"dup 1 collapsed, post-eviction repeat re-emitted; got ${got.toSeq}")
-  }
-
   test("stream-stream join emits each matched pair once; orphans beyond window never join") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -152,27 +127,6 @@ class StreamingSpec extends SparkTestBase {
       s"one closed window with 3 joined items totaling 45.0, got $got")
   }
 
-  test("windowed hourly DAU emits closed buckets in append mode") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Ev]
-    in.addData(
-      Ev(0, ts("2024-01-01 10:05:00"), 1, "view", 1.0, "{}"),
-      Ev(1, ts("2024-01-01 10:10:00"), 1, "view", 1.0, "{}"), // dup user
-      Ev(2, ts("2024-01-01 10:20:00"), 2, "view", 1.0, "{}"),
-      // watermark pusher: closes the 10:00 bucket
-      Ev(3, ts("2024-01-01 12:00:00"), 3, "view", 1.0, "{}"))
-    val q = StreamingOps.hourlyDauStream(in.toDF())
-      .writeStream.outputMode("append").format("memory").queryName("hdau").start()
-    q.processAllAvailable()
-    in.addData(Ev(4, ts("2024-01-01 14:00:00"), 4, "view", 1.0, "{}"))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("hdau").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(got(("2024-01-01", "10")) == 2L, s"dedup inside window: $got")
-  }
-
   test("streaming session windows: gap-merge within session, close on watermark") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -202,11 +156,11 @@ class StreamingSpec extends SparkTestBase {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[Ev]
-    val q = StreamingOps.hourlyDauStream(in.toDF())
+    val q = StreamingOps.firstSeenStream(in.toDF())
       .writeStream.outputMode("append").format("memory").queryName("wmobs").start()
     in.addData(Ev(0, ts("2024-01-01 10:05:00"), 1, "view", 1.0, "{}"))
     q.processAllAvailable()
-    // push the watermark far past 10:00-11:00, then send a late event for it
+    // push the watermark far past 10:30, then send a late first sighting
     in.addData(Ev(1, ts("2024-01-01 14:00:00"), 2, "view", 1.0, "{}"))
     q.processAllAvailable()
     in.addData(Ev(2, ts("2024-01-01 10:30:00"), 3, "view", 1.0, "{}")) // late
@@ -214,13 +168,12 @@ class StreamingSpec extends SparkTestBase {
     val dropped = q.recentProgress
       .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
     q.stop()
-    // the ops contract: late data is DROPPED (bucket already emitted) and
-    // the drop is VISIBLE in metrics — silent loss is the failure mode
-    assert(dropped >= 1, s"late row must be counted as dropped, got $dropped")
-    val got = spark.table("wmobs").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(got(("2024-01-01", "10")) == 1L,
-      s"late user 3 must not inflate the closed 10:00 bucket: $got")
+    // the ops contract: late data is DROPPED (user 3 never counts for the
+    // day) and the drop is VISIBLE in metrics — silent loss is the
+    // failure mode
+    assert(dropped == 1, s"late row must be counted as dropped, got $dropped")
+    val got = spark.table("wmobs").select("user_id").collect().map(_.getLong(0)).sorted
+    assert(got.toSeq == Seq(1L, 2L), s"late user 3 must not be emitted: ${got.toSeq}")
   }
 
   test("stream-static broadcast enrichment (J2): left-outer nulls on dim misses") {
@@ -272,61 +225,96 @@ class StreamingSpec extends SparkTestBase {
       s"state must survive restart (no re-emit of user 1), got $got")
   }
 
-  test("exact-state dedup (flatMapGroupsWithState): late arrivals still dedup, unlike watermarked path") {
+  test("first-seen over three event-time days: dropDuplicates' rows, each day's state freed once it closes, across a restart") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[Ev]
-    in.addData(
-      Ev(0, ts("2024-01-01 10:00:00"), 1, "view", 1.0, "{}"),
-      Ev(1, ts("2024-01-01 23:00:00"), 9, "view", 1.0, "{}")) // pushes any notion of time far ahead
-    val q = StreamingOps.firstSeenExactStream(in.toDF())
-      .writeStream.outputMode("append").format("memory").queryName("fse").start()
-    q.processAllAvailable()
-    // user 1 appears again much "later" (arrival), same day: must NOT re-emit
-    in.addData(Ev(2, ts("2024-01-01 10:00:05"), 1, "view", 1.0, "{}"))
-    // new user arrives way out of order (event-time long before state max): still emits
-    in.addData(Ev(3, ts("2024-01-01 00:00:01"), 2, "view", 1.0, "{}"))
-    q.processAllAvailable()
+    val outDir = java.nio.file.Files.createTempDirectory("graft_days_out_").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_days_ckpt_").toString
+    def startQuery() = StreamingOps.firstSeenStream(in.toDF())
+      .writeStream.outputMode("append").format("parquet")
+      .option("path", outDir).option("checkpointLocation", ckpt).start()
+    def ev(id: Long, t: String, user: Long) = Ev(id, ts(t), user, "view", 1.0, "{}")
+    val batches = Seq(
+      // in-batch duplicate: the first to arrive wins
+      Seq(ev(0, "2024-01-01 10:00:00", 1), ev(1, "2024-01-01 10:00:01", 1),
+        ev(2, "2024-01-01 10:00:02", 2)),
+      // a null ts has no day: emitted once, its key never expires
+      Seq(ev(3, "2024-01-01 12:00:00", 1), ev(4, "2024-01-01 12:00:05", 3),
+        Ev(18, null, 9, "view", 1.0, "{}")),
+      // 4 is more than 10 s late on an open day: dropped
+      Seq(ev(5, "2024-01-01 11:00:00", 4), ev(6, "2024-01-01 23:59:50", 5)),
+      // day 2 opens; the later arrival has the earlier ts and still loses.
+      // The watermark passes the end of day 1, whose keys then expire
+      Seq(ev(7, "2024-01-02 00:00:30", 1), ev(8, "2024-01-02 00:00:29", 1)),
+      // 9 is a late row of the closed day 1: dropped, never re-emitted
+      Seq(ev(9, "2024-01-01 23:59:59", 6), ev(10, "2024-01-02 08:00:00", 2)),
+      // (restart here) 11 duplicates 10 across the restart
+      Seq(ev(11, "2024-01-02 08:00:01", 2), ev(12, "2024-01-02 09:00:00", 3)),
+      // day 3 opens and the watermark closes day 2
+      Seq(ev(13, "2024-01-03 00:00:20", 1), ev(14, "2024-01-03 00:00:20", 7)),
+      Seq(ev(15, "2024-01-03 01:00:00", 1), ev(16, "2024-01-02 23:00:00", 8)),
+      Seq(ev(17, "2024-01-03 02:00:00", 8)))
+    var q = startQuery()
+    // state rows once the stream has caught up with each batch (the
+    // no-data batch a watermark advance triggers included)
+    val stateRows = batches.zipWithIndex.map { case (b, i) =>
+      if (i == 5) { q.stop(); q = startQuery() }
+      in.addData(b)
+      q.processAllAvailable()
+      q.recentProgress.last.stateOperators(0).numRowsTotal
+    }
     q.stop()
-    val got = spark.table("fse").select("user_id", "event_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == Set((1L, 0L), (9L, 1L), (2L, 3L)),
-      s"exact first-seen regardless of lateness, got $got")
+    val got = spark.read.parquet(outDir).collect()
+      .map(r => (r.getAs[Long]("event_id"), r.getAs[String]("dt"),
+        r.getAs[String]("hr"), r.getAs[Long]("user_id")))
+      .sortBy(_._1).toSeq
+    // the rows the watermarked dropDuplicates("dt", "user_id") emitted on
+    // this input, recorded from it
+    assert(got == Seq((0L, "2024-01-01", "10", 1L), (2L, "2024-01-01", "10", 2L),
+      (4L, "2024-01-01", "12", 3L), (6L, "2024-01-01", "23", 5L),
+      (7L, "2024-01-02", "00", 1L), (10L, "2024-01-02", "08", 2L),
+      (12L, "2024-01-02", "09", 3L), (13L, "2024-01-03", "00", 1L),
+      (14L, "2024-01-03", "00", 7L), (17L, "2024-01-03", "02", 8L),
+      (18L, null, null, 9L)), s"got $got")
+    // dropDuplicates kept every key it saw: 2, 4, 5, 6, 7, 8, 10, 10, 11
+    assert(stateRows == Seq(2L, 4L, 5L, 2L, 3L, 4L, 3L, 3L, 4L),
+      s"day 1's four keys go after batch 4, day 2's three after batch 7; got $stateRows")
+    assert(StreamingOps.firstSeenStream(in.toDF()).schema.map(f => s"${f.name} ${f.dataType.sql}") ==
+      Seq("event_id BIGINT", "ts TIMESTAMP", "user_id BIGINT", "event_type STRING",
+        "value DOUBLE", "props STRING", "dt STRING", "hr STRING"))
   }
 
-  test("first-seen state rows: bounded variant levels off, unbounded variants grow with the batches") {
+  test("first-seen: a straggler of a day the watermark closed inside its own batch is still emitted once") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val batches = 6
-    val perBatch = 2
-    // state rows after each micro-batch of `perBatch` new users, event
-    // time one minute further on each batch (far past the 10 s watermark)
-    def stateRows(variant: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Dataset[_],
-        name: String): Seq[Long] = {
+    // without no-data batches, the batch after the one that crosses
+    // midnight filters late rows by the old watermark but runs the dedup
+    // under the new one, past the end of day 1
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
       val in = MemoryStream[Ev]
-      val q = variant(in.toDF())
-        .writeStream.outputMode("append").format("memory").queryName(name).start()
-      try (0 until batches).map { b =>
-        in.addData((0 until perBatch).map { u =>
-          val id = (b * perBatch + u).toLong
-          Ev(id, new Timestamp(ts("2024-01-01 10:00:00").getTime + b * 60000L),
-            id, "view", 1.0, "{}")
-        })
-        q.processAllAvailable()
-        q.lastProgress.stateOperators(0).numRowsTotal
-      } finally q.stop()
-    }
-    val growing = (1 to batches).map(b => (b * perBatch).toLong)
-    assert(stateRows(StreamingOps.firstSeenStream, "fs_state") == growing,
-      "watermarked dropDuplicates keeps every (dt, user_id) it has seen")
-    assert(stateRows(StreamingOps.firstSeenExactStream(_).toDF(), "fse_state") == growing,
-      "flatMapGroupsWithState without timeout keeps every key it has seen")
-    val bounded = stateRows(StreamingOps.firstSeenBoundedStream, "fsb_state")
-    // a key is evicted once the watermark (max event time - 10 s) passes
-    // its event time + 10 s: at most the last two batches stay in state
-    assert(bounded.drop(2).forall(_ <= 2L * perBatch),
-      s"dropDuplicatesWithinWatermark must evict expired keys, got $bounded")
-    assert(bounded.last < growing.last)
+      val q = StreamingOps.firstSeenStream(in.toDF())
+        .writeStream.outputMode("append").format("memory").queryName("fs_straddle").start()
+      def ev(id: Long, t: String, user: Long) = Ev(id, ts(t), user, "view", 1.0, "{}")
+      Seq(
+        Seq(ev(0, "2024-01-01 23:59:50", 1)),
+        Seq(ev(1, "2024-01-02 00:00:30", 2)),
+        // 2 and 3 are later than the old watermark 23:59:40; 3 repeats user 1
+        Seq(ev(2, "2024-01-01 23:59:55", 3), ev(3, "2024-01-01 23:59:56", 1)),
+        // now later than the 00:00:20 watermark: 4 is dropped
+        Seq(ev(4, "2024-01-01 23:59:58", 4), ev(5, "2024-01-02 00:01:00", 1))
+      ).foreach { b => in.addData(b); q.processAllAvailable() }
+      q.stop()
+      val got = spark.table("fs_straddle").select("event_id", "dt", "user_id").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sortBy(_._1).toSeq
+      // the rows the watermarked dropDuplicates("dt", "user_id") emitted
+      // on this input, recorded from it
+      assert(got == Seq((0L, "2024-01-01", 1L), (1L, "2024-01-02", 2L),
+        (2L, "2024-01-01", 3L), (5L, "2024-01-02", 1L)), s"got $got")
+    } finally spark.conf.set(key, saved)
   }
 
   test("foreachBatch upsert sink: a replayed partition is replaced, others untouched") {
@@ -382,24 +370,6 @@ class StreamingSpec extends SparkTestBase {
     assert(r.getString(0) == "7")
     assert(r.getString(1) == """{"order_id":7,"status":"F","amount":42.5}""")
     assert(r.getString(2) == "DWD_ORDER_INFO")
-  }
-
-  test("update-mode hourly DAU: buckets re-emit as counts grow (live dashboard semantics)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Ev]
-    val q = StreamingOps.hourlyDauStream(in.toDF())
-      .writeStream.outputMode("update").format("memory").queryName("udau").start()
-    in.addData(Ev(0, ts("2024-01-01 10:05:00"), 1, "view", 1.0, "{}"))
-    q.processAllAvailable()
-    in.addData(Ev(1, ts("2024-01-01 10:10:00"), 2, "view", 1.0, "{}"))
-    q.processAllAvailable()
-    q.stop()
-    // update mode re-emits the 10:00 bucket with the growing count;
-    // the LAST emission for the bucket must be 2
-    val emissions = spark.table("udau").collect()
-      .filter(r => r.getString(1) == "10").map(_.getLong(2)).toSeq
-    assert(emissions.nonEmpty && emissions.max == 2L, s"got $emissions")
   }
 
   test("cdc routing stream + partitioned fan-out sink (T6)") {
