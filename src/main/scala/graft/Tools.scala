@@ -16,6 +16,11 @@ import graft.operators.DedupOps
   *    `SPARK_GRAFT_PLAN_ADAPTIVE=false` turns AQE off, which renders the
   *    WholeStageCodegen spans (`*(n)`) — the codegen-coverage mode; the
   *    default (AQE on) is the shape Bench and Verify run.
+  *  - `graft.Tools plans --digest [sfDir]` — writes `plans/digests.tsv`:
+  *    per entry, a hash of its masked plan tree and its exchange, sort,
+  *    broadcast-join and scan counts, under fixed settings (4 cores, AQE
+  *    on) recorded in the file header. `plans --check [sfDir]` recomputes
+  *    them, names every entry whose row moved and exits 1 if any did.
   *  - `graft.Tools skew [sfDir]` — the key-size histogram of the dedup
   *    family's top exchanges (below).
   *  - `graft.Tools registry` — the registry counts README and SURVEY
@@ -24,13 +29,18 @@ import graft.operators.DedupOps
   * `sfDir` defaults to the sf0.1 testdata tables; the session runs
   * `local[$SPARK_GRAFT_CPUS]` (default 8). */
 object Tools {
-  private val usage = "usage: graft.Tools <explain|plans|skew|registry> ..."
+  private val usage =
+    "usage: graft.Tools <explain|plans [--digest|--check]|skew|registry> ..."
 
   def main(args: Array[String]): Unit = args.headOption match {
     case Some("explain") if args.length > 1 =>
       explain(args(1), sfDir(args, 2),
         if (args.length > 3) args(3).toInt else 3)
-    case Some("plans") => plans(sfDir(args, 1))
+    case Some("plans") => args.lift(1) match {
+      case Some("--digest") => writeDigests(sfDir(args, 2))
+      case Some("--check") => if (!checkDigests(sfDir(args, 2))) sys.exit(1)
+      case _ => plans(sfDir(args, 1))
+    }
     case Some("skew") => skew(sfDir(args, 1))
     case Some("registry") => registry()
     case _ =>
@@ -72,6 +82,84 @@ object Tools {
       catch { case e: Throwable => println(s"(plan failed: ${e.getMessage})") }
     }
     spark.stop()
+  }
+
+  private val DigestFile = "plans/digests.tsv"
+  private val DigestCpus = 4
+
+  /** Masks what differs between two plannings of the same query:
+    * expression ids, plan ids, Scala lambda class names and identity-hash
+    * suffixes. */
+  private[graft] def maskPlan(tree: String): String = tree
+    .replaceAll("#\\d+", "#")
+    .replaceAll("plan_id=\\d+", "plan_id=")
+    .replaceAll("\\$\\$Lambda[^@\\s,)\\]]*", "\\$\\$Lambda")
+    .replaceAll("@[0-9a-f]+\\b", "@")
+
+  /** `name`, hash of the masked tree, then the exchange, sort,
+    * broadcast-join and scan node counts, tab-separated. */
+  private[graft] def digestRow(name: String, tree: String): String = {
+    val masked = maskPlan(tree)
+    val nodes = masked.linesIterator.map(_
+      .replaceFirst("^[\\s:+|-]*(\\*\\(\\d+\\)\\s*)?", "")
+      .takeWhile(c => c != ' ' && c != '(' && c != '[')).toSeq
+    val hash = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(masked.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+    Seq(name, hash,
+      nodes.count(_.endsWith("Exchange")),
+      nodes.count(_ == "Sort"),
+      nodes.count(n => n.startsWith("Broadcast") && n.endsWith("Join")),
+      nodes.count(_.endsWith("Scan"))).mkString("\t")
+  }
+
+  private def digestHeader(sfDir: String): Seq[String] = Seq(
+    s"# graft.Tools plans --digest: SPARK_GRAFT_CPUS=$DigestCpus " +
+      s"sf=${new java.io.File(sfDir).getName} adaptive=true",
+    "name\tdigest\texchanges\tsorts\tbroadcast_joins\tscans")
+
+  private def digestLines(sfDir: String): Seq[String] = {
+    val spark = GraftSession.build(
+      s"local[$DigestCpus]", "graft-plan-digest", DigestCpus)
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.sparkContext.setLogLevel("ERROR")
+    val rows = entries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val tree =
+        try fn(spark, sfDir).queryExecution.executedPlan.treeString
+        catch { case e: Throwable => s"(plan failed: ${e.getMessage})" }
+      digestRow(name, tree)
+    }
+    spark.stop()
+    digestHeader(sfDir) ++ rows
+  }
+
+  private def writeDigests(sfDir: String): Unit = {
+    val lines = digestLines(sfDir)
+    java.nio.file.Files.write(java.nio.file.Paths.get(DigestFile),
+      (lines.mkString("\n") + "\n").getBytes("UTF-8"))
+    println(s"wrote $DigestFile: ${lines.size - 2} entries")
+  }
+
+  /** Compares a fresh digest run with the checked-in file; prints every
+    * entry whose row moved, appeared or went. */
+  private def checkDigests(sfDir: String): Boolean = {
+    import scala.jdk.CollectionConverters._
+    val want = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(DigestFile)).asScala.toSeq
+    val got = digestLines(sfDir)
+    val header = digestHeader(sfDir)
+    val sameHeader = want.take(2) == header
+    if (!sameHeader) println(s"header differs: file ${want.take(2)}, run $header")
+    def byName(ls: Seq[String]) =
+      ls.drop(2).map(l => l.takeWhile(_ != '\t') -> l).toMap
+    val (w, g) = (byName(want), byName(got))
+    val moved = (w.keySet ++ g.keySet).toSeq.sorted.filter(n => w.get(n) != g.get(n))
+    moved.foreach { n =>
+      println(s"moved $n\n  file: ${w.getOrElse(n, "(absent)")}\n" +
+        s"  run:  ${g.getOrElse(n, "(absent)")}")
+    }
+    println(s"plans --check: ${g.size - moved.count(g.contains)}/${g.size} " +
+      s"unchanged, ${moved.size} moved")
+    sameHeader && moved.isEmpty
   }
 
   private def registry(): Unit = {
