@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.util.ShutdownHookManager
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
@@ -24,7 +25,7 @@ object Bench {
     // installEmitter swaps in the real state-reading emitter once the
     // loop state exists.
     emit = () => if (emitted.compareAndSet(false, true)) {
-      println(s"""{"metric":"total","value":0.000,"unit":"sec","queries":{},"failures":0,"failed":[],"skipped":${SparkEntry.queries.size + SparkEntry.benchExtras.size},"sf":"$sfDir"}""")
+      println(s"""{"metric":"total","value":0.000,"unit":"sec","queries":{},"failures":0,"failed":[],"skipped":${SparkEntry.entries.size},"sf":"$sfDir"}""")
       System.out.flush()
     }
     Runtime.getRuntime.addShutdownHook(new Thread(() => emit(), "bench-emit"))
@@ -38,9 +39,8 @@ object Bench {
         System.err.println(s"[bench] warm-up read of $n failed: ${e.getMessage}")
       }
     }
-    try SparkEntry.queries.get("q_dau_total")
-      .orElse(SparkEntry.queries.headOption.map(_._2))
-      .foreach(_(spark, sfDir).write.format("noop").mode("overwrite").save())
+    try SparkEntry.queries("q_dau_total")(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
     catch { case e: Throwable =>
       System.err.println(s"[bench] warm-up failed: ${e.getMessage}")
     }
@@ -50,25 +50,13 @@ object Bench {
     // finishes suspiciously fast) — a query with no successful rep reports
     // -1 so the failure is visible in the JSON, not hidden.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-    // SPARK_GRAFT_BENCH_ONLY=q_a,q_b limits the run (iteration aid; the
-    // driver never sets it, so round benches always cover everything)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     // Bench covers the registry PLUS the bench-only production fast-path
     // aliases (x_*): those have no DuckDB twin so Verify never runs them,
-    // but their per-round timing is the perf signal for the 100 TB path
+    // but their per-round timing is the perf signal for the 100 TB path.
+    // SPARK_GRAFT_BENCH_ONLY=q_a,q_b limits the run (an iteration aid;
+    // unset, Bench covers everything)
     val benchable = SparkEntry.queries ++ SparkEntry.benchExtras
-    // a typo'd name must not silently shrink the run to a clean-looking
-    // empty bench — unknown names are a hard error
-    only.foreach { names =>
-      val unknown = names -- benchable.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names not in the registry: ${unknown.mkString(", ")}")
-    }
-    val selected = only match {
-      case Some(names) => benchable.filter(kv => names(kv._1))
-      case None => benchable
-    }
+    val only = SparkEntry.only("SPARK_GRAFT_BENCH_ONLY", benchable.keySet)
     // Wall-clock deadline (seconds, from JVM-entry of this loop): the round-4
     // driver run was killed externally (rc=124) BEFORE the all-reps loop
     // finished, so no contract line printed and the whole round benched as
@@ -92,20 +80,17 @@ object Bench {
     // fast queries first, known-slow ones last (same kill-cost ordering as
     // Verify): a deadline hit then skips the fewest measurements — the slow
     // tail eats whatever budget remains instead of starving ~110 fast ones
-    val ordered = selected.toSeq.sortBy { case (n, _) =>
-      (SparkEntry.knownSlow.indexOf(n), n) // -1 (not slow) sorts first
-    }
+    val ordered = SparkEntry.runOrder(
+      benchable.filter { case (n, _) => only.forall(_(n)) })
     // Thread-safe: the shutdown hook below reads these from another thread
     // while the loop writes.
-    val times = scala.collection.concurrent.TrieMap.empty[String, Vector[Double]]
-    val attempted = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val outcomes = scala.collection.concurrent.TrieMap.empty[String, Vector[Rep]]
     val watchdog = java.util.concurrent.Executors.newSingleThreadScheduledExecutor(
       (r: Runnable) => { val t = new Thread(r, "bench-watchdog"); t.setDaemon(true); t })
-    installEmitter(spark, sfDir, ordered, times, attempted)
+    installEmitter(spark, sfDir, ordered.map(_._1), outcomes)
     def runOnce(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         rep: Int): Unit = {
-      attempted.add(name)
       // Cancel this query's jobs at min(per-query cap, remaining global
       // budget + grace). Repeating fixed-delay: cancelJobGroup only kills
       // ACTIVE jobs, so a multi-action query that submits its next job
@@ -136,7 +121,13 @@ object Bench {
       // intra-query caches (shingle sets etc.) must not leak memory/GC
       // pressure into the next query's measurement
       spark.catalog.clearCache()
-      if (ok) times(name) = times.getOrElse(name, Vector.empty) :+ dt
+      // a rep that failed while the JVM shuts down was cut off by a kill
+      // (Spark's own shutdown hook stops the context under it)
+      val outcome =
+        if (ok) Timed(dt)
+        else if (ShutdownHookManager.get().isShutdownInProgress) CutOff
+        else Failed
+      outcomes(name) = outcomes.getOrElse(name, Vector.empty) :+ outcome
     }
     var deadlineHit = false
     for (rep <- 1 to reps; (name, fn) <- ordered if !deadlineHit) {
@@ -159,11 +150,11 @@ object Bench {
     // silently turn a reps=1 loop into min-of-2 for those queries while
     // every other invocation stays min-of-1 (ADVICE r10).
     if (only.isEmpty && !deadlineHit) {
-      times.toSeq.collect { case (n, ts) if ts.nonEmpty => n -> ts.min }
-        .sortBy(-_._2).take(3)
+      tally(ordered.map(_._1), outcomes.getOrElse(_, Nil)).mins
+        .filter(_._2 >= 0).sortBy(-_._2).take(3)
         .foreach { case (worst, _) =>
           if (deadlineSec <= 0 || elapsed < deadlineSec)
-            selected.get(worst).foreach(fn => runOnce(worst, fn, reps + 1))
+            runOnce(worst, benchable(worst), reps + 1)
         }
     }
     emit()
@@ -231,10 +222,8 @@ object Bench {
     * externally (rc=124) before the loop ended, printed nothing, and the
     * whole round benched as null — a partial bench must still report. */
   private def installEmitter(
-      spark: SparkSession, sfDir: String,
-      ordered: Seq[(String, Any)],
-      times: scala.collection.concurrent.TrieMap[String, Vector[Double]],
-      attempted: java.util.Set[String]): Unit = {
+      spark: SparkSession, sfDir: String, ordered: Seq[String],
+      outcomes: scala.collection.concurrent.TrieMap[String, Vector[Rep]]): Unit = {
     def p50(ts: Seq[Double]): Double = {
       val s = ts.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
@@ -244,32 +233,18 @@ object Bench {
     def fmtAt(decimals: Int)(v: Double): String =
       String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
     emit = () => if (emitted.compareAndSet(false, true)) {
-      val results = ordered.map { case (name, _) => name -> times.getOrElse(name, Vector.empty) }
-      // skipped queries are excluded from the per-query map entirely (they
-      // carry no information and would bloat the size-budgeted contract
-      // line); failed ones stay visible as -1.0
-      val mins = results.collect {
-        case (k, ts) if ts.nonEmpty || attempted.contains(k) =>
-          k -> (if (ts.nonEmpty) ts.min else -1.0)
-      }
-      // -1.0 marks a query that was attempted but had no successful rep; keep
-      // it visible per-query but never let it subtract from the headline
-      // total. failed = attempted, zero successful reps; skipped = never
-      // attempted because the deadline fired first. Both surface at top level
-      // so neither can masquerade as a speedup of the (then-partial) total.
-      val failed = results.collect { case (k, ts) if ts.isEmpty && attempted.contains(k) => k }
-      val skipped = results.collect { case (k, ts) if ts.isEmpty && !attempted.contains(k) => k }
-      val total = mins.map(_._2).filter(_ >= 0).sum
+      val t = tally(ordered, outcomes.getOrElse(_, Nil))
+      val total = t.mins.map(_._2).filter(_ >= 0).sum
       // Full-precision per-query detail (min + p50) goes on its OWN line
       // (printed first) so variance and sub-10ms deltas stay inspectable in
       // full logs without bloating the contract line below; skipped names
       // live here too — only their COUNT fits the contract line's budget.
-      val qs50 = results.collect { case (k, ts) if ts.nonEmpty =>
+      val qs50 = t.timed.map { case (k, ts) =>
         "\"" + k + "\":{\"min\":" + fmtAt(4)(ts.min) + ",\"p50\":" + fmtAt(4)(p50(ts)) + "}"
       }.mkString("{", ",", "}")
-      val skippedJson = skipped.map("\"" + _ + "\"").mkString("[", ",", "]")
+      val skippedJson = t.skipped.map("\"" + _ + "\"").mkString("[", ",", "]")
       println(s"""{"metric":"detail","unit":"sec","queries_detail":$qs50,"skipped_names":$skippedJson}""")
-      val line = contractLine(mins, total, failed, skipped.size, sfDir)
+      val line = contractLine(t.mins, total, t.failed, t.skipped.size, sfDir)
       // Nothing may print after the contract line: forked stderr passes
       // through unprefixed too, so a shutdown-time WARN would land after the
       // JSON in a merged capture. Silence logging before printing.
@@ -277,5 +252,40 @@ object Bench {
       println(line)
       System.out.flush()
     }
+  }
+
+  /** One finished rep of an entry. `CutOff` is a rep that failed while the
+    * JVM was shutting down: an external kill interrupted it, which says
+    * nothing about the entry. */
+  private[graft] sealed trait Rep
+  private[graft] final case class Timed(sec: Double) extends Rep
+  private[graft] case object Failed extends Rep
+  private[graft] case object CutOff extends Rep
+
+  /** The run state as the contract line reports it, in run order:
+    *  - `timed`: the successful rep times of each entry that has any;
+    *  - `mins`: their min, and -1.0 for each failed entry (visible
+    *    per-query, never subtracted from the total);
+    *  - `failed`: no successful rep, and at least one rep failed;
+    *  - `skipped`: neither: never run (the deadline fired first) or only
+    *    cut off. Skipped entries stay out of `mins`: they carry no
+    *    information and would bloat the size-budgeted line.
+    * Failed and skipped both surface at top level so neither can
+    * masquerade as a speedup of the (then-partial) total. */
+  private[graft] final case class Tally(
+      timed: Seq[(String, Seq[Double])], mins: Seq[(String, Double)],
+      failed: Seq[String], skipped: Seq[String])
+
+  private[graft] def tally(ordered: Seq[String], reps: String => Seq[Rep]): Tally = {
+    val timed = ordered.map(n => n -> reps(n).collect { case Timed(s) => s })
+    val failed = timed.collect { case (n, ts) if ts.isEmpty && reps(n).contains(Failed) => n }
+    Tally(
+      timed.filter(_._2.nonEmpty),
+      timed.collect {
+        case (n, ts) if ts.nonEmpty => n -> ts.min
+        case (n, _) if failed.contains(n) => n -> -1.0
+      },
+      failed,
+      timed.collect { case (n, ts) if ts.isEmpty && !failed.contains(n) => n })
   }
 }

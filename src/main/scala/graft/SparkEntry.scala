@@ -4,15 +4,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.{AnalyticOps, CoreOps, DedupOps, GraphOps, MultimodalOps, PipelineOps, ScaleOps, ServingOps, SimilarityOps, TextOps}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * `queries` is the full operator registry (one entry per implemented
-  * operator from SURVEY.md §2 + the training-data-pipeline extensions);
-  * `oracleSql` carries the DuckDB-equivalent ANSI SQL for every
-  * SQL-expressible query. Column names/aliases match between the two —
-  * the driver's compare hashes values under sorted column names.
-  */
+/** One registered query (`q_` name) or bench-only alias (`x_` name): its
+  * run function on (session, sf dir) and, when the query is
+  * SQL-expressible, its DuckDB twin. Column names and aliases match
+  * between the two: the oracle gate compares hashed values under sorted
+  * column names. Each family object lists its own in `entries`. */
+final case class Entry(
+    name: String,
+    run: (SparkSession, String) => DataFrame,
+    oracle: Option[String] = None)
+
+/** The query registry — see SURVEY.md §7. Every map here is derived from
+  * the families' [[Entry]] lists, which name each query once. */
 object SparkEntry {
+  type Run = (SparkSession, String) => DataFrame
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Hourly DAU: the reference's signature pipeline
@@ -20,18 +25,46 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     CoreOps.dauHourly(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    CoreOps.queries ++ TextOps.queries ++ DedupOps.queries ++
-      SimilarityOps.queries ++ MultimodalOps.queries ++ ServingOps.queries ++
-      PipelineOps.queries ++ AnalyticOps.queries ++ ScaleOps.queries ++
-      GraphOps.queries
+  /** Every registered query and bench alias, family by family. */
+  lazy val entries: Seq[Entry] =
+    CoreOps.entries ++ TextOps.entries ++ DedupOps.entries ++
+      SimilarityOps.entries ++ MultimodalOps.entries ++ ServingOps.entries ++
+      PipelineOps.entries ++ AnalyticOps.entries ++ ScaleOps.entries ++
+      GraphOps.entries
+
+  /** `es` keyed by name; a duplicate name is an error (a `Map` built from
+    * pairs would silently keep the last). */
+  private[graft] def byName(es: Seq[Entry]): Map[String, Entry] = {
+    val dups = es.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, s"duplicate entry names: ${dups.toSeq.sorted.mkString(", ")}")
+    es.map(e => e.name -> e).toMap
+  }
+
+  private lazy val named = byName(entries)
+
+  private def runs(prefix: String): Map[String, Run] =
+    named.collect { case (n, e) if n.startsWith(prefix) => n -> e.run }
+
+  /** The registry: every `q_` entry. Verify runs these, and the oracle
+    * gate compares their results against [[oracleSql]]. */
+  lazy val queries: Map[String, Run] = runs("q_")
+
+  /** Bench-only aliases: every `x_` entry. These are production fast paths
+    * (engine-native xxhash64, K=256 codebooks, 48-merge BPE, fixed
+    * reference slices, estimate-only sketches) with no DuckDB twin, so
+    * Bench times them and PlanLintSpec lints them, but Verify and the
+    * oracle gate never see them. */
+  lazy val benchExtras: Map[String, Run] = runs("x_")
+
+  /** The DuckDB twin of every entry that has one, keyed by name. */
+  lazy val oracleSql: Map[String, String] =
+    named.collect { case (n, Entry(_, _, Some(sql))) => n -> sql }
 
   /** Queries measured slowest at sf0.01 (multi-action sketch/graph plans).
-    * Both gate harnesses schedule these LAST so an external budget kill
+    * [[runOrder]] schedules these LAST so an external budget kill
     * costs the fewest measurements — the many fast queries all land before
-    * the first slow one starts. Shared here so Verify and Bench can't
-    * drift apart. */
+    * the first slow one starts. This cross-family schedule is the one
+    * place outside an entry that spells registered names. */
   val knownSlow: Seq[String] = Seq(
     // multi-action / cached multi-stage queries: cheap in a healthy window
     // but the first to balloon when the host degrades (sketch head-fetches,
@@ -71,74 +104,23 @@ object SparkEntry {
     "x_bpe_encode_big", "x_chunk_scrub_fast",
     "x_contamination_pairs_fixedeval")
 
-  /** BENCH-ONLY aliases: the xxhash64 production fast paths of the
-    * near-dup operators. The registered `q_minhash_lsh` / `q_simhash`
-    * run md5-portable hashes so DuckDB can replay them end-to-end (the
-    * driver-oracle requirement); these variants swap in engine-native
-    * hashing — the shape a 100 TB run would actually deploy — and have
-    * no DuckDB twin by construction, so they live OUTSIDE `queries`:
-    * Bench times them every round (the at-scale perf signal), Verify
-    * and the driver oracle never see them, PlanLintSpec lints them,
-    * DedupSpec pins their semantics on planted fixtures. Keys are
-    * `x_`-prefixed so a registry/alias collision is impossible by
-    * construction (RegistrySpec asserts disjointness anyway). */
-  def benchExtras: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_minhash_lsh_fast" -> ((s, d) => DedupOps.minhashLshFast(s, d)),
-    "x_source_overlap_fast" -> ((s, d) => DedupOps.sourceOverlapFast(s, d)),
-    "x_simhash_fast" -> ((s, d) => DedupOps.simhashPairsFast(s, d)),
-    // x_semdedup_scaled RETIRED in round 10: the corpus-scaled shape is
-    // now the REGISTERED q_semdedup_scaled (dynamic-K oracle), and at
-    // bench scale (n=9600 > the TwoLevelK switch) the alias ran the
-    // byte-identical two-level dataflow — timing the same heavy query
-    // twice in the slow tail for zero extra signal.
-    // production K=256 PQ codebook (registered q_ann_pq pins K=16 for its
-    // unrolled DuckDB training CTE) — the NearestCode headroom, measured
-    "x_ann_pq256" -> ((s, d) => SimilarityOps.annPqProduction(s, d)),
-    // production K=256 residual codebook for the IVFADC index (registered
-    // q_ann_ivfpq pins K=16 for the same unrolled-CTE reason)
-    "x_ann_ivfpq256" -> ((s, d) => SimilarityOps.annIvfPqProduction(s, d)),
-    // fixed-reference bigram LM: trains on the UNREPLICATED reference
-    // slice — the production shape (fixed reference, growing corpus) the
-    // registered query's N× slope can't show because make_scaled
-    // replicates the reference too; row-identical to q_bigram_lm on any
-    // unreplicated corpus (spec-pinned)
-    "x_bigram_lm_fixedref" -> ((s, d) => TextOps.bigramLmFixedRef(s, d)),
-    // production-depth tokenizer round-trip: 48 learned merges applied as
-    // a codegen'd chained-replace encode (registered q_bpe_encode pins 3
-    // merges for the unrolled DuckDB training CTE)
-    "x_bpe_encode_big" -> ((s, d) => TextOps.bpeEncodeBig(s, d)),
-    // xxhash64 chunk fingerprints for the substring-dedup apply step
-    // (registered q_chunk_scrub keeps md5 for the DuckDB replay)
-    "x_chunk_scrub_fast" -> ((s, d) => PipelineOps.chunkScrubFast(s, d)),
-    // fixed-eval contamination attribution: eval = the unreplicated base
-    // slice — the production shape (MB eval, growing train) that the
-    // replicate-everything scaled corpora can't show on the q_ name
-    "x_contamination_pairs_fixedeval" ->
-      ((s, d) => DedupOps.contaminationPairsFixedEval(s, d)),
-    // xxhash64 binary-asset dedup (registered q_mm_dedup keeps md5 for
-    // the DuckDB replay); group structure spec-pinned identical
-    "x_mm_dedup_fast" -> ((s, d) => MultimodalOps.assetDedupFast(s, d)),
-    // xxhash64 token bucketing for the CLIP-filter alignment (registered
-    // q_mm_align keeps the md5 chain for the DuckDB replay); pair-set +
-    // asset-side quantization spec-pinned identical across the hash pair
-    "x_mm_align_fast" -> ((s, d) => MultimodalOps.crossModalAlignFast(s, d)),
-    // estimate-only sketch projections — the shapes a 100 TB run deploys.
-    // Since r15 the REGISTERED q_ forms fold exact-answer verification
-    // into their output (so the hash gate covers the sketches), which
-    // adds exactly the work the production paths exist to avoid (an
-    // exact distinct shuffle / exact token counts / a rank-check second
-    // pass) — these aliases keep the undistorted timings on the record
-    "x_dau_approx_est" -> ((s, d) => CoreOps.dauApproxEstimate(s, d)),
-    "x_heavy_hitters_cms_est" ->
-      ((s, d) => TextOps.heavyHittersCmsEstimate(s, d)),
-    "x_len_quantiles_est" ->
-      ((s, d) => PipelineOps.lengthQuantilesApproxValues(s, d)))
+  /** `runs` in run order: the fast entries first by name, then the
+    * [[knownSlow]] tail in its order. Bench and Verify both schedule by
+    * it. */
+  def runOrder[A](runs: Map[String, A]): Seq[(String, A)] =
+    runs.toSeq.sortBy { case (n, _) => (knownSlow.indexOf(n), n) }
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    CoreOps.oracleSql ++ TextOps.oracleSql ++ DedupOps.oracleSql ++
-      SimilarityOps.oracleSql ++ MultimodalOps.oracleSql ++ ServingOps.oracleSql ++
-      PipelineOps.oracleSql ++ AnalyticOps.oracleSql ++ ScaleOps.oracleSql ++
-      GraphOps.oracleSql
+  /** The comma-separated names in env var `knob` (an iteration aid), or
+    * None when it is unset. An empty list or a name outside `known` is an
+    * error, so a typo cannot silently shrink a run to nothing. */
+  def only(knob: String, known: Set[String],
+      env: Map[String, String] = sys.env): Option[Set[String]] =
+    env.get(knob).map { v =>
+      val names = v.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      require(names.nonEmpty, s"$knob is set but empty: it would select nothing")
+      val unknown = names -- known
+      require(unknown.isEmpty,
+        s"$knob names not in the registry: ${unknown.toSeq.sorted.mkString(", ")}")
+      names
+    }
 }

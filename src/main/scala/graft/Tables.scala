@@ -97,7 +97,6 @@ object Tables {
     * day/range scans use [[eventsInRange]], which applies the predicate
     * to the PHYSICAL column per flavor before normalizing. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     val raw =
       try t(spark, dir, "events")
       catch {

@@ -56,12 +56,9 @@ object Tools {
     GraftSession.build(s"local[$cpus]", appName, cpus)
   }
 
-  /** Registry first, then the bench-only x_ fast-path aliases. */
-  private def entries = SparkEntry.queries ++ SparkEntry.benchExtras
-
   private def explain(name: String, sfDir: String, reps: Int): Unit = {
     val spark = session("graft-explain")
-    val fn = entries(name)
+    val fn = (SparkEntry.queries ++ SparkEntry.benchExtras)(name)
     fn(spark, sfDir).explain("formatted")
     (1 to reps).foreach { r =>
       val t0 = System.nanoTime()
@@ -76,13 +73,19 @@ object Tools {
     spark.conf.set("spark.sql.adaptive.enabled",
       sys.env.getOrElse("SPARK_GRAFT_PLAN_ADAPTIVE", "true"))
     spark.sparkContext.setLogLevel("ERROR")
-    entries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    planTrees(spark, sfDir).foreach { case (name, tree) =>
       println(s"##### $name")
-      try println(fn(spark, sfDir).queryExecution.executedPlan.treeString)
-      catch { case e: Throwable => println(s"(plan failed: ${e.getMessage})") }
+      println(tree)
     }
     spark.stop()
   }
+
+  /** Every entry's initial physical plan tree (no execution), by name. */
+  private def planTrees(spark: SparkSession, sfDir: String): Iterator[(String, String)] =
+    SparkEntry.entries.sortBy(_.name).iterator.map { case Entry(name, fn, _) =>
+      name -> (try fn(spark, sfDir).queryExecution.executedPlan.treeString
+        catch { case e: Throwable => s"(plan failed: ${e.getMessage})" })
+    }
 
   private val DigestFile = "plans/digests.tsv"
   private val DigestCpus = 4
@@ -90,7 +93,7 @@ object Tools {
   /** Masks what differs between two plannings of the same query:
     * expression ids, plan ids, Scala lambda class names and identity-hash
     * suffixes. */
-  private[graft] def maskPlan(tree: String): String = tree
+  private def maskPlan(tree: String): String = tree
     .replaceAll("#\\d+", "#")
     .replaceAll("plan_id=\\d+", "plan_id=")
     .replaceAll("\\$\\$Lambda[^@\\s,)\\]]*", "\\$\\$Lambda")
@@ -98,7 +101,7 @@ object Tools {
 
   /** `name`, hash of the masked tree, then the exchange, sort,
     * broadcast-join and scan node counts, tab-separated. */
-  private[graft] def digestRow(name: String, tree: String): String = {
+  private def digestRow(name: String, tree: String): String = {
     val masked = maskPlan(tree)
     val nodes = masked.linesIterator.map(_
       .replaceFirst("^[\\s:+|-]*(\\*\\(\\d+\\)\\s*)?", "")
@@ -122,12 +125,7 @@ object Tools {
       s"local[$DigestCpus]", "graft-plan-digest", DigestCpus)
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.sparkContext.setLogLevel("ERROR")
-    val rows = entries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val tree =
-        try fn(spark, sfDir).queryExecution.executedPlan.treeString
-        catch { case e: Throwable => s"(plan failed: ${e.getMessage})" }
-      digestRow(name, tree)
-    }
+    val rows = planTrees(spark, sfDir).map { case (name, tree) => digestRow(name, tree) }.toList
     spark.stop()
     digestHeader(sfDir) ++ rows
   }

@@ -11,9 +11,6 @@ import java.util.concurrent.{Executors, TimeUnit}
   * the oracle file was written last and the kill landed first.
   */
 object Verify {
-  /** Slow queries scheduled last — see [[SparkEntry.knownSlow]]. */
-  private val knownSlow = SparkEntry.knownSlow
-
   /** Queries in flight at once; each retires its own caches when done. */
   private val Threads = 4
 
@@ -56,22 +53,8 @@ object Verify {
     Option(new java.io.File(outDir).listFiles()).foreach(_.foreach { f =>
       if (f.getName.startsWith(".tmp_")) deleteRecursively(f)
     })
-    // iteration aid, mirroring Bench's SPARK_GRAFT_BENCH_ONLY: run a comma
-    // list of query names only (unknown names are a hard error so a typo
-    // can't silently verify nothing)
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      require(names.nonEmpty,
-        "SPARK_GRAFT_VERIFY_ONLY is set but empty — an empty selection " +
-          "would produce a green-looking zero-coverage gate")
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"SPARK_GRAFT_VERIFY_ONLY unknown: $unknown")
-    }
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
+    // iteration aid, mirroring Bench's SPARK_GRAFT_BENCH_ONLY
+    val only = SparkEntry.only("SPARK_GRAFT_VERIFY_ONLY", SparkEntry.queries.keySet)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -89,9 +72,8 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
     // fast queries first, known-slow ones last (kill-cost minimization)
-    val ordered = selected.toSeq.sortBy { case (n, _) =>
-      (knownSlow.indexOf(n), n) // -1 (not slow) sorts before 0..7
-    }
+    val ordered = SparkEntry.runOrder(
+      SparkEntry.queries.filter { case (n, _) => only.forall(_(n)) })
     val pool = Executors.newFixedThreadPool(Threads)
     ordered.foreach { case (name, fn) =>
       pool.submit(new Runnable {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Entry, Tables}
 
 /** Temporal-join and analytic operators beyond the reference's surface —
   * the join/window shapes a production analytics engine needs that the
@@ -446,26 +446,8 @@ object AnalyticOps {
   }
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ship_latency" -> (shipLatency _),
-    "q_corr" -> (corrStats _),
-    "q_mad_outliers" -> (madOutliers _),
-    "q_rfm" -> (rfm _),
-    "q_transitions" -> (transitions _),
-    "q_wau" -> (wau _),
-    "q_gapfill" -> (gapfillActivity _),
-    "q_retention" -> (retention _),
-    "q_asof_join" -> (asofJoin _),
-    "q_range_join" -> (rangeJoin _),
-    "q_cube_sales" -> (cubeSales _),
-    "q_rolling_spend" -> (rollingSpend _),
-    "q_session_window" -> (sessionWindow _),
-    "q_scd2" -> (scd2 _),
-    "q_rank_suite" -> (rankSuite _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_ship_latency" ->
+  lazy val entries: Seq[Entry] = Seq(
+    Entry("q_ship_latency", shipLatency, Some(
       """WITH fs AS (
            SELECT l_orderkey, min(CAST(l_shipdate AS DATE)) AS first_ship
            FROM lineitem GROUP BY 1),
@@ -477,8 +459,8 @@ object AnalyticOps {
                 CAST(sum(lat) AS BIGINT) AS sum_days,
                 min(lat) AS min_days, max(lat) AS max_days,
                 CAST(sum(lat) AS DOUBLE) / count(*) AS avg_days
-         FROM lat GROUP BY 1 ORDER BY o_orderpriority""",
-    "q_corr" ->
+         FROM lat GROUP BY 1 ORDER BY o_orderpriority""")),
+    Entry("q_corr", corrStats, Some(
       """WITH m AS (
            SELECT l_returnflag,
                   CAST(l_quantity AS DECIMAL(20,0)) AS x,
@@ -499,8 +481,8 @@ object AnalyticOps {
                          * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
                               - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
                   AS corr_qty_price
-         FROM s ORDER BY l_returnflag""",
-    "q_mad_outliers" ->
+         FROM s ORDER BY l_returnflag""")),
+    Entry("q_mad_outliers", madOutliers, Some(
       """WITH med AS (
            SELECT source, quantile_cont(n_chars, 0.5) AS med
            FROM documents GROUP BY 1),
@@ -512,8 +494,8 @@ object AnalyticOps {
          SELECT d.doc_id, d.source, d.n_chars, mad.med, mad.mad
          FROM documents d JOIN mad USING (source)
          WHERE mad.mad > 0 AND abs(d.n_chars - mad.med) > mad.mad * 3
-         ORDER BY d.doc_id""",
-    "q_rfm" ->
+         ORDER BY d.doc_id""")),
+    Entry("q_rfm", rfm, Some(
       """WITH per AS (
            SELECT o_custkey, max(CAST(o_orderdate AS DATE)) AS last_d,
                   count(*) AS frequency,
@@ -532,8 +514,8 @@ object AnalyticOps {
                 ntile(4) OVER (ORDER BY recency_days, o_custkey) || '-' ||
                 ntile(4) OVER (ORDER BY frequency DESC, o_custkey) || '-' ||
                 ntile(4) OVER (ORDER BY monetary DESC, o_custkey) AS segment
-         FROM r ORDER BY o_custkey""",
-    "q_transitions" ->
+         FROM r ORDER BY o_custkey""")),
+    Entry("q_transitions", transitions, Some(
       """WITH e AS (
            SELECT user_id, event_type,
                   lag(event_type) OVER (PARTITION BY user_id
@@ -541,8 +523,8 @@ object AnalyticOps {
            FROM events)
          SELECT from_type, event_type AS to_type, count(*) AS n
          FROM e WHERE from_type IS NOT NULL
-         GROUP BY 1, 2 ORDER BY from_type, to_type""",
-    "q_wau" ->
+         GROUP BY 1, 2 ORDER BY from_type, to_type""")),
+    Entry("q_wau", wau, Some(
       """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
          dm AS (SELECT max(d) AS d_max FROM ud),
          x AS (
@@ -554,8 +536,8 @@ object AnalyticOps {
                 count(DISTINCT user_id) AS wau
          FROM x CROSS JOIN dm
          WHERE report_d <= d_max
-         GROUP BY 1 ORDER BY dt""",
-    "q_gapfill" ->
+         GROUP BY 1 ORDER BY dt""")),
+    Entry("q_gapfill", gapfillActivity, Some(
       """WITH daily AS (
            SELECT user_id, CAST(ts AS DATE) AS d, count(*) AS n
            FROM events GROUP BY 1, 2),
@@ -575,8 +557,8 @@ object AnalyticOps {
                   d) AS days_since_active
          FROM j
          WINDOW w AS (PARTITION BY user_id ORDER BY d ROWS UNBOUNDED PRECEDING)
-         ORDER BY user_id, dt""",
-    "q_retention" ->
+         ORDER BY user_id, dt""")),
+    Entry("q_retention", retention, Some(
       """WITH ev AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
          cohort AS (SELECT user_id, min(d) AS c0 FROM ev GROUP BY 1),
          sizes AS (SELECT c0, count(*) AS cohort_n FROM cohort GROUP BY 1),
@@ -589,11 +571,11 @@ object AnalyticOps {
                 r.n_users, s.cohort_n,
                 CAST(r.n_users AS DOUBLE) / s.cohort_n AS retained_frac
          FROM r JOIN sizes s ON r.c0 = s.c0
-         ORDER BY cohort_dt, day_offset""",
+         ORDER BY cohort_dt, day_offset""")),
     // Oracle uses the naive pair join + row_number — O(pairs), fine at
     // verify SF, and semantically the ground truth for the running-last
     // formulation above.
-    "q_asof_join" ->
+    Entry("q_asof_join", asofJoin, Some(
       """WITH ev AS (
            SELECT user_id, epoch_ns(ts) AS tn, event_id, event_type
            FROM events),
@@ -607,8 +589,8 @@ object AnalyticOps {
                 p.event_id AS asof_event_id, p.event_type AS asof_event_type
          FROM orders o LEFT JOIN pairs p
            ON p.o_orderkey = o.o_orderkey AND p.rn = 1
-         ORDER BY o.o_orderkey""",
-    "q_range_join" ->
+         ORDER BY o.o_orderkey""")),
+    Entry("q_range_join", rangeJoin, Some(
       """SELECT o.o_orderkey,
                 count(e.ts) AS n_events,
                 count(DISTINCT e.event_type) AS n_event_types,
@@ -618,16 +600,16 @@ object AnalyticOps {
           AND epoch_ns(e.ts) >= epoch_ns(o.o_orderdate)
           AND epoch_ns(e.ts) <  epoch_ns(o.o_orderdate) + 7 * 86400000000000
          GROUP BY o.o_orderkey
-         ORDER BY o.o_orderkey""",
-    "q_cube_sales" ->
+         ORDER BY o.o_orderkey""")),
+    Entry("q_cube_sales", cubeSales, Some(
       """SELECT o_orderstatus, o_orderpriority,
                 CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS gid,
                 count(*) AS n,
                 CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
          FROM orders
          GROUP BY CUBE (o_orderstatus, o_orderpriority)
-         ORDER BY gid, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""",
-    "q_rolling_spend" ->
+         ORDER BY gid, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""")),
+    Entry("q_rolling_spend", rollingSpend, Some(
       """WITH od AS (
            SELECT o_orderkey, o_custkey, o_totalprice,
                   CAST(date_diff('day', DATE '1970-01-01',
@@ -639,8 +621,8 @@ object AnalyticOps {
          FROM od
          WINDOW w AS (PARTITION BY o_custkey ORDER BY dnum
                       RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
-         ORDER BY o_orderkey""",
-    "q_rank_suite" ->
+         ORDER BY o_orderkey""")),
+    Entry("q_rank_suite", rankSuite, Some(
       """SELECT o_orderkey, o_orderpriority, o_totalprice,
                 row_number() OVER w AS rn,
                 rank() OVER w AS rnk,
@@ -652,8 +634,8 @@ object AnalyticOps {
          FROM orders
          WINDOW w AS (PARTITION BY o_orderpriority
                       ORDER BY o_totalprice DESC, o_orderkey)
-         ORDER BY o_orderpriority, rn""",
-    "q_scd2" ->
+         ORDER BY o_orderpriority, rn""")),
+    Entry("q_scd2", scd2, Some(
       """WITH o AS (
            SELECT o_custkey, o_orderkey, o_orderstatus, o_orderdate,
                   row_number() OVER w AS version,
@@ -664,7 +646,7 @@ object AnalyticOps {
                 strftime(o_orderdate, '%Y-%m-%d') AS valid_from,
                 strftime(next_date, '%Y-%m-%d') AS valid_to,
                 next_date IS NULL AS is_current
-         FROM o ORDER BY o_custkey, version""",
+         FROM o ORDER BY o_custkey, version""")),
     // Session islands: break when the gap to the previous event is >= 30
     // minutes (session_window merges strictly-overlapping [t, t+gap)
     // intervals, i.e. diff < gap merges). The oracle sessionizes in the
@@ -673,7 +655,7 @@ object AnalyticOps {
     // documented design, so gap comparisons and second floors must use
     // the same truncation (double-precision epoch() or nanos-exact diffs
     // would diverge on sub-microsecond data).
-    "q_session_window" ->
+    Entry("q_session_window", sessionWindow, Some(
       """WITH e AS (
            SELECT user_id, epoch_ns(ts) // 1000 AS tus, event_id FROM events),
          b AS (
@@ -698,6 +680,6 @@ object AnalyticOps {
                 st // 1000000 AS session_start_sec,
                 (en + 1800000000) // 1000000 AS session_end_sec,
                 n_events
-         FROM s ORDER BY user_id, session_start_sec""",
+         FROM s ORDER BY user_id, session_start_sec""")),
   )
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Entry, Tables}
 
 /** Core operator parity with the reference (SURVEY.md §2), re-expressed
   * Spark-first over the driver testdata tables.
@@ -684,54 +684,20 @@ object CoreOps {
   }
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_bean_to_json" -> (beanToJson _),
-    "q_sql_pricing" -> (sqlPricingSummary _),
-    "q_sql_shipping" -> (sqlShippingPriority _),
-    "q_sql_volume" -> (sqlLocalSupplierVolume _),
-    "q_dau_approx" -> (dauApprox _),
-    "q_dau_sketch_rollup" -> (dauSketchRollup _),
-    "q_dau_info" -> (dauInfo _),
-    "q_order_wide_full" -> (orderWideFull _),
-    "q_tumbling_window" -> (tumblingWindow _),
-    "q_semi_join" -> (ordersWithReturns _),
-    "q_anti_join" -> (customersNoOrders _),
-    "q_full_outer" -> (dailyReconcile _),
-    "q_latest_event" -> (latestEventPerUser _),
-    "q_set_ops" -> (userSetOps _),
-    "q_funnel" -> (conversionFunnel _),
-    "q_dau_pivot" -> (dauPivot _),
-    "q_dau_unpivot" -> (dauUnpivot _),
-    "q_event_profile" -> (eventProfile _),
-    "q_top_per_brand" -> (topPerBrand _),
-    "q_dau_dod_window" -> (dauDayOverDayWindow _),
-    "q_sales_rollup" -> (salesRollup _),
-    "q_dau_total" -> (dauTotal _),
-    "q_dau_hourly" -> (dauHourly _),
-    "q_dau_dod" -> (dauDayOverDay _),
-    "q_first_seen" -> (firstSeen _),
-    "q_cdc_route" -> (cdcRoute _),
-    "q_order_enrich" -> (orderEnrich _),
-    "q_snowflake" -> (snowflake _),
-    "q_order_wide" -> (orderWide _),
-    "q_age_bucket" -> (ageBucket _),
-    "q_brand_avg_topn" -> (brandAvgTopN _),
-    "q_search_filter" -> (searchFilter _),
-    "q_pagination" -> (pagination _),
-    "q_explode" -> (explodeArray _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_bean_to_json" ->
+  lazy val entries: Seq[Entry] = Seq(
+    Entry("q_bean_to_json", beanToJson, Some(
       """SELECT o_orderkey,
                 to_json(struct_pack(o_orderkey := o_orderkey,
                                     o_orderstatus := o_orderstatus,
                                     o_orderpriority := o_orderpriority)) AS json
-         FROM orders ORDER BY o_orderkey""",
-    "q_sql_pricing" -> graft.SqlQueries.PricingSummary,
-    "q_sql_shipping" -> graft.SqlQueries.ShippingPriority,
-    "q_sql_volume" -> graft.SqlQueries.LocalSupplierVolume,
-    "q_dau_info" ->
+         FROM orders ORDER BY o_orderkey""")),
+    Entry("q_sql_pricing", sqlPricingSummary,
+      Some(graft.SqlQueries.PricingSummary)),
+    Entry("q_sql_shipping", sqlShippingPriority,
+      Some(graft.SqlQueries.ShippingPriority)),
+    Entry("q_sql_volume", sqlLocalSupplierVolume,
+      Some(graft.SqlQueries.LocalSupplierVolume)),
+    Entry("q_dau_info", dauInfo, Some(
       """WITH fs AS (
            SELECT strftime(ts, '%Y-%m-%d') AS dt, user_id,
                   event_type, strftime(ts, '%H') AS hr
@@ -743,15 +709,15 @@ object CoreOps {
                 CAST(user_id AS VARCHAR) AS uid,
                 CAST(user_id AS VARCHAR) AS ar,
                 event_type AS ch, 'v1.0' AS vc, dt, hr, '00' AS mi
-         FROM fs ORDER BY dt, mid""",
-    "q_top_per_brand" ->
+         FROM fs ORDER BY dt, mid""")),
+    Entry("q_top_per_brand", topPerBrand, Some(
       """SELECT p_brand, rk, p_partkey, p_name, p_retailprice FROM (
            SELECT p_brand, p_partkey, p_name, p_retailprice,
                   row_number() OVER (PARTITION BY p_brand
                     ORDER BY p_retailprice DESC, p_partkey ASC) AS rk
            FROM part)
-         WHERE rk <= 3 ORDER BY p_brand, rk""",
-    "q_dau_dod_window" ->
+         WHERE rk <= 3 ORDER BY p_brand, rk""")),
+    Entry("q_dau_dod_window", dauDayOverDayWindow, Some(
       """WITH h AS (
            SELECT CAST(ts AS DATE) AS d, strftime(ts, '%H') AS hr,
                   count(DISTINCT user_id) AS dau
@@ -763,28 +729,32 @@ object CoreOps {
            FROM h)
          SELECT strftime(d, '%Y-%m-%d') AS dt, hr, dau,
                 CASE WHEN prev_d = d - 1 THEN prev_dau END AS dau_yd
-         FROM lagged ORDER BY 1, 2""",
-    "q_sales_rollup" ->
+         FROM lagged ORDER BY 1, 2""")),
+    Entry("q_sales_rollup", salesRollup, Some(
       """SELECT l_returnflag, l_linestatus,
                 CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
                 count(*) AS n
          FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-         ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""",
-    "q_dau_total" ->
+         ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""")),
+    Entry("q_dau_total", dauTotal, Some(
       """SELECT strftime(ts, '%Y-%m-%d') AS dt, count(DISTINCT user_id) AS dau
-         FROM events GROUP BY dt ORDER BY dt""",
+         FROM events GROUP BY dt ORDER BY dt""")),
     // the sketch's exact twin + the in-bound boolean: DuckDB computes the
     // exact count and asserts TRUE — a Spark estimate outside the folded
     // 4σ bound flips hll_ok and hash-fails the gate
-    "q_dau_approx" ->
+    Entry("q_dau_approx", dauApprox, Some(
       """SELECT strftime(ts, '%Y-%m-%d') AS dt,
                 count(DISTINCT user_id) AS dau_exact, TRUE AS hll_ok
-         FROM events GROUP BY dt ORDER BY dt""",
-    "q_dau_hourly" ->
+         FROM events GROUP BY dt ORDER BY dt""")),
+    // estimate only: the q_ form adds the exact distinct shuffle that
+    // checks the sketch, the work the production path exists to avoid
+    Entry("x_dau_approx_est", dauApproxEstimate),
+    Entry("q_dau_sketch_rollup", dauSketchRollup),
+    Entry("q_dau_hourly", dauHourly, Some(
       """SELECT strftime(ts, '%Y-%m-%d') AS dt, strftime(ts, '%H') AS hr,
                 count(DISTINCT user_id) AS dau
-         FROM events GROUP BY dt, hr ORDER BY dt, hr""",
-    "q_dau_dod" ->
+         FROM events GROUP BY dt, hr ORDER BY dt, hr""")),
+    Entry("q_dau_dod", dauDayOverDay, Some(
       """WITH h AS (
            SELECT CAST(ts AS DATE) AS d, strftime(ts, '%H') AS hr,
                   count(DISTINCT user_id) AS dau
@@ -792,8 +762,8 @@ object CoreOps {
          SELECT strftime(t.d, '%Y-%m-%d') AS dt, t.hr AS hr, t.dau AS dau,
                 y.dau AS dau_yd
          FROM h t LEFT JOIN h y ON y.d = t.d - 1 AND y.hr = t.hr
-         ORDER BY 1, 2""",
-    "q_first_seen" ->
+         ORDER BY 1, 2""")),
+    Entry("q_first_seen", firstSeen, Some(
       """SELECT strftime(ts, '%Y-%m-%d') AS dt, user_id,
                 event_id AS first_event_id, event_type AS first_event_type,
                 strftime(ts, '%H') AS first_hr
@@ -801,8 +771,8 @@ object CoreOps {
          QUALIFY row_number() OVER (
            PARTITION BY strftime(ts, '%Y-%m-%d'), user_id
            ORDER BY event_id) = 1
-         ORDER BY dt, user_id""",
-    "q_cdc_route" ->
+         ORDER BY dt, user_id""")),
+    Entry("q_cdc_route", cdcRoute, Some(
       """WITH m AS (
            SELECT event_id,
                   CASE event_type WHEN 'purchase' THEN 'order_info'
@@ -822,8 +792,8 @@ object CoreOps {
             OR (table_name = 'order_detail' AND op = 'insert')
             OR (table_name = 'base_province' AND (op = 'insert' OR op = 'update') OR op = 'bootstrap-insert')
             OR (table_name = 'user_info' AND (op = 'insert' OR op = 'update') OR op = 'bootstrap-insert'))
-         ORDER BY event_id""",
-    "q_order_enrich" ->
+         ORDER BY event_id""")),
+    Entry("q_order_enrich", orderEnrich, Some(
       """SELECT o.o_orderkey, o.o_orderstatus, o.o_totalprice,
                 strftime(o.o_orderdate, '%Y-%m-%d') AS dt,
                 c.c_name, c.c_mktsegment, n.n_name, r.r_name
@@ -831,8 +801,8 @@ object CoreOps {
          LEFT JOIN customer c ON o.o_custkey = c.c_custkey
          LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
          LEFT JOIN region r ON n.n_regionkey = r.r_regionkey
-         ORDER BY o.o_orderkey""",
-    "q_snowflake" ->
+         ORDER BY o.o_orderkey""")),
+    Entry("q_snowflake", snowflake, Some(
       """SELECT l.l_orderkey, l.l_linenumber, l.l_partkey, l.l_quantity,
                 l.l_extendedprice, p.p_name, p.p_brand, p.p_type,
                 s.s_name, n.n_name, r.r_name
@@ -841,8 +811,8 @@ object CoreOps {
          LEFT JOIN supplier s ON l.l_suppkey = s.s_suppkey
          LEFT JOIN nation n ON s.s_nationkey = n.n_nationkey
          LEFT JOIN region r ON n.n_regionkey = r.r_regionkey
-         ORDER BY l.l_orderkey, l.l_linenumber""",
-    "q_order_wide" ->
+         ORDER BY l.l_orderkey, l.l_linenumber""")),
+    Entry("q_order_wide", orderWide, Some(
       """SELECT o.o_orderkey AS order_id, l.l_linenumber AS detail_id,
                 o.o_custkey AS user_id, o.o_orderstatus AS order_status,
                 o.o_totalprice AS final_total_amount,
@@ -850,21 +820,21 @@ object CoreOps {
                 l.l_partkey AS sku_id, l.l_quantity AS sku_num,
                 l.l_extendedprice AS order_price, l.l_discount AS discount
          FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-         ORDER BY order_id, detail_id""",
-    "q_semi_join" ->
+         ORDER BY order_id, detail_id""")),
+    Entry("q_semi_join", ordersWithReturns, Some(
       """SELECT o_orderkey, o_orderstatus, o_totalprice
          FROM orders o
          WHERE EXISTS (SELECT 1 FROM lineitem l
                        WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
-         ORDER BY o_orderkey""",
-    "q_anti_join" ->
+         ORDER BY o_orderkey""")),
+    Entry("q_anti_join", customersNoOrders, Some(
       """SELECT c_custkey, c_name, c_mktsegment
          FROM customer c
          WHERE NOT EXISTS (SELECT 1 FROM orders o
                            WHERE o.o_custkey = c.c_custkey
                              AND o.o_orderpriority = '1-URGENT')
-         ORDER BY c_custkey""",
-    "q_full_outer" ->
+         ORDER BY c_custkey""")),
+    Entry("q_full_outer", dailyReconcile, Some(
       """WITH e AS (
            SELECT strftime(ts, '%Y-%m-%d') AS d, count(DISTINCT user_id) AS dau
            FROM events GROUP BY 1),
@@ -873,8 +843,8 @@ object CoreOps {
            FROM orders GROUP BY 1)
          SELECT COALESCE(d, d2) AS day, dau, n_orders
          FROM e FULL OUTER JOIN o ON d = d2
-         ORDER BY day""",
-    "q_funnel" ->
+         ORDER BY day""")),
+    Entry("q_funnel", conversionFunnel, Some(
       """WITH s AS (
            SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS s_sec,
                   strftime(ts, '%Y-%m-%d') AS dt
@@ -887,8 +857,8 @@ object CoreOps {
          FROM s LEFT JOIN p
            ON s.user_id = p.p_user AND p.p_sec >= s.s_sec
           AND p.p_sec < s.s_sec + 604800
-         GROUP BY dt ORDER BY dt""",
-    "q_set_ops" ->
+         GROUP BY dt ORDER BY dt""")),
+    Entry("q_set_ops", userSetOps, Some(
       """SELECT user_id, 'purchase_and_click' AS cohort FROM (
            SELECT user_id FROM events WHERE event_type = 'purchase'
            INTERSECT
@@ -898,23 +868,23 @@ object CoreOps {
            SELECT user_id FROM events WHERE event_type = 'view'
            EXCEPT
            SELECT user_id FROM events WHERE event_type = 'purchase')
-         ORDER BY cohort, user_id""",
-    "q_latest_event" ->
+         ORDER BY cohort, user_id""")),
+    Entry("q_latest_event", latestEventPerUser, Some(
       """SELECT user_id, arg_max(event_type, event_id) AS last_event_type,
                 max(event_id) AS last_event_id, count(*) AS n_events
-         FROM events GROUP BY user_id ORDER BY user_id""",
-    "q_dau_pivot" -> (
+         FROM events GROUP BY user_id ORDER BY user_id""")),
+    Entry("q_dau_pivot", dauPivot, Some(
       "SELECT strftime(ts, '%Y-%m-%d') AS dt, " +
         (0 until 24).map(h =>
           f"count(DISTINCT user_id) FILTER (WHERE strftime(ts, '%%H') = '$h%02d') AS " + "\"" + f"$h%02d" + "\"")
           .mkString(", ") +
-        " FROM events GROUP BY dt ORDER BY dt"),
-    "q_event_profile" ->
+        " FROM events GROUP BY dt ORDER BY dt")),
+    Entry("q_event_profile", eventProfile, Some(
       """SELECT user_id, count(*) AS n_events,
                 string_agg(event_type, ',' ORDER BY event_id) AS event_seq
-         FROM events GROUP BY user_id ORDER BY user_id""",
+         FROM events GROUP BY user_id ORDER BY user_id""")),
     // the melted matrix == dense (day × hour) grid of hourly DAU, 0-filled
-    "q_dau_unpivot" ->
+    Entry("q_dau_unpivot", dauUnpivot, Some(
       """WITH days AS (SELECT DISTINCT strftime(ts, '%Y-%m-%d') AS dt FROM events),
          hrs AS (SELECT printf('%02d', h) AS hr FROM generate_series(0, 23) t(h)),
          hourly AS (
@@ -924,12 +894,12 @@ object CoreOps {
          SELECT d.dt, h.hr, COALESCE(y.dau, 0) AS dau
          FROM days d CROSS JOIN hrs h
          LEFT JOIN hourly y ON y.dt = d.dt AND y.hr = h.hr
-         ORDER BY d.dt, h.hr""",
-    "q_tumbling_window" ->
+         ORDER BY d.dt, h.hr""")),
+    Entry("q_tumbling_window", tumblingWindow, Some(
       """SELECT CAST(floor(floor(epoch(ts)) / 21600) * 21600 AS BIGINT) AS bucket_start_sec,
                 count(*) AS n_events, count(DISTINCT user_id) AS n_users
-         FROM events GROUP BY 1 ORDER BY 1""",
-    "q_order_wide_full" ->
+         FROM events GROUP BY 1 ORDER BY 1""")),
+    Entry("q_order_wide_full", orderWideFull, Some(
       """SELECT o.o_orderkey AS order_id, l.l_linenumber AS detail_id,
                 o.o_custkey AS user_id, o.o_orderstatus AS order_status,
                 o.o_totalprice AS final_total_amount,
@@ -954,35 +924,35 @@ object CoreOps {
          LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
          LEFT JOIN region r ON n.n_regionkey = r.r_regionkey
          LEFT JOIN part p ON l.l_partkey = p.p_partkey
-         ORDER BY order_id, detail_id, sku_id""",
-    "q_age_bucket" ->
+         ORDER BY order_id, detail_id, sku_id""")),
+    Entry("q_age_bucket", ageBucket, Some(
       """SELECT c_custkey, c_name,
                 CASE WHEN c_mktsegment = 'AUTOMOBILE' THEN '女' ELSE '男' END AS gender,
                 CASE WHEN c_mktsegment = 'AUTOMOBILE' THEN '永远18岁'
                      WHEN c_acctbal <= 1800 THEN '少年'
                      WHEN c_acctbal <= 4000 THEN '青年'
                      ELSE '老年' END AS age_group
-         FROM customer ORDER BY c_custkey""",
-    "q_brand_avg_topn" ->
+         FROM customer ORDER BY c_custkey""")),
+    Entry("q_brand_avg_topn", brandAvgTopN, Some(
       """SELECT p_brand,
                 CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE)
                   / count(*) AS avg_price,
                 count(*) AS n_parts
          FROM part GROUP BY p_brand
-         ORDER BY avg_price ASC, p_brand ASC LIMIT 10""",
-    "q_search_filter" ->
+         ORDER BY avg_price ASC, p_brand ASC LIMIT 10""")),
+    Entry("q_search_filter", searchFilter, Some(
       """SELECT p_partkey, p_name, p_brand, p_retailprice
          FROM part
          WHERE p_retailprice BETWEEN 905 AND 915
            AND contains(p_name, 'red')
-         ORDER BY p_partkey""",
-    "q_pagination" ->
+         ORDER BY p_partkey""")),
+    Entry("q_pagination", pagination, Some(
       """SELECT o_orderkey, o_custkey, o_totalprice
          FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC
-         LIMIT 10 OFFSET 20""",
-    "q_explode" ->
+         LIMIT 10 OFFSET 20""")),
+    Entry("q_explode", explodeArray, Some(
       """SELECT l_orderkey, l_linenumber, unnest(generate_series(1, l_linenumber)) AS n
          FROM lineitem WHERE l_linenumber <= 7
-         ORDER BY l_orderkey, l_linenumber, n""",
+         ORDER BY l_orderkey, l_linenumber, n""")),
   )
 }

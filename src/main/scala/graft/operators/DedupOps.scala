@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftext.GraftFunctions
 
-import graft.Tables
+import graft.{Entry, Tables}
 
 /** Deduplication operators for a large-scale training-data pipeline.
   *
@@ -2360,44 +2360,6 @@ object DedupOps {
         .distinct())
   }
 
-  // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_substr_dedup" -> (substrDedup _),
-    "q_substr_stats" -> (substrStats _),
-    "q_substr_intra" -> (substrIntra _),
-    "q_substr_scrub" -> (substrScrub _),
-    "q_snap_substr" -> (substrSnap _),
-    "q_contamination_spans" -> (contaminationSpans _),
-    "q_contamination_scrub" -> (contaminationScrub _),
-    "q_dedup_report" -> (dedupReport _),
-    "q_chunk_shared" -> (chunkShared _),
-    "q_containment" -> (containment _),
-    "q_dedup_exact" -> (dedupExact _),
-    "q_ngram_jaccard" -> (ngramJaccard _),
-    "q_contrastive_pairs" -> (contrastivePairs _),
-    "q_neardup_keep" -> (nearDupKeep _),
-    "q_minhash_lsh" -> (minhashLsh _),
-    "q_minhash_oracle" -> (minhashOracle _),
-    "q_source_overlap" -> (sourceOverlap _),
-    "q_split_leakage" -> (splitLeakage _),
-    "q_dedup_tau_sweep" -> (dedupTauSweep _),
-    "q_lsh_recall" -> (lshRecall _),
-    "q_lsh_tuning" -> (lshTuning _),
-    "q_simhash" -> (simhashPairs _),
-    "q_hamming_neardup" -> (hammingNearDup _),
-    "q_dup_components" -> (dupComponents _),
-    "q_contamination" -> (contamination _),
-    "q_contamination_bloom" -> (contaminationBloom _),
-    "q_contamination_pairs" -> (contaminationPairs _),
-    "q_contamination_groups" -> (contaminationGroups _),
-    "q_simhash_clusters" -> (simhashClusters _),
-    "q_embed_neardup" -> (embedNearDup _),
-    "q_snap_dedup" -> (snapshotDedup _),
-    "q_snap_neardup" -> (snapshotNearDup _),
-    "q_sim_degree" -> (simDegree _),
-    "q_dup_canon" -> (dupCanonical _),
-  )
-
   // ------------------------------------------------ shared oracle fragments
   // DuckDB text shared by the oracle twins below, one definition each.
   // Only oracle text builds on these (never a Spark-side builder, and they
@@ -2946,10 +2908,11 @@ object DedupOps {
          FROM card c LEFT JOIN hits h ON c.doc_id = h.doc_id
          ORDER BY c.doc_id"""
 
-  val oracleSql: Map[String, String] = Map(
+  // ------------------------------------------------------------ registry
+  lazy val entries: Seq[Entry] = Seq(
     // exact substring dedup: per-position window hashes, then the
     // identical inverted-index join + diagonal island merge
-    "q_substr_dedup" ->
+    Entry("q_substr_dedup", substrDedup, Some(
       s"""WITH fpg AS (
            ${textGroupSql()}),
          pos AS (
@@ -2965,10 +2928,10 @@ object DedupOps {
          SELECT doc_a, doc_b, n_docs_a, n_docs_b, a_start, b_start,
                 span_tokens
          FROM s WHERE span_tokens >= $MinSpanTokens
-         ORDER BY doc_a, doc_b, a_start, b_start""",
+         ORDER BY doc_a, doc_b, a_start, b_start""")),
     // the pair-mass audit: per-hash occurrence counts off the same
     // position CTE, cross-joined with the cap sweep literals
-    "q_substr_stats" ->
+    Entry("q_substr_stats", substrStats, Some(
       s"""WITH fpg AS (
            ${textGroupSql()}),
          pos AS (
@@ -2984,10 +2947,10 @@ object DedupOps {
                   AS positions_dropped,
                 CAST(sum(CASE WHEN t <= cap THEN (t * (t - 1)) // 2
                      ELSE 0 END) AS BIGINT) AS pair_mass
-         FROM occ, caps GROUP BY cap ORDER BY cap""",
+         FROM occ, caps GROUP BY cap ORDER BY cap""")),
     // the intra detector: same position CTE, self-join within the SAME
     // text at pa < pb, islands on the repeat-distance diagonal
-    "q_substr_intra" ->
+    Entry("q_substr_intra", substrIntra, Some(
       s"""WITH fpg AS (
            ${textGroupSql()}),
          pos AS (
@@ -2998,12 +2961,12 @@ object DedupOps {
                 min(pa) AS a_start, min(pb) AS b_start,
                 CAST(count(*) + ${SubstrK - 1} AS BIGINT) AS span_tokens
          ${spanGroupSql("r", "fp")}
-         ORDER BY doc_id, a_start, b_start""",
+         ORDER BY doc_id, a_start, b_start""")),
     // the scrub apply step: the detector CTEs (identical through the
     // island merge), then loser-side attribution (larger canonical id
     // drops the cross-text span; the pa < pb side drops the intra
     // repeat) and the shared interval-union + token-rewrite tail
-    "q_substr_scrub" ->
+    Entry("q_substr_scrub", substrScrub, Some(
       s"""WITH fpg AS (
            ${textGroupSql()}),
          pos AS (
@@ -3029,11 +2992,11 @@ object DedupOps {
            UNION
            SELECT fp, b_start AS s, b_start + span_tokens - 1 AS e
            FROM spi),
-         $ScrubTailSql""",
+         $ScrubTailSql""")),
     // snapshot probe: batch-side positions (distinct-batch-text grain)
     // against corpus-side positions, islands per (batch text, corpus
     // text, diagonal), doc-grain expansion back to batch ids
-    "q_snap_substr" ->
+    Entry("q_snap_substr", substrSnap, Some(
       s"""WITH corp AS (
            ${textGroupSql("doc_id % 10 < 8")}),
          bat AS (
@@ -3061,11 +3024,11 @@ object DedupOps {
          SELECT f.batch_id, s.corpus_doc, s.n_corpus_docs,
                 s.b_start, s.c_start, s.span_tokens
          FROM sp s JOIN fpmap f ON s.batch_fp = f.batch_fp
-         ORDER BY batch_id, corpus_doc, b_start, c_start""",
+         ORDER BY batch_id, corpus_doc, b_start, c_start""")),
     // span-exact contamination: the q_snap_substr CTEs with the eval set
     // (source = 'src0') as the corpus side and training docs as the
     // arriving side, renamed to the train/eval vocabulary
-    "q_contamination_spans" ->
+    Entry("q_contamination_spans", contaminationSpans, Some(
       s"""WITH ev AS (
            ${textGroupSql("source = 'src0'")}),
          tr AS (
@@ -3093,11 +3056,11 @@ object DedupOps {
          SELECT f.doc_id, s.eval_doc, s.n_eval_docs,
                 s.doc_start, s.eval_start, s.span_tokens
          FROM sp s JOIN fpmap f ON s.train_fp = f.train_fp
-         ORDER BY doc_id, eval_doc, doc_start, eval_start""",
+         ORDER BY doc_id, eval_doc, doc_start, eval_start""")),
     // the decontamination apply step: contamination-span CTEs → train-side
     // intervals (train always loses) → the q_substr_scrub union + rewrite
     // over TRAIN texts only
-    "q_contamination_scrub" ->
+    Entry("q_contamination_scrub", contaminationScrub, Some(
       s"""WITH ev AS (
            ${textTokensSql("source = 'src0'")}),
          fpg AS (
@@ -3119,9 +3082,9 @@ object DedupOps {
            SELECT DISTINCT train_fp AS fp, b_start AS s,
                   b_start + span_tokens - 1 AS e
            FROM sp),
-         $ScrubTailSql""",
+         $ScrubTailSql""")),
     // same chunking CTE as q_chunk_docs (PipelineOps), rolled up by fp
-    "q_chunk_shared" ->
+    Entry("q_chunk_shared", chunkShared, Some(
       s"""WITH ${PipelineOps.chunkStartsSql},
          c AS (
            SELECT doc_id,
@@ -3131,18 +3094,25 @@ object DedupOps {
          SELECT chunk_fp, count(DISTINCT doc_id) AS n_docs, count(*) AS n_occ,
                 min(doc_id) AS min_doc, max(doc_id) AS max_doc
          FROM c GROUP BY chunk_fp HAVING count(DISTINCT doc_id) >= 2
-         ORDER BY chunk_fp""",
-    "q_minhash_oracle" -> MinhashOracleSql,
-    "q_minhash_lsh" -> MinhashLshSql,
-    "q_source_overlap" -> SourceOverlapSql,
-    "q_split_leakage" -> SplitLeakageSql,
-    "q_dedup_tau_sweep" -> DedupTauSweepSql,
-    "q_lsh_recall" -> LshRecallSql,
-    "q_lsh_tuning" -> LshTuningSql,
-    "q_snap_neardup" -> snapNearDupSql,
-    "q_simhash" -> SimhashOracleSql,
-    "q_simhash_clusters" -> SimhashClustersSql,
-    "q_dedup_report" ->
+         ORDER BY chunk_fp""")),
+    Entry("q_minhash_oracle", minhashOracle, Some(MinhashOracleSql)),
+    Entry("q_minhash_lsh", minhashLsh, Some(MinhashLshSql)),
+    // xxhash64 signatures, the engine-native hashing a production run
+    // deploys (q_minhash_lsh keeps md5 so DuckDB can replay it)
+    Entry("x_minhash_lsh_fast", minhashLshFast),
+    Entry("q_source_overlap", sourceOverlap, Some(SourceOverlapSql)),
+    // xxhash64 form of q_source_overlap, for the same reason
+    Entry("x_source_overlap_fast", sourceOverlapFast),
+    Entry("q_split_leakage", splitLeakage, Some(SplitLeakageSql)),
+    Entry("q_dedup_tau_sweep", dedupTauSweep, Some(DedupTauSweepSql)),
+    Entry("q_lsh_recall", lshRecall, Some(LshRecallSql)),
+    Entry("q_lsh_tuning", lshTuning, Some(LshTuningSql)),
+    Entry("q_snap_neardup", snapshotNearDup, Some(snapNearDupSql)),
+    Entry("q_simhash", simhashPairs, Some(SimhashOracleSql)),
+    // xxhash64 form of q_simhash, for the same reason
+    Entry("x_simhash_fast", simhashPairsFast),
+    Entry("q_simhash_clusters", simhashClusters, Some(SimhashClustersSql)),
+    Entry("q_dedup_report", dedupReport, Some(
       s"""WITH ek AS (
            SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
          drops AS (SELECT DISTINCT doc_b FROM ($NgramJaccardSql) j)
@@ -3150,14 +3120,14 @@ object DedupOps {
          UNION ALL SELECT '1_exact', count(*) FROM ek
          UNION ALL SELECT '2_neardup', count(*) FROM ek
            WHERE doc_id NOT IN (SELECT doc_b FROM drops)
-         ORDER BY stage""",
-    "q_dedup_exact" ->
+         ORDER BY stage""")),
+    Entry("q_dedup_exact", dedupExact, Some(
       """SELECT md5(text) AS fp, min(doc_id) AS keep_id, count(*) AS n_copies
-         FROM documents GROUP BY md5(text) ORDER BY keep_id""",
-    "q_ngram_jaccard" -> NgramJaccardSql,
+         FROM documents GROUP BY md5(text) ORDER BY keep_id""")),
+    Entry("q_ngram_jaccard", ngramJaccard, Some(NgramJaccardSql)),
     // same shingle/df-cap/pair CTEs as the Jaccard oracle, then the
     // symmetric best-positive window and the md5-ring negative
-    "q_contrastive_pairs" ->
+    Entry("q_contrastive_pairs", contrastivePairs, Some(
       s"""WITH $JaccardInterCtes,
          pairs AS (
            SELECT doc_a, doc_b,
@@ -3194,9 +3164,9 @@ object DedupOps {
          LEFT JOIN (SELECT doc_a AS anchor_id, doc_b AS negative_id,
                            TRUE AS dup FROM sym) s
            USING (anchor_id, negative_id)
-         ORDER BY anchor_id""",
+         ORDER BY anchor_id""")),
     // same shingle/df-cap/pair CTEs as the Jaccard oracle, asymmetric ratio
-    "q_containment" ->
+    Entry("q_containment", containment, Some(
       s"""WITH $JaccardInterCtes
          SELECT doc_a, doc_b, n_common, ca.c AS c_a, cb.c AS c_b,
                 CAST(n_common AS DOUBLE) / least(ca.c, cb.c) AS containment
@@ -3204,28 +3174,29 @@ object DedupOps {
          JOIN card ca ON doc_a = ca.doc_id
          JOIN card cb ON doc_b = cb.doc_id
          WHERE CAST(n_common AS DOUBLE) / least(ca.c, cb.c) >= 0.9
-         ORDER BY doc_a, doc_b""",
+         ORDER BY doc_a, doc_b""")),
     // the apply step reuses the pair query verbatim as a subquery — the
     // keep set is definitionally "documents minus doc_b of those pairs"
-    "q_neardup_keep" ->
+    Entry("q_neardup_keep", nearDupKeep, Some(
       s"""SELECT d.doc_id, d.source, d.n_chars FROM documents d
          WHERE d.doc_id NOT IN (SELECT doc_b FROM ($NgramJaccardSql) j)
-         ORDER BY d.doc_id""",
+         ORDER BY d.doc_id""")),
     // the blocking pipeline's oracle: all-pairs bit_count(xor) <= 3 over
     // the same arithmetic signatures — equality proves the Manku
     // 20-table candidate generation is lossless at distance <= 3
-    "q_hamming_neardup" -> s"$HammingPairSql\n         ORDER BY doc_a, doc_b",
+    Entry("q_hamming_neardup", hammingNearDup,
+      Some(s"$HammingPairSql\n         ORDER BY doc_a, doc_b")),
     // exact transitive closure of the same pair graph via recursive CTE:
     // walk(id, r) enumerates every node reachable from id (components are
     // tiny by construction, so the closure is small); comp = min reachable
-    "q_dup_components" ->
+    Entry("q_dup_components", dupComponents, Some(
       s"""$DupComponentsCte
          SELECT c.id AS doc_id, c.comp, s.comp_size
          FROM comp c JOIN sizes s USING (comp)
-         ORDER BY doc_id""",
+         ORDER BY doc_id""")),
     // canonical keeper per component: rank docs within each cluster by
     // (n_chars desc, doc_id) over the SAME closure
-    "q_dup_canon" ->
+    Entry("q_dup_canon", dupCanonical, Some(
       s"""$DupComponentsCte,
          m AS (
            SELECT c.id AS doc_id, c.comp, s.comp_size
@@ -3237,25 +3208,29 @@ object DedupOps {
            FROM m JOIN documents d USING (doc_id))
          SELECT comp, doc_id AS keep_id, n_chars AS keep_chars, comp_size,
                 comp_size - 1 AS n_dropped
-         FROM j WHERE rn = 1 ORDER BY comp""",
+         FROM j WHERE rn = 1 ORDER BY comp""")),
     // distinct-shingle sets per doc (sh0, no df cap — a shingle shared
     // with the eval set is contamination no matter how common it is)
-    "q_contamination" -> ContaminationSql,
+    Entry("q_contamination", contamination, Some(ContaminationSql)),
     // the bloom-prefilter form is result-identical by construction (the
     // exact verify join removes every false positive) — same oracle
-    "q_contamination_bloom" -> ContaminationSql,
-    "q_contamination_pairs" ->
+    Entry("q_contamination_bloom", contaminationBloom, Some(ContaminationSql)),
+    Entry("q_contamination_pairs", contaminationPairs, Some(
       s"""WITH ${docShinglesCtes("doc_id, source", "sh")},
          ev AS (SELECT doc_id AS eval_id, shingle FROM sh WHERE source = 'src0'),
          tr AS (SELECT doc_id AS train_id, shingle FROM sh WHERE source <> 'src0')
          SELECT train_id, eval_id, count(*) AS n_shared
          FROM tr JOIN ev USING (shingle)
          GROUP BY 1, 2 HAVING count(*) >= 3
-         ORDER BY train_id, eval_id""",
+         ORDER BY train_id, eval_id""")),
+    // eval = the unreplicated base slice: the production shape (MB eval,
+    // growing train) that the replicate-everything scaled corpora can't
+    // show on the q_ name
+    Entry("x_contamination_pairs_fixedeval", contaminationPairsFixedEval),
     // fp-grain rollup: one representative text per distinct md5(text)
     // on each side (min(text) is exact — all texts in a group are
     // identical), shingled once, overlaps reported with multiplicities
-    "q_contamination_groups" ->
+    Entry("q_contamination_groups", contaminationGroups, Some(
       s"""WITH tg AS (
            SELECT md5(text) AS train_fp, count(*) AS n_train_docs,
                   min(text) AS text
@@ -3279,8 +3254,8 @@ object DedupOps {
          FROM inter i
          JOIN tg ON i.train_fp = tg.train_fp
          JOIN eg ON i.eval_fp = eg.eval_fp
-         ORDER BY 1, 2""",
-    "q_snap_dedup" ->
+         ORDER BY 1, 2""")),
+    Entry("q_snap_dedup", snapshotDedup, Some(
       """WITH corpus AS (
            SELECT DISTINCT md5(text) AS fp FROM documents WHERE doc_id % 10 < 8),
          b AS (
@@ -3289,8 +3264,8 @@ object DedupOps {
            FROM documents WHERE doc_id % 10 >= 8 GROUP BY md5(text))
          SELECT doc_id, fp, n_batch_copies FROM b
          WHERE fp NOT IN (SELECT fp FROM corpus)
-         ORDER BY doc_id""",
-    "q_sim_degree" ->
+         ORDER BY doc_id""")),
+    Entry("q_sim_degree", simDegree, Some(
       s"""WITH pairs AS ($HammingPairSql),
          deg AS (
            SELECT doc_id, count(*) AS degree FROM (
@@ -3299,17 +3274,14 @@ object DedupOps {
            GROUP BY doc_id)
          SELECT deg.doc_id, d.source, deg.degree
          FROM deg JOIN documents d USING (doc_id)
-         ORDER BY doc_id""",
+         ORDER BY doc_id""")),
     // replays the SAME dynamic-K two-level quantizer chain as
     // q_semdedup_scaled (shared CTE body), then the within-cluster >τ
     // pair report
-    "q_embed_neardup" ->
+    Entry("q_embed_neardup", embedNearDup, Some(
       s"""WITH ${SimilarityOps.scaledQuantizerCtes}
          ${SimilarityOps.clusterPairsSql("la.vec_id AS vec_a, lb.vec_id AS vec_b",
            EmbedNearDupTau)}
-         ORDER BY vec_a, vec_b""",
-    // q_minhash_lsh / q_simhash intentionally omitted: xxhash64/murmur have
-    // no DuckDB twin; they are verified in ScalaTest against the exact
-    // Jaccard path (rows-only check here).
+         ORDER BY vec_a, vec_b""")),
   )
 }

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Entry, Tables}
 import org.apache.spark.sql.graftext.GraftFunctions.pair_combos
 
 /** Graph / market-basket analytics over the order→part bipartite data —
@@ -170,14 +170,8 @@ object GraphOps {
   }
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_copurchase_lift" -> (copurchaseLift _),
-    "q_triangles" -> (triangles _),
-    "q_pagerank" -> (pagerank _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_copurchase_lift" ->
+  lazy val entries: Seq[Entry] = Seq(
+    Entry("q_copurchase_lift", copurchaseLift, Some(
       """WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
          n AS (SELECT count(DISTINCT l_orderkey) AS n_orders FROM lineitem),
          f AS (SELECT l_partkey, count(*) AS n_p FROM op GROUP BY 1),
@@ -193,10 +187,10 @@ object GraphOps {
            JOIN f fa ON pr.pa = fa.l_partkey
            JOIN f fb ON pr.pb = fb.l_partkey
            CROSS JOIN n
-         ORDER BY pr.n_ab DESC, part_a, part_b""",
+         ORDER BY pr.n_ab DESC, part_a, part_b""")),
     // the three power iterations unrolled as CTEs; all integer arithmetic
     // (// is truncating BIGINT division, matching Spark's DIV)
-    "q_pagerank" ->
+    Entry("q_pagerank", pagerank, Some(
       """WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
          e AS (
            SELECT a.l_partkey AS pa, b.l_partkey AS pb
@@ -223,10 +217,10 @@ object GraphOps {
                   150000 + CAST(sum((m.mass * 85) // (100 * deg.deg)) AS BIGINT) AS mass
            FROM d JOIN deg USING (src) JOIN m2 m ON m.v = d.src
            GROUP BY d.dst)
-         SELECT v AS part, mass FROM m3 ORDER BY mass DESC, part""",
+         SELECT v AS part, mass FROM m3 ORDER BY mass DESC, part""")),
     // ground truth: naive id-ordered triple join — with a < b edges,
     // e1=(a,b), e2=(a,c), e3=(b,c) enumerates each triangle exactly once
-    "q_triangles" ->
+    Entry("q_triangles", triangles, Some(
       """WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
          e AS (
            SELECT a.l_partkey AS pa, b.l_partkey AS pb
@@ -237,6 +231,6 @@ object GraphOps {
          FROM e e1
            JOIN e e2 ON e2.pa = e1.pa AND e2.pb > e1.pb
            JOIN e e3 ON e3.pa = e1.pb AND e3.pb = e2.pb
-         ORDER BY part_x, part_y, part_z""",
+         ORDER BY part_x, part_y, part_z""")),
   )
 }

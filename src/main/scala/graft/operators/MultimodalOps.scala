@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftext.GraftFunctions
 
-import graft.Tables
+import graft.{Entry, Tables}
 
 /** Multimodal-column handling for a training-data pipeline: image/audio/
   * video payloads as opaque `binary` columns with typed metadata, a REAL
@@ -132,7 +132,6 @@ object MultimodalOps {
   private[graft] val JpegSosHex = "FFDA" + "0008" + "01" + "0100" + "00" + "3F" + "00"
   val PngHeaderBytes = 33L  // 8 sig + 4 len + 4 type + 13 data + 4 crc
   val WavHeaderBytes = 44L  // the canonical RIFF/PCM header
-  val Mp4HeaderBytes = 16L  // the ftyp box alone
   /** SOI(2) + APP0(18) + DQT(69) + SOF0(13): the walker's header stops
     * at the end of the SOF segment; DHTs/SOS/scan are "body". */
   val JpegHeaderBytes = 102L
@@ -1937,36 +1936,6 @@ object MultimodalOps {
       .orderBy("modality")
   }
 
-  // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_mm_parse" -> (headerParse _),
-    "q_mm_validate" -> (assetValidate _),
-    "q_mm_meta" -> (assetMeta _),
-    "q_mm_decode" -> (decodeReport _),
-    "q_mm_features" -> (featureStats _),
-    "q_mm_feature_ann" -> (featureAnn _),
-    "q_mm_energy" -> (audioEnergy _),
-    "q_mm_audio_fp" -> (audioFingerprint _),
-    "q_mm_trim" -> (trimPlan _),
-    "q_snap_decode" -> (snapshotDecode _),
-    "q_mm_phash" -> (imageHashes _),
-    "q_mm_phash_dedup" -> (phashDedup _),
-    "q_mm_pack" -> (packMultimodal _),
-    "q_mm_align" -> (crossModalAlign _),
-    "q_mm_align_stats" -> (alignStats _),
-    "q_mm_shards" -> (shardManifest _),
-    "q_mm_resize" -> (resizePlan _),
-    "q_mm_frames" -> (framePlan _),
-    "q_mm_keyframes" -> (keyframePlan _),
-    "q_mm_vframes" -> (videoFrames _),
-    "q_mm_vdedup" -> (videoDedup _),
-    "q_mm_dedup" -> (assetDedup _),
-    "q_mm_card" -> (assetCard _),
-    "q_mm_windows" -> (windowPlan _),
-    "q_mm_fetch_plan" -> (fetchPlan _),
-    "q_mm_fetch_stats" -> (fetchStats _),
-  )
-
   /** The DuckDB image of the asset synthesis, GENERATED from the same
     * framing constants as [[assetsFrom]] — the oracle builds the payload
     * through the IDENTICAL hex chain (lpad∘hex for BE fields, the
@@ -2474,48 +2443,52 @@ object MultimodalOps {
                     + (($sExpr) % 2) * sza
                 END"""
 
-  val oracleSql: Map[String, String] = Map(
-    "q_mm_feature_ann" -> FeatureAnnSql,
-    "q_mm_align" -> AlignSql,
-    "q_mm_align_stats" -> AlignStatsSql,
-    "q_mm_phash" ->
+  // ------------------------------------------------------------ registry
+  lazy val entries: Seq[Entry] = Seq(
+    Entry("q_mm_feature_ann", featureAnn, Some(FeatureAnnSql)),
+    Entry("q_mm_align", crossModalAlign, Some(AlignSql)),
+    // xxhash64 token bucketing (q_mm_align keeps the md5 chain for the
+    // DuckDB replay); pair set spec-pinned identical
+    Entry("x_mm_align_fast", crossModalAlignFast),
+    Entry("q_mm_align_stats", alignStats, Some(AlignStatsSql)),
+    Entry("q_mm_phash", imageHashes, Some(
       s"""WITH $AssetSqlCte,
          $PhashSqlCte
-         SELECT asset_id, format, phash FROM hs ORDER BY asset_id""",
-    "q_mm_phash_dedup" ->
+         SELECT asset_id, format, phash FROM hs ORDER BY asset_id""")),
+    Entry("q_mm_phash_dedup", phashDedup, Some(
       s"""WITH $AssetSqlCte,
          $PhashSqlCte
          SELECT phash, min(asset_id) AS keep_id, count(*) AS n_members,
                 CAST(count(DISTINCT format) AS BIGINT) AS n_formats
-         FROM hs GROUP BY phash ORDER BY keep_id""",
+         FROM hs GROUP BY phash ORDER BY keep_id""")),
     // decoded-stat replay: codec output (inflate / Huffman+IDCT / PCM)
     // vs independent generator arithmetic
-    "q_mm_decode" ->
+    Entry("q_mm_decode", decodeReport, Some(
       s"""WITH $DecodeSqlCte
          SELECT asset_id, modality, format, byte_len, n_units, u_min, u_max,
                 CASE WHEN n_units > 0
                      THEN CAST(u_sum AS DOUBLE) / n_units END AS u_mean,
                 CASE WHEN n_units > 0
                      THEN CAST(u_sumsq AS DOUBLE) / n_units END AS u_ms
-         FROM dstats ORDER BY asset_id""",
-    "q_mm_features" ->
+         FROM dstats ORDER BY asset_id""")),
+    Entry("q_mm_features", featureStats, Some(
       s"""WITH $DecodeSqlCte
          SELECT asset_id, modality, CAST(byte_len AS INT) AS byte_len,
                 ${featureSqlComps(0)} AS f0,
                 ${featureSqlComps(1)} AS f1
-         FROM dstats ORDER BY asset_id""",
+         FROM dstats ORDER BY asset_id""")),
     // per-window PCM energy: the same LE16 sample slices, window spec,
     // and integer sums — empty windows via the LEFT JOIN + coalesce
-    "q_mm_energy" ->
+    Entry("q_mm_energy", audioEnergy, Some(
       s"""WITH $AssetSqlCte,
          $EnergySqlCte
          SELECT asset_id, n_windows, win_idx, n_samples, energy,
                 max_abs < $SilenceAbs AS silence
-         FROM j ORDER BY asset_id, win_idx""",
+         FROM j ORDER BY asset_id, win_idx""")),
     // incremental decode: ledger digests (id%10<8) anti-joined away,
     // digest-grain representatives decoded, stats from the same dstats
     // replay (identical payloads decode identically by construction)
-    "q_snap_decode" ->
+    Entry("q_snap_decode", snapshotDecode, Some(
       s"""WITH $DecodeSqlCte,
          cfp AS (
            SELECT DISTINCT md5(phx) AS fp FROM a WHERE asset_id % 10 < 8),
@@ -2529,10 +2502,10 @@ object MultimodalOps {
          SELECT nw.fp AS payload_fp, nw.asset_id, nw.n_batch_copies,
                 d.modality, d.format, d.n_units, d.u_sum
          FROM nw JOIN dstats d ON d.asset_id = nw.asset_id
-         ORDER BY nw.asset_id""",
+         ORDER BY nw.asset_id""")),
     // silence-trim plan: the same per-window energies, min/max over the
     // loud windows, lead/tail trim arithmetic
-    "q_mm_trim" ->
+    Entry("q_mm_trim", trimPlan, Some(
       s"""WITH $AssetSqlCte,
          $EnergySqlCte,
          l AS (
@@ -2551,10 +2524,10 @@ object MultimodalOps {
                 CASE WHEN last_loud IS NOT NULL
                      THEN n_windows - 1 - last_loud ELSE 0 END AS trim_tail,
                 first_loud IS NOT NULL AS keep
-         FROM t ORDER BY asset_id""",
+         FROM t ORDER BY asset_id""")),
     // energy-delta fingerprint: the same window energies, one lead()
     // per asset, LSB-first bit packing over the first AudioFpBits
-    "q_mm_audio_fp" ->
+    Entry("q_mm_audio_fp", audioFingerprint, Some(
       s"""WITH $AssetSqlCte,
          $EnergySqlCte,
          ld AS (
@@ -2567,10 +2540,10 @@ object MultimodalOps {
                   CASE WHEN win_idx < $AudioFpBits AND nxt > energy
                        THEN (CAST(1 AS BIGINT) << CAST(win_idx AS INT))
                        ELSE 0 END), 0) AS BIGINT)), 8, '0') AS afp
-         FROM ld GROUP BY asset_id ORDER BY asset_id""",
+         FROM ld GROUP BY asset_id ORDER BY asset_id""")),
     // interleaved image-text packing: same item union, per-volume
     // running sum, offset-bucket sequence ids, in-sequence positions
-    "q_mm_pack" ->
+    Entry("q_mm_pack", packMultimodal, Some(
       s"""WITH it AS (
            SELECT doc_id, 1 AS kord, 'text' AS kind, doc_id AS ref_id,
                   CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
@@ -2592,13 +2565,13 @@ object MultimodalOps {
                   PARTITION BY volume, seq_id ORDER BY doc_id, kord)
                   AS BIGINT) AS position,
                 kind, ref_id, n_toks
-         FROM s ORDER BY volume, seq_id, position""",
+         FROM s ORDER BY volume, seq_id, position""")),
     // resize plan reads dims by PARSING them out of the constructed
     // blob's hex image (PNG IHDR BE u32s; JPEG SOF0 BE u16s at the
     // constructed layout's offsets — SOI+APP0+DQT put SOF0 at byte 89,
     // so marker/height/width live at hex chars 179/189/193) — both
     // engines read the same BYTES, then the same DIV/greatest/CASE
-    "q_mm_resize" ->
+    Entry("q_mm_resize", resizePlan, Some(
       s"""WITH $AssetSqlCte,
          i AS (
            SELECT asset_id,
@@ -2623,10 +2596,10 @@ object MultimodalOps {
                      ELSE greatest(1, (height * $ResizeMaxSide) // max_side)
                 END AS out_h,
                 max_side > $ResizeMaxSide AS scaled
-         FROM m ORDER BY asset_id""",
+         FROM m ORDER BY asset_id""")),
     // validation report: re-parse the blob's hex image, compare against
     // the catalog columns the synthesis wrote, aggregate the flags
-    "q_mm_validate" ->
+    Entry("q_mm_validate", assetValidate, Some(
       s"""WITH $AssetSqlCte,
          $FormatFlagsCte,
          f AS (
@@ -2697,7 +2670,7 @@ object MultimodalOps {
                   AS n_short_clips,
                 CAST(sum(CASE WHEN over_cap THEN 1 ELSE 0 END) AS BIGINT)
                   AS n_over_cap
-         FROM f GROUP BY modality ORDER BY modality""",
+         FROM f GROUP BY modality ORDER BY modality""")),
     // header parse: the oracle re-parses the identically-constructed
     // blob from its hex image — format by magic, PNG BE u32 dims, WAV
     // LE u32 rate/data-size (the 4-substr pair swap), the MP4 box tree's
@@ -2707,7 +2680,7 @@ object MultimodalOps {
     // MP4 field positions in hex chars: mdhd timescale@153, duration@161
     // (bytes 76/80), stsz count@345 (byte 172), mdat size@449+8n (byte
     // 224+4n) — the box layout is ftyp(16) moov(208+4n) mdat(8+total)
-    "q_mm_parse" ->
+    Entry("q_mm_parse", headerParse, Some(
       s"""WITH $AssetSqlCte,
          $FormatFlagsCte
          SELECT asset_id, modality,
@@ -2744,14 +2717,14 @@ object MultimodalOps {
                      THEN ('0x' || substr(phx, 161, 8))::BIGINT * 1000
                           // ('0x' || substr(phx, 153, 8))::BIGINT
                 END AS media_ms
-         FROM p ORDER BY asset_id""",
+         FROM p ORDER BY asset_id""")),
     // sample-table frame plan: the scalar wire fields (stts delta at hex
     // char 249, stco chunk offset at 385+8n, stsz count at 345) are READ
     // from the constructed layout — proving the tables sit where the
     // walker reads them — while the per-sample prefix sums replay the
     // alternating-size closed form P(s) = (s DIV 2)(szA+szB) + (s%2)·szA,
     // independent of the walker's entry-by-entry accumulation
-    "q_mm_frames" ->
+    Entry("q_mm_frames", framePlan, Some(
       s"""WITH $AssetSqlCte,
          $VideoFrameCteSql
          SELECT asset_id, CAST(nsmp_w AS BIGINT) AS n_samples, n_frames,
@@ -2760,11 +2733,11 @@ object MultimodalOps {
                 ${videoOffsetSql("s")} AS byte_offset,
                 CAST(CASE WHEN s % 2 = 0 THEN sza ELSE szb END AS BIGINT)
                   AS sample_bytes
-         FROM g ORDER BY asset_id, frame_idx""",
+         FROM g ORDER BY asset_id, frame_idx""")),
     // per-modality dataset card off the same digest-grain rollup as the
     // dedup; every emitted number is an exact long (or one double
     // division of two exact longs), BIGINT/DOUBLE-cast on both sides
-    "q_mm_card" ->
+    Entry("q_mm_card", assetCard, Some(
       s"""WITH $AssetSqlCte,
          c AS (
            SELECT modality, md5(phx) AS payload_fp, byte_len, duration_ms
@@ -2784,12 +2757,12 @@ object MultimodalOps {
                 CAST(sum(n_copies * byte_len) - sum(byte_len) AS BIGINT)
                   AS dup_bytes,
                 CAST(sum(dur_sum) AS BIGINT) AS total_duration_ms
-         FROM g GROUP BY modality ORDER BY modality""",
+         FROM g GROUP BY modality ORDER BY modality""")),
     // binary exact dedup: both engines md5 the payload's HEX image (the
     // same uppercase characters — DuckDB 1.0 has only md5(VARCHAR) and
     // the framed payload is not valid utf-8); hex() is injective,
     // so the groups are exactly the byte-identical payload groups
-    "q_mm_dedup" ->
+    Entry("q_mm_dedup", assetDedup, Some(
       s"""WITH $AssetSqlCte,
          d AS (
            SELECT asset_id, modality, md5(phx) AS payload_fp, byte_len
@@ -2798,9 +2771,12 @@ object MultimodalOps {
                 count(*) AS n_copies,
                 CAST((count(*) - 1) * min(byte_len) AS BIGINT) AS dup_bytes
          FROM d GROUP BY modality, payload_fp
-         ORDER BY modality, keep_id""",
+         ORDER BY modality, keep_id""")),
+    // xxhash64 asset dedup (q_mm_dedup keeps md5 for the DuckDB replay);
+    // group structure spec-pinned identical
+    Entry("x_mm_dedup_fast", assetDedupFast),
     // audio window plan: same capped (duration-win)//hop+1 arithmetic
-    "q_mm_windows" ->
+    Entry("q_mm_windows", windowPlan, Some(
       s"""WITH au AS (
            SELECT doc_id AS asset_id, n_chars * 40 AS duration_ms
            FROM documents WHERE doc_id % 3 = 1),
@@ -2815,12 +2791,12 @@ object MultimodalOps {
                 u.i * $HopMs AS start_ms,
                 least(u.i * $HopMs + $WinMs, duration_ms) AS end_ms
          FROM w, unnest(generate_series(0, n_windows - 1)) AS u(i)
-         ORDER BY asset_id, win_idx""",
+         ORDER BY asset_id, win_idx""")),
     // keyframe snap: the same stride, snapped to the stss sync set —
     // no stss (single-chunk arm) = all-sync = key_idx == sample_idx;
     // stss {1, m = n/2+1} (two-chunk arm) = key 0 below sample m-1,
     // key m-1 from there — key offsets via the variant's chunk formula
-    "q_mm_keyframes" ->
+    Entry("q_mm_keyframes", keyframePlan, Some(
       s"""WITH $AssetSqlCte,
          $VideoFrameCteSql,
          k AS (
@@ -2832,12 +2808,12 @@ object MultimodalOps {
                 s AS sample_idx, ky AS key_idx,
                 ${videoOffsetSql("ky")} AS key_offset,
                 s - ky AS back_samples
-         FROM k ORDER BY asset_id, frame_idx""",
+         FROM k ORDER BY asset_id, frame_idx""")),
     // decoded keyframes: the same snap as q_mm_keyframes, then the
     // EXPECTED pixel statistics of the snapped sample's Motion-JPEG
     // frame in closed form (variant by key parity: constant gray v over
     // w×h whole MCUs) — the JDK codec output vs independent arithmetic
-    "q_mm_vframes" ->
+    Entry("q_mm_vframes", videoFrames, Some(
       s"""WITH $AssetSqlCte,
          $VideoFrameCteSql,
          k AS (
@@ -2859,12 +2835,12 @@ object MultimodalOps {
                   AS px_max,
                 CAST(CASE WHEN ky % 2 = 0 THEN fwa * fha * fva
                           ELSE fwb * fhb * fvb END AS BIGINT) AS px_sum
-         FROM k ORDER BY asset_id, frame_idx""",
+         FROM k ORDER BY asset_id, frame_idx""")),
     // video near-dup: descriptors/bit-votes in closed form (the frame
     // multiset is {A×nA, B×nB}, so each bit's vote is two terms), then
     // the Hamming ≤ 3 filter over ALL pairs — blocking-agnostic, so the
     // Manku candidate generation is checked against full enumeration
-    "q_mm_vdedup" ->
+    Entry("q_mm_vdedup", videoDedup, Some(
       s"""WITH $AssetSqlCte,
          hv AS (
            SELECT asset_id, nsmp - nsmp // 2 AS na, nsmp // 2 AS nb,
@@ -2898,11 +2874,11 @@ object MultimodalOps {
                 x.fp = y.fp AS same_bytes
          FROM sf x JOIN sf y ON x.asset_id < y.asset_id
          WHERE bit_count(xor(x.vsig, y.vsig)) <= 3
-         ORDER BY asset_a, asset_b""",
+         ORDER BY asset_a, asset_b""")),
     // fetch coalescing: replay the sample-table frame plan (wire-read
     // stco base + closed-form stsz prefix), then the same
     // lag/flag/running-sum range numbering and rollup
-    "q_mm_fetch_plan" ->
+    Entry("q_mm_fetch_plan", fetchPlan, Some(
       s"""WITH $AssetSqlCte,
          $VideoFrameCteSql,
          o0 AS (
@@ -2936,10 +2912,10 @@ object MultimodalOps {
                 count(*) AS n_frames,
                 max(byte_end) - min(byte_offset) AS io_bytes
          FROM ri GROUP BY asset_id, range_id
-         ORDER BY asset_id, range_id""",
+         ORDER BY asset_id, range_id""")),
     // fetch economics: the same range chain rolled to ONE row — request
     // count, bytes moved vs the samples' own bytes, gap waste, rates
-    "q_mm_fetch_stats" ->
+    Entry("q_mm_fetch_stats", fetchStats, Some(
       s"""WITH $AssetSqlCte,
          $VideoFrameCteSql,
          o0 AS (
@@ -2980,15 +2956,15 @@ object MultimodalOps {
                 CASE WHEN sum(io_bytes) > 0 THEN
                   CAST(sum(useful_bytes) AS DOUBLE) / sum(io_bytes)
                 END AS io_efficiency
-         FROM rr""",
-    "q_mm_meta" ->
+         FROM rr""")),
+    Entry("q_mm_meta", assetMeta, Some(
       s"""WITH $AssetSqlCte
          SELECT asset_id, modality, byte_len, width, height,
                 CASE WHEN modality = 'audio'
                      THEN CAST(rate AS BIGINT) END AS sample_rate,
                 duration_ms
-         FROM a ORDER BY asset_id""",
-    "q_mm_shards" ->
+         FROM a ORDER BY asset_id""")),
+    Entry("q_mm_shards", shardManifest, Some(
       s"""WITH $AssetSqlCte,
          sh AS (
            SELECT asset_id, modality,
@@ -3004,6 +2980,6 @@ object MultimodalOps {
          SELECT asset_id, modality, volume, byte_len,
                 cum_before // 65536 AS shard_id,
                 cum_before % 65536 AS offset_in_shard
-         FROM c ORDER BY modality, asset_id""",
+         FROM c ORDER BY modality, asset_id""")),
   )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Entry, Tables}
 
 /** Training-data pipeline operators beyond dedup/similarity: event
   * sessionization, text scrubbing, corpus statistics, and deterministic
@@ -595,7 +595,6 @@ object PipelineOps {
       .orderBy("doc_id")
   }
 
-  // ------------------------------------------------------------ registry
   /** PII redaction chain: emails → phones → long digit runs, in that order
     * (emails first, or the digit-run pass would destroy the address before
     * the email pattern can see it). The corpus tables carry no natural
@@ -722,11 +721,6 @@ object PipelineOps {
   }
 
   // ------------------------------------------------------------ corpus shuffle
-  /** Shard count for [[corpusShuffle]] (16 = the first hex nibble of the
-    * md5 shuffle key — shard assignment is a map-side substring, no
-    * modulo-bias bookkeeping). */
-  private[operators] val ShuffleShards = 16
-
   /** DETERMINISTIC GLOBAL TRAINING-ORDER SHUFFLE: every epoch-0 data
     * loader needs the corpus in a pseudorandom but REPRODUCIBLE order,
     * sharded so loaders stream their shard sequentially. Shuffle key =
@@ -1115,35 +1109,6 @@ object PipelineOps {
       .transform(ContractSort.exchanged(_, "doc_id"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_source_cap" -> (sourceCap _),
-    "q_corpus_shuffle" -> (corpusShuffle _),
-    "q_dataset_card" -> (datasetCard _),
-    "q_perceptron" -> (perceptronTrain _),
-    "q_quality_clf" -> (qualityClfTrain _),
-    "q_threshold_sweep" -> (thresholdSweep _),
-    "q_null_profile" -> (nullProfile _),
-    "q_pii_redact" -> (piiRedact _),
-    "q_top_p" -> (topPCoverage _),
-    "q_dq_checks" -> (dqChecks _),
-    "q_sessionize" -> (sessionize _),
-    "q_scrub" -> (scrubPayload _),
-    "q_len_quantiles" -> (lengthQuantiles _),
-    "q_len_quantiles_approx" -> (lengthQuantilesApprox _),
-    "q_curation" -> (curation _),
-    "q_curation_funnel" -> (curationFunnel _),
-    "q_mixture_resample" -> (mixtureResample _),
-    "q_token_budget" -> (tokenBudget _),
-    "q_chunk_docs" -> (chunkDocs _),
-    "q_chunk_dedup" -> (chunkDedup _),
-    "q_chunk_scrub" -> (chunkScrub _),
-    "q_split_assign" -> (splitAssign _),
-    "q_stratified_sample" -> (stratifiedSample _),
-    "q_importance_sample" -> (importanceSample _),
-    "q_shard_stats" -> (shardStats _),
-    "q_pack_sequences" -> (packSequences _),
-  )
-
   /** Shared CTE body replaying [[curationFlags]] — per-doc quality/
     * repetition/boilerplate/contamination/exact-dup flag bits; ends with
     * `fl(doc_id, source, flags)`. Used by the q_curation and
@@ -1209,18 +1174,19 @@ object PipelineOps {
            LEFT JOIN cf ON cf.doc_id = d.doc_id
            JOIN dup ON dup.doc_id = d.doc_id)"""
 
-  val oracleSql: Map[String, String] = Map(
+  // ------------------------------------------------------------ registry
+  lazy val entries: Seq[Entry] = Seq(
     // the window form the Spark side deliberately AVOIDS (skew-safe
     // partial top-k there) — same survivor set by construction
-    "q_source_cap" ->
+    Entry("q_source_cap", sourceCap, Some(
       s"""WITH r AS (
            SELECT doc_id, source,
                   row_number() OVER (PARTITION BY source ORDER BY doc_id)
                     AS rn
            FROM documents)
          SELECT doc_id, source, rn <= $SourceCapK AS kept
-         FROM r ORDER BY doc_id""",
-    "q_corpus_shuffle" ->
+         FROM r ORDER BY doc_id""")),
+    Entry("q_corpus_shuffle", corpusShuffle, Some(
       """SELECT doc_id, shard, pos_in_shard FROM (
            SELECT doc_id,
                   CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 1))::INT
@@ -1230,11 +1196,11 @@ object PipelineOps {
                     ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
                        AS BIGINT) AS pos_in_shard
            FROM documents)
-         ORDER BY shard, pos_in_shard""",
-    "q_perceptron" -> perceptronSql,
-    "q_quality_clf" -> qualityClfSql,
-    "q_threshold_sweep" -> thresholdSweepSql,
-    "q_dataset_card" ->
+         ORDER BY shard, pos_in_shard""")),
+    Entry("q_perceptron", perceptronTrain, Some(perceptronSql)),
+    Entry("q_quality_clf", qualityClfTrain, Some(qualityClfSql)),
+    Entry("q_threshold_sweep", thresholdSweep, Some(thresholdSweepSql)),
+    Entry("q_dataset_card", datasetCard, Some(
       """WITH s AS (
            SELECT count(*) AS n_docs,
                   CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
@@ -1248,8 +1214,8 @@ object PipelineOps {
                  FROM documents GROUP BY 1))
          SELECT n_docs, n_tokens, n_sources, n_langs, n_dup_docs,
                 CAST(n_dup_docs AS DOUBLE) / n_docs AS dup_frac
-         FROM s CROSS JOIN du""",
-    "q_null_profile" ->
+         FROM s CROSS JOIN du""")),
+    Entry("q_null_profile", nullProfile, Some(
       """WITH p AS (
            SELECT 'o_orderkey' AS "column", count(*) AS n_rows,
                   CAST(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
@@ -1274,8 +1240,8 @@ object PipelineOps {
            SELECT 'o_orderpriority', count(*),
                   CAST(sum(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT),
                   count(DISTINCT o_orderpriority) FROM orders)
-         SELECT "column", n_rows, n_null, n_distinct FROM p ORDER BY "column"""",
-    "q_pii_redact" ->
+         SELECT "column", n_rows, n_null, n_distinct FROM p ORDER BY "column"""")),
+    Entry("q_pii_redact", piiRedact, Some(
       """SELECT c_custkey,
                 regexp_replace(regexp_replace(regexp_replace(
                   c_name || ' <user' || CAST(c_custkey AS VARCHAR)
@@ -1284,8 +1250,8 @@ object PipelineOps {
                   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
                   '555-[0-9]+', '<PHONE>', 'g'),
                   '[0-9]{6,}', '<ID>', 'g') AS redacted
-         FROM customer ORDER BY c_custkey""",
-    "q_top_p" ->
+         FROM customer ORDER BY c_custkey""")),
+    Entry("q_top_p", topPCoverage, Some(
       """WITH t AS (
            SELECT doc_id, source, n_chars,
                   CAST(sum(n_chars) OVER (PARTITION BY source
@@ -1299,8 +1265,8 @@ object PipelineOps {
          SELECT doc_id, t.source, n_chars, running
          FROM t JOIN tot USING (source)
          WHERE running * 5 <= total * 4
-         ORDER BY doc_id""",
-    "q_chunk_docs" ->
+         ORDER BY doc_id""")),
+    Entry("q_chunk_docs", chunkDocs, Some(
       s"""WITH $chunkStartsSql,
          c AS (
            SELECT doc_id,
@@ -1311,9 +1277,9 @@ object PipelineOps {
          SELECT doc_id, chunk_idx, start_tok,
                 len(chunk) AS n_chunk_tokens,
                 md5(array_to_string(chunk, ' ')) AS chunk_fp
-         FROM c ORDER BY doc_id, chunk_idx""",
+         FROM c ORDER BY doc_id, chunk_idx""")),
     // same chunk CTE, then keep-first rank per (doc, fp)
-    "q_chunk_dedup" ->
+    Entry("q_chunk_dedup", chunkDedup, Some(
       s"""WITH $chunkStartsSql,
          c AS (
            SELECT doc_id,
@@ -1333,11 +1299,11 @@ object PipelineOps {
                   AS n_dup_chunks,
                 CAST(sum(CASE WHEN occ > 1 THEN n_chunk_tokens ELSE 0 END)
                      AS BIGINT) AS dup_tokens
-         FROM d GROUP BY doc_id ORDER BY doc_id""",
+         FROM d GROUP BY doc_id ORDER BY doc_id""")),
     // same chunk CTE; keep-first = rank 1 over (doc_id, chunk_idx) per fp
     // (identical to Spark's min-struct canonical — the order is total);
     // owned spans tile each doc, scrubbed text = ordered kept-span concat
-    "q_chunk_scrub" ->
+    Entry("q_chunk_scrub", chunkScrub, Some(
       s"""WITH $chunkStartsSql,
          c AS (
            SELECT doc_id,
@@ -1363,8 +1329,11 @@ object PipelineOps {
                 COALESCE(string_agg(
                   CASE WHEN rn = 1 THEN array_to_string(owned, ' ') END,
                   ' ' ORDER BY chunk_idx), '') AS scrub_text
-         FROM d GROUP BY doc_id ORDER BY doc_id""",
-    "q_mixture_resample" ->
+         FROM d GROUP BY doc_id ORDER BY doc_id""")),
+    // xxhash64 chunk fingerprints (q_chunk_scrub keeps md5 for the DuckDB
+    // replay)
+    Entry("x_chunk_scrub_fast", chunkScrubFast),
+    Entry("q_mixture_resample", mixtureResample, Some(
       """WITH counts AS (
            SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
          mn AS (SELECT min(n_docs) AS n_min FROM counts),
@@ -1383,11 +1352,11 @@ object PipelineOps {
                 CAST(sum(CASE WHEN k.kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
          FROM k JOIN rated r ON k.source = r.source
          GROUP BY r.source, r.n_docs, r.rate
-         ORDER BY r.source""",
+         ORDER BY r.source""")),
     // τ=1/2 temperature weights: √n per source quantized to the 2^20
     // grid, ONE long-sum normalizer (a double Σ√n would be
     // order-dependent); every ratio long/long, budget product + floor
-    "q_token_budget" ->
+    Entry("q_token_budget", tokenBudget, Some(
       s"""WITH c AS (
            SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
                   CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
@@ -1410,14 +1379,14 @@ object PipelineOps {
                 CAST(target_tokens AS DOUBLE) / n_tokens AS epochs,
                 (CAST(target_tokens AS DOUBLE) / n_tokens) > $BudgetMaxEpochs
                   AS oversampled
-         FROM w ORDER BY source""",
-    "q_curation" ->
+         FROM w ORDER BY source""")),
+    Entry("q_curation", curation, Some(
       s"""WITH $curationChainCtes
          SELECT doc_id, source, flags, flags = 0 AS keep
-         FROM fl ORDER BY doc_id""",
+         FROM fl ORDER BY doc_id""")),
     // first-firing-stage waterfall off the same flags chain; the stage
     // list is literal so zero-drop stages still report
-    "q_curation_funnel" ->
+    Entry("q_curation_funnel", curationFunnel, Some(
       s"""WITH $curationChainCtes,
          fs AS (
            SELECT CASE WHEN flags & 16 <> 0 THEN '1_exact_dup'
@@ -1447,8 +1416,8 @@ object PipelineOps {
          SELECT stage, n_in, n_dropped, n_in - n_dropped AS n_out,
                 CASE WHEN n_in > 0 THEN CAST(n_dropped AS DOUBLE) / n_in
                      ELSE 0.0 END AS drop_frac
-         FROM c ORDER BY stage""",
-    "q_sessionize" ->
+         FROM c ORDER BY stage""")),
+    Entry("q_sessionize", sessionize, Some(
       """WITH ev AS (
            SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec
            FROM events),
@@ -1470,22 +1439,25 @@ object PipelineOps {
          SELECT user_id, session_idx, min(sec) AS start_sec,
                 max(sec) AS end_sec, count(*) AS n_events
          FROM numbered GROUP BY user_id, session_idx
-         ORDER BY user_id, session_idx""",
-    "q_scrub" ->
+         ORDER BY user_id, session_idx""")),
+    Entry("q_scrub", scrubPayload, Some(
       """SELECT event_id, regexp_replace(props, '[0-9]+', '#', 'g') AS props_scrubbed
-         FROM events ORDER BY event_id""",
-    "q_len_quantiles" ->
+         FROM events ORDER BY event_id""")),
+    Entry("q_len_quantiles", lengthQuantiles, Some(
       """SELECT lang, quantile_cont(n_chars, 0.5) AS p50,
                 quantile_cont(n_chars, 0.9) AS p90, count(*) AS n_docs
-         FROM documents GROUP BY lang ORDER BY lang""",
+         FROM documents GROUP BY lang ORDER BY lang""")),
     // the KLL sketch's exact twin: DuckDB computes the per-lang counts
     // and asserts TRUE — a Spark approx value whose exact rank leaves
     // the (q ± 10ε)·n window flips its boolean and hash-fails
-    "q_len_quantiles_approx" ->
+    Entry("q_len_quantiles_approx", lengthQuantilesApprox, Some(
       """SELECT lang, count(*) AS n_docs,
                 TRUE AS p50_ok, TRUE AS p90_ok
-         FROM documents GROUP BY lang ORDER BY lang""",
-    "q_dq_checks" ->
+         FROM documents GROUP BY lang ORDER BY lang""")),
+    // estimate only: the q_ form adds the rank-check second pass that the
+    // production path exists to avoid
+    Entry("x_len_quantiles_est", lengthQuantilesApproxValues),
+    Entry("q_dq_checks", dqChecks, Some(
       """SELECT * FROM (
            SELECT 'lineitem_orderkey_fk' AS check_name, count(*) AS n_violations,
                   count(*) = 0 AS pass
@@ -1503,16 +1475,16 @@ object PipelineOps {
            UNION ALL
            SELECT 'embeddings_dim_64', count(*), count(*) = 0
            FROM embeddings WHERE len(embedding) != 64)
-         ORDER BY check_name""",
-    "q_shard_stats" ->
+         ORDER BY check_name""")),
+    Entry("q_shard_stats", shardStats, Some(
       s"""WITH d AS (
            SELECT ('0x' || substr(md5(text), 1, 8))::BIGINT % $NumShards AS shard,
                   len(string_split(text, ' ')) AS toks
            FROM documents)
          SELECT shard, count(*) AS n_docs,
                 CAST(sum(toks) AS BIGINT) AS total_tokens
-         FROM d GROUP BY shard ORDER BY shard""",
-    "q_pack_sequences" ->
+         FROM d GROUP BY shard ORDER BY shard""")),
+    Entry("q_pack_sequences", packSequences, Some(
       s"""WITH d AS (
            SELECT doc_id,
                   ('0x' || substr(md5(text), 1, 8))::BIGINT % $NumShards AS shard,
@@ -1526,15 +1498,15 @@ object PipelineOps {
          SELECT shard, (cum - toks) // $PackBudget AS pack_id, count(*) AS n_docs,
                 CAST(sum(toks) AS BIGINT) AS pack_tokens,
                 min(doc_id) AS first_doc, max(doc_id) AS last_doc
-         FROM c GROUP BY shard, pack_id ORDER BY shard, pack_id""",
-    "q_split_assign" ->
+         FROM c GROUP BY shard, pack_id ORDER BY shard, pack_id""")),
+    Entry("q_split_assign", splitAssign, Some(
       """SELECT doc_id,
                 ('0x' || substr(md5(text), 1, 8))::BIGINT % 100 AS bucket,
                 CASE WHEN ('0x' || substr(md5(text), 1, 8))::BIGINT % 100 < 80 THEN 'train'
                      WHEN ('0x' || substr(md5(text), 1, 8))::BIGINT % 100 < 90 THEN 'val'
                      ELSE 'test' END AS split
-         FROM documents ORDER BY doc_id""",
-    "q_stratified_sample" ->
+         FROM documents ORDER BY doc_id""")),
+    Entry("q_stratified_sample", stratifiedSample, Some(
       """WITH r AS (
            SELECT doc_id, lang,
                   CASE lang WHEN 'fr' THEN 250 WHEN 'es' THEN 250
@@ -1543,13 +1515,13 @@ object PipelineOps {
                   ('0x' || substr(md5(text), 1, 8))::BIGINT % 1000 AS h
            FROM documents)
          SELECT doc_id, lang, CAST(rate_pm AS BIGINT) AS rate_pm
-         FROM r WHERE h < rate_pm ORDER BY doc_id""",
-    "q_importance_sample" ->
+         FROM r WHERE h < rate_pm ORDER BY doc_id""")),
+    Entry("q_importance_sample", importanceSample, Some(
       """WITH r AS (
            SELECT doc_id, n_chars, least(n_chars, 500) AS w_pm,
                   ('0x' || substr(md5(text), 9, 8))::BIGINT % 1000 AS h
            FROM documents)
          SELECT doc_id, n_chars, w_pm
-         FROM r WHERE h < w_pm ORDER BY doc_id""",
+         FROM r WHERE h < w_pm ORDER BY doc_id""")),
   )
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Entry, Tables}
 
 /** Scale patterns as reusable operators.
   *
@@ -160,7 +160,6 @@ object ScaleOps {
       .limit(20)
   }
 
-  // ------------------------------------------------------------ registry
   /** MERGE INTO emulation for formats without a transactional merge
     * (plain parquet here; the reference's Phoenix/ES sinks merged by
     * primary key on write — K1/K4). `changes` carries full rows plus an
@@ -227,13 +226,6 @@ object ScaleOps {
       .orderBy("key")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_zorder" -> (zorderValues _),
-    "q_skew_profile" -> (joinKeyProfile _),
-    "q_merge_orders" -> (mergeOrders _),
-    "q_snapshot_diff" -> (snapshotDiff _),
-  )
-
   /** GENERATED from the same ZBits constant as [[zvalue]] so the 32 bit
     * terms can't drift from the Spark expression. */
   private val ZOrderSql: String = {
@@ -276,13 +268,14 @@ object ScaleOps {
          SELECT * FROM kept UNION ALL SELECT * FROM up
          UNION ALL SELECT * FROM ins)"""
 
-  val oracleSql: Map[String, String] = Map(
-    "q_merge_orders" ->
+  // ------------------------------------------------------------ registry
+  lazy val entries: Seq[Entry] = Seq(
+    Entry("q_merge_orders", mergeOrders, Some(
       s"""$MergedOrdersSql
          SELECT o_orderkey, o_orderstatus, o_totalprice,
                 strftime(o_orderdate, '%Y-%m-%d') AS o_date
-         FROM merged ORDER BY o_orderkey""",
-    "q_snapshot_diff" ->
+         FROM merged ORDER BY o_orderkey""")),
+    Entry("q_snapshot_diff", snapshotDiff, Some(
       s"""$MergedOrdersSql,
          old AS (SELECT o_orderkey, o_orderstatus FROM orders),
          d AS (
@@ -296,12 +289,12 @@ object ScaleOps {
            FROM old FULL OUTER JOIN merged m
              ON old.o_orderkey = m.o_orderkey)
          SELECT key, change, old_status, new_status
-         FROM d WHERE change IS NOT NULL ORDER BY key""",
-    "q_zorder" -> ZOrderSql,
-    "q_skew_profile" ->
+         FROM d WHERE change IS NOT NULL ORDER BY key""")),
+    Entry("q_zorder", zorderValues, Some(ZOrderSql)),
+    Entry("q_skew_profile", joinKeyProfile, Some(
       """SELECT key, n, CAST(n AS DOUBLE) / t AS share
          FROM (SELECT l_suppkey AS key, count(*) AS n FROM lineitem GROUP BY 1)
          CROSS JOIN (SELECT count(*) AS t FROM lineitem)
-         ORDER BY n DESC, key LIMIT 20""",
+         ORDER BY n DESC, key LIMIT 20""")),
   )
 }

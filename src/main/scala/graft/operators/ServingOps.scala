@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Entry, Tables}
 
 /** Serving-layer queries — the publisher REST API surface
   * (gmall-publisher, SURVEY §2.6/§3.1) as `(date) => DataFrame` functions.
@@ -99,31 +99,25 @@ object ServingOps {
     * yesterday). */
   private val FixedDate = "2024-01-15"
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_serve_total" -> ((s, d) => realtimeTotal(s, d, FixedDate)),
-    "q_serve_hourly" -> ((s, d) => realtimeHourly(s, d, FixedDate)),
-    "q_serve_hourly_yd" -> ((s, d) => hourlyWithYesterday(s, d, FixedDate)),
+  // ------------------------------------------------------------ registry
+  lazy val entries: Seq[Entry] = Seq(
+    Entry("q_serve_total", (s, d) => realtimeTotal(s, d, FixedDate), Some(
+      """SELECT count(DISTINCT user_id) AS dau FROM events
+         WHERE strftime(ts, '%Y-%m-%d') = '2024-01-15'""")),
+    Entry("q_serve_hourly", (s, d) => realtimeHourly(s, d, FixedDate), Some(
+      """SELECT strftime(ts, '%H') AS hr, count(DISTINCT user_id) AS dau
+         FROM events WHERE strftime(ts, '%Y-%m-%d') = '2024-01-15'
+         GROUP BY hr ORDER BY hr LIMIT 24""")),
     // page 2 of 5: the offset arm is exercised AND non-empty at every
     // gate corpus (the fixed day has 11 visitors at sf0.001, 129 at
     // sf0.01 — page 3 of 10 was empty at the small corpus, gating
     // nothing)
-    "q_serve_detail" -> ((s, d) => detailPage(s, d, FixedDate, "", 2, 5)),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_serve_total" ->
-      """SELECT count(DISTINCT user_id) AS dau FROM events
-         WHERE strftime(ts, '%Y-%m-%d') = '2024-01-15'""",
-    "q_serve_hourly" ->
-      """SELECT strftime(ts, '%H') AS hr, count(DISTINCT user_id) AS dau
-         FROM events WHERE strftime(ts, '%Y-%m-%d') = '2024-01-15'
-         GROUP BY hr ORDER BY hr LIMIT 24""",
-    "q_serve_detail" ->
+    Entry("q_serve_detail", (s, d) => detailPage(s, d, FixedDate, "", 2, 5), Some(
       """SELECT user_id, count(*) AS n_events,
                 min(strftime(ts, '%H')) AS first_hour
          FROM events WHERE strftime(ts, '%Y-%m-%d') = '2024-01-15'
-         GROUP BY user_id ORDER BY user_id LIMIT 5 OFFSET 5""",
-    "q_serve_hourly_yd" ->
+         GROUP BY user_id ORDER BY user_id LIMIT 5 OFFSET 5""")),
+    Entry("q_serve_hourly_yd", (s, d) => hourlyWithYesterday(s, d, FixedDate), Some(
       """WITH h AS (
            SELECT strftime(ts, '%Y-%m-%d') AS d, strftime(ts, '%H') AS hr,
                   count(DISTINCT user_id) AS dau
@@ -132,6 +126,6 @@ object ServingOps {
            GROUP BY d, hr)
          SELECT t.hr AS hr, t.dau AS dau, y.dau AS dau_yd
          FROM h t LEFT JOIN h y ON y.d = '2024-01-14' AND y.hr = t.hr
-         WHERE t.d = '2024-01-15' ORDER BY 1""",
+         WHERE t.d = '2024-01-15' ORDER BY 1""")),
   )
 }

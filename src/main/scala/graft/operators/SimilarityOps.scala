@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftext.GraftFunctions
 
-import graft.Tables
+import graft.{Entry, Tables}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (vec_id, embedding: array<float>[64], label).
@@ -1383,7 +1383,6 @@ object SimilarityOps {
       .orderBy("vec_id")
   }
 
-  // ------------------------------------------------------------ registry
   /** SemDeDup similarity floor: within-cluster pairs above it are
     * semantic duplicates; the higher-id side is dropped. */
   private val SemDedupTau = 0.9
@@ -1476,37 +1475,6 @@ object SimilarityOps {
     * of O(n²/K) with a K that stops matching the corpus. */
   private[operators] val SemDedupOccupancy = 128
 
-  /** PRODUCTION SCALE PATH of [[semDeDup]]: K grows with the corpus
-    * (K ≈ n / [[SemDedupOccupancy]], floor [[IvfK]]) so the per-cluster
-    * pair cost stays bounded as the corpus grows — q_semdedup keeps
-    * K=16 as the small-K reference shape. The `count()` is
-    * index-build-time sizing (one columnless scan), not a dataflow
-    * collect — the same role AQE's runtime statistics play for join
-    * strategy.
-    *
-    * Semantics at scale: coarser K splits some >τ pairs across clusters
-    * (cluster-scoped dedup is SemDeDup's definition — Abbas et al. 2023
-    * accept exactly this), but EXACT duplicates are immune: identical
-    * embeddings share norms and cosines, so the argmax assignment puts
-    * them in the same cluster for ANY centroid set — planted-replica
-    * recall is spec-pinned, and when n ≤ K·occupancy the result is
-    * row-identical to [[semDeDup]] (also spec-pinned). The registered,
-    * oracle-gated production form is [[semDeDupScaledChecked]]
-    * (q_semdedup_scaled — always coarse-fine, dynamic-K oracle); this
-    * flat/two-level-switch variant remains as the spec reference for
-    * the small-K equivalence. */
-  /** Past this K a flat argmax costs more than it saves — switch to the
-    * two-level quantizer ([[assignTwoLevel]]). 64 ≈ where n·K assignment
-    * work overtakes the n·occupancy pair work it displaces. */
-  private[operators] val TwoLevelK = 64
-
-  def semDeDupScaled(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val k = scaledSemDedupK(e)
-    if (k <= TwoLevelK) semDeDupWithK(e, k)
-    else clusterScopedDedup(assignTwoLevel(e, k))
-  }
-
   /** The corpus-scaled cluster count every scale-path SemDeDup derives
     * from: K = max([[IvfK]], ⌈n / [[SemDedupOccupancy]]⌉). The count is
     * index-build-time sizing (one columnless scan), not a dataflow
@@ -1538,29 +1506,6 @@ object SimilarityOps {
     val e = Tables.embeddings(spark, dir)
     clusterScopedDedup(assignTwoLevel(e, scaledSemDedupK(e)))
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_semdedup" -> (semDeDup _),
-    "q_semdedup_scaled" -> (semDeDupScaledChecked _),
-    "q_embed_quantize" -> (embedQuantize _),
-    "q_embed_pca" -> (embedPca _),
-    "q_embed_project" -> (embedProject _),
-    "q_label_centroids" -> (labelCentroids _),
-    "q_embed_score" -> (embedScore _),
-    "q_ann_bruteforce" -> (annBruteForce _),
-    "q_ann_lsh" -> (annLsh _),
-    "q_ann_ivf" -> (annIvf _),
-    "q_ann_pq" -> (annPq _),
-    "q_ann_ivfpq" -> (annIvfPq _),
-    "q_ann_topk_agg" -> (annTopKAgg _),
-    "q_ivf_stats" -> (ivfStats _),
-    "q_kmeans_tuning" -> (kmeansTuning _),
-    "q_pq_tuning" -> (pqTuning _),
-    "q_ivf_probe_tuning" -> (ivfProbeTuning _),
-    "q_ann_recall" -> (annRecall _),
-    "q_ivfpq_recall" -> (annIvfPqRecall _),
-    "q_index_drift" -> (indexDrift _),
-  )
 
   /** GENERATED from ScoreWeights so the literal can't drift. The weights
     * are exact binary fractions, so the decimal text parses to the same
@@ -2367,25 +2312,32 @@ object SimilarityOps {
          ap AS ($AnnIvfPqSql)
          ${recallSql("ap", "a")}"""
 
-  val oracleSql: Map[String, String] = Map(
-    "q_ann_lsh" -> AnnLshSql,
-    "q_ann_recall" -> AnnRecallSql,
-    "q_ivfpq_recall" -> AnnIvfPqRecallSql,
-    "q_ann_ivf" -> AnnIvfSql,
-    "q_ann_pq" -> AnnPqSql,
-    "q_ann_ivfpq" -> AnnIvfPqSql,
-    "q_ivf_stats" -> IvfStatsSql,
-    "q_kmeans_tuning" -> KmeansTuningSql,
-    "q_pq_tuning" -> PqTuningSql,
-    "q_ivf_probe_tuning" -> IvfProbeTuningSql,
-    "q_index_drift" -> IndexDriftSql,
-    "q_embed_pca" -> embedPcaSql,
-    "q_embed_project" -> embedProjectSql,
-    "q_semdedup" -> SemDedupSql,
-    "q_semdedup_scaled" -> semDedupScaledSql,
+  // ------------------------------------------------------------ registry
+  lazy val entries: Seq[Entry] = Seq(
+    Entry("q_ann_lsh", annLsh, Some(AnnLshSql)),
+    Entry("q_ann_recall", annRecall, Some(AnnRecallSql)),
+    Entry("q_ivfpq_recall", annIvfPqRecall, Some(AnnIvfPqRecallSql)),
+    Entry("q_ann_ivf", annIvf, Some(AnnIvfSql)),
+    Entry("q_ann_pq", annPq, Some(AnnPqSql)),
+    // production K=256 PQ codebook (q_ann_pq pins K=16 for its unrolled
+    // DuckDB training CTE)
+    Entry("x_ann_pq256", annPqProduction),
+    Entry("q_ann_ivfpq", annIvfPq, Some(AnnIvfPqSql)),
+    // production K=256 residual codebook (q_ann_ivfpq pins K=16 for the
+    // same reason)
+    Entry("x_ann_ivfpq256", annIvfPqProduction),
+    Entry("q_ivf_stats", ivfStats, Some(IvfStatsSql)),
+    Entry("q_kmeans_tuning", kmeansTuning, Some(KmeansTuningSql)),
+    Entry("q_pq_tuning", pqTuning, Some(PqTuningSql)),
+    Entry("q_ivf_probe_tuning", ivfProbeTuning, Some(IvfProbeTuningSql)),
+    Entry("q_index_drift", indexDrift, Some(IndexDriftSql)),
+    Entry("q_embed_pca", embedPca, Some(embedPcaSql)),
+    Entry("q_embed_project", embedProject, Some(embedProjectSql)),
+    Entry("q_semdedup", semDeDup, Some(SemDedupSql)),
+    Entry("q_semdedup_scaled", semDeDupScaledChecked, Some(semDedupScaledSql)),
     // division shapes mirror the Spark expressions exactly (s1/n/scale,
     // s2/n - (s1/n)^2) so the doubles are bit-identical
-    "q_label_centroids" ->
+    Entry("q_label_centroids", labelCentroids, Some(
       """WITH q AS (
            SELECT label, CAST(i - 1 AS INT) AS dim,
                   CAST(round(CAST(embedding[i] AS DOUBLE) * 1048576.0)
@@ -2402,9 +2354,9 @@ object SimilarityOps {
                 (CAST(s2 AS DOUBLE) / n_vecs)
                   - (CAST(s1 AS DOUBLE) / n_vecs)
                     * (CAST(s1 AS DOUBLE) / n_vecs) AS var_q
-         FROM m ORDER BY label, dim""",
-    "q_embed_score" -> EmbedScoreSql,
-    "q_embed_quantize" ->
+         FROM m ORDER BY label, dim""")),
+    Entry("q_embed_score", embedScore, Some(EmbedScoreSql)),
+    Entry("q_embed_quantize", embedQuantize, Some(
       """WITH b AS (
            SELECT vec_id, embedding,
                   list_aggregate(list_transform(embedding, x -> abs(x)),
@@ -2427,13 +2379,10 @@ object SimilarityOps {
                 CAST(list_aggregate(qs, 'sum') AS BIGINT) AS q_sum,
                 CAST(list_aggregate(qs, 'min') AS BIGINT) AS q_min,
                 CAST(list_aggregate(qs, 'max') AS BIGINT) AS q_max
-         FROM q ORDER BY vec_id""",
-    "q_ann_bruteforce" -> AnnBruteForceSql,
+         FROM q ORDER BY vec_id""")),
+    Entry("q_ann_bruteforce", annBruteForce, Some(AnnBruteForceSql)),
     // the aggregate formulation must produce exactly the window
     // formulation's rows — same oracle text
-    "q_ann_topk_agg" -> AnnBruteForceSql,
-    // every SimilarityOps query now carries a full DuckDB twin — the
-    // trained indexes became replayable once centroid/codebook means went
-    // order-free (integer moments) and the ADC sum got a fixed order.
+    Entry("q_ann_topk_agg", annTopKAgg, Some(AnnBruteForceSql)),
   )
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 /** End-to-end streaming pipeline main: file-stream source over the events

@@ -279,7 +279,7 @@ object GramMoments {
       p = 0
       var oidx = 0
       while (p < o.d) {
-        var idx = diagIdx(p, d)
+        val idx = diagIdx(p, d)
         var j = 0
         val rowLen = o.d - p
         while (j < rowLen) {

