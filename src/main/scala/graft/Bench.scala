@@ -25,7 +25,7 @@ object Bench {
     // installEmitter swaps in the real state-reading emitter once the
     // loop state exists.
     emit = () => if (emitted.compareAndSet(false, true)) {
-      println(s"""{"metric":"total","value":0.000,"unit":"sec","queries":{},"failures":0,"failed":[],"skipped":${SparkEntry.entries.size},"sf":"$sfDir"}""")
+      println(contractLine(Nil, 0.0, Nil, SparkEntry.entries.size, sfDir))
       System.out.flush()
     }
     Runtime.getRuntime.addShutdownHook(new Thread(() => emit(), "bench-emit"))
@@ -199,7 +199,7 @@ object Bench {
         val sum = byCost.take(elideN).map(_._2).filter(_ >= 0).sum
         s""","elided":$elideN,"elided_sec":${fmtAt(1)(sum)}"""
       }
-      s"""{"metric":"total","value":${fmtAt(3)(total)},"unit":"sec","queries":$qs,"failures":${failed.size},"failed":$failedJson,"skipped":$skippedCount$elidedPart,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmtAt(3)(total)},"unit":"sec","queries":$qs,"failures":${failed.size},"failed":$failedJson,"skipped":$skippedCount$elidedPart,"sf":${Json.quote(sfDir)}}"""
     }
     (3 to 1 by -1).map(build(_, 0)).find(_.length <= budget).getOrElse {
       var elideN = 1

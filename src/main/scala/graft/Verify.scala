@@ -55,20 +55,8 @@ object Verify {
     })
     // iteration aid, mirroring Bench's SPARK_GRAFT_BENCH_ONLY
     val only = SparkEntry.only("SPARK_GRAFT_VERIFY_ONLY", SparkEntry.queries.keySet)
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
     // fast queries first, known-slow ones last (kill-cost minimization)
@@ -98,9 +86,10 @@ object Verify {
             }
             // retire THIS query's caches now that its output is published
             // (a global clearCache would yank frames concurrent siblings
-            // are mid-scan on). Best-effort and after the publish: a
-            // retire failure must never drop a finished result.
-            try org.apache.spark.sql.graftext.CacheRetire.retire(df)
+            // are mid-scan on), keeping the entries a sibling may share.
+            // Best-effort and after the publish: a retire failure must
+            // never drop a finished result.
+            try org.apache.spark.sql.graftext.CacheRetire.retire(df, keepEntries = true)
             catch { case e: Throwable =>
               System.err.println(s"[verify] $name cache retire failed: ${e.getMessage}")
             }

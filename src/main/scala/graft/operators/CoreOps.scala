@@ -30,7 +30,8 @@ object CoreOps {
 
   /** Shared F1 routing column builders — ONE definition for the batch
     * (cdcRoute) and streaming (StreamingOps.cdcRouteStream) paths so the
-    * table/op mapping can never desynchronize between them. */
+    * table/op mapping and the keep rule can never desynchronize between
+    * them. */
   object Routing {
     def k: Column = get_json_object(col("props"), "$.k").cast("int")
     def table: Column = when(col("event_type") === "purchase", "order_info")
@@ -42,15 +43,35 @@ object CoreOps {
       .when(k % 4 === 1, "update")
       .when(k % 4 === 2, "delete")
       .otherwise("bootstrap-insert")
-    /** The reference's exact keep-boolean over (table, op) — used verbatim
-      * by the streaming path; the batch path uses the single-parse
-      * rewrite (empirically proven equivalent by the oracle). */
-    def referenceKeep(t: Column, o: Column): Column =
-      o.isNotNull && (
-        (t === "order_info" && o === "insert") ||
-        (t === "order_detail" && o === "insert") ||
-        (t === "base_province" && (o === "insert" || o === "update") || o === "bootstrap-insert") ||
-        (t === "user_info" && (o === "insert" || o === "update") || o === "bootstrap-insert"))
+    /** The reference's keep rule over (table, op), with its exact (buggy)
+      * parenthesization: the `bootstrap-insert` alternatives sit OUTSIDE
+      * the per-table parens, so a bootstrap-insert on ANY table passes.
+      * Written literally over (table, op), the rule inlines the op CASE
+      * (and with it the JSON parse) ~14× per row, so it is restated as
+      * the equivalent table over (k mod 4, event_type), which parses the
+      * JSON once per row:
+      *   op=insert (k%4=0): all four routed tables pass
+      *   op=update (k%4=1): only the two (... || op='update') tables pass
+      *   op=delete (k%4=2): nothing passes
+      *   op=bootstrap-insert (else): EVERYTHING passes — the reference's
+      *     parenthesization leak, preserved (SURVEY §2.3 F1).
+      * The oracle SQL keeps the reference boolean verbatim, so the
+      * oracle gate's hash match is the equivalence proof. Index selection
+      * mirrors the op CASE's sign-preserving `%` EXACTLY for every k,
+      * negatives included: k%4==0 holds for k=-4 too (⇒ 'insert'), while
+      * k%4 ∈ {-1,-2,-3} falls to the op CASE's ELSE ('bootstrap-insert'
+      * ⇒ keep-all, index 4). Null k ⇒ ELSE, like the op. */
+    def keep: Column = {
+      val kmod = k % 4
+      element_at(
+        array(
+          col("event_type").isin("purchase", "view", "click", "signup"),
+          col("event_type").isin("click", "signup"),
+          lit(false),
+          lit(true)),
+        when(kmod === 0, 1).when(kmod === 1, 2).when(kmod === 2, 3)
+          .otherwise(4))
+    }
   }
 
   // ---------------------------------------------------------------- A1
@@ -115,45 +136,17 @@ object CoreOps {
 
   // ---------------------------------------------------------------- F1
   /** CDC routing predicate — reference F1 (ods/OdsGmallCanalMax.scala:47-52),
-    * replicated with its exact (buggy) parenthesization: the
-    * `bootstrap-insert` alternatives sit OUTSIDE the per-table parens, so a
-    * bootstrap-insert on ANY table passes the filter. Preserved for parity.
+    * through [[Routing.keep]], the reference's keep rule with its exact
+    * (buggy) parenthesization, preserved for parity.
     *
     * Testdata mapping: event_type plays `table`
     * (purchase→order_info, view→order_detail, click→base_province,
     * signup→user_info, error→other_table); props.k mod 4 plays `type`. */
   def cdcRoute(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
-    val k = Routing.k
     val tbl = Routing.table
     val op = Routing.op
-    // The reference boolean, written literally over (table, op), inlines the
-    // op CASE (and with it the JSON parse) ~14× per row in the Filter.
-    // Restructured into the equivalent table as a function of (k mod 4,
-    // event_type) so the JSON is parsed ONCE per row:
-    //   op=insert (k%4=0): all four routed tables pass
-    //   op=update (k%4=1): only the two (... || op='update') tables pass
-    //   op=delete (k%4=2): nothing passes
-    //   op=bootstrap-insert (else): EVERYTHING passes — the reference's
-    //     parenthesization leak, preserved (SURVEY §2.3 F1).
-    // The oracle SQL keeps the reference-shaped boolean verbatim; the
-    // sf0.01 hash match is the empirical equivalence proof.
-    // Index selection must mirror the op CASE's sign-preserving `%`
-    // EXACTLY for every k — including negatives: k%4==0 holds for k=-4
-    // too (⇒ 'insert'), while k%4 ∈ {-1,-2,-3} falls to the op CASE's
-    // ELSE ('bootstrap-insert' ⇒ keep-all, index 4). So classify on the
-    // same k%4 equality tests the op CASE uses (k parsed ≤3× per row vs
-    // ~14× in the literal reference boolean). Null k ⇒ ELSE, like the op.
-    val kmod = k % 4
-    val keep = element_at(
-      array(
-        col("event_type").isin("purchase", "view", "click", "signup"),
-        col("event_type").isin("click", "signup"),
-        lit(false),
-        lit(true)),
-      when(kmod === 0, 1).when(kmod === 1, 2).when(kmod === 2, 3)
-        .otherwise(4))
-    ev.filter(keep)
+    ev.filter(Routing.keep)
       .select(col("event_id"), tbl.as("table_name"), op.as("op"),
         concat(lit("ODS_MM_"), upper(tbl)).as("topic"))
       .transform(ContractSort.exchanged(_, "event_id"))

@@ -24,15 +24,15 @@ import graft.{Entry, Tables}
   * CACHING CONTRACT: ngramJaccard/minhashLsh/simhashPairs/snapshotNearDup
   * and the substring family (substrDedup/substrIntra/substrScrub)
   * `.cache()` the shingle/signature/k-gram-position intermediates they
-  * reuse within one query and never unpersist them (the handles are
-  * internal; the query
-  * returns a lazy frame, so there is no in-query point "after
-  * materialization" to release at). A LONG-LIVED session running these
-  * repeatedly should call `spark.catalog.clearCache()` between queries —
-  * Bench does after every query, Verify in sequential mode; Verify's
-  * PARALLEL mode deliberately relies on MEMORY_AND_DISK LRU eviction
-  * instead (a global clear would unpersist frames an in-flight sibling is
-  * mid-scan on — see the comment in Verify.main).
+  * reuse within one query and never unpersist them: the query returns a
+  * lazy frame, so there is no in-query point "after materialization" to
+  * release at. The one release rule: whoever runs a frame's last action
+  * releases what it cached with
+  * [[org.apache.spark.sql.graftext.CacheRetire.retire]] once that action
+  * is done — the streaming sink after each micro-batch's write, Verify
+  * after each query's publish (keeping the entries its concurrent
+  * queries may share). Bench runs one query at a time and clears the
+  * whole cache between them.
   */
 object DedupOps {
 
@@ -1038,28 +1038,7 @@ object DedupOps {
     * (doc, persisted index), so any partition of the batch stream probes
     * to exactly the rows the one-shot batch probe would produce. */
   def snapNearDupProbeOf(spark: SparkSession, batch: DataFrame,
-      indexTable: String, sigTable: String): DataFrame =
-    snapNearDupProbeFrames(spark, batch, indexTable, sigTable)._2
-
-  /** [[snapNearDupProbeOf]] driven through a terminal `write`, with the
-    * per-batch signature cache released once the write completes — the
-    * entry point long-running STREAMING callers must use
-    * (StreamingOps.nearDupIntakeStream): the batch/harness path is swept
-    * by the harnesses' clearCache loop, but a stream invoking the probe
-    * per micro-batch has no such sweep, so per-batch cached signature
-    * frames would accumulate for the stream's lifetime. */
-  def snapNearDupProbeWrite(spark: SparkSession, batch: DataFrame,
-      indexTable: String, sigTable: String)(write: DataFrame => Unit): Unit = {
-    val (bsig, out) = snapNearDupProbeFrames(spark, batch, indexTable, sigTable)
-    try write(out) finally bsig.unpersist()
-  }
-
-  /** The probe dataflow plus the cached batch-signature frame backing it,
-    * so callers can choose the cache lifecycle ([[snapNearDupProbeOf]]
-    * leaves it to the harness sweep; [[snapNearDupProbeWrite]] unpersists
-    * after its terminal write). */
-  private def snapNearDupProbeFrames(spark: SparkSession, batch: DataFrame,
-      indexTable: String, sigTable: String): (DataFrame, DataFrame) = {
+      indexTable: String, sigTable: String): DataFrame = {
     val base = md5ShingleBase
     val bsig = minhashSignaturesWith(shingles(batch), base)
       .drop("source").cache() // probe keys + the batch scoring side
@@ -1067,8 +1046,7 @@ object DedupOps {
       explode(bandKeyArray).as("bkey"))
     val cand = probe.join(spark.table(indexTable), "bkey")
       .select("batch_id", "corpus_id").distinct()
-    val out = snapBestPartner(cand, bsig, spark.table(sigTable), "corpus_id")
-    (bsig, out)
+    snapBestPartner(cand, bsig, spark.table(sigTable), "corpus_id")
   }
 
   /** DuckDB replay of [[snapshotNearDup]] — generated from the same

@@ -792,8 +792,8 @@ object SimilarityOps {
     *
     * Replay caveat: a plain parquet append is NOT idempotent — a caller
     * that may retry a batch must wrap this in the same epoch discipline
-    * the streaming sinks use (foreachBatch with a checkpoint, or a
-    * per-batch subdirectory committed atomically). */
+    * the streaming sink uses (StreamingOps' checkpointed micro-batch
+    * sink, or a per-batch subdirectory committed atomically). */
   def appendToAnnIndex(spark: SparkSession, indexDir: String,
       batch: DataFrame): Unit = {
     val centroids = Tables.read(spark, s"$indexDir/centroids")
@@ -808,7 +808,7 @@ object SimilarityOps {
     * self-exclusion (online queries are not corpus rows; an intake that
     * probes with a corpus vector WANTS the exact match back, cos ≈ 1).
     * Batch-shaped on purpose: the streaming intake calls it per
-    * micro-batch via foreachBatch (StreamingOps.annIntakeStream), where
+    * micro-batch through its sink (StreamingOps.annIntakeStream), where
     * each batch is a plain DataFrame and the rank window is legal. */
   def annIndexProbe(spark: SparkSession, indexDir: String,
       queries: DataFrame): DataFrame = {

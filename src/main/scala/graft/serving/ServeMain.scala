@@ -39,24 +39,16 @@ import graft.operators.ServingOps
   *
   * Usage: `graft.serving.ServeMain <sfDir> [port]` (port 0 = ephemeral;
   * the bound port is printed as `serving on <port>` for harnesses).
-  * JSON is emitted by a 30-line encoder below — the payloads are flat
+  * JSON is emitted by a small encoder below — the payloads are flat
   * maps/arrays of strings and longs; no library needed offline.
   */
 object ServeMain {
 
   /** Minimal JSON encoder for the payload shapes above (strings, longs,
-    * maps, seqs, null). Strings are escaped per RFC 8259 minimal set. */
+    * maps, seqs, null). Strings go through [[graft.Json.quote]]. */
   private[graft] def toJson(v: Any): String = v match {
     case null => "null"
-    case s: String =>
-      val b = new StringBuilder("\"")
-      s.foreach {
-        case '"' => b.append("\\\"")
-        case '\\' => b.append("\\\\")
-        case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-        case c => b.append(c)
-      }
-      b.append('"').toString()
+    case s: String => graft.Json.quote(s)
     case n: Long => n.toString
     case n: Int => n.toString
     case d: Double => // emit as a JSON number (NaN/Inf have none — fail loud)

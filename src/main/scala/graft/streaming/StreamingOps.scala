@@ -1,9 +1,10 @@
 package graft.streaming
 
-import graft.operators.{AnalyticOps, CoreOps}
+import graft.operators.{AnalyticOps, CoreOps, DedupOps, MultimodalOps, ScaleOps, SimilarityOps}
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.graftext.CacheRetire
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming layer — the streaming semantics of the reference
   * (SURVEY.md §2.8) rebuilt on event-time + watermarks + the state store.
@@ -75,7 +76,7 @@ object StreamingOps {
           else {
             val first = !seen.exists
             if (key.isNullAt(2)) { if (first) seen.update(true) } // a null ts has no day to close
-            else if (key.getLong(2) <= seen.getCurrentWatermarkMs) seen.remove()
+            else if (key.getLong(2) <= seen.getCurrentWatermarkMs()) seen.remove()
             else {
               if (first) seen.update(true)
               seen.setTimeoutTimestamp(key.getLong(2)) // every call clears it
@@ -128,17 +129,14 @@ object StreamingOps {
       orderDetail: DataFrame): DataFrame =
     orderWideJoin(orderInfo, orderDetail, "left_outer")
 
-  /** F1+T6: CDC routing predicate (exact reference boolean, incl. the
-    * bootstrap-insert leak) applied to a stream; the result carries
-    * `table_name` so a single partitionBy("table_name") sink fans out to
-    * per-table directories/topics. */
-  def cdcRouteStream(events: DataFrame): DataFrame = {
-    import graft.operators.CoreOps.Routing
-    val df = events
-      .withColumn("table_name", Routing.table)
-      .withColumn("op", Routing.op)
-    df.filter(Routing.referenceKeep(col("table_name"), col("op")))
-  }
+  /** F1+T6: the batch CDC routing keep ([[CoreOps.Routing.keep]]) applied
+    * to a stream; the result carries `table_name` so a single
+    * partitionBy("table_name") sink fans out to per-table
+    * directories/topics. */
+  def cdcRouteStream(events: DataFrame): DataFrame =
+    events.filter(CoreOps.Routing.keep)
+      .withColumn("table_name", CoreOps.Routing.table)
+      .withColumn("op", CoreOps.Routing.op)
 
   /** DWS → ADS chain: the stream-stream order-wide join feeding a windowed
     * revenue aggregation IN THE SAME STREAMING QUERY — two chained
@@ -153,25 +151,55 @@ object StreamingOps {
         sum(col("l_extendedprice")).as("revenue"))
       .select(col("w.start").as("window_start"), col("n_items"), col("revenue"))
 
-  /** Streaming → idempotent-table bridge: run a stream into a
-    * dt-partitioned parquet table through `foreachBatch` +
-    * `ScaleOps.overwriteByPartition`. Each micro-batch dynamically
-    * overwrites exactly the partitions it touches, so a batch REPLAY
-    * (at-least-once upstream, checkpoint rollback) converges to the same
-    * table state instead of appending duplicates — the foreachBatch form
-    * of the reference's ES doc-id / Phoenix keyed upserts (K1/K4), where
-    * the sink's own format has no transactional upsert. The batch
-    * function is deliberately a pure (DataFrame, batchId) => write so it
-    * also runs standalone in batch tests. */
-  def upsertByPartitionSink(df: DataFrame, path: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.ScaleOps.overwriteByPartition(batch, "dt", path)
+  /** The ONE micro-batch sink every table-writing intake runs through:
+    * per micro-batch, `perBatch(batch, batchId)` builds the batch's
+    * output, dynamic partition overwrite ([[ScaleOps.overwriteByPartition]])
+    * replaces exactly the `partCol` partitions it holds, and then
+    * [[CacheRetire.retire]] releases whatever that output cached.
+    *
+    *  - Idempotence: a REPLAYED micro-batch (checkpoint rollback,
+    *    at-least-once upstream) rewrites the partitions it wrote the first
+    *    time instead of appending duplicate rows, so replayable sources
+    *    plus this sink give exactly-once table state — the form here of
+    *    the reference's ES doc-id / Phoenix keyed upserts (K1/K4), where
+    *    plain parquet append has no transactional upsert.
+    *  - Release: the operators a batch runs `.cache()` what they reuse and
+    *    leave it registered (DedupOps caching contract); a stream runs for
+    *    days with no harness loop to clear it, so the sink drops each
+    *    batch's cache entries once its write is done.
+    *  - Batch operators: inside the sink each batch is a plain DataFrame,
+    *    so `perBatch` may rank, window and read persisted indexes, and the
+    *    intakes call the SAME operator the offline query uses — stream ≡
+    *    batch is a property, not a test hope.
+    *
+    * The query runs in append output mode, the mode of every stream here
+    * (firstSeenStream's state operator accepts no other). */
+  private def microBatchSink(stream: DataFrame, partCol: String, path: String,
+      checkpoint: String)(perBatch: (DataFrame, Long) => DataFrame)
+      : StreamingQuery =
+    stream.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val out = perBatch(batch, batchId)
+        try ScaleOps.overwriteByPartition(out, partCol, path)
+        finally CacheRetire.retire(out)
       }
       .option("checkpointLocation", checkpoint)
-      .outputMode("update")
+      .outputMode("append")
       .start()
+
+  /** [[microBatchSink]] for the intakes: each micro-batch lands in its
+    * own `epoch=<batchId>` partition of `outPath`. */
+  private def epochSink(stream: DataFrame, outPath: String, checkpoint: String)(
+      perBatch: (DataFrame, Long) => DataFrame): StreamingQuery =
+    microBatchSink(stream, "epoch", outPath, checkpoint)((batch, batchId) =>
+      perBatch(batch, batchId).withColumn("epoch", lit(batchId)))
+
+  /** Streaming → idempotent-table bridge: run a stream into a
+    * dt-partitioned parquet table through [[microBatchSink]]; each
+    * micro-batch replaces exactly the dt partitions it touches. */
+  def upsertByPartitionSink(df: DataFrame, path: String,
+      checkpoint: String): StreamingQuery =
+    microBatchSink(df, "dt", path, checkpoint)((batch, _) => batch)
 
   /** K3/P8: shape a DataFrame into Kafka producer records — key (the
     * business key, for log-compaction/partitioning), value (the full row
@@ -185,10 +213,10 @@ object StreamingOps {
       to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("value"),
       lit(topic).as("topic"))
 
-  /** J2 streaming form: stream-static broadcast enrichment. The static dim
-    * is re-read per batch when wrapped in foreachBatch (per-batch dim
-    * refresh parity, SURVEY §7.5); as a plain stream-static join Spark
-    * re-plans the static side per micro-batch anyway. */
+  /** J2 streaming form: stream-static broadcast enrichment. As a plain
+    * stream-static join Spark re-plans the static side per micro-batch,
+    * so each batch sees the dim as it is then (per-batch dim refresh
+    * parity, SURVEY §7.5). */
   def enrichStream(fact: DataFrame, dim: DataFrame, factKey: String,
       dimKey: String): DataFrame =
     fact.join(broadcast(dim), fact(factKey) === dim(dimKey), "left")
@@ -197,39 +225,19 @@ object StreamingOps {
     * documents arrive as a stream; each micro-batch derives ITS OWN
     * MinHash signatures (batch-proportional work) and probes the
     * PERSISTED corpus band index (DedupOps.buildSnapNearDupIndex — the
-    * plan-asserted shuffle-free-on-persisted-sides probe), appending
-    * each doc's best corpus partner to `outPath`. This is the signal the
-    * curation intake (curationIntakeStream) declared downstream: exact
-    * dedup runs in-stream on the content fingerprint, corpus-grain
-    * NEAR-dup runs here against the index. foreachBatch for the same
-    * reason as annIntakeStream: the per-doc best-partner rank needs a
-    * window, and sharing the batch operator makes stream≡batch a
-    * property, not a test hope. Per-doc results depend only on
-    * (doc, index), so any micro-batch partitioning of the stream yields
-    * exactly the one-shot batch probe's rows.
-    *
-    * Sink discipline: each epoch lands in its own `epoch=<batchId>`
-    * partition via dynamic partition overwrite — a replayed micro-batch
-    * (checkpoint rollback, at-least-once recovery) REWRITES its own
-    * partition instead of appending duplicate rows (plain parquet append
-    * is not idempotent; same rule as upsertByPartitionSink). The probe
-    * runs through [[graft.operators.DedupOps.snapNearDupProbeWrite]] so
-    * the per-batch signature cache is released after each epoch — a
-    * long-running stream has no harness clearCache loop to lean on. */
+    * plan-asserted shuffle-free-on-persisted-sides probe), landing each
+    * doc's best corpus partner in `outPath` through the one sink
+    * ([[epochSink]]), which also releases the batch's cached signatures.
+    * This is the signal the curation intake (curationIntakeStream)
+    * declared downstream: exact dedup runs in-stream on the content
+    * fingerprint, corpus-grain NEAR-dup runs here against the index.
+    * Per-doc results depend only on (doc, index), so any micro-batch
+    * partitioning of the stream yields exactly the one-shot batch
+    * probe's rows. */
   def nearDupIntakeStream(docStream: DataFrame, indexTable: String,
-      sigTable: String, outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.DedupOps.snapNearDupProbeWrite(
-          batch.sparkSession, batch, indexTable, sigTable) { out =>
-            graft.operators.ScaleOps.overwriteByPartition(
-              out.withColumn("epoch", lit(batchId)), "epoch", outPath)
-        }
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+      sigTable: String, outPath: String, checkpoint: String): StreamingQuery =
+    epochSink(docStream, outPath, checkpoint)((batch, _) =>
+      DedupOps.snapNearDupProbeOf(batch.sparkSession, batch, indexTable, sigTable))
 
   /** ONLINE SUBSTRING-DEDUP intake — the streaming half of the
     * substring family (q_substr_dedup detects corpus-internally,
@@ -239,28 +247,15 @@ object StreamingOps {
     * (DedupOps.buildSubstrIndex — bucketed by window hash, so the
     * corpus-sized side never re-shuffles) and every duplicated span
     * ≥ 50 tokens lands in `outPath` with its exact (batch position,
-    * corpus position, length) geometry. foreachBatch for the same
-    * reason as every intake here: the island merge needs a window,
-    * and sharing the batch operator (DedupOps.substrProbeOf) makes
-    * stream ≡ batch a property, not a test hope — per-doc rows depend
-    * only on (doc text, index), so any micro-batch partitioning yields
-    * exactly the one-shot probe's rows. Same idempotent-sink
-    * discipline as the rest: each epoch REWRITES its own
-    * `epoch=<batchId>` partition on replay. */
+    * corpus position, length) geometry. The island merge needs a window,
+    * so the probe is the batch operator (DedupOps.substrProbeOf) run by
+    * [[epochSink]]: per-doc rows depend only on (doc text, index), so
+    * any micro-batch partitioning yields exactly the one-shot probe's
+    * rows. */
   def substrIntakeStream(docStream: DataFrame, indexTable: String,
-      outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.ScaleOps.overwriteByPartition(
-          graft.operators.DedupOps
-            .substrProbeOf(batch.sparkSession, batch, indexTable)
-            .withColumn("epoch", lit(batchId)),
-          "epoch", outPath)
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+      outPath: String, checkpoint: String): StreamingQuery =
+    epochSink(docStream, outPath, checkpoint)((batch, _) =>
+      DedupOps.substrProbeOf(batch.sparkSession, batch, indexTable))
 
   /** ONLINE DECONTAMINATION intake — training shards arrive as a
     * stream, each micro-batch probes the PERSISTED eval position index
@@ -269,54 +264,29 @@ object StreamingOps {
     * geometry — the arrival-time form of q_contamination_spans, which
     * is the shape a production ingest actually runs: the eval set is
     * small and static, indexed once; training data flows past it.
-    * Same batch-operator sharing (DedupOps.contaminationProbeOf) and
-    * epoch-partitioned idempotent sink as every intake here. */
+    * The batch operator (DedupOps.contaminationProbeOf) runs in
+    * [[epochSink]], like every intake here. */
   def contaminationIntakeStream(trainStream: DataFrame,
       evalIndexTable: String, outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    trainStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.ScaleOps.overwriteByPartition(
-          graft.operators.DedupOps
-            .contaminationProbeOf(batch.sparkSession, batch, evalIndexTable)
-            .withColumn("epoch", lit(batchId)),
-          "epoch", outPath)
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+      : StreamingQuery =
+    epochSink(trainStream, outPath, checkpoint)((batch, _) =>
+      DedupOps.contaminationProbeOf(batch.sparkSession, batch, evalIndexTable))
 
   /** ONLINE ANN retrieval — the streaming half of the similarity family:
     * query vectors arrive as a stream, each micro-batch probes the
     * PERSISTED trained IVF index (SimilarityOps.buildAnnIndex — centroids
-    * + cl-partitioned inverted lists) and appends its top-k to `outPath`.
+    * + cl-partitioned inverted lists) and its top-k lands in `outPath`.
     *
-    * foreachBatch, not a stream-static join + window: per-query top-k
-    * needs a rank over the candidate set, which streaming plans forbid —
-    * inside foreachBatch each batch is a plain DataFrame, so the probe is
-    * the SAME batch operator (annIndexProbe) the offline path uses; batch
-    * and stream literally cannot disagree. Per batch the work is the
-    * online-serving shape: the query set broadcasts, only the probed
-    * list partitions are scanned (partition pruning on cl), nothing
-    * corpus-sized shuffles. Checkpointing makes the intake restartable,
-    * and each epoch lands in its own `epoch=<batchId>` partition via
-    * dynamic partition overwrite — a replayed micro-batch rewrites its
-    * partition instead of appending duplicates (plain parquet append is
-    * NOT idempotent; same discipline as upsertByPartitionSink). */
+    * Per-query top-k needs a rank over the candidate set, which streaming
+    * plans forbid; inside [[epochSink]] each batch is a plain DataFrame,
+    * so the probe is the SAME batch operator (annIndexProbe) the offline
+    * path uses. Per batch the work is the online-serving shape: the
+    * query set broadcasts, only the probed list partitions are scanned
+    * (partition pruning on cl), nothing corpus-sized shuffles. */
   def annIntakeStream(queryStream: DataFrame, indexDir: String,
-      outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.ScaleOps.overwriteByPartition(
-          graft.operators.SimilarityOps
-            .annIndexProbe(batch.sparkSession, indexDir, batch)
-            .withColumn("epoch", lit(batchId)),
-          "epoch", outPath)
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+      outPath: String, checkpoint: String): StreamingQuery =
+    epochSink(queryStream, outPath, checkpoint)((batch, _) =>
+      SimilarityOps.annIndexProbe(batch.sparkSession, indexDir, batch))
 
   /** STREAMING MULTIMODAL INGEST — dedup-on-arrival for binary assets,
     * the streaming twin of the batch `q_mm_dedup`: fingerprint the
@@ -346,17 +316,16 @@ object StreamingOps {
     * same bytes twice" holding ACROSS epochs, not just within one batch.
     *
     * The ledger is the sink's own output: each epoch's decoded stats land
-    * in an `epoch=<batchId>` partition of `outPath`, and the next batch
-    * reads the accumulated `payload_fp`s back (only 16-byte digests — the
-    * decoded-stats table is metadata-sized however many payload bytes
-    * flowed past). A REPLAYED micro-batch (checkpoint rollback) excludes
-    * its OWN epoch partition from the ledger read before re-deciding —
-    * otherwise its prior output would anti-join away exactly the digests
-    * it must re-emit — and then rewrites that partition via dynamic
-    * partition overwrite (the idempotent-sink discipline every intake
-    * here follows). The per-batch dataflow is LITERALLY the batch
-    * operator ([[graft.operators.MultimodalOps.snapshotDecodeFrom]]), so
-    * stream and batch cannot disagree on any single (batch, ledger) pair.
+    * in an `epoch=<batchId>` partition of `outPath` ([[epochSink]]), and
+    * the next batch reads the accumulated `payload_fp`s back (only 16-byte
+    * digests — the decoded-stats table is metadata-sized however many
+    * payload bytes flowed past). A REPLAYED micro-batch (checkpoint
+    * rollback) excludes its OWN epoch partition from the ledger read
+    * before re-deciding — otherwise its prior output would anti-join away
+    * exactly the digests it must re-emit — and then rewrites that
+    * partition. The per-batch dataflow is LITERALLY the batch operator
+    * ([[MultimodalOps.snapshotDecodeFrom]]), so stream and batch cannot
+    * disagree on any single (batch, ledger) pair.
     *
     * Copy-count semantics across epochs (deliberate, spec-pinned): a
     * digest's row is emitted by its FIRST epoch with that epoch's copy
@@ -369,39 +338,31 @@ object StreamingOps {
     * arrival count is a different operator — a groupBy over the raw
     * intake — not a property of the decode cache). */
   def decodeIntakeStream(assetStream: DataFrame, outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    assetStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // the ledger read must treat a footerless sink as EMPTY, not
-        // fatal: a crash mid-write of epoch 0 (or an empty first epoch)
-        // leaves outPath existing with zero parquet files, and a plain
-        // read would throw schema-inference AnalysisException on every
-        // replay — permanently crash-looping the recovery the
-        // checkpoint exists to provide. ONLY those two error classes
-        // mean "empty sink": any other AnalysisException (schema drift,
-        // permissions, a corrupted path config) must PROPAGATE — zeroing
-        // the ledger on it would silently re-decode and re-emit digests
-        // already landed, breaking the one-epoch-per-digest invariant
-        val EmptySinkClasses = Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-        val ledger =
-          (try Some(spark.read.parquet(outPath))
-           catch {
-             case e: org.apache.spark.sql.AnalysisException
-               if EmptySinkClasses.contains(e.getCondition) => None
-           })
-            .map(_.where(col("epoch") =!= batchId) // replay: self-exclusion
-              .select(col("payload_fp").as("fp")).distinct())
-            .getOrElse(spark.emptyDataset[String](
-              org.apache.spark.sql.Encoders.STRING).toDF("fp"))
-        val out = graft.operators.MultimodalOps
-          .snapshotDecodeFrom(batch, ledger)
-        graft.operators.ScaleOps.overwriteByPartition(
-          out.withColumn("epoch", lit(batchId)), "epoch", outPath)
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+      checkpoint: String): StreamingQuery =
+    epochSink(assetStream, outPath, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // the ledger read must treat a footerless sink as EMPTY, not
+      // fatal: a crash mid-write of epoch 0 (or an empty first epoch)
+      // leaves outPath existing with zero parquet files, and a plain
+      // read would throw schema-inference AnalysisException on every
+      // replay — permanently crash-looping the recovery the
+      // checkpoint exists to provide. ONLY those two error classes
+      // mean "empty sink": any other AnalysisException (schema drift,
+      // permissions, a corrupted path config) must PROPAGATE — zeroing
+      // the ledger on it would silently re-decode and re-emit digests
+      // already landed, breaking the one-epoch-per-digest invariant
+      val EmptySinkClasses = Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+      val ledger =
+        (try Some(spark.read.parquet(outPath))
+         catch {
+           case e: org.apache.spark.sql.AnalysisException
+             if EmptySinkClasses.contains(e.getCondition) => None
+         })
+          .map(_.where(col("epoch") =!= batchId) // replay: self-exclusion
+            .select(col("payload_fp").as("fp")).distinct())
+          .getOrElse(spark.emptyDataset[String](Encoders.STRING).toDF("fp"))
+      MultimodalOps.snapshotDecodeFrom(batch, ledger)
+    }
 
   /** LLM-PIPELINE STREAMING INTAKE: the ONLINE half of the curation gate —
     * new crawl/ingest shards arrive as a documents stream, and each doc is
@@ -420,7 +381,7 @@ object StreamingOps {
     *    there, identical on an id-ordered replay — spec-asserted).
     *  - DOWNSTREAM (batch over the accepted shards): the corpus-sized
     *    signals — boilerplate share, contamination vs the eval set,
-    *    near-dup vs the persisted band index ([[graft.operators.DedupOps.snapshotNearDupProbe]])
+    *    near-dup vs the persisted band index ([[DedupOps.snapshotNearDupProbe]])
     *    — exactly the snapshot operators the engine already ships.
     *
     * State: `dropDuplicates("fp")` keeps one fingerprint per corpus

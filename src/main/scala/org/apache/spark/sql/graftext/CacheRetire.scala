@@ -4,28 +4,36 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 
-/** Per-query cache retirement for long-lived multi-threaded harnesses.
+/** The one release rule for the caches operators leave behind.
   *
   * Operator builders `.cache()` the intermediates they reuse within one
   * query and return a lazy frame — there is no in-query point "after
-  * materialization" to unpersist at (DedupOps caching contract). Bench
-  * and sequential Verify sweep with `spark.catalog.clearCache()` between
-  * queries; Verify's PARALLEL mode cannot (a global clear yanks frames a
-  * concurrent sibling is mid-scan on, forcing a recompute storm), so it
-  * previously relied on MEMORY_AND_DISK LRU eviction and accumulated
-  * every query's cached frames for the whole run.
+  * materialization" to unpersist at (DedupOps caching contract). So
+  * whoever runs a frame's last action calls [[retire]] on it once that
+  * action is done: the streaming sink after each micro-batch's write (a
+  * stream runs for days with no harness loop to clear anything), and
+  * Verify after publishing each query (a global `clearCache` would yank
+  * frames its concurrent siblings are mid-scan on).
   *
-  * [[retire]] releases exactly the finished query's storage: it walks the
-  * frame's analyzed-with-cached-data plan for the [[InMemoryRelation]]s
-  * it reads (recursing into cached plans for nested caches) and drops
-  * their RDD blocks via the relation's own cache builder. The
-  * CacheManager ENTRY stays registered — if a later query builds the
-  * same subplan it transparently re-materializes (plain RDD-unpersist
-  * semantics), and a sibling concurrently scanning a plan-deduplicated
-  * shared cache just recomputes the partitions it still needs — so this
-  * is safe to call the moment a query's output is fully written. */
+  * [[retire]] walks the frame's analyzed-with-cached-data plan for the
+  * [[InMemoryRelation]]s it reads (recursing into cached plans for nested
+  * caches, outer first) and frees each one's RDD blocks. Unless
+  * `keepEntries`, it first drops the CacheManager entry as
+  * `Dataset.unpersist` does, so one retained entry per micro-batch cannot
+  * grow the session's cache list without bound.
+  *
+  * `keepEntries` is for a caller whose concurrent queries may share an
+  * entry (Verify): a sibling that looked the entry up while building its
+  * frame must still find it when its write plans, or it computes that
+  * subplan twice in one query, and a cached k-means (`ivfCentroids`)
+  * computed twice can differ in its float sums — dropping entries in
+  * Verify made q_ann_ivfpq return 0 rows and q_ivfpq_recall miss hits.
+  * A kept entry whose blocks are freed just re-materializes on its next
+  * scan. */
 object CacheRetire {
-  def retire(df: DataFrame): Unit = {
+  def retire(df: DataFrame, keepEntries: Boolean = false): Unit = {
+    val qe = df.queryExecution
+    val cacheManager = qe.sparkSession.sharedState.cacheManager
     val seen = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[InMemoryRelation, java.lang.Boolean]())
     def fromPhysical(p: SparkPlan): Unit = p.foreach {
@@ -33,10 +41,13 @@ object CacheRetire {
       case _ =>
     }
     def fromRelation(r: InMemoryRelation): Unit = if (seen.add(r)) {
-      fromPhysical(r.cachedPlan)
+      if (!keepEntries)
+        cacheManager.uncacheQuery(qe.sparkSession, r.cacheBuilder.logicalPlan,
+          cascade = false, blocking = false)
       r.cacheBuilder.clearCache(blocking = false)
+      fromPhysical(r.cachedPlan)
     }
-    df.queryExecution.withCachedData.foreach {
+    qe.withCachedData.foreach {
       case r: InMemoryRelation => fromRelation(r)
       case _ =>
     }

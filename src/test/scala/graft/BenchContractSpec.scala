@@ -115,4 +115,16 @@ class BenchContractSpec extends AnyFunSuite {
     assert(t.skipped == Seq("q_cut", "q_unrun"))
     assert(t.timed == Seq("q_fast" -> Seq(1.5, 1.2), "q_retried" -> Seq(2.0)))
   }
+
+  test("a quote or backslash in the sf dir keeps the line parseable; plain paths are unchanged") {
+    // the sf dir comes from SPARK_GRAFT_SF_DIR, outside the program
+    val odd = "/data/sf\"0.1\\x"
+    val qs = mkQueries(3)
+    val j = parse(Bench.contractLine(qs, qs.map(_._2).sum, Nil, 0, odd))
+    assert(j.get("sf").asText() === odd)
+    // a plain path prints as it always did — the kill fallback's line is
+    // this empty-run line, byte for byte
+    assert(Bench.contractLine(Nil, 0.0, Nil, 201, "/data/sf0.1") ===
+      """{"metric":"total","value":0.000,"unit":"sec","queries":{},"failures":0,"failed":[],"skipped":201,"sf":"/data/sf0.1"}""")
+  }
 }

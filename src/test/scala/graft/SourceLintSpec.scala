@@ -33,6 +33,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - [[serving.HttpDaemon]] is the ONE JDK HTTP server set-up: it sets
   *    `TCP_NODELAY` before the first server exists and gives each daemon
   *    its thread pool, so a second server cannot come up without them.
+  *  - StreamingOps' micro-batch sink is the ONE `foreachBatch` of the
+  *    program: every table-writing stream overwrites its partitions
+  *    idempotently and releases each batch's caches through it, so a
+  *    second copy cannot forget either.
   *
   * One row counts across files instead: each registered name is quoted
   * exactly once under src/main, in its family's `Entry`, so a copy cannot
@@ -59,6 +63,7 @@ class SourceLintSpec extends AnyFunSuite {
   private val toColumn = "ExpressionUtils" + ".column("
   private val javaLoop = "for (" + "int"
   private val httpCreate = "HttpServer" + ".create("
+  private val forEachBatch = "foreach" + "Batch"
 
   private val rules = Seq(
     Rule("only GraftSession.scala calls the SparkSession builder",
@@ -111,7 +116,14 @@ class SourceLintSpec extends AnyFunSuite {
       s"create servers through HttpDaemon.create, not $httpCreate",
       "second HttpServer set-up",
       "object Planted {\n  val s = com.sun.net.httpserver." + httpCreate +
-        "new java.net.InetSocketAddress(0), 0)\n}\n"))
+        "new java.net.InetSocketAddress(0), 0)\n}\n"),
+    Rule("only StreamingOps.scala writes a stream through foreachBatch",
+      Seq("src/main"), Some("StreamingOps.scala"),
+      occurrences(forEachBatch),
+      s"write streams to tables through StreamingOps' one sink, not a second $forEachBatch",
+      "second micro-batch sink",
+      "object Planted {\n  def f(df: org.apache.spark.sql.DataFrame) = df.writeStream\n" +
+        s"    .$forEachBatch" + " { (b: org.apache.spark.sql.DataFrame, _: Long) => b.count(); () }\n}\n"))
 
   /** The repository root: the nearest directory at or above the working
     * directory that holds build.sbt. */

@@ -559,23 +559,33 @@ class StreamingSpec extends SparkTestBase {
     DedupOps.buildSnapNearDupIndex(spark, sf0001, "intake_band_idx", "intake_sig")
     spark.catalog.clearCache()
     val tmp = java.nio.file.Files.createTempDirectory("graft_ndintake_").toString
-    // play the batch slice (doc_id%10 >= 8) as a 2-micro-batch stream:
-    // route the file stream through a pass-through so rows arrive in two
-    // maxFilesPerTrigger batches
+    // play the batch slice (doc_id%10 >= 8) as a 3-micro-batch stream:
+    // one single-file slice per doc_id % 3, so maxFilesPerTrigger=1
+    // delivers three batches
     val batchDocs = Tables.documents(spark, sf0001)
       .where(pmod(col("doc_id"), lit(10)) >= 8)
-    batchDocs.where(col("doc_id") % 2 === 0)
-      .write.parquet(s"$tmp/in/part_a.parquet")
-    batchDocs.where(col("doc_id") % 2 === 1)
-      .write.parquet(s"$tmp/in/part_b.parquet")
+    (0 until 3).foreach { r =>
+      batchDocs.where(col("doc_id") % 3 === r).coalesce(1)
+        .write.parquet(s"$tmp/in/part_$r.parquet")
+    }
     val stream = spark.readStream
       .schema(batchDocs.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$tmp/in/*")
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val q = StreamingOps.nearDupIntakeStream(stream,
       "intake_band_idx", "intake_sig", s"$tmp/out", s"$tmp/ckpt")
     q.processAllAvailable()
+    val batches = q.recentProgress.count(_.numInputRows > 0)
     q.stop()
+    assert(batches >= 3, s"expected at least 3 micro-batches, got $batches")
+    // the sink releases each batch's cached signatures once its write is
+    // done: a stream runs for days, so neither an RDD nor a cache entry
+    // may outlive the batch that made it
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
+    assert(leaked.isEmpty, s"RDDs still persisted after the stream: $leaked")
+    assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty, "cache entries left after the stream")
     val streamed = spark.read.parquet(s"$tmp/out").drop("epoch")
       .collect().map(_.toSeq).toSet
     val oneShot = DedupOps.snapshotNearDupProbe(
